@@ -162,6 +162,10 @@ object Retain {
 
   @inline def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
 
+  /** Stable sigmoid cross-entropy with logits (`model.py:159`). */
+  @inline def sigmoidCe(z: Double, y: Double): Double =
+    math.max(z, 0.0) - z * y + math.log1p(math.exp(-math.abs(z)))
+
   /** Deterministic params: xorshift64* PRNG mapped to U(-0.5, 0.5),
     * seeded per parameter group — reproducible across JVMs (no
     * java.util.Random dependency on iteration order).

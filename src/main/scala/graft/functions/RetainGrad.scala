@@ -145,9 +145,10 @@ object RetainGrad {
   /** Per-row loss and full gradient. `taskScale(k)` multiplies task k's
     * CE contribution ((1+μ‖B[k,:]‖₁)/√n_k in the AMTL objective).
     * Accumulates the flat gradient into `acc` (executor-local buffer)
-    * and returns the row's scaled loss.
-    */
-  /** R11 train-mode dropout (reference `DropoutWrapper(output_keep_prob)`,
+    * and returns the row's scaled loss; `ceAcc`, when given, receives
+    * the row's unscaled per-task CE.
+    *
+    * R11 train-mode dropout (reference `DropoutWrapper(output_keep_prob)`,
     * `model.py:114,204`): with `keepProb < 1`, the α/β LSTM *outputs* as
     * consumed by the attention projections are masked and inverted-scaled
     * (TF semantics: the recurrent state is NOT dropped, only the output
@@ -266,7 +267,7 @@ object RetainGrad {
     for (k <- 0 until K) {
       var z = w.headB(k); var j = 0
       while (j < H) { z += ctx(j) * w.heads(k)(j); j += 1 }
-      val ceK = math.max(z, 0) - z * y(k) + math.log1p(math.exp(-math.abs(z)))
+      val ceK = sigmoidCe(z, y(k))
       if (ceAcc != null) ceAcc(k) += ceK
       loss += taskScale(k) * ceK
       dlogit(k) = taskScale(k) * (sigmoid(z) - y(k))

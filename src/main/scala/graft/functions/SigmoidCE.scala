@@ -35,11 +35,8 @@ case class SigmoidCE(left: Expression, right: Expression)
       TypeCheckResult.TypeCheckFailure(
         s"sigmoid_ce requires (double, double), got (${left.dataType}, ${right.dataType})")
 
-  override protected def nullSafeEval(z: Any, y: Any): Any = {
-    val zd = z.asInstanceOf[Double]
-    val yd = y.asInstanceOf[Double]
-    math.max(zd, 0.0) - zd * yd + math.log1p(math.exp(-math.abs(zd)))
-  }
+  override protected def nullSafeEval(z: Any, y: Any): Any =
+    Retain.sigmoidCe(z.asInstanceOf[Double], y.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (z, y) =>

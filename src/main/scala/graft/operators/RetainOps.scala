@@ -16,10 +16,11 @@ import org.apache.spark.sql.functions._
   * Execution shape (SURVEY.md §4.3): series assembly is two shuffles on
   * `user_id` (pivot + collect); scoring is a narrow typed `map` under a
   * broadcast weight struct (no shuffle, scales linearly with rows);
-  * training keeps all head/B parameters on the driver (51 doubles) and
-  * does one `treeAggregate` pass per iteration over cached context
-  * vectors — the classic MLlib optimization pattern. Nothing row-sized
-  * ever reaches the driver.
+  * both training regimes run one `treeAggregate` pass per Adam step
+  * ([[trainAmtl]] over cached context vectors, [[trainFull]] through
+  * RetainGrad.rowGrad) and hand the gradient to the shared driver-side
+  * [[AmtlStep]] (B, task scales, λ coupling, Adam) — the classic MLlib
+  * optimization pattern. Nothing row-sized ever reaches the driver.
   *
   * These queries are deterministic given the fixed seed-42 weights but
   * not ANSI-SQL-expressible (the LSTM recurrence, SURVEY.md §7.5), so
@@ -125,9 +126,90 @@ object RetainOps {
 
   // ---------------- AMTL training (reference model.py:174-184) ----------------
 
+  /** Element-wise `a += b`: the combOp of every training aggregate. */
+  private val addInto: (Array[Double], Array[Double]) => Array[Double] =
+    (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+
+  /** The driver half of one AMTL Adam step (`model.py:174-184`; Lee,
+    * Yang & Hwang, Asymmetric Multi-task Learning, ICML 2016), shared by
+    * [[trainAmtl]] and [[trainFull]], on the objective
+    *   Σ_k s_k·CE_k + λ·Σ_t ‖w_t − Σ_i B[i,t]·w_i‖²,  s_k = (1 + μ‖B[k,:]‖₁)/√n.
+    * `params` is the regime's flat parameter vector, updated in place,
+    * with the K×H heads w_k at `offHeads`; B's diagonal stays 0
+    * (`model.py:91-92`). Each regime brings only its data pass: the
+    * gradient of Σ_k s_k·CE_k over `params` at the current [[taskScale]],
+    * and the per-task mean CE.
+    */
+  private[graft] final class AmtlStep(val params: Array[Double], offHeads: Int, n: Double,
+                                      lr: Double, mu: Double, lambda: Double) {
+    private val K = numTasks
+    private val sqrtn = math.sqrt(n) // single pooled set per task (all users, all tasks)
+    val bMat: Array[Array[Double]] = Array.fill(K, K)(0.0)
+    // Adam moments over params ++ B (row-major; the diagonal slots stay 0)
+    private val m = new Array[Double](params.length + K * K); private val v = m.clone()
+    private val b1 = 0.9; private val b2 = 0.999; private val eps = 1e-8
+    private var steps = 0
+
+    /** s_k = (1 + μ‖B[k,:]‖₁)/√n, task k's CE weight (model.py:178). */
+    def taskScale: Array[Double] = Array.tabulate(K) { k =>
+      (1.0 + mu * (0 until K).map(j => math.abs(bMat(k)(j))).sum) / sqrtn
+    }
+
+    /** Adds the λ head-coupling gradient to `grad` (the data pass's
+      * gradient over `params`) and returns B's gradient, flat K×K with a
+      * zero diagonal: the μ path μ·sign(B[i,t])·CE_i/√n plus the λ path.
+      */
+    def gradient(grad: Array[Double], ce: Array[Double]): Array[Double] = {
+      def head(k: Int, j: Int): Double = params(offHeads + k * H + j)
+      // λ reconstruction residual w_t − Σ_i B[i,t]·w_i (model.py:179-181)
+      val resid = Array.tabulate(K, H) { (t, j) =>
+        var r = head(t, j)
+        for (i <- 0 until K) r -= bMat(i)(t) * head(i, j)
+        r
+      }
+      for (t <- 0 until K; j <- 0 until H) {
+        grad(offHeads + t * H + j) += lambda * 2.0 * resid(t)(j)
+        for (i <- 0 until K if i != t)
+          grad(offHeads + i * H + j) += lambda * 2.0 * resid(t)(j) * (-bMat(i)(t))
+      }
+      val gB = new Array[Double](K * K)
+      for (i <- 0 until K; t <- 0 until K if i != t) {
+        var g = mu * math.signum(bMat(i)(t)) * ce(i) / sqrtn
+        for (j <- 0 until H) g += lambda * 2.0 * resid(t)(j) * (-head(i, j))
+        gB(i * K + t) = g
+      }
+      gB
+    }
+
+    /** One Adam step (model.py:184) over `params` and B's off-diagonal. */
+    def step(grad: Array[Double], ce: Array[Double]): Unit = {
+      val gB = gradient(grad, ce)
+      steps += 1
+      val bc1 = 1 - math.pow(b1, steps); val bc2 = 1 - math.pow(b2, steps)
+      def adam(ix: Int, g: Double): Double = {
+        m(ix) = b1 * m(ix) + (1 - b1) * g
+        v(ix) = b2 * v(ix) + (1 - b2) * g * g
+        lr * (m(ix) / bc1) / (math.sqrt(v(ix) / bc2) + eps)
+      }
+      val dim = params.length
+      locally { var i = 0; while (i < dim) { params(i) -= adam(i, grad(i)); i += 1 } }
+      for (i <- 0 until K; j <- 0 until K if i != j)
+        bMat(i)(j) -= adam(dim + i * K + j, gB(i * K + j))
+    }
+  }
+
+  /** Task k's logit from a frozen context vector `c`, with the heads and
+    * biases flat in `p` as [K×H heads | K biases]. */
+  private def headLogit(p: Array[Double], k: Int, c: Array[Double]): Double = {
+    var z = p(numTasks * H + k); var j = 0
+    while (j < H) { z += p(k * H + j) * c(j); j += 1 }
+    z
+  }
+
   /** Train per-task heads + B on frozen shared features ("lastlayer"
-    * semantics, the reference's own model_tag `run.py:8`). One
-    * treeAggregate per Adam step; heads/B live on the driver.
+    * semantics, the reference's own model_tag `run.py:8`). Each Adam
+    * step is one treeAggregate of head statistics over the cached
+    * context vectors, followed by one [[AmtlStep]] on the driver.
     *
     * @param minibatch 0 = full batch (every iteration sees all rows);
     *                  >0 = the reference's regime (`model.py:187-194`,
@@ -141,12 +223,14 @@ object RetainOps {
     *                  (`model.py:236-310`). The thunk runs ONE CE-only
     *                  treeAggregate over the full cached set with the
     *                  current heads — pay it only on check iterations.
+    *                  It is valid until trainAmtl returns.
     */
   def trainAmtl(s: SparkSession, d: String, iters: Int = 40, lr: Double = 0.05,
                 mu: Double = 0.005, lambda: Double = 0.005,
                 minibatch: Int = 0,
                 onIter: (Int, Array[Array[Double]], () => Array[Double]) => Unit = null)
       : (Array[Array[Double]], Array[Double], Array[Double]) = {
+    val K = numTasks
     val w0 = Retain.defaultWeights
     // Persist the OBJECT RDD, not the Dataset: the Adam loop reuses the
     // same partitions every iteration, and a persisted object RDD skips
@@ -161,134 +245,69 @@ object RetainOps {
         (ctx, ys)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    val n = data.count().toDouble
-    val nPos = data.map(_._2).reduce((a, b) => Array.tabulate(numTasks)(k => a(k) + b(k)))
-    val sqrtn = math.sqrt(n) // single pooled set per task (all users, all tasks)
+    try {
+      val counts = data.map(r => 1.0 +: r._2).reduce(addInto) // n, then positives per task
+      val n = counts(0)
+      val step = new AmtlStep(w0.heads.flatten ++ w0.headB, 0, n, lr, mu, lambda)
+      val p = step.params
+      var ces = new Array[Double](K)
+      val P = p.length
+      for (it <- 1 to iters) {
+        // data pass: Σ(σ(z)−y)·c per head weight and Σ(σ(z)−y) per bias
+        // (laid out as `p`), then Σ CE per task; the trailing slot counts
+        // the rows that contributed (== n for full batch; the sampled
+        // size for minibatch)
+        val batch = if (minibatch <= 0) data
+          else data.sample(withReplacement = false, math.min(1.0, minibatch / n), seed = it)
+        val agg = batch.treeAggregate(new Array[Double](P + K + 1))(
+          seqOp = (acc, row) => {
+            val (c, y) = row
+            var k = 0
+            while (k < K) {
+              val z = headLogit(p, k, c)
+              val g = Retain.sigmoid(z) - y(k)
+              var j = 0
+              while (j < H) { acc(k * H + j) += g * c(j); j += 1 }
+              acc(K * H + k) += g
+              acc(P + k) += Retain.sigmoidCe(z, y(k))
+              k += 1
+            }
+            acc(P + K) += 1
+            acc
+          },
+          combOp = addInto)
 
-    // parameters: heads [K][H], biases [K], B [K][K] (diag pinned 0)
-    val K = numTasks
-    val heads = Array.tabulate(K, H)((k, j) => w0.heads(k)(j))
-    val biases = w0.headB.clone()
-    val bMat = Array.fill(K, K)(0.0)
+        // normalize by the rows this step actually saw (an empty sampled
+        // batch — possible at tiny SF — contributes a zero gradient)
+        val cnt = math.max(agg(P + K), 1.0)
+        ces = Array.tabulate(K)(k => agg(P + k) / cnt)
+        val scale = step.taskScale // slot i is task i/H's head, or bias i−K·H's
+        step.step(Array.tabulate(P)(i => scale(if (i < K * H) i / H else i - K * H) * (agg(i) / cnt)), ces)
 
-    // Adam state over the flattened parameter vector
-    val dim = K * H + K + K * K
-    val m = new Array[Double](dim); val v = new Array[Double](dim)
-    val b1 = 0.9; val b2 = 0.999; val eps = 1e-8
-
-    def flatIdx(part: Int, i: Int, j: Int): Int = part match {
-      case 0 => i * H + j          // heads
-      case 1 => K * H + i          // biases
-      case _ => K * H + K + i * K + j // B
-    }
-
-    var ces = new Array[Double](K)
-    for (it <- 1 to iters) {
-      // data pass: per task, grad of mean CE wrt (w_k, b_k) + CE value;
-      // the trailing slot counts the rows that contributed (== n for
-      // full batch; the sampled size for minibatch)
-      val batch =
-        if (minibatch > 0) data.sample(withReplacement = false,
-          math.min(1.0, minibatch / n), seed = it)
-        else data
-      val zero = new Array[Double](K * (H + 2) + 1)
-      val agg = batch.treeAggregate(zero)(
-        seqOp = (acc, row) => {
-          val (c, y) = row
-          var k = 0
-          while (k < K) {
-            var z = biases(k)
-            var j = 0
-            while (j < H) { z += heads(k)(j) * c(j); j += 1 }
-            val p = Retain.sigmoid(z)
-            val g = p - y(k)
-            val base = k * (H + 2)
-            j = 0
-            while (j < H) { acc(base + j) += g * c(j); j += 1 }
-            acc(base + H) += g
-            // stable CE: max(z,0) - z y + log1p(exp(-|z|))  (model.py:159)
-            acc(base + H + 1) += math.max(z, 0) - z * y(k) + math.log1p(math.exp(-math.abs(z)))
-            k += 1
+        if (onIter != null) {
+          // eval pass (`model.py:219-228`): full-set CE with the CURRENT
+          // heads — capture a copy so the lazy thunk is stable even if
+          // invoked after later iterations move the parameters
+          val snap = p.clone()
+          val evalThunk = () => {
+            val agg = data.treeAggregate(new Array[Double](K))(
+              seqOp = (acc, row) => {
+                val (c, y) = row
+                var k = 0
+                while (k < K) { acc(k) += Retain.sigmoidCe(headLogit(snap, k, c), y(k)); k += 1 }
+                acc
+              },
+              combOp = addInto)
+            agg.map(_ / n)
           }
-          acc(K * (H + 2)) += 1
-          acc
-        },
-        combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
-
-      val grad = new Array[Double](dim)
-      // normalize by the rows this step actually saw (an empty sampled
-      // batch — possible at tiny SF — contributes a zero gradient)
-      val cnt = math.max(agg(K * (H + 2)), 1.0)
-      ces = Array.tabulate(K)(k => agg(k * (H + 2) + H + 1) / cnt)
-      // CE-path gradients with (1 + μ‖B[k,:]‖₁)/√n scaling (model.py:178)
-      for (k <- 0 until K) {
-        val l1row = (0 until K).map(j => math.abs(bMat(k)(j))).sum
-        val scale = (1.0 + mu * l1row) / sqrtn // task weight (model.py:178)
-        val base = k * (H + 2)
-        for (j <- 0 until H) grad(flatIdx(0, k, j)) += scale * (agg(base + j) / cnt)
-        grad(flatIdx(1, k, 0)) += scale * (agg(base + H) / cnt)
-        // μ-path gradient on B row k: μ·sign(B[k,j])·CE_k/√n
-        for (j <- 0 until K if j != k)
-          grad(flatIdx(2, k, j)) += mu * math.signum(bMat(k)(j)) * ces(k) / sqrtn
-      }
-      // λ reconstruction penalty: Σ_t ‖w_t − Σ_j B[j,t] w_j‖² (model.py:179-181)
-      val resid = Array.tabulate(K, H) { (t, j) =>
-        var r = heads(t)(j)
-        for (i <- 0 until K) r -= bMat(i)(t) * heads(i)(j)
-        r
-      }
-      for (t <- 0 until K; j <- 0 until H) {
-        grad(flatIdx(0, t, j)) += lambda * 2.0 * resid(t)(j)
-        for (i <- 0 until K if i != t)
-          grad(flatIdx(0, i, j)) += lambda * 2.0 * resid(t)(j) * (-bMat(i)(t))
-      }
-      for (i <- 0 until K; t <- 0 until K if i != t) {
-        var g = 0.0
-        for (j <- 0 until H) g += 2.0 * resid(t)(j) * (-heads(i)(j))
-        grad(flatIdx(2, i, t)) += lambda * g
-      }
-      // Adam step (model.py:184, lr run.py:27 scaled for the tiny head)
-      val bc1 = 1 - math.pow(b1, it); val bc2 = 1 - math.pow(b2, it)
-      def adam(ix: Int, g: Double): Double = {
-        m(ix) = b1 * m(ix) + (1 - b1) * g
-        v(ix) = b2 * v(ix) + (1 - b2) * g * g
-        lr * (m(ix) / bc1) / (math.sqrt(v(ix) / bc2) + eps)
-      }
-      for (k <- 0 until K; j <- 0 until H)
-        heads(k)(j) -= adam(flatIdx(0, k, j), grad(flatIdx(0, k, j)))
-      for (k <- 0 until K)
-        biases(k) -= adam(flatIdx(1, k, 0), grad(flatIdx(1, k, 0)))
-      for (i <- 0 until K; j <- 0 until K if i != j)
-        bMat(i)(j) -= adam(flatIdx(2, i, j), grad(flatIdx(2, i, j))) // diag stays 0 (model.py:91-92)
-
-      if (onIter != null) {
-        // eval pass (`model.py:219-228`): full-set CE with the CURRENT
-        // heads — capture copies so the lazy thunk is stable even if
-        // invoked after later iterations mutate the driver arrays
-        val hSnap = heads.map(_.clone()); val bSnap = biases.clone()
-        val evalThunk = () => {
-          val agg = data.treeAggregate(new Array[Double](K + 1))(
-            seqOp = (acc, row) => {
-              val (c, y) = row
-              var k = 0
-              while (k < K) {
-                var z = bSnap(k)
-                var j = 0
-                while (j < H) { z += hSnap(k)(j) * c(j); j += 1 }
-                acc(k) += math.max(z, 0) - z * y(k) + math.log1p(math.exp(-math.abs(z)))
-                k += 1
-              }
-              acc(K) += 1
-              acc
-            },
-            combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
-          Array.tabulate(K)(k => agg(k) / math.max(agg(K), 1.0))
+          onIter(it, step.bMat.map(_.clone()), evalThunk)
         }
-        onIter(it, bMat.map(_.clone()), evalThunk)
       }
+      (step.bMat, ces, counts.drop(1))
+    } finally {
+      data.unpersist()
+      bw0.destroy()
     }
-    data.unpersist()
-    (bMat, ces, nPos)
   }
 
   /** The reference's composed default training regime, end-to-end
@@ -367,11 +386,11 @@ object RetainOps {
     * `model.py:184`: Adam over ALL trainables — V, both LSTMs,
     * attention, heads — plus B): per-iteration distributed pass runs
     * [[graft.functions.RetainGrad.rowGrad]] per entity and
-    * treeAggregates the ~2.4k-double flat gradient; Adam and the B/λ
-    * coupling stay on the driver. Backprop is finite-difference
-    * validated in RetainGradSpec.
-    */
-  /** @return (B matrix, final flat params, final mean loss,
+    * treeAggregates the ~2.4k-double flat gradient; the B/λ coupling
+    * and Adam are the driver's [[AmtlStep]]. Backprop is
+    * finite-difference validated in RetainGradSpec.
+    *
+    * @return (B matrix, final flat params, final mean loss,
     *          per-iteration eval history: (iter, perTaskCE)) — the
     *          history is the reference's check_iter eval stream
     *          (`model.py:236-272`), consumed by q96's running-minimum
@@ -382,28 +401,18 @@ object RetainOps {
                 keepProb: Double = 1.0): (Array[Array[Double]], Array[Double], Double, Seq[(Int, Array[Double])]) = {
     import graft.functions.RetainGrad
     import graft.functions.RetainGrad._
-    val K = numTasks
     // the shared persisted (uid, x, ys) base — every Adam iteration
     // reuses the same cached partitions (see [[featurized]])
     val data = featurized(s, d)
     val n = data.count().toDouble
-    val sqrtn = math.sqrt(n)
-
-    var params = RetainGrad.pack(Retain.defaultWeights)
-    val bMat = Array.fill(K, K)(0.0)
-    val m = new Array[Double](Dim + K * K); val v = new Array[Double](Dim + K * K)
-    val b1 = 0.9; val b2 = 0.999; val eps = 1e-8
+    val step = new AmtlStep(RetainGrad.pack(Retain.defaultWeights), OffHeads, n, lr, mu, lambda)
     var lastLoss = 0.0
     val history = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Double])]
 
     for (it <- 1 to iters) {
-      val w = RetainGrad.unpack(params)
-      val scale = Array.tabulate(K) { k =>
-        (1.0 + mu * (0 until K).map(j => math.abs(bMat(k)(j))).sum) / sqrtn
-      }
-      val bw = s.sparkContext.broadcast((w, scale))
+      val bw = s.sparkContext.broadcast((RetainGrad.unpack(step.params), step.taskScale))
       // one distributed pass: flat grad ++ [scaled loss] ++ per-task CE
-      val agg = data.treeAggregate(new Array[Double](Dim + 1 + K))(
+      val agg = try data.treeAggregate(new Array[Double](Dim + 1 + K))(
         seqOp = (acc, row) => {
           val (uid, x, ys) = row
           val ceView = new Array[Double](K)
@@ -415,45 +424,17 @@ object RetainOps {
           while (k < K) { acc(Dim + 1 + k) += ceView(k); k += 1 }
           acc
         },
-        combOp = (a, c) => { var i = 0; while (i < a.length) { a(i) += c(i); i += 1 }; a })
-      bw.destroy()
+        combOp = addInto)
+      finally bw.destroy()
       lastLoss = agg(Dim) / n
+      // the μ-path B gradient takes the exact per-task mean CE carried
+      // through the same pass (model.py:178 couples B's L1 row to task
+      // i's loss)
       val ceTask = Array.tabulate(K)(k => agg(Dim + 1 + k) / n)
       history += ((it, ceTask))
-      val grad = new Array[Double](Dim + K * K)
-      locally { var i = 0; while (i < Dim) { grad(i) = agg(i) / n; i += 1 } }
-      // λ head-reconstruction coupling + B gradients (driver side, tiny)
-      val heads = Array.tabulate(K, H)((k, j) => params(OffHeads + k * H + j))
-      val resid = Array.tabulate(K, H) { (t, j) =>
-        var r = heads(t)(j)
-        for (i <- 0 until K) r -= bMat(i)(t) * heads(i)(j)
-        r
-      }
-      for (t <- 0 until K; j <- 0 until H) {
-        grad(OffHeads + t * H + j) += lambda * 2.0 * resid(t)(j)
-        for (i <- 0 until K if i != t)
-          grad(OffHeads + i * H + j) += lambda * 2.0 * resid(t)(j) * (-bMat(i)(t))
-      }
-      // μ-path B gradient uses the exact per-task mean CE carried
-      // through the same treeAggregate pass (model.py:178 couples
-      // B's L1 row to task i's loss)
-      for (i <- 0 until K; t <- 0 until K if i != t) {
-        var g = mu * math.signum(bMat(i)(t)) * ceTask(i) / sqrtn
-        for (j <- 0 until H) g += lambda * 2.0 * resid(t)(j) * (-heads(i)(j))
-        grad(Dim + i * K + t) = g
-      }
-      // Adam over params ++ B
-      val bc1 = 1 - math.pow(b1, it); val bc2 = 1 - math.pow(b2, it)
-      def adam(ix: Int, g: Double): Double = {
-        m(ix) = b1 * m(ix) + (1 - b1) * g
-        v(ix) = b2 * v(ix) + (1 - b2) * g * g
-        lr * (m(ix) / bc1) / (math.sqrt(v(ix) / bc2) + eps)
-      }
-      locally { var i = 0; while (i < Dim) { params(i) -= adam(i, grad(i)); i += 1 } }
-      for (i <- 0 until K; j <- 0 until K if i != j)
-        bMat(i)(j) -= adam(Dim + i * K + j, grad(Dim + i * K + j))
+      step.step(Array.tabulate(Dim)(i => agg(i) / n), ceTask)
     }
-    (bMat, params, lastLoss, history.toSeq) // base RDD stays cached for the session
+    (step.bMat, step.params, lastLoss, history.toSeq) // base RDD stays cached for the session
   }
 
   /** Weight checkpoint shared by the q76/q77/q78 oracles: the flat

@@ -91,6 +91,62 @@ class RetainGradSpec extends AnyFunSuite {
     assert(other != lossDrop(p0))
   }
 
+  test("AMTL step gradient matches finite differences over heads, biases and B") {
+    import graft.operators.RetainOps.AmtlStep
+    val prng = new Retain.Prng(23L)
+    val xs = Seq.fill(4)(Array.tabulate(T, F)((_, _) => prng.next()))
+    val ys = Seq(Array(1.0, 0.0, 1.0), Array(0.0, 0.0, 1.0),
+      Array(1.0, 1.0, 0.0), Array(0.0, 1.0, 0.0))
+    val n = xs.size.toDouble
+    val mu = 0.3; val lambda = 0.2
+    // every off-diagonal B entry nonzero, so each |B[k][j]| is
+    // differentiable; the diagonal is pinned to 0 and is no parameter
+    val b0 = Array(Array(0.0, 0.4, -0.3), Array(0.2, 0.0, 0.5), Array(-0.6, 0.1, 0.0))
+    val p0 = pack(Retain.defaultWeights)
+
+    // the AMTL objective, written out independently of AmtlStep:
+    // Σ_k s_k·meanCE_k + λ·Σ_t ‖w_t − Σ_i B[i][t]·w_i‖²
+    def objective(p: Array[Double], b: Array[Array[Double]]): Double = {
+      val scale = Array.tabulate(K)(k => (1.0 + mu * b(k).map(math.abs).sum) / math.sqrt(n))
+      val ce = xs.indices.map(r => lossOf(p, xs(r), ys(r), scale)).sum / n
+      val w = unpack(p).heads
+      var pen = 0.0
+      for (t <- 0 until K; j <- 0 until H) {
+        val r = w(t)(j) - (0 until K).map(i => b(i)(t) * w(i)(j)).sum
+        pen += r * r
+      }
+      ce + lambda * pen
+    }
+
+    // analytic: the data pass (rowGrad at the step's task scales) and
+    // the shared step's λ and B gradients, as trainFull composes them
+    val step = new AmtlStep(p0.clone(), OffHeads, n, lr = 0.01, mu = mu, lambda = lambda)
+    for (i <- 0 until K) System.arraycopy(b0(i), 0, step.bMat(i), 0, K)
+    val acc = new Array[Double](Dim); val ceSum = new Array[Double](K)
+    val scale = step.taskScale
+    for (r <- xs.indices) rowGrad(unpack(p0), xs(r), ys(r), scale, acc, ceSum)
+    val grad = acc.map(_ / n)
+    val gB = step.gradient(grad, ceSum.map(_ / n))
+
+    val eps = 1e-6
+    def check(what: String, analytic: Double, num: Double): Unit = {
+      val rel = math.abs(num - analytic) / math.max(1e-8, math.max(math.abs(num), math.abs(analytic)))
+      assert(rel < 1e-5 || math.abs(num - analytic) < 1e-8,
+        s"$what: analytic=$analytic numeric=$num rel=$rel")
+    }
+    for (ix <- OffHeads until Dim) { // every head weight and bias
+      val pp = p0.clone(); pp(ix) += eps
+      val pm = p0.clone(); pm(ix) -= eps
+      check(s"param $ix", grad(ix), (objective(pp, b0) - objective(pm, b0)) / (2 * eps))
+    }
+    for (i <- 0 until K; t <- 0 until K if i != t) {
+      val bp = b0.map(_.clone()); bp(i)(t) += eps
+      val bm = b0.map(_.clone()); bm(i)(t) -= eps
+      check(s"B($i)($t)", gB(i * K + t), (objective(p0, bp) - objective(p0, bm)) / (2 * eps))
+    }
+    for (i <- 0 until K) assert(gB(i * K + i) == 0.0)
+  }
+
   test("pack/unpack round-trips the weights exactly") {
     val w = Retain.defaultWeights
     val w2 = unpack(pack(w))

@@ -51,6 +51,61 @@ class TrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (i <- 0 until 3) assert(b12(i)(i) == 0.0)
   }
 
+  // Pinned results of both training regimes on sf0.001. trainFull sums
+  // B's gradient in RetainOps.AmtlStep's order (the μ term, then each λ
+  // term) and must match bit for bit. trainAmtl's values were recorded
+  // while it added λ·Σ_j(...) to the μ term as one sum, so its B and CE
+  // carry a relative tolerance of 1e-9.
+  private def close(a: Double, b: Double): Boolean =
+    math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+  private def assertClose(got: Array[Double], want: Array[Double], what: String): Unit =
+    assert(got.length == want.length && got.indices.forall(i => close(got(i), want(i))),
+      s"$what: got ${got.mkString(", ")}, want ${want.mkString(", ")}")
+
+  test("characterization: trainAmtl full batch, 15 iterations") {
+    val (bMat, ces, nPos) = RetainOps.trainAmtl(spark, sf, iters = 15)
+    assertClose(bMat.flatten, Array(
+      0.0, 0.01136677220248222, 0.06301171296031073,
+      -0.0018601445314751445, 0.0, 0.15554851959858376,
+      0.08416623242898576, 0.14288137863453543, 0.0), "B")
+    assertClose(ces, Array(0.6868443340975804, 0.6173487943592771, 0.6878461764772473), "CE")
+    assert(nPos.sameElements(Array(7.0, 4.0, 7.0)))
+  }
+
+  test("characterization: trainAmtl minibatch 128, 20 iterations") {
+    val (bMat, ces, _) = RetainOps.trainAmtl(spark, sf, iters = 20, minibatch = 128)
+    assertClose(bMat.flatten, Array(
+      0.0, -0.005214485417954509, 0.0707188929731633,
+      -4.461815809659003E-4, 0.0, 0.36268531574113455,
+      0.15613545677094845, 0.37465227329374756, 0.0), "B")
+    assertClose(ces, Array(0.6875133977820159, 0.5969298880486681, 0.6845396355897819), "CE")
+  }
+
+  test("characterization: trainFull 3 iterations is bit-identical") {
+    val (bMat, params, loss, _) = RetainOps.trainFull(spark, sf, iters = 3)
+    assert(bMat.flatten.sameElements(Array(
+      0.0, 0.014734718312852288, -0.026030428083302467,
+      0.013281736900944696, 0.0, 0.01982594956420466,
+      -0.026484950057481374, 0.022059291176953374, 0.0)), bMat.flatten.mkString(", "))
+    assert(loss == 0.5688942257812651, s"loss $loss")
+    // all 1236 parameters, through the bits of every double
+    assert(params.length == 1236 && java.util.Arrays.hashCode(params) == 1115036360,
+      s"params changed (sum ${params.sum})")
+  }
+
+  test("trainAmtl leaves only the featurized base persisted, also when it throws") {
+    val base = RetainOps.featurized(spark, sf)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(before.contains(base.id))
+    RetainOps.trainAmtl(spark, sf, iters = 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    intercept[IllegalStateException] {
+      RetainOps.trainAmtl(spark, sf, iters = 2,
+        onIter = (_, _, _) => throw new IllegalStateException("hook failed"))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("scored output is deterministic across invocations") {
     val w = graft.functions.Retain.defaultWeights
     val a = RetainOps.scored(spark, sf, w).select("user_id", "p0", "p1", "p2")
