@@ -3,9 +3,12 @@ package graft.operators
 import graft.{QueryDef, Scratch, Tables}
 import graft.functions.Retain
 import graft.functions.Retain.{RetainWeights, F, H, T, numTasks}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.random.BernoulliSampler
+import scala.reflect.ClassTag
 
 /** RETAIN scoring + AMTL training (SURVEY.md M5/M6): the reference's
   * actual end-to-end capability — per-entity risk scores with reverse-
@@ -16,11 +19,15 @@ import org.apache.spark.sql.functions._
   * Execution shape (SURVEY.md §4.3): series assembly is two shuffles on
   * `user_id` (pivot + collect); scoring is a narrow typed `map` under a
   * broadcast weight struct (no shuffle, scales linearly with rows);
-  * both training regimes run one `treeAggregate` pass per Adam step
+  * full-batch training runs one `treeAggregate` pass per Adam step
   * ([[trainAmtl]] over cached context vectors, [[trainFull]] through
-  * RetainGrad.rowGrad) and hand the gradient to the shared driver-side
+  * RetainGrad.rowGrad) and hands the gradient to the shared driver-side
   * [[AmtlStep]] (B, task scales, λ coupling, Adam) — the classic MLlib
-  * optimization pattern. Nothing row-sized ever reaches the driver.
+  * optimization pattern. The minibatch regime instead draws every
+  * step's sample in ONE job ([[drawMinibatches]]) and runs its steps on
+  * the driver over the drawn rows: about `iters × minibatch × (H+K)`
+  * doubles reach the driver, whatever the number of rows; nothing
+  * full-set-sized ever does.
   *
   * These queries are deterministic given the fixed seed-42 weights but
   * not ANSI-SQL-expressible (the LSTM recurrence, SURVEY.md §7.5), so
@@ -75,10 +82,17 @@ object RetainOps {
     * Footprint is users × T×F doubles (MBs at any SF that fits a label
     * pass), so it stays pinned for the session.
     */
-  private val baseCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.rdd.RDD[(Long, Array[Array[Double]], Array[Double])]]
+  def featurized(s: SparkSession, d: String): RDD[(Long, Array[Array[Double]], Array[Double])] =
+    base(s, d).rdd
 
-  def featurized(s: SparkSession, d: String): org.apache.spark.rdd.RDD[(Long, Array[Array[Double]], Array[Double])] = {
+  /** [[featurized]]'s RDD with the row count `n` and per-task positive
+    * counts `nPos` that its materializing pass counted. */
+  private final case class Base(rdd: RDD[(Long, Array[Array[Double]], Array[Double])],
+                                n: Double, nPos: Array[Double])
+
+  private val baseCache = new java.util.concurrent.ConcurrentHashMap[String, Base]
+
+  private def base(s: SparkSession, d: String): Base = {
     val key = s"${s.sparkContext.hashCode()}|$d"
     baseCache.computeIfAbsent(key, _ => {
       import s.implicits._
@@ -97,8 +111,10 @@ object RetainOps {
         .coalesce(8) // tiny rows: cut per-iteration task-scheduling overhead
         .rdd.map { case (uid, xs, ys) => (uid, xs.map(_.toArray).toArray, ys.toArray) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      rdd.count() // materialize eagerly so consumers never race the build
-      rdd
+      // materialize eagerly so consumers never race the build; the same
+      // pass counts the rows, then the positives per task
+      val counts = rdd.map(r => 1.0 +: r._3).fold(new Array[Double](1 + numTasks))(addInto)
+      Base(rdd, counts(0), counts.drop(1))
     })
   }
 
@@ -206,16 +222,70 @@ object RetainOps {
     z
   }
 
+  /** The seqOp of [[trainAmtl]]'s data pass under the heads and biases
+    * `p`: adds one context row `(c, y)`'s Σ(σ(z)−y)·c per head weight and
+    * Σ(σ(z)−y) per bias (laid out as `p`), then its CE per task, then 1
+    * to the trailing row count. The same fold runs on executors (full
+    * batch) and on the driver (drawn minibatches).
+    */
+  private def headStats(p: Array[Double])
+      : (Array[Double], (Array[Double], Array[Double])) => Array[Double] = {
+    val K = numTasks
+    val P = p.length
+    (acc, row) => {
+      val (c, y) = row
+      var k = 0
+      while (k < K) {
+        val z = headLogit(p, k, c)
+        val g = Retain.sigmoid(z) - y(k)
+        var j = 0
+        while (j < H) { acc(k * H + j) += g * c(j); j += 1 }
+        acc(K * H + k) += g
+        acc(P + k) += Retain.sigmoidCe(z, y(k))
+        k += 1
+      }
+      acc(P + K) += 1
+      acc
+    }
+  }
+
+  /** Every step's Bernoulli minibatch, drawn in one pass over `data`:
+    * `(p)(it - 1)` holds the rows of partition p that
+    * `data.sample(withReplacement = false, fraction, seed = it)` keeps,
+    * in partition order. The seeding is Spark's own
+    * (`PartitionwiseSampledRDD.getPartitions`): partition p samples with
+    * the p-th `nextLong()` of `java.util.Random(it)`.
+    */
+  private[graft] def drawMinibatches[A: ClassTag](data: RDD[A], fraction: Double,
+                                                  iters: Int): Array[Array[Array[A]]] =
+    data.mapPartitionsWithIndex { (p, rows) =>
+      val all = rows.toArray
+      Iterator.single(Array.tabulate(iters) { i =>
+        val seeds = new java.util.Random(i + 1L)
+        var seed = 0L
+        for (_ <- 0 to p) seed = seeds.nextLong()
+        val sampler = new BernoulliSampler[A](fraction)
+        sampler.setSeed(seed)
+        sampler.sample(all.iterator).toArray
+      })
+    }.collect()
+
   /** Train per-task heads + B on frozen shared features ("lastlayer"
     * semantics, the reference's own model_tag `run.py:8`). Each Adam
-    * step is one treeAggregate of head statistics over the cached
-    * context vectors, followed by one [[AmtlStep]] on the driver.
+    * step folds [[headStats]] over its rows and runs one [[AmtlStep]] on
+    * the driver. Full batch, that fold is one treeAggregate over the
+    * cached context vectors per step. In minibatch mode one job
+    * ([[drawMinibatches]]) draws every step's rows up front and the
+    * steps run on the driver alone, folding each partition's rows and
+    * combining partitions in index order; about `iters × minibatch`
+    * rows of H+K doubles reach the driver.
     *
     * @param minibatch 0 = full batch (every iteration sees all rows);
     *                  >0 = the reference's regime (`model.py:187-194`,
     *                  R4+R26): each Adam step consumes a fresh seeded
     *                  ~`minibatch`-row Bernoulli sample of the cached
-    *                  rows (seed = iteration, so the trajectory is
+    *                  rows (the rows `sample(false, minibatch / n, seed =
+    *                  iteration)` yields, so the trajectory is
     *                  deterministic), gradients normalized by the rows
     *                  actually sampled.
     * @param onIter    optional per-iteration hook `(it, B snapshot,
@@ -232,50 +302,39 @@ object RetainOps {
       : (Array[Array[Double]], Array[Double], Array[Double]) = {
     val K = numTasks
     val w0 = Retain.defaultWeights
+    val b = base(s, d)
+    val n = b.n
     // Persist the OBJECT RDD, not the Dataset: the Adam loop reuses the
     // same partitions every iteration, and a persisted object RDD skips
     // both the per-iteration Catalyst planning a fresh `.rdd` would do
     // and the InternalRow→tuple deserialization a cached Dataset pays
     // on every pass. Derived from the shared [[featurized]] base (one
     // forward pass to the frozen context vectors — narrow, no shuffle).
+    // The draw job, or the first full-batch step, materializes it.
     val bw0 = s.sparkContext.broadcast(w0)
-    val data = featurized(s, d)
+    val data = b.rdd
       .map { case (_, x, ys) =>
         val (_, _, ctx) = Retain.forward(bw0.value, x)
         (ctx, ys)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     try {
-      val counts = data.map(r => 1.0 +: r._2).reduce(addInto) // n, then positives per task
-      val n = counts(0)
       val step = new AmtlStep(w0.heads.flatten ++ w0.headB, 0, n, lr, mu, lambda)
       val p = step.params
-      var ces = new Array[Double](K)
       val P = p.length
+      val stats = headStats(p)
+      val drawn =
+        if (minibatch <= 0) null else drawMinibatches(data, math.min(1.0, minibatch / n), iters)
+      var ces = new Array[Double](K)
       for (it <- 1 to iters) {
-        // data pass: Σ(σ(z)−y)·c per head weight and Σ(σ(z)−y) per bias
-        // (laid out as `p`), then Σ CE per task; the trailing slot counts
-        // the rows that contributed (== n for full batch; the sampled
-        // size for minibatch)
-        val batch = if (minibatch <= 0) data
-          else data.sample(withReplacement = false, math.min(1.0, minibatch / n), seed = it)
-        val agg = batch.treeAggregate(new Array[Double](P + K + 1))(
-          seqOp = (acc, row) => {
-            val (c, y) = row
-            var k = 0
-            while (k < K) {
-              val z = headLogit(p, k, c)
-              val g = Retain.sigmoid(z) - y(k)
-              var j = 0
-              while (j < H) { acc(k * H + j) += g * c(j); j += 1 }
-              acc(K * H + k) += g
-              acc(P + k) += Retain.sigmoidCe(z, y(k))
-              k += 1
-            }
-            acc(P + K) += 1
-            acc
-          },
-          combOp = addInto)
+        // head statistics laid out as `p`, then Σ CE per task, then the
+        // rows that contributed (== n for full batch; the sampled size
+        // for minibatch)
+        val agg =
+          if (drawn == null) data.treeAggregate(new Array[Double](P + K + 1))(stats, addInto)
+          else drawn.foldLeft(new Array[Double](P + K + 1)) { (acc, part) =>
+            addInto(acc, part(it - 1).foldLeft(new Array[Double](P + K + 1))(stats))
+          }
 
         // normalize by the rows this step actually saw (an empty sampled
         // batch — possible at tiny SF — contributes a zero gradient)
@@ -303,7 +362,7 @@ object RetainOps {
           onIter(it, step.bMat.map(_.clone()), evalThunk)
         }
       }
-      (step.bMat, ces, counts.drop(1))
+      (step.bMat, ces, b.nPos.clone())
     } finally {
       data.unpersist()
       bw0.destroy()
@@ -341,8 +400,11 @@ object RetainOps {
     *
     * Defaults are the reference's regime constants (`run.py:28-30`:
     * total 1000, check 200, artifact 500, batch 128, lr 1e-3). Scale
-    * posture: each iteration is one treeAggregate over the cached
-    * context RDD; the artifact path is driver-side O(K²) text.
+    * posture: one job draws every step's minibatch (about `totalIter ×
+    * minibatch × (H+K)` doubles reach the driver: ~11 MB at the
+    * reference constants), the Adam steps run on the driver, and each
+    * eval is one treeAggregate over the cached context RDD — 1 + (eval
+    * count) jobs in all; the artifact path is driver-side O(K²) text.
     *
     * @return the artifact lines appended by THIS run, in order.
     */
@@ -403,8 +465,9 @@ object RetainOps {
     import graft.functions.RetainGrad._
     // the shared persisted (uid, x, ys) base — every Adam iteration
     // reuses the same cached partitions (see [[featurized]])
-    val data = featurized(s, d)
-    val n = data.count().toDouble
+    val b = base(s, d)
+    val data = b.rdd
+    val n = b.n
     val step = new AmtlStep(RetainGrad.pack(Retain.defaultWeights), OffHeads, n, lr, mu, lambda)
     var lastLoss = 0.0
     val history = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Double])]

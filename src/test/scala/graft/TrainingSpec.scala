@@ -12,6 +12,7 @@ import org.scalatest.BeforeAndAfterAll
 class TrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
+  private val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
 
   override def beforeAll(): Unit = {
     spark = GraftSession.prepare(
@@ -81,6 +82,70 @@ class TrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertClose(ces, Array(0.6875133977820159, 0.5969298880486681, 0.6845396355897819), "CE")
   }
 
+  // sf0.01 has n = 150 rows, so minibatch 4 and 128 both really sample;
+  // values recorded while every step ran its own sample+treeAggregate job
+  test("characterization: trainAmtl minibatch 4 and 128 on sf0.01, 60 iterations") {
+    val (b4, ce4, pos4) = RetainOps.trainAmtl(spark, sf01, iters = 60, lr = 1e-3, minibatch = 4)
+    assertClose(b4.flatten, Array(
+      0.0, 0.047190648824157695, -0.048032423211203656,
+      0.04645763446214829, 0.0, 0.04581685928773628,
+      -0.04964222248037692, 0.04900264503402545, 0.0), "B (minibatch 4)")
+    assertClose(ce4, Array(0.6496780319393558, 0.6476045450703131, 0.4763774643657383), "CE (minibatch 4)")
+    assert(pos4.sameElements(Array(52.0, 62.0, 68.0)))
+    val (b128, ce128, _) = RetainOps.trainAmtl(spark, sf01, iters = 60, lr = 1e-3, minibatch = 128)
+    assertClose(b128.flatten, Array(
+      0.0, 0.05295980898281968, -0.04351602927258597,
+      0.05189248043083875, 0.0, 0.04324091251794825,
+      -0.04515362358624772, 0.04658227413250397, 0.0), "B (minibatch 128)")
+    assertClose(ce128, Array(0.7688537968245875, 0.727515258373089, 0.6998187946839026), "CE (minibatch 128)")
+  }
+
+  test("drawMinibatches keeps exactly the rows of RDD.sample, partition by partition") {
+    import graft.functions.Retain
+    val w = Retain.defaultWeights
+    def context(d: String) = RetainOps.featurized(spark, d)
+      .map { case (_, x, ys) => (Retain.forward(w, x)._3, ys) }
+    def rows(part: Array[(Array[Double], Array[Double])]) = part.toSeq.map { case (c, y) => (c.toSeq, y.toSeq) }
+    val threeParts = context(sf01).repartition(3).persist()
+    try {
+      val cases = Seq(
+        ("sf0.01, minibatch 4", context(sf01), 4),
+        ("sf0.01, minibatch 128", context(sf01), 128),
+        ("sf0.01 in 3 partitions, minibatch 4", threeParts, 4),
+        ("sf0.001, minibatch 128 >= n", context(sf), 128))
+      for ((what, ctx, minibatch) <- cases) {
+        val f = math.min(1.0, minibatch / ctx.count().toDouble)
+        val iters = 25
+        val drawn = RetainOps.drawMinibatches(ctx, f, iters)
+        assert(drawn.length == ctx.getNumPartitions, what)
+        for (it <- 1 to iters) {
+          val want = ctx.sample(withReplacement = false, f, seed = it).glom().collect()
+          for (p <- want.indices)
+            assert(rows(drawn(p)(it - 1)) == rows(want(p)), s"$what: step $it, partition $p")
+        }
+      }
+    } finally threeParts.unpersist()
+  }
+
+  test("the minibatch regime runs one draw job plus its eval jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    RetainOps.featurized(spark, sf01)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("regime-jobs")
+      RetainOps.referenceRegime(spark, sf01, totalIter = 100, checkIter = 20,
+        artifactEvery = 50, minibatch = 128, artifactPath = dir.resolve("B.txt"))
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 1 + 5, s"${jobs.get} jobs for 100 steps and 5 evals")
+  }
+
   test("characterization: trainFull 3 iterations is bit-identical") {
     val (bMat, params, loss, _) = RetainOps.trainFull(spark, sf, iters = 3)
     assert(bMat.flatten.sameElements(Array(
@@ -94,16 +159,18 @@ class TrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("trainAmtl leaves only the featurized base persisted, also when it throws") {
-    val base = RetainOps.featurized(spark, sf)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    assert(before.contains(base.id))
-    RetainOps.trainAmtl(spark, sf, iters = 2)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
-    intercept[IllegalStateException] {
-      RetainOps.trainAmtl(spark, sf, iters = 2,
-        onIter = (_, _, _) => throw new IllegalStateException("hook failed"))
+    for ((d, minibatch) <- Seq((sf, 0), (sf01, 4))) {
+      val base = RetainOps.featurized(spark, d)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(before.contains(base.id))
+      RetainOps.trainAmtl(spark, d, iters = 2, minibatch = minibatch)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before, s"minibatch $minibatch")
+      intercept[IllegalStateException] {
+        RetainOps.trainAmtl(spark, d, iters = 2, minibatch = minibatch,
+          onIter = (_, _, _) => throw new IllegalStateException("hook failed"))
+      }
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before, s"minibatch $minibatch, throwing hook")
     }
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("scored output is deterministic across invocations") {
