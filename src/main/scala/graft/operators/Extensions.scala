@@ -134,11 +134,7 @@ object Extensions {
       """SELECT user_id, count(*) AS n_events, round(sum(value),2) AS total
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val rawSchema = graft.streaming.Streaming.rawSchema(s, d)
-      // same staged dir as the other stream sources (round 12: shared
-      // helper — handles both single-file and ScaleGen part-dir layouts)
-      val stage = graft.streaming.Streaming.stageDir(d)
-      val updated = s.readStream.schema(rawSchema).parquet(stage)
+      val updated = graft.streaming.Streaming.eventStream(s, d)
         .select(col("user_id"), col("value"))
         .as[(Long, Double)]
         .groupByKey(_._1)
@@ -152,13 +148,8 @@ object Extensions {
             (uid, n, sm)
         }
         .toDF("user_id", "n_events", "total_raw")
-      val q = graft.streaming.Streaming.withStreamConf(s) {
-        updated.writeStream.format("memory")
-          .queryName("graft_stream_stateful").outputMode("update").start()
-      }
-      try q.processAllAvailable() finally q.stop()
       // update mode emits one row per key per trigger; keep the latest
-      s.table("graft_stream_stateful")
+      graft.streaming.Streaming.drain(s, updated, "graft_stream_stateful", "update")
         .groupBy("user_id")
         .agg(max(col("n_events")).as("n_events"),
           round(max(col("total_raw")), 2).as("total"))

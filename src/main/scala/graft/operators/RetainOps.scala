@@ -737,14 +737,9 @@ object RetainOps {
             (uid, grid(T * F).toLong, p(0), p(1), p(2))
         }
         .toDF("user_id", "n_seen", "p0r", "p1r", "p2r")
-      val q = graft.streaming.Streaming.withStreamConf(s) {
-        scoredStream.writeStream.format("memory")
-          .queryName("graft_stream_retain").outputMode("update").start()
-      }
-      try q.processAllAvailable() finally q.stop()
       // update mode may emit per microbatch; keep the fullest state per user
       val w = Window.partitionBy(col("user_id")).orderBy(col("n_seen").desc)
-      s.table("graft_stream_retain")
+      graft.streaming.Streaming.drain(s, scoredStream, "graft_stream_retain", "update")
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select(col("user_id"),

@@ -196,12 +196,8 @@ object Sources {
         .groupBy("day")
         .agg(count(lit(1)).as("n"), r2(sum(col("value"))).as("total"),
           round(avg(col("value")), 6).as("mean_v"))
-      val q = graft.streaming.Streaming.withStreamConf(s) {
-        agg.writeStream.format("memory").queryName("graft_series_stream")
-          .outputMode("complete").start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_series_stream").orderBy("day")
+      graft.streaming.Streaming.drain(s, agg, "graft_series_stream", "complete")
+        .orderBy("day")
     },
 
     /** ORC sink + scan (group 1, third columnar format after parquet

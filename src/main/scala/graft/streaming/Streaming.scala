@@ -14,12 +14,22 @@ import org.apache.spark.sql.types._
   * aggregation is supposed to keep.
   *
   * Mechanics: the `events` parquet is consumed through
-  * `spark.readStream` (file source, explicit schema — TIMESTAMP(NANOS)
-  * read as long, rebuilt to micros like the batch path), aggregated with
-  * event-time windows + watermark, drained into a memory sink with
-  * `processAllAvailable`, and the sink table is returned as the query
-  * result. At 100 TB the file source becomes Kafka/object-store
-  * listing; nothing in the plan changes.
+  * `spark.readStream` (file source over a staged flat copy, explicit
+  * schema — TIMESTAMP(NANOS) read as long, rebuilt to micros like the
+  * batch path). Every finite streaming query in the engine runs through
+  * one of two runners, so a finite stream runs one way:
+  *  - [[drain]]: memory sink, `processAllAvailable`, read the sink table
+  *    back as the query result;
+  *  - [[refresh]]: complete-mode `foreachBatch` that evaluates a readout
+  *    on each micro-batch and returns the last one (the per-micro-batch
+  *    refreshed views: q249/q256/q357, the drift streams).
+  * q91's durable parquet file sink is the one stream that runs its own
+  * sink. Both runners start the query under [[withStreamConf]] and pick
+  * the state-store provider from the plan: a plan with a
+  * `transformWithState` node runs on RocksDB (the operator requires
+  * it), every other plan on Spark's default provider. At 100 TB the file
+  * source becomes Kafka/object-store listing; nothing in the plan
+  * changes.
   */
 object Streaming {
 
@@ -59,204 +69,134 @@ object Streaming {
   }
 
   /** The file source requires a directory; stage the events parquet into
-    * a per-sf scratch dir once (idempotent). `$d/events.parquet` is a
-    * single FILE in the driver's testdata but a DIRECTORY of part files
-    * from ScaleGen — the round-12 fix: the old single-file Files.copy
-    * silently staged an EMPTY directory for the latter, so every
-    * streaming query at the sf1/sf10 rungs processed zero micro-batches
-    * and Bench recorded the fast failure as a timing. A stage is now
-    * only considered valid if it actually contains parquet bytes, so
-    * the empty stages of earlier runs self-heal.
-    */
+    * a per-sf scratch dir once. */
   private[graft] def stageDir(d: String): String =
     stageFlat(d, "events.parquet", "events_stream")
 
+  /** Marks a stage dir whose copy completed. The leading underscore
+    * hides it from the file-stream source's listing. */
+  private val StagedMarker = "_STAGED"
+
   /** Stage `$d/$table` (single file OR ScaleGen part-file directory)
     * FLAT into a per-sf scratch dir — the file-stream source does not
-    * recurse, so part files must land in the stage dir itself. A stage
-    * is only valid if it actually contains parquet bytes (pre-fix runs
-    * staged EMPTY nested dirs for directory-layout sources; those
-    * self-heal here).
+    * recurse, so part files must land in the stage dir itself. The copy
+    * goes into a temporary sibling that gets [[StagedMarker]] last and is
+    * then renamed into place, so a copy killed midway never looks
+    * staged: a stage dir without the marker (a partial copy, or a
+    * layout from before the marker existed) is rebuilt from scratch.
+    * Synchronized so two queries of one JVM never rebuild the same
+    * stage at once.
     */
-  private def stageFlat(d: String, table: String, tag: String): String = {
+  private def stageFlat(d: String, table: String, tag: String): String = synchronized {
     import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
     val dir = Paths.get(s"$ioBase/${d.replaceAll("[^A-Za-z0-9.]", "_")}/$tag")
-    def staged: Boolean = Files.isDirectory(dir) && {
-      val st = Files.list(dir)
-      try st.anyMatch(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      finally st.close()
-    }
-    if (!staged) {
-      Files.createDirectories(dir)
+    if (!Files.exists(dir.resolve(StagedMarker))) {
+      val tmp = Files.createTempDirectory(
+        Files.createDirectories(dir.getParent), s".$tag-")
       val src = Paths.get(s"$d/$table")
-      if (Files.isDirectory(src)) {
-        // drop any empty nested dir a pre-fix run left behind
-        val stale = dir.resolve(table)
-        if (Files.isDirectory(stale)) {
-          val st = Files.walk(stale)
-          try st.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.delete(p))
+      val parts =
+        if (!Files.isDirectory(src)) List(src)
+        else {
+          val st = Files.list(src)
+          try st.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
           finally st.close()
         }
-        val st = Files.list(src)
-        try st.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .forEach(p => Files.copy(p, dir.resolve(p.getFileName.toString),
-            StandardCopyOption.REPLACE_EXISTING))
-        finally st.close()
-      } else Files.copy(src, dir.resolve(table),
-        StandardCopyOption.REPLACE_EXISTING)
+      parts.foreach(p => Files.copy(p, tmp.resolve(p.getFileName.toString)))
+      Files.createFile(tmp.resolve(StagedMarker))
+      deleteTree(dir)
+      Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
     }
     dir.toString
   }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val st = java.nio.file.Files.walk(p)
+      try st.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.delete(f))
+      finally st.close()
+    }
 
   /** File-stream of events with proper event-time column. */
   private[graft] def eventStream(s: SparkSession, d: String): DataFrame =
     s.readStream.schema(rawSchema(s, d)).parquet(stageDir(d))
       .withColumn("ts", tsAsTimestamp(s, d))
 
-  /** Distributed-drain switch (round 15, VERDICT r14 #3): the finite
-    * drains collect every emitted row into a driver-side memory sink —
-    * right for correctness runs (Verify hashes the rows anyway) but a
-    * harness CEILING for scale evidence: q197's sf100 output (~95M
-    * session rows) exceeds driver maxResultSize by design, so the one
-    * operator family whose 1000× behavior matters most could not be
-    * measured. `SPARK_GRAFT_STREAM_DRAIN=parquet` reroutes the drain to
-    * a distributed parquet sink (foreachBatch, so update/complete modes
-    * keep their memory-sink accumulation semantics: append/update
-    * append each batch's emitted rows, complete overwrites) and the
-    * readback is a parquet scan — Bench's `.count()` then never ships a
-    * row to the driver. Default (driver unset) is bit-identical to the
-    * old memory path. */
-  private[graft] def drainParquet: Boolean =
-    sys.env.get("SPARK_GRAFT_STREAM_DRAIN").contains("parquet")
-
-  private val drainDirs = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
-  /** Recursive delete for a drain dir (data + checkpoint). Best-effort:
-    * a half-deleted leftover is still better than an unbounded leak. */
-  private def deleteDrainDir(dir: String): Unit =
-    try {
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => try java.nio.file.Files.delete(p)
-                        catch { case _: java.io.IOException => () })
-        finally st.close()
-      }
-      // NonFatal, not just IOException: Files.walk traversal throws
-      // UncheckedIOException (a RuntimeException) when an entry vanishes
-      // or turns unreadable mid-walk, and a "best-effort" delete that
-      // fails the caller's query over a leftover dir is worse than the
-      // leak it was cleaning up (ADVICE r16).
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Fresh sink dir for `name` — a retime re-run in the same JVM must
-    * not append onto the first run's files. The PREVIOUS run's dir (data
-    * + checkpoint) is deleted on replace, and every live dir on JVM
-    * exit: at the sf100 rungs this mode exists for (~95M-row outputs) an
-    * unbounded per-retime leak fills /tmp mid-rung (ADVICE r15). */
-  private def newDrainDir(name: String,
-      schema: org.apache.spark.sql.types.StructType): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_drain_$name")
-    val prev = drainDirs.put(name, (dir.toString, schema))
-    if (prev != null) deleteDrainDir(prev._1)
-    dir.toString
+  /** Runner: run a finite streaming DF into a memory sink named `name`
+    * and return the sink table. Memory-sink accumulation follows `mode`:
+    * append/update keep every batch's emitted rows, complete keeps the
+    * last result table. */
+  private[graft] def drain(s: SparkSession, df: DataFrame, name: String,
+                           mode: String): DataFrame = {
+    run(s, df, df.writeStream.format("memory").queryName(name).outputMode(mode))
+    s.table(name)
   }
 
-  // JVM-exit sweep of whatever dirs are still registered.
-  java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    drainDirs.values.forEach(v => deleteDrainDir(v._1))))
+  /** Runner: run a finite complete-mode streaming aggregation, evaluate
+    * `readout` on every micro-batch's result table, and return the last
+    * readout. The readout's rows are collected per batch and re-rooted
+    * as a local relation in `s`: frames built inside foreachBatch belong
+    * to the stream's cloned session, which must not outlive the query.
+    * A finite complete-mode stream fires exactly one foreachBatch. */
+  private[graft] def refresh(s: SparkSession, df: DataFrame)(
+      readout: DataFrame => DataFrame): DataFrame = {
+    val latest = new java.util.concurrent.atomic.AtomicReference[
+      (StructType, Array[org.apache.spark.sql.Row])]()
+    run(s, df, df.writeStream.outputMode("complete")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val r = readout(b)
+        latest.set((r.schema, r.collect()))
+      })
+    val (schema, rows) = Option(latest.get()).getOrElse(throw new IllegalStateException(
+      "refresh: the stream finished without firing a micro-batch"))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
-  /** writeStream writer pointed at the selected drain sink. */
-  private[graft] def drainWriter(df: DataFrame, name: String, mode: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    if (drainParquet) {
-      val dir = newDrainDir(name, df.schema)
-      val saveMode = if (mode == "complete") "overwrite" else "append"
-      df.writeStream.outputMode(mode)
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode(saveMode).parquet(s"$dir/data")
-        }
-    } else df.writeStream.format("memory").queryName(name).outputMode(mode)
-
-  /** Read back what the selected drain sink wrote. A stream that ran to
-    * completion without emitting a batch leaves no data dir — that (and
-    * only that) reads back as an empty frame WITH the query's output
-    * schema, so downstream groupBy/select still resolve. Every other
-    * failure (half-failed foreachBatch write, disk full, perms)
-    * propagates: swallowing it recorded a deceptively fast zero-row
-    * "success" in Bench (VERDICT r15 / ADVICE r15). */
-  private[graft] def drainTable(s: SparkSession, name: String): DataFrame =
-    if (drainParquet) {
-      // Option-wrap: ConcurrentHashMap.get returns null when no
-      // drainWriter ever registered `name` (readback without a prior
-      // start, or a call-site name mismatch) — destructuring null threw
-      // an opaque MatchError where a named error pinpoints the bug
-      // (ADVICE r16).
-      val (dir, schema) = Option(drainDirs.get(name)).getOrElse(
-        throw new IllegalStateException(
-          s"no drain registered for '$name': drainWriter was never started " +
-          "for this query name in this JVM"))
-      if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(dir, "data")))
-        s.read.schema(schema).parquet(s"$dir/data")
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else s.table(name)
-
-  /** Run a finite streaming DF to the drain sink, return the result. */
-  private def drain(s: SparkSession, df: DataFrame, name: String,
-                    mode: String): DataFrame = {
-    val q = withStreamConf(s) {
-      drainWriter(df, name, mode).start()
-    }
-    try {
-      q.processAllAvailable()
-    } finally q.stop()
-    drainTable(s, name)
+  /** Start `w` (a writer over `df`), run it to the end of its finite
+    * input, and stop it — also when the stream throws. */
+  private def run(s: SparkSession, df: DataFrame,
+      w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
+    val q = withStreamConf(s)(withStateStoreFor(s, df)(w.start()))
+    try q.processAllAvailable() finally q.stop()
   }
 
   /** Stateful streaming operators instantiate one state store per
     * shuffle partition; per micro-batch, 32 partitions just multiplies
     * store open/commit cost over tiny state. Start streaming queries at
-    * 8 state partitions. Scoped to `start()` only: Structured Streaming
-    * clones the session (and its confs) synchronously at query start,
-    * so restoring the outer conf immediately after cannot affect the
+    * 8 state partitions (`GRAFT_STREAM_PARTITIONS` overrides it for
+    * scale runs). Scoped to `start()` only: Structured Streaming clones
+    * the session (and its confs) synchronously at query start, so
+    * restoring the outer conf immediately after cannot affect the
     * running query — and batch queries keep the session default.
     */
-  def withStreamConf[A](s: SparkSession)(start: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "8"))
-    // State-store backend switch (round 16): the default HDFS-backed
-    // provider keeps every store version's key map ON HEAP — right for
-    // the correctness runs (tiny state, no native deps in the loop) but
-    // a hard ceiling for the big-state operators at the scale rungs:
-    // q83's session-window state at sf100 (~95M open sessions as JVM
-    // objects) OOMed the executors and died in state-store recovery
-    // (CANNOT_LOAD_STATE_STORE, r15 measurement log). On a real cluster
-    // data-proportional state lives in RocksDB (off-heap, spillable,
-    // incremental checkpoints); `SPARK_GRAFT_STATE_STORE=rocksdb`
-    // applies exactly that here for scale-evidence runs. The
-    // transformWithState queries pin RocksDB explicitly either way
-    // (stateful-v2 contract); default (unset) is bit-identical to the
-    // old behavior.
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    val pPrev = s.conf.getOption(pKey)
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb"))
-      s.conf.set(pKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try start finally {
-      s.conf.set(key, prev)
-      pPrev match {
-        case Some(p) => s.conf.set(pKey, p)
-        case None => s.conf.unset(pKey)
+  private[graft] def withStreamConf[A](s: SparkSession)(start: => A): A =
+    withConf(s, "spark.sql.shuffle.partitions",
+      Some(sys.env.getOrElse("GRAFT_STREAM_PARTITIONS", "8")))(start)
+
+  /** The state-store provider is derived from the plan, scoped to
+    * `start()` like [[withStreamConf]]: `transformWithState` requires
+    * RocksDB, every other stateful operator keeps Spark's default
+    * (HDFS-backed) provider. */
+  private def withStateStoreFor[A](s: SparkSession, df: DataFrame)(start: => A): A = {
+    val tws = df.queryExecution.logical.find(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+    withConf(s, "spark.sql.streaming.stateStore.providerClass", tws.map(_ =>
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(start)
+  }
+
+  /** Run `body` with `key` set to `value` (None: left as is), then
+    * restore the key's prior value, or unset it if it had none. */
+  private def withConf[A](s: SparkSession, key: String, value: Option[String])(
+      body: => A): A = value match {
+    case None => body
+    case Some(v) =>
+      val prev = s.conf.getOption(key)
+      s.conf.set(key, v)
+      try body finally prev match {
+        case Some(p) => s.conf.set(key, p)
+        case None => s.conf.unset(key)
       }
-    }
   }
 
   /** Warm the streaming machinery (micro-batch planner, state store
@@ -265,6 +205,7 @@ object Streaming {
     * [[graft.Bench]] before timing.
     */
   def warm(s: SparkSession, d: String): Unit = {
+    import s.implicits._
     val dir = stageFlat(d, "region.parquet", "warm_stream")
     val schema = s.read.parquet(s"$d/region.parquet").schema
     val agg = s.readStream.schema(schema).parquet(dir)
@@ -273,30 +214,14 @@ object Streaming {
     // also warm the transformWithState/RocksDB path: provider class +
     // native library load and store format validation are one-time JVM
     // costs that otherwise land on the first stateful-v2 query (q109)
-    locally {
-      import s.implicits._
-      val tws = s.readStream.schema(schema).parquet(dir)
-        .select(col(schema.head.name).cast("long"), lit(1.0))
-        .as[(Long, Double)]
-        .groupByKey(_._1)
-        .transformWithState(new RunningAggProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("k", "n", "total")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val q = withStreamConf(s) {
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          tws.writeStream.format("memory").queryName("graft_stream_warm_tws")
-            .outputMode("update").start()
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
-    }
+    val tws = s.readStream.schema(schema).parquet(dir)
+      .select(col(schema.head.name).cast("long"), lit(1.0))
+      .as[(Long, Double)]
+      .groupByKey(_._1)
+      .transformWithState(new RunningAggProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("k", "n", "total")
+    drain(s, tws, "graft_stream_warm_tws", "update")
     ()
   }
 
@@ -517,8 +442,8 @@ object Streaming {
       * (Spark 4's replacement for mapGroupsWithState, group 8 stateful
       * row): named RocksDB-backed ValueState per user, update-mode
       * emission; on the finite source the final state equals the batch
-      * group-by, which the oracle asserts. The RocksDB provider is
-      * required by the operator and scoped to this query's start.
+      * group-by, which the oracle asserts. The operator requires the
+      * RocksDB provider, which [[drain]] picks from the plan.
       */
     QueryDef(
       "q109_transform_with_state",
@@ -532,22 +457,9 @@ object Streaming {
         .transformWithState(new RunningAggProcessor,
           TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "n_events", "total_raw")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val q = withStreamConf(s) {
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          drainWriter(updated, "graft_tws", "update").start()
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       // update mode emits one row per key per micro-batch that saw input;
       // n_events strictly increases, so max_by picks the final state
-      drainTable(s, "graft_tws")
+      drain(s, updated, "graft_tws", "update")
         .groupBy("user_id")
         .agg(max(col("n_events")).as("n_events"),
           round(max_by(col("total_raw"), col("n_events")), 2).as("total"))
@@ -591,20 +503,7 @@ object Streaming {
         .transformWithState(new TimerSessionProcessor(gapUs),
           TimeMode.EventTime(), OutputMode.Append())
         .toDF("user_id", "start_us", "n_events")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val q = withStreamConf(s) {
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          drainWriter(sessions, "graft_tws_timers", "append").start()
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
-      drainTable(s, "graft_tws_timers")
+      drain(s, sessions, "graft_tws_timers", "append")
         .select(col("user_id"),
           date_format(timestamp_micros(col("start_us")), "yyyy-MM-dd HH:mm:ss")
             .as("session_start"),
@@ -632,20 +531,7 @@ object Streaming {
         .transformWithState(new PerTypeMapProcessor,
           TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "event_type", "n_raw", "total_raw")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val q = withStreamConf(s) {
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          drainWriter(updated, "graft_tws_map", "update").start()
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
-      drainTable(s, "graft_tws_map")
+      drain(s, updated, "graft_tws_map", "update")
         .groupBy("user_id", "event_type")
         .agg(max(col("n_raw")).as("n"),
           round(max_by(col("total_raw"), col("n_raw")), 2).as("total"))
@@ -679,20 +565,7 @@ object Streaming {
         .transformWithState(new TopKListProcessor,
           TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "n_events", "top3_raw")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val q = withStreamConf(s) {
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          drainWriter(updated, "graft_tws_list", "update").start()
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
-      drainTable(s, "graft_tws_list")
+      drain(s, updated, "graft_tws_list", "update")
         .groupBy("user_id")
         .agg(max(col("n_events")).as("n_events"),
           round(max_by(col("top3_raw"), col("n_events")), 2).as("top3"))
@@ -844,24 +717,16 @@ object Streaming {
       "q91_stream_file_sink",
       """SELECT event_type, count(*) AS n, CAST(sum(user_id) AS BIGINT) AS uid_sum
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      import java.nio.file.{Files, Paths}
-      import java.util.Comparator
       val base = s"$ioBase/${d.replaceAll("[^A-Za-z0-9.]", "_")}/stream_sink"
       // clean slate: the checkpoint binds to one logical plan instance
-      val p = Paths.get(base)
-      if (Files.exists(p))
-        Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
-      val q = withStreamConf(s) {
-        eventStream(s, d)
-          .dropDuplicates("event_id")
-          .select("event_id", "event_type", "user_id")
-          .writeStream.format("parquet")
-          .option("path", s"$base/data")
-          .option("checkpointLocation", s"$base/chk")
-          .outputMode("append").start()
-      }
-      try q.processAllAvailable() finally q.stop()
+      deleteTree(java.nio.file.Paths.get(base))
+      val distinct = eventStream(s, d)
+        .dropDuplicates("event_id")
+        .select("event_id", "event_type", "user_id")
+      run(s, distinct, distinct.writeStream.format("parquet")
+        .option("path", s"$base/data")
+        .option("checkpointLocation", s"$base/chk")
+        .outputMode("append"))
       s.read.parquet(s"$base/data")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("user_id")).cast("long").as("uid_sum"))
@@ -1175,16 +1040,8 @@ object Streaming {
         |  datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS di,
         |  round(CAST(sum(CAST(value AS DECIMAL(18,3))) AS DOUBLE) / count(*), 6) AS v
         |FROM events GROUP BY 1, 2 ORDER BY el, di""".stripMargin) { (s, d) =>
-      val agg = eventStream(s, d)
-        .withWatermark("ts", "40 days")
-        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type").as("el"))
-        .agg(sum(col("value").cast("decimal(18,3)")).as("sv"),
-          count(lit(1)).as("n"))
-      drain(s, agg, "graft_stream_causal_grid", "complete")
-        .select(col("el"),
-          datediff(col("w.start").cast("date"), lit("2024-01-01").cast("date"))
-            .as("di"),
-          round(col("sv").cast("double") / col("n"), 6).as("v"))
+      drain(s, gridStream(s, d), "graft_stream_causal_grid", "complete")
+        .select(col("el"), gridDay, round(col("sv").cast("double") / col("n"), 6).as("v"))
         .orderBy("el", "di")
     },
 
@@ -1437,96 +1294,58 @@ object Streaming {
       */
     QueryDef("q357_stream_causal_panel", panelOracle) { (s, d) =>
       val readouts = panelReadouts
-      val agg = eventStream(s, d)
-        .withWatermark("ts", "40 days")
-        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type").as("el"))
-        .agg(sum(col("value").cast("decimal(18,3)")).as("sv"),
-          count(lit(1)).as("n"))
-      val latest = new java.util.concurrent.atomic.AtomicReference[
-        Seq[(String, String, String, Option[Double])]]()
-      val q = withStreamConf(s) {
-        agg.writeStream.outputMode("complete")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // Materialize the O(P·T) grid ONCE from the state store and
-            // RE-ROOT it in the outer session (round 17; replaces the
-            // round-10 persist, which solved the ten-state-store-reads
-            // problem but kept every readout on the stream's cloned
-            // session where MicroBatchExecution force-disables AQE —
-            // see causalRefresh). Bounded collect (P fenced, T the day
-            // window); same rows ⇒ bit-identical readouts, now with
-            // runtime join re-planning and partition coalescing.
-            val proj = b.select(col("el"),
-              datediff(col("w.start").cast("date"), lit("2024-01-01").cast("date"))
-                .as("di"),
-              (col("sv").cast("double") / col("n")).as("v"))
-            // three of the panel's readouts (leadlag/granger/pcorr) are
-            // pair-grain — same element-cardinality fence as their batch
-            // twins. Checked on the still-DISTRIBUTED frame BEFORE the
-            // driver collect (round 18, VERDICT r17 #2): a
-            // high-cardinality element domain must be refused before the
-            // O(P·T) grid lands on the driver heap, not after. Persist +
-            // guard + collect keeps one pass over the state store.
-            val pg = proj.persist()
-            val rows =
-              try {
-                graft.operators.CausalOps.guardFullEnum(pg,
-                  "q357_stream_causal_panel")
-                pg.collect()
-              } finally pg.unpersist()
-            val grid = s.createDataFrame(
-              java.util.Arrays.asList(rows: _*), proj.schema)
-            // Fan the ten readout collects out over a small thread pool
-            // (round 17, guide §2.6 "overlap independent jobs"): each
-            // readout is an independent expression tree over the SAME
-            // persisted grid (materialized by the guard's action just
-            // above), and the driver loop ran them strictly
-            // sequentially — the panel's wall time was the SUM of ten
-            // tree latencies while the executors sat mostly idle
-            // between stages. Spark's scheduler runs concurrent jobs
-            // FIFO, so later readouts back-fill the tail of earlier
-            // ones. Result order is preserved (one Future per readout,
-            // joined in registry order) and each readout's rows are
-            // untouched, so the melted output is row-identical to the
-            // sequential loop's.
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(readouts.size, 5))
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutorService(pool)
-            val collected =
-              try scala.concurrent.Await.result(
-                scala.concurrent.Future.sequence(readouts.map(r =>
-                  scala.concurrent.Future((r, r.fn(s, grid).collect())))),
-                scala.concurrent.duration.Duration.Inf)
-              finally pool.shutdown()
-            val melted = collected.flatMap { case (r, rows) =>
-              rows.toSeq.flatMap { row =>
-                val k = r.ids.map(c => String.valueOf(row.getAs[Any](c))).mkString("|")
-                r.metrics.map { m =>
-                  // numeric types only, matched EXPLICITLY (round-9
-                  // ADVICE): a future non-numeric registry metric must
-                  // fail with a named error at registration time, not as
-                  // a NumberFormatException crashing the streaming query
-                  val v: Option[Double] = row.getAs[Any](m) match {
-                    case null => None
-                    case bd: java.math.BigDecimal => Some(bd.doubleValue)
-                    case bd: scala.math.BigDecimal => Some(bd.toDouble)
-                    case n: java.lang.Number => Some(n.doubleValue)
-                    case x => throw new IllegalStateException(
-                      s"q357 panel readout '${r.tag}' metric '$m' has " +
-                        s"non-numeric type ${x.getClass.getName}; panel " +
-                        "metrics must be numeric (melted to DOUBLE)")
-                  }
-                  (r.tag, k, m, v)
-                }
+      refresh(s, gridStream(s, d)) { b =>
+        // three of the panel's readouts (leadlag/granger/pcorr) are
+        // pair-grain — same element-cardinality fence as their batch
+        // twins, checked before the grid lands on the driver heap
+        val grid = rerootGrid(s, b, Some("q357_stream_causal_panel"))
+        // Fan the ten readout collects out over a small thread pool
+        // (round 17, guide §2.6 "overlap independent jobs"): each
+        // readout is an independent expression tree over the SAME
+        // re-rooted local grid, and the driver loop ran them strictly
+        // sequentially — the panel's wall time was the SUM of ten
+        // tree latencies while the executors sat mostly idle
+        // between stages. Spark's scheduler runs concurrent jobs
+        // FIFO, so later readouts back-fill the tail of earlier
+        // ones. Result order is preserved (one Future per readout,
+        // joined in registry order) and each readout's rows are
+        // untouched, so the melted output is row-identical to the
+        // sequential loop's.
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(readouts.size, 5))
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        val collected =
+          try scala.concurrent.Await.result(
+            scala.concurrent.Future.sequence(readouts.map(r =>
+              scala.concurrent.Future((r, r.fn(s, grid).collect())))),
+            scala.concurrent.duration.Duration.Inf)
+          finally pool.shutdown()
+        val melted = collected.flatMap { case (r, rows) =>
+          rows.toSeq.flatMap { row =>
+            val k = r.ids.map(c => String.valueOf(row.getAs[Any](c))).mkString("|")
+            r.metrics.map { m =>
+              // numeric types only, matched EXPLICITLY (round-9
+              // ADVICE): a future non-numeric registry metric must
+              // fail with a named error at registration time, not as
+              // a NumberFormatException crashing the streaming query
+              val v: Option[Double] = row.getAs[Any](m) match {
+                case null => None
+                case bd: java.math.BigDecimal => Some(bd.doubleValue)
+                case bd: scala.math.BigDecimal => Some(bd.toDouble)
+                case n: java.lang.Number => Some(n.doubleValue)
+                case x => throw new IllegalStateException(
+                  s"q357 panel readout '${r.tag}' metric '$m' has " +
+                    s"non-numeric type ${x.getClass.getName}; panel " +
+                    "metrics must be numeric (melted to DOUBLE)")
               }
+              (r.tag, k, m, v)
             }
-            latest.set(melted)
-          }.start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      import s.implicits._
-      latest.get().toDF("readout", "k", "metric", "v")
-        .orderBy("readout", "k", "metric")
+          }
+        }
+        import s.implicits._
+        melted.toDF("readout", "k", "metric", "v")
+      }.orderBy("readout", "k", "metric")
     },
 
     /** q286's split-conformal forecast intervals as a per-micro-batch
@@ -1548,66 +1367,19 @@ object Streaming {
         graft.operators.DriftOps.conformalFromGrid, Seq("el"))
     },
 
-    /** q281's PSI/JSD drift monitor maintained incrementally (round
-      * 10): the production drift shape — bin boundaries are PINNED
-      * up front from the reference period (the training snapshot,
-      * computed once from the static table and broadcast into the
-      * stream), then ONE watermarked streaming aggregation maintains
-      * per-(type, bin, period) counts as events arrive and every
-      * micro-batch re-derives the PSI/JSD readout from those O(types·
-      * 10·2) count rows via the exact expression tree the batch query
-      * uses ([[graft.operators.DriftOps.psiFromCounts]]). Count state
-      * merges are exact, so on the finite stream the final refresh
-      * hash-matches the batch q281 oracle bit-for-bit — streaming ==
-      * batch, the suite's standing contract. Per-refresh cost is
-      * independent of raw event volume.
-      */
     /** q333's Wasserstein-1 drift distance as a per-micro-batch
       * refreshed view (round 11): the same pinned-boundary streaming
-      * count state as q310 (ONE watermarked (type, bin, period)
-      * aggregation), re-derived each refresh through the shared
-      * w1FromCounts tree — so the live drift panel reads PSI/JSD AND
-      * the cumulative, signed W1 from the same O(types·20) state rows.
-      * Final refresh == batch q333 oracle bit-for-bit (count-state
-      * merges are exact).
+      * count state as q310 ([[driftRefresh]]), re-derived each refresh
+      * through the shared w1FromCounts tree — so the live drift panel
+      * reads PSI/JSD AND the cumulative, signed W1 from the same
+      * O(types·20) state rows. Final refresh == batch q333 oracle
+      * bit-for-bit (count-state merges are exact).
       */
     QueryDef(
       "q339_stream_wasserstein",
       graft.operators.DriftOps.defs.find(_.name == "q333_wasserstein").get
         .oracle.get) { (s, d) =>
-      import graft.operators.DriftOps
-      val qs = DriftOps.refDeciles(s, d)
-      val typed = eventStream(s, d)
-        .withWatermark("ts", "40 days")
-        .select(col("event_type").as("et"), col("value").as("v"),
-          (col("ts") < lit("2024-01-16").cast("timestamp")).as("is_ref"))
-      val binned = typed.join(broadcast(qs), col("et") === col("qet"))
-        .select(col("et"), col("is_ref"),
-          (lit(1) + (1 to 9).map(k =>
-            when(round(col("v"), 9) > round(col(s"q$k"), 9), 1).otherwise(0))
-            .reduce(_ + _)).as("bin"))
-      val agg = binned.groupBy("et", "bin", "is_ref").agg(count(lit(1)).as("n"))
-      val latest = new java.util.concurrent.atomic.AtomicReference[
-        (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
-      val q = withStreamConf(s) {
-        agg.writeStream.outputMode("complete")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // re-root the O(types·bins·2) count state in the outer
-            // session (round 17, the causalRefresh rule): foreachBatch
-            // frames run on the stream clone with AQE force-disabled
-            val local = s.createDataFrame(
-              java.util.Arrays.asList(b.collect(): _*), b.schema)
-            val c = local.groupBy("et", "bin")
-              .agg(sum(when(col("is_ref"), col("n")).otherwise(0L)).as("nr"),
-                sum(when(!col("is_ref"), col("n")).otherwise(0L)).as("nc"))
-            val r = DriftOps.w1FromCounts(s, c)
-            latest.set((r.schema, r.collect()))
-          }.start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      val (schema, rows) = latest.get()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("event_type")
+      driftRefresh(s, d)(c => graft.operators.DriftOps.w1FromCounts(s, c))
     },
 
     /** q345's retrain trigger evaluated LIVE (round 11): the decision
@@ -1622,83 +1394,36 @@ object Streaming {
       graft.operators.DriftOps.defs.find(_.name == "q345_retrain_trigger").get
         .oracle.get) { (s, d) =>
       import graft.operators.DriftOps
-      val qs = DriftOps.refDeciles(s, d)
-      val typed = eventStream(s, d)
-        .withWatermark("ts", "40 days")
-        .select(col("event_type").as("et"), col("value").as("v"),
-          (col("ts") < lit("2024-01-16").cast("timestamp")).as("is_ref"))
-      val binned = typed.join(broadcast(qs), col("et") === col("qet"))
-        .select(col("et"), col("is_ref"),
-          (lit(1) + (1 to 9).map(k =>
-            when(round(col("v"), 9) > round(col(s"q$k"), 9), 1).otherwise(0))
-            .reduce(_ + _)).as("bin"))
-      val agg = binned.groupBy("et", "bin", "is_ref").agg(count(lit(1)).as("n"))
-      val latest = new java.util.concurrent.atomic.AtomicReference[
-        (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
-      val q = withStreamConf(s) {
-        agg.writeStream.outputMode("complete")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // re-root the O(types·bins·2) count state in the outer
-            // session (round 17, the causalRefresh rule): foreachBatch
-            // frames run on the stream clone with AQE force-disabled
-            val local = s.createDataFrame(
-              java.util.Arrays.asList(b.collect(): _*), b.schema)
-            val c = local.groupBy("et", "bin")
-              .agg(sum(when(col("is_ref"), col("n")).otherwise(0L)).as("nr"),
-                sum(when(!col("is_ref"), col("n")).otherwise(0L)).as("nc"))
-            val psi = DriftOps.psiFromCounts(c)
-              .select(col("event_type").as("pet"), col("psi"))
-            val r = DriftOps.w1FromCounts(s, c)
-              .join(psi, col("pet") === col("event_type"))
-              .select(col("event_type"), col("psi"), col("w1_bins"), col("signed_shift"),
-                (col("psi") > 0.2 || col("w1_bins") > 0.5 ||
-                  abs(col("signed_shift")) > 0.3).cast("int").as("retrain"))
-            latest.set((r.schema, r.collect()))
-          }.start()
+      driftRefresh(s, d) { c =>
+        val psi = DriftOps.psiFromCounts(c)
+          .select(col("event_type").as("pet"), col("psi"))
+        DriftOps.w1FromCounts(s, c)
+          .join(psi, col("pet") === col("event_type"))
+          .select(col("event_type"), col("psi"), col("w1_bins"), col("signed_shift"),
+            (col("psi") > 0.2 || col("w1_bins") > 0.5 ||
+              abs(col("signed_shift")) > 0.3).cast("int").as("retrain"))
       }
-      try q.processAllAvailable() finally q.stop()
-      val (schema, rows) = latest.get()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("event_type")
     },
 
+    /** q281's PSI/JSD drift monitor maintained incrementally (round
+      * 10): the production drift shape — bin boundaries are PINNED
+      * up front from the reference period (the training snapshot,
+      * computed once from the static table and broadcast into the
+      * stream), then ONE watermarked streaming aggregation maintains
+      * per-(type, bin, period) counts as events arrive and every
+      * micro-batch re-derives the PSI/JSD readout from those O(types·
+      * 10·2) count rows via the exact expression tree the batch query
+      * uses ([[graft.operators.DriftOps.psiFromCounts]]). Count state
+      * merges are exact, so on the finite stream the final refresh
+      * hash-matches the batch q281 oracle bit-for-bit — streaming ==
+      * batch, the suite's standing contract. Per-refresh cost is
+      * independent of raw event volume.
+      */
     QueryDef(
       "q310_stream_psi",
       graft.operators.DriftOps.defs.find(_.name == "q281_psi_drift").get
         .oracle.get) { (s, d) =>
-      import graft.operators.DriftOps
-      val qs = DriftOps.refDeciles(s, d)
-      val typed = eventStream(s, d)
-        .withWatermark("ts", "40 days")
-        .select(col("event_type").as("et"), col("value").as("v"),
-          (col("ts") < lit("2024-01-16").cast("timestamp")).as("is_ref"))
-      val binned = typed.join(broadcast(qs), col("et") === col("qet"))
-        .select(col("et"), col("is_ref"),
-          (lit(1) + (1 to 9).map(k =>
-            when(round(col("v"), 9) > round(col(s"q$k"), 9), 1).otherwise(0))
-            .reduce(_ + _)).as("bin"))
-      val agg = binned.groupBy("et", "bin", "is_ref").agg(count(lit(1)).as("n"))
-      val latest = new java.util.concurrent.atomic.AtomicReference[
-        (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
-      val q = withStreamConf(s) {
-        agg.writeStream.outputMode("complete")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // re-root the O(types·bins·2) count state in the outer
-            // session (round 17, the causalRefresh rule): foreachBatch
-            // frames run on the stream clone with AQE force-disabled
-            val local = s.createDataFrame(
-              java.util.Arrays.asList(b.collect(): _*), b.schema)
-            val c = local.groupBy("et", "bin")
-              .agg(sum(when(col("is_ref"), col("n")).otherwise(0L)).as("nr"),
-                sum(when(!col("is_ref"), col("n")).otherwise(0L)).as("nc"))
-            val r = DriftOps.psiFromCounts(c)
-            latest.set((r.schema, r.collect()))
-          }.start()
-      }
-      try q.processAllAvailable() finally q.stop()
-      val (schema, rows) = latest.get()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .orderBy("event_type")
+      driftRefresh(s, d)(graft.operators.DriftOps.psiFromCounts)
     },
 
     /** STREAMING MEDIA INGESTION (round 12): the production shape for
@@ -1831,80 +1556,101 @@ object Streaming {
        |ORDER BY readout, k, metric""".stripMargin
   }
 
-  /** Shared harness for the per-micro-batch causal readouts (q249/
-    * q256/q257): ONE watermarked streaming aggregation maintains the
-    * (element, day) grid as exact decimal-sum + count state; on every
-    * micro-batch the given readout recomputes over the O(P·T) grid
-    * only — per-refresh cost independent of raw event volume — and the
-    * last refresh is returned. Because the grid values are exact
-    * (decimal merges are order-free) and each readout shares its batch
-    * query's expression tree, the final result hash-matches the batch
-    * oracle with zero tolerance (StreamingSpec pins it for q249; the
-    * same state/tree argument covers all three).
+  /** The causal daily grid as a stream: ONE watermarked aggregation
+    * keeping exact decimal-sum + count state per (day window, element).
+    * q240 drains it; [[causalRefresh]] and q357 refresh readouts over it.
     */
-  private def causalRefresh(s: SparkSession, d: String,
-      readout: DataFrame => DataFrame, sortCols: Seq[String],
-      guardAs: Option[String] = None): DataFrame = {
-    val agg = eventStream(s, d)
+  private def gridStream(s: SparkSession, d: String): DataFrame =
+    eventStream(s, d)
       .withWatermark("ts", "40 days")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type").as("el"))
       .agg(sum(col("value").cast("decimal(18,3)")).as("sv"),
         count(lit(1)).as("n"))
-    val latest = new java.util.concurrent.atomic.AtomicReference[
-      (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
-    val q = withStreamConf(s) {
-      agg.writeStream.outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // Materialize the O(P·T) grid ONCE from the state store, then
-          // RE-ROOT it in the outer session (round 17): foreachBatch
-          // frames belong to the stream's cloned session, whose AQE is
-          // force-disabled by MicroBatchExecution ("AQE is not
-          // supported in stateful workloads") — so the whole readout
-          // tree used to run with no runtime join re-planning and no
-          // partition coalescing at the static stream partition count.
-          // The grid is contractually bounded (P fenced by
-          // guardFullEnum, T the day window), so the one collect here
-          // is the same bounded-artifact class as the readout's own
-          // collect below; rebuilt as a local relation on the outer
-          // session, the readout runs with AQE on. Same rows, same
-          // types ⇒ bit-identical readout. (Replaces the round-10
-          // persist, which solved the re-read problem but kept the
-          // readout on the AQE-less clone.)
-          val proj = b.select(col("el"),
-            datediff(col("w.start").cast("date"), lit("2024-01-01").cast("date"))
-              .as("di"),
-            (col("sv").cast("double") / col("n")).as("v"))
-          // pair-grain readouts (O(P²) or worse per refresh) carry the
-          // SAME element-cardinality fence their batch twins enforce —
-          // without it a high-cardinality domain hits the quadratic
-          // blowup silently on the streaming path (r11 advice). The
-          // fence must run on the still-DISTRIBUTED frame (round 18,
-          // VERDICT r17 #2): the r17 re-rooting evaluated it after
-          // `proj.collect()`, i.e. after the O(P·T) grid already landed
-          // on the driver heap — exactly the allocation the fence
-          // exists to refuse. Persist + guard + collect keeps one pass
-          // over the state store: the guard's countDistinct action
-          // materializes the cached grid, the collect reads the cached
-          // blocks.
-          val rows = guardAs match {
-            case Some(n) =>
-              val pg = proj.persist()
-              try {
-                graft.operators.CausalOps.guardFullEnum(pg, n)
-                pg.collect()
-              } finally pg.unpersist()
-            case None => proj.collect()
-          }
-          val grid = s.createDataFrame(
-            java.util.Arrays.asList(rows: _*), proj.schema)
-          val r = readout(grid)
-          // O(P²) rows — the per-batch refreshed artifact
-          latest.set((r.schema, r.collect()))
-        }.start()
+
+  /** A grid window's day index (days since 2024-01-01). */
+  private def gridDay: org.apache.spark.sql.Column =
+    datediff(col("w.start").cast("date"), lit("2024-01-01").cast("date")).as("di")
+
+  /** One micro-batch of [[gridStream]] as the (el, di, v) grid,
+    * materialized ONCE from the state store and RE-ROOTED in the outer
+    * session (round 17): foreachBatch frames belong to the stream's
+    * cloned session, whose AQE is force-disabled by MicroBatchExecution
+    * ("AQE is not supported in stateful workloads") — so a readout tree
+    * over `b` would run with no runtime join re-planning and no
+    * partition coalescing at the static stream partition count. The
+    * grid is contractually bounded (P fenced by guardFullEnum, T the
+    * day window), so the one collect here is the same bounded-artifact
+    * class as the readout's own collect; rebuilt as a local relation on
+    * the outer session, the readout runs with AQE on. Same rows, same
+    * types ⇒ bit-identical readout.
+    *
+    * `guardAs` names the query whose pair-grain readouts (O(P²) or
+    * worse per refresh) carry the SAME element-cardinality fence their
+    * batch twins enforce. The fence runs on the still-DISTRIBUTED frame
+    * (round 18, VERDICT r17 #2): a high-cardinality element domain must
+    * be refused before the O(P·T) grid lands on the driver heap.
+    * Persist + guard + collect keeps one pass over the state store: the
+    * guard's countDistinct action materializes the cached grid, the
+    * collect reads the cached blocks.
+    */
+  private def rerootGrid(s: SparkSession, b: DataFrame,
+      guardAs: Option[String]): DataFrame = {
+    val proj = b.select(col("el"), gridDay, (col("sv").cast("double") / col("n")).as("v"))
+    val rows = guardAs match {
+      case Some(n) =>
+        val pg = proj.persist()
+        try {
+          graft.operators.CausalOps.guardFullEnum(pg, n)
+          pg.collect()
+        } finally pg.unpersist()
+      case None => proj.collect()
     }
-    try q.processAllAvailable() finally q.stop()
-    val (schema, rows) = latest.get()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), proj.schema)
+  }
+
+  /** Shared harness for the per-micro-batch causal readouts (q249/
+    * q256/q257 and the rest): [[gridStream]] maintains the (element,
+    * day) grid as exact decimal-sum + count state; on every micro-batch
+    * the given readout recomputes over the re-rooted O(P·T) grid only —
+    * per-refresh cost independent of raw event volume — and the last
+    * refresh is returned. Because the grid values are exact (decimal
+    * merges are order-free) and each readout shares its batch query's
+    * expression tree, the final result hash-matches the batch oracle
+    * with zero tolerance (StreamingSpec pins it for q249 and five more).
+    */
+  private def causalRefresh(s: SparkSession, d: String,
+      readout: DataFrame => DataFrame, sortCols: Seq[String],
+      guardAs: Option[String] = None): DataFrame =
+    refresh(s, gridStream(s, d))(b => readout(rerootGrid(s, b, guardAs)))
       .orderBy(sortCols.map(col): _*)
+
+  /** The pinned-decile drift count stream shared by q310/q339/q347:
+    * reference-period deciles per event type (computed once from the
+    * static table, broadcast into the stream) bin every event, and ONE
+    * watermarked aggregation keeps per-(type, bin, period) counts. Each
+    * micro-batch re-roots the O(types·bins·2) count state in the outer
+    * session (the [[rerootGrid]] rule), pivots it to (et, bin, nr, nc)
+    * and hands it to `readout`; the last refresh is returned.
+    */
+  private def driftRefresh(s: SparkSession, d: String)(
+      readout: DataFrame => DataFrame): DataFrame = {
+    val qs = graft.operators.DriftOps.refDeciles(s, d)
+    val typed = eventStream(s, d)
+      .withWatermark("ts", "40 days")
+      .select(col("event_type").as("et"), col("value").as("v"),
+        (col("ts") < lit("2024-01-16").cast("timestamp")).as("is_ref"))
+    val binned = typed.join(broadcast(qs), col("et") === col("qet"))
+      .select(col("et"), col("is_ref"),
+        (lit(1) + (1 to 9).map(k =>
+          when(round(col("v"), 9) > round(col(s"q$k"), 9), 1).otherwise(0))
+          .reduce(_ + _)).as("bin"))
+    val agg = binned.groupBy("et", "bin", "is_ref").agg(count(lit(1)).as("n"))
+    refresh(s, agg) { b =>
+      val local = s.createDataFrame(
+        java.util.Arrays.asList(b.collect(): _*), b.schema)
+      readout(local.groupBy("et", "bin")
+        .agg(sum(when(col("is_ref"), col("n")).otherwise(0L)).as("nr"),
+          sum(when(!col("is_ref"), col("n")).otherwise(0L)).as("nc")))
+    }.orderBy("event_type")
   }
 }

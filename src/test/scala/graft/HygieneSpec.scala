@@ -32,4 +32,49 @@ class HygieneSpec extends AnyFunSuite {
       s"scratch files committed to src/main — run their mandate, commit the " +
       s"evidence, and delete them:\n  ${offenders.mkString("\n  ")}")
   }
+
+  /** (file, 1-based line number, line) of every code line — Scaladoc
+    * and `//` comment lines dropped, trailing `//` comments cut. */
+  private def codeLines(files: Seq[java.io.File]): Seq[(java.io.File, Int, String)] =
+    files.flatMap { f =>
+      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n")
+      lines.zipWithIndex.collect {
+        case (l, i) if !Seq("*", "/*", "//").exists(l.trim.startsWith) =>
+          (f, i + 1, l.replaceAll("\\s//.*$", ""))
+      }
+    }
+
+  test("streaming reads no environment variable but GRAFT_STREAM_PARTITIONS") {
+    // a finite stream runs one way: no env-selected drain or state-store
+    // fork may come back into the streaming package
+    val read = "(sys\\.env|System\\.getenv)".r
+    val allowed = "(sys\\.env|System\\.getenv)[.\\w]*\\(\\s*\"GRAFT_STREAM_PARTITIONS\"".r
+    val offenders = codeLines(mainSources.filter(_.getPath.contains("graft/streaming/")))
+      .collect { case (f, n, l) if read.findAllMatchIn(l).size >
+          allowed.findAllMatchIn(l).size => s"${f.getPath}:$n: ${l.trim}" }
+    assert(offenders.isEmpty,
+      s"streaming code reads an environment variable:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("writeStream appears in src/main only inside the two stream runners and q91") {
+    // Streaming.drain and Streaming.refresh run every finite stream;
+    // q91's durable parquet file sink is the one exception
+    val anchor = """\bdef (\w+)|^\s*"(q\d+_\w+)"""".r
+    val allowed = Set("drain", "refresh", "q91_stream_file_sink")
+    val offenders = mainSources.flatMap { f =>
+      val lines = codeLines(Seq(f))
+      lines.collect { case (_, n, l) if l.contains("writeStream") =>
+        val owner = lines.takeWhile(_._2 <= n).reverseIterator
+          .flatMap { case (_, _, x) => anchor.findFirstMatchIn(x) }
+          .map(m => Option(m.group(1)).getOrElse(m.group(2))).nextOption()
+        (f, n, l, owner)
+      }.collect { case (f, n, l, owner)
+          if !f.getPath.endsWith("graft/streaming/Streaming.scala") ||
+            !owner.exists(allowed) =>
+        s"${f.getPath}:$n (in ${owner.getOrElse("?")}): ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"writeStream outside Streaming.drain/refresh and q91:\n  ${offenders.mkString("\n  ")}")
+  }
 }

@@ -215,9 +215,15 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q310 streaming PSI refresh equals the batch q281 result exactly") {
-    val batch = SparkEntry.queries("q281_psi_drift")(spark, sf).collect()
-    val stream = SparkEntry.queries("q310_stream_psi")(spark, sf).collect()
-    assert(stream.map(_.toString).toSeq == batch.map(_.toString).toSeq,
-      s"streaming != batch:\n${stream.mkString("\n")}\nvs\n${batch.mkString("\n")}")
+    // q339/q347 refresh the same pinned-decile count stream as q310
+    for ((sq, bq) <- Seq(
+        "q310_stream_psi" -> "q281_psi_drift",
+        "q339_stream_wasserstein" -> "q333_wasserstein",
+        "q347_stream_retrain" -> "q345_retrain_trigger")) {
+      val batch = SparkEntry.queries(bq)(spark, sf).collect()
+      val stream = SparkEntry.queries(sq)(spark, sf).collect()
+      assert(stream.nonEmpty && stream.map(_.toString).toSeq == batch.map(_.toString).toSeq,
+        s"$sq != $bq:\n${stream.mkString("\n")}\nvs\n${batch.mkString("\n")}")
+    }
   }
 }

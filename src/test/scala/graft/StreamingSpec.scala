@@ -1,8 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.streaming.Streaming
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+
+/** Running per-key row count through transformWithState; with `fail`
+  * set it throws on its first input instead (the runner-scoping test's
+  * failing stream). Top-level so the closure does not capture a suite.
+  */
+private class CountOrFailProcessor(fail: Boolean)
+    extends StatefulProcessor[Long, (Long, Double), (Long, Long)] {
+  @transient private var n: ValueState[Long] = _
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
+  override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
+      timers: TimerValues): Iterator[(Long, Long)] = {
+    if (fail) throw new IllegalStateException("injected stream failure")
+    val c = (if (n.exists()) n.get() else 0L) + rows.size
+    n.update(c)
+    Iterator.single((key, c))
+  }
+}
 
 /** Streaming == batch on a finite source (SURVEY.md group 8): the
   * streaming session windows must be exactly the batch session windows
@@ -194,10 +214,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("streaming tumbling aggregation equals batch group-by") {
-    val stream = SparkEntry.queries("q80_stream_tumbling")(spark, sf)
-      .collect().map(_.toString).sorted
-    val batch = Tables.events(spark, sf)
+  /** q80's batch twin: the per-day per-type group-by over `sf`. */
+  private def q80Batch: Array[String] =
+    Tables.events(spark, sf)
       .groupBy(org.apache.spark.sql.functions.date_format(
         org.apache.spark.sql.functions.col("ts"), "yyyy-MM-dd").as("day"),
         org.apache.spark.sql.functions.col("event_type"))
@@ -207,7 +226,102 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           org.apache.spark.sql.functions.sum("value"), 2).as("total"))
       .orderBy("day", "event_type")
       .collect().map(_.toString).sorted
-    assert(stream.sameElements(batch))
+
+  test("streaming tumbling aggregation equals batch group-by") {
+    val stream = SparkEntry.queries("q80_stream_tumbling")(spark, sf)
+      .collect().map(_.toString).sorted
+    assert(stream.sameElements(q80Batch))
+  }
+
+  test("a stage dir without its completion marker is rebuilt, not read as staged") {
+    // what a staging copy killed midway leaves behind: some of the part
+    // files in the stage dir and no marker. Every later run must re-stage,
+    // not stream the partial copy.
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("partialstage").toString
+    Tables.events(spark, sf).repartition(3)
+      .withColumn("ts", col("ts").cast("timestamp_ntz"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val stage = Paths.get(Streaming.ioBase, dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    Files.createDirectories(stage.resolve("events_stream"))
+    val parts = Files.list(Paths.get(s"$dir/events.parquet")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parts.length == 3)
+    Files.copy(parts.head, stage.resolve("events_stream").resolve(parts.head.getFileName))
+    try {
+      val stream = SparkEntry.queries("q80_stream_tumbling")(spark, dir)
+        .collect().map(_.toString).sorted
+      assert(stream.sameElements(q80Batch),
+        "streamed a partial stage left without a completion marker")
+    } finally
+      for (root <- Seq(stage, Paths.get(dir))) {
+        val st = Files.walk(root)
+        try st.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+        finally st.close()
+      }
+  }
+
+  test("transformWithState streams q109/q183/q190 equal their batch twins") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val ev = Tables.events(spark, sf)
+    def decSum(c: String) =
+      round(sum(col(c).cast("decimal(28,8)")).cast("double"), 2)
+    val top3 = ev
+      .withColumn("rn", row_number().over(Window.partitionBy("user_id")
+        .orderBy(col("value").desc, col("event_id"))))
+      .where(col("rn") <= 3)
+      .groupBy("user_id").agg(decSum("value").as("top3"))
+    val twins = Seq[(String, DataFrame)](
+      "q109_transform_with_state" -> ev.groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total")),
+      "q183_stream_list_state" -> ev.groupBy("user_id")
+        .agg(count(lit(1)).as("n_events")).join(top3, "user_id"),
+      "q190_stream_map_state" -> ev.groupBy("user_id", "event_type")
+        .agg(count(lit(1)).as("n"), decSum("value").as("total")))
+    for ((q, batch) <- twins) {
+      val stream = SparkEntry.queries(q)(spark, sf)
+      assert(stream.columns.toSeq == batch.columns.toSeq, q)
+      val got = stream.collect().map(_.toString).sorted
+      val want = batch.collect().map(_.toString).sorted
+      assert(got.nonEmpty && got.sameElements(want),
+        s"$q diverged from its batch twin: ${got.take(3).mkString(", ")} vs " +
+          want.take(3).mkString(", "))
+    }
+  }
+
+  test("drain restores the stream confs and stops the query, also when the stream throws") {
+    import org.apache.spark.sql.functions._
+    val ss = spark
+    import ss.implicits._
+    val pKey = "spark.sql.streaming.stateStore.providerClass"
+    val sKey = "spark.sql.shuffle.partitions"
+    val prior = (spark.conf.getOption(pKey), spark.conf.get(sKey))
+    def counted(fail: Boolean): DataFrame =
+      Streaming.eventStream(spark, sf)
+        .select(col("user_id"), col("value"))
+        .as[(Long, Double)]
+        .groupByKey(_._1)
+        .transformWithState(new CountOrFailProcessor(fail),
+          TimeMode.None(), OutputMode.Update())
+        .toDF("user_id", "n")
+    def assertRestored(when: String): Unit = {
+      assert((spark.conf.getOption(pKey), spark.conf.get(sKey)) == prior,
+        s"stream confs not restored $when")
+      assert(spark.streams.active.isEmpty, s"a streaming query is still active $when")
+    }
+    // the transformWithState operator only runs on RocksDB, so a
+    // non-empty result also shows the runner chose it from the plan
+    assert(Streaming.drain(spark, counted(fail = false), "graft_scope_ok", "update")
+      .count() > 0)
+    assertRestored("after a drain")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streaming.drain(spark, counted(fail = true), "graft_scope_fail", "update")
+    }
+    assert(e.getMessage.contains("injected stream failure"), e.getMessage)
+    assertRestored("after a drain whose stream threw")
   }
 
   test("q249 per-micro-batch lead-lag readout ends exactly at the batch q229 correlogram") {
