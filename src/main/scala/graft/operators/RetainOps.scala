@@ -705,17 +705,14 @@ object RetainOps {
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
       import org.apache.spark.sql.types._
-      val rawSchema = graft.streaming.Streaming.rawSchema(s, d)
-      // shared staged dir (round 12): handles both single-file and
-      // ScaleGen part-dir events.parquet layouts
-      val stage = graft.streaming.Streaming.stageDir(d)
       val bw = s.sparkContext.broadcast(Retain.defaultWeights)
       val typeIdx = eventTypes.zipWithIndex.toMap
       val splitMicros = java.time.LocalDateTime.parse("2024-01-12T00:00:00")
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
       val startMicros = java.time.LocalDate.parse(gridStart)
         .atStartOfDay.toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
-      val scoredStream = s.readStream.schema(rawSchema).parquet(stage)
+      val scoredStream = graft.streaming.Streaming.fileStream(s, d, "events.parquet",
+          graft.streaming.Streaming.rawSchema(s, d))
         .withColumn("tsm", graft.streaming.Streaming.tsAsMicros(s, d)) // → epoch micros
         .where(col("tsm") < splitMicros)
         .select(col("user_id"), col("tsm"), col("event_type"), col("value"))

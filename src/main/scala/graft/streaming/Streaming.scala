@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * a finite source, which is exactly the contract watermarked
   * aggregation is supposed to keep.
   *
-  * Mechanics: the `events` parquet is consumed through
-  * `spark.readStream` (file source over a staged flat copy, explicit
+  * Mechanics: the `events` parquet is consumed through one file-stream
+  * reader, [[fileStream]], straight from the input dir (explicit
   * schema — TIMESTAMP(NANOS) read as long, rebuilt to micros like the
   * batch path). Every finite streaming query in the engine runs through
   * one of two runners, so a finite stream runs one way:
@@ -59,55 +59,13 @@ object Streaming {
     if (graft.Tables.eventsTsIsLong(s, d)) expr("ts DIV 1000")
     else unix_micros(col("ts").cast("timestamp"))
 
-  /** Scratch root for staged stream sources, checkpoints, and sinks:
-    * tmpfs when available (the box's block device is burst-throttled —
-    * see GraftSession.build), else the sbt target dir.
+  /** Scratch root for stream checkpoints and sinks, bucketed tables and
+    * round-trip scratch: tmpfs when available (the box's block device is
+    * burst-throttled — see GraftSession.build), else the sbt target dir.
     */
   private[graft] lazy val ioBase: String = {
     val shm = new java.io.File("/dev/shm/graft-io")
     if (shm.isDirectory || shm.mkdirs()) shm.getAbsolutePath else "target/graft-io"
-  }
-
-  /** The file source requires a directory; stage the events parquet into
-    * a per-sf scratch dir once. */
-  private[graft] def stageDir(d: String): String =
-    stageFlat(d, "events.parquet", "events_stream")
-
-  /** Marks a stage dir whose copy completed. The leading underscore
-    * hides it from the file-stream source's listing. */
-  private val StagedMarker = "_STAGED"
-
-  /** Stage `$d/$table` (single file OR ScaleGen part-file directory)
-    * FLAT into a per-sf scratch dir — the file-stream source does not
-    * recurse, so part files must land in the stage dir itself. The copy
-    * goes into a temporary sibling that gets [[StagedMarker]] last and is
-    * then renamed into place, so a copy killed midway never looks
-    * staged: a stage dir without the marker (a partial copy, or a
-    * layout from before the marker existed) is rebuilt from scratch.
-    * Synchronized so two queries of one JVM never rebuild the same
-    * stage at once.
-    */
-  private def stageFlat(d: String, table: String, tag: String): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    val dir = Paths.get(s"$ioBase/${d.replaceAll("[^A-Za-z0-9.]", "_")}/$tag")
-    if (!Files.exists(dir.resolve(StagedMarker))) {
-      val tmp = Files.createTempDirectory(
-        Files.createDirectories(dir.getParent), s".$tag-")
-      val src = Paths.get(s"$d/$table")
-      val parts =
-        if (!Files.isDirectory(src)) List(src)
-        else {
-          val st = Files.list(src)
-          try st.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
-          finally st.close()
-        }
-      parts.foreach(p => Files.copy(p, tmp.resolve(p.getFileName.toString)))
-      Files.createFile(tmp.resolve(StagedMarker))
-      deleteTree(dir)
-      Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-    }
-    dir.toString
   }
 
   private def deleteTree(p: java.nio.file.Path): Unit =
@@ -118,9 +76,22 @@ object Streaming {
       finally st.close()
     }
 
+  /** The one file-stream source reader: streams `$d/$table` straight
+    * from the input dir, with no copy. A ScaleGen table is a directory
+    * of part files and is streamed as that directory; a single-file
+    * table (testdata, perfbench) sits beside the other tables, so the
+    * source lists `d` and `pathGlobFilter` keeps only the file named
+    * `table`; no file of another table matches it.
+    */
+  private[graft] def fileStream(s: SparkSession, d: String, table: String,
+                                schema: StructType): DataFrame =
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d, table)))
+      s.readStream.schema(schema).parquet(s"$d/$table")
+    else s.readStream.schema(schema).option("pathGlobFilter", table).parquet(d)
+
   /** File-stream of events with proper event-time column. */
   private[graft] def eventStream(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(rawSchema(s, d)).parquet(stageDir(d))
+    fileStream(s, d, "events.parquet", rawSchema(s, d))
       .withColumn("ts", tsAsTimestamp(s, d))
 
   /** Runner: run a finite streaming DF into a memory sink named `name`
@@ -206,15 +177,14 @@ object Streaming {
     */
   def warm(s: SparkSession, d: String): Unit = {
     import s.implicits._
-    val dir = stageFlat(d, "region.parquet", "warm_stream")
     val schema = s.read.parquet(s"$d/region.parquet").schema
-    val agg = s.readStream.schema(schema).parquet(dir)
+    val agg = fileStream(s, d, "region.parquet", schema)
       .groupBy(col(schema.head.name)).agg(count(lit(1)).as("n"))
     drain(s, agg, "graft_stream_warm", "complete")
     // also warm the transformWithState/RocksDB path: provider class +
     // native library load and store format validation are one-time JVM
     // costs that otherwise land on the first stateful-v2 query (q109)
-    val tws = s.readStream.schema(schema).parquet(dir)
+    val tws = fileStream(s, d, "region.parquet", schema)
       .select(col(schema.head.name).cast("long"), lit(1.0))
       .as[(Long, Double)]
       .groupByKey(_._1)
@@ -436,6 +406,21 @@ object Streaming {
     }
   }
 
+  /** The 30-minute sessionization the session oracles (q82, q83, q97,
+    * q197) share: `flagged` marks an event that opens a session (a
+    * user's first, or ≥ 30 min after the previous), `sess` numbers each
+    * user's sessions by the running sum of those flags. */
+  private val sessSql =
+    """flagged AS (
+      |  SELECT user_id, ts, event_id,
+      |    CASE WHEN lag(ts) OVER w IS NULL
+      |           OR (epoch_us(ts) - epoch_us(lag(ts) OVER w)) >= 1800000000 THEN 1 ELSE 0 END AS new_s
+      |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+      |sess AS (
+      |  SELECT user_id, ts,
+      |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM flagged)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Arbitrary stateful processing through the transformWithState API
@@ -475,15 +460,7 @@ object Streaming {
       */
     QueryDef(
       "q197_stream_timer_sessions",
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR (epoch_us(ts) - epoch_us(lag(ts) OVER w)) >= 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged),
+      s"""WITH $sessSql,
         |agg AS (
         |  SELECT user_id, min(ts) AS start_ts, max(epoch_us(ts)) AS end_us,
         |    count(*) AS n_events
@@ -640,15 +617,7 @@ object Streaming {
       */
     QueryDef(
       "q82_session_window",
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR (epoch_us(ts) - epoch_us(lag(ts) OVER w)) >= 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged)
+      s"""WITH $sessSql
         |SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  count(*) AS n_events
         |FROM sess GROUP BY user_id, sid
@@ -742,15 +711,7 @@ object Streaming {
       */
     QueryDef(
       "q97_flatmap_sessions",
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR (epoch_us(ts) - epoch_us(lag(ts) OVER w)) >= 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged),
+      s"""WITH $sessSql,
         |agg AS (
         |  SELECT user_id, sid, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
         |    count(*) AS n_events, max(sid) OVER (PARTITION BY user_id) AS max_sid
@@ -947,15 +908,7 @@ object Streaming {
       */
     QueryDef(
       "q83_stream_sessionize",
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR (epoch_us(ts) - epoch_us(lag(ts) OVER w)) >= 1800000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged),
+      s"""WITH $sessSql,
         |agg AS (
         |  SELECT user_id, min(ts) AS start_ts, max(epoch_us(ts)) AS end_us,
         |    count(*) AS n_events
@@ -1462,8 +1415,7 @@ object Streaming {
       import s.implicits._
       import graft.functions.WavCodec
       val docSchema = graft.Tables.documents(s, d).schema
-      val decoded = s.readStream.schema(docSchema)
-        .parquet(stageFlat(d, "documents.parquet", "docs_stream"))
+      val decoded = fileStream(s, d, "documents.parquet", docSchema)
         .where(col("doc_id") % 7 === 0)
         .select(col("doc_id"), col("source"))
         .as[(Long, String)]

@@ -56,25 +56,56 @@ class HygieneSpec extends AnyFunSuite {
       s"streaming code reads an environment variable:\n  ${offenders.mkString("\n  ")}")
   }
 
-  test("writeStream appears in src/main only inside the two stream runners and q91") {
-    // Streaming.drain and Streaming.refresh run every finite stream;
-    // q91's durable parquet file sink is the one exception
-    val anchor = """\bdef (\w+)|^\s*"(q\d+_\w+)"""".r
-    val allowed = Set("drain", "refresh", "q91_stream_file_sink")
-    val offenders = mainSources.flatMap { f =>
+  /** Every code line of src/main that holds `word` outside the allowed
+    * (file suffix, owner) pairs, where a line's owner is the nearest
+    * `def` or query name above it. */
+  private def strayUses(word: String, allowed: Set[(String, String)]): Seq[String] = {
+    val anchor = """\bdef (\w+)|^\s*(?:QueryDef(?:\.noOracle)?\()?"(q\d+_\w+)"""".r
+    mainSources.flatMap { f =>
       val lines = codeLines(Seq(f))
-      lines.collect { case (_, n, l) if l.contains("writeStream") =>
+      lines.collect { case (_, n, l) if l.contains(word) =>
         val owner = lines.takeWhile(_._2 <= n).reverseIterator
           .flatMap { case (_, _, x) => anchor.findFirstMatchIn(x) }
           .map(m => Option(m.group(1)).getOrElse(m.group(2))).nextOption()
-        (f, n, l, owner)
-      }.collect { case (f, n, l, owner)
-          if !f.getPath.endsWith("graft/streaming/Streaming.scala") ||
-            !owner.exists(allowed) =>
+        (n, l, owner)
+      }.collect { case (n, l, owner) if !allowed.exists { case (file, o) =>
+          f.getPath.endsWith(file) && owner.contains(o) } =>
         s"${f.getPath}:$n (in ${owner.getOrElse("?")}): ${l.trim}"
       }
     }
+  }
+
+  test("writeStream appears in src/main only inside the two stream runners and q91") {
+    // Streaming.drain and Streaming.refresh run every finite stream;
+    // q91's durable parquet file sink is the one exception
+    val offenders = strayUses("writeStream", Set("drain", "refresh", "q91_stream_file_sink")
+      .map("graft/streaming/Streaming.scala" -> _))
     assert(offenders.isEmpty,
       s"writeStream outside Streaming.drain/refresh and q91:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("readStream appears in src/main only inside the file-stream reader and q117") {
+    // Streaming.fileStream is the one reader of a parquet stream source;
+    // q117 streams the custom graft-series source
+    val offenders = strayUses("readStream", Set(
+      "graft/streaming/Streaming.scala" -> "fileStream",
+      "graft/sources/Sources.scala" -> "q117_stream_custom_source"))
+    assert(offenders.isEmpty,
+      s"readStream outside Streaming.fileStream and q117:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("no staging copy of a stream source in the streaming code or RetainOps") {
+    // streams read their input dir in place; a staged copy of it grew
+    // scratch space per input dir and raced between processes
+    val words = Seq("stageFlat", "_STAGED", "events_stream")
+    val offenders = mainSources
+      .filter(f => f.getPath.contains("graft/streaming/") ||
+        f.getPath.endsWith("graft/operators/RetainOps.scala"))
+      .flatMap { f =>
+        val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        words.filter(txt.contains).map(w => s"${f.getPath} (contains '$w')")
+      }
+    assert(offenders.isEmpty,
+      s"stream staging code is back:\n  ${offenders.mkString("\n  ")}")
   }
 }

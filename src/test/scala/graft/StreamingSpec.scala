@@ -233,34 +233,58 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stream.sameElements(q80Batch))
   }
 
-  test("a stage dir without its completion marker is rebuilt, not read as staged") {
-    // what a staging copy killed midway leaves behind: some of the part
-    // files in the stage dir and no marker. Every later run must re-stage,
-    // not stream the partial copy.
-    import java.nio.file.{Files, Paths}
+  test("q80 streams each events layout straight from the input dir, with no copy") {
+    // the file-stream reader opens the input dir in place: a single-file
+    // events.parquet, a part-file events.parquet/ directory, and a
+    // single-file events.parquet beside a single-file table and a
+    // part-file table, whose files the reader must not pick up
+    import java.nio.file.{Files, Path, Paths}
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("partialstage").toString
-    Tables.events(spark, sf).repartition(3)
-      .withColumn("ts", col("ts").cast("timestamp_ntz"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val stage = Paths.get(Streaming.ioBase, dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    Files.createDirectories(stage.resolve("events_stream"))
-    val parts = Files.list(Paths.get(s"$dir/events.parquet")).toArray
-      .map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    assert(parts.length == 3)
-    Files.copy(parts.head, stage.resolve("events_stream").resolve(parts.head.getFileName))
-    try {
-      val stream = SparkEntry.queries("q80_stream_tumbling")(spark, dir)
-        .collect().map(_.toString).sorted
-      assert(stream.sameElements(q80Batch),
-        "streamed a partial stage left without a completion marker")
-    } finally
-      for (root <- Seq(stage, Paths.get(dir))) {
-        val st = Files.walk(root)
+    val layouts = Seq[(String, Path => Unit)](
+      "single file" -> { dir =>
+        Files.copy(Paths.get(sf, "events.parquet"), dir.resolve("events.parquet")) },
+      "part-file dir" -> { dir =>
+        Tables.events(spark, sf).repartition(3)
+          .withColumn("ts", col("ts").cast("timestamp_ntz"))
+          .write.parquet(dir.resolve("events.parquet").toString)
+        val parts = Files.list(dir.resolve("events.parquet")).toArray
+          .count(_.toString.endsWith(".parquet"))
+        assert(parts == 3) },
+      "single file beside other tables" -> { dir =>
+        for (t <- Seq("events.parquet", "region.parquet"))
+          Files.copy(Paths.get(sf, t), dir.resolve(t))
+        Tables.documents(spark, sf).repartition(2)
+          .write.parquet(dir.resolve("documents.parquet").toString) })
+    val nEvents = Tables.events(spark, sf).count()
+    for ((layout, write) <- layouts) {
+      val dir = Files.createTempDirectory("streamlayout")
+      try {
+        write(dir)
+        val d = dir.toString
+        val stream = SparkEntry.queries("q80_stream_tumbling")(spark, d)
+          .collect().map(_.toString).sorted
+        assert(stream.sameElements(q80Batch), s"$layout: q80 differs from the batch group-by")
+        val streamed = Streaming.drain(spark, Streaming.eventStream(spark, d).groupBy().count(),
+          "graft_layout_count", "complete").first().getLong(0)
+        assert(streamed == nEvents, s"$layout: streamed $streamed rows, events has $nEvents")
+        val copy = Paths.get(Streaming.ioBase, d.replaceAll("[^A-Za-z0-9.]", "_"), "events_stream")
+        assert(!Files.exists(copy), s"$layout: the stream wrote a copy of its input at $copy")
+      } finally {
+        val st = Files.walk(dir)
         try st.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
         finally st.close()
       }
+    }
+  }
+
+  test("warm streams region from the input dir through both its warm-up queries") {
+    // Bench and QueryProfile swallow a failing warm-up, so pin that it
+    // really reads rows
+    Streaming.warm(spark, sf)
+    val keys = spark.read.parquet(s"$sf/region.parquet").distinct().count()
+    assert(keys > 0)
+    for (t <- Seq("graft_stream_warm", "graft_stream_warm_tws"))
+      assert(spark.table(t).count() == keys, t)
   }
 
   test("transformWithState streams q109/q183/q190 equal their batch twins") {
