@@ -1,311 +1,92 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The throughput surface: times every `SparkEntry.queries` entry once on
+  * one warm session and prints two JSON lines, the full per-query record
+  * and a compact summary.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Box self-protection (round 16, VERDICT r15 #1): a killed Spark JVM
-    // leaks shuffle/state dirs into the tmpfs spark.local.dir and poisons
-    // the NEXT run's shuffle IO while the start-of-run anchors stay clean
-    // — the round-15 regression cluster followed exactly one such crash.
-    // Sweep leftovers older than 10 minutes (anything younger might be a
-    // concurrent live JVM's) before the session starts, and RECORD the
-    // sweep in the JSON so a dirty-box run is visible evidence.
-    // Liveness gate (ADVICE r16): a live Spark JVM's spark-*/blockmgr-*
-    // dirs stop getting top-level mtime updates after startup, so a
-    // concurrent run older than 10 min would have its LIVE shuffle files
-    // swept mid-run by the age heuristic alone. The age test only says
-    // "probably orphaned"; liveness says "definitely not in use" — scan
-    // /proc for any OTHER java process mentioning graft and skip the
-    // sweep entirely while one is running.
-    def otherGraftJvmAlive(): Boolean = {
-      // Exclude the whole ancestor chain, not just self: Bench runs under
-      // an sbt launcher whose own cmdline contains "runMain graft.Bench" —
-      // matching it would make the gate permanently true.
-      val family = Iterator.iterate(Option(ProcessHandle.current())) {
-        _.flatMap(h => { val p = h.parent(); if (p.isPresent) Some(p.get) else None })
-      }.takeWhile(_.isDefined).flatten.map(_.pid()).toSet
-      val procs = Option(new java.io.File("/proc").listFiles()).getOrElse(Array.empty)
-      procs.exists { d =>
-        d.getName.forall(_.isDigit) && !family.contains(d.getName.toLong) && {
-          try {
-            val cmd = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(d.getPath, "cmdline")), "UTF-8")
-            cmd.contains("java") && (cmd.contains("graft") || cmd.contains("sbt"))
-          } catch { case _: Throwable => false }
-        }
-      }
-    }
-    val sweptDirs: Int = {
-      val root = new java.io.File("/dev/shm/graft-local")
-      val stale =
-        if (otherGraftJvmAlive()) Array.empty[java.io.File]
-        else Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(_.lastModified < System.currentTimeMillis - 10 * 60 * 1000)
-      stale.foreach { d =>
-        try {
-          val st = java.nio.file.Files.walk(d.toPath)
-          try st.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => try java.nio.file.Files.delete(p)
-                          catch { case _: java.io.IOException => () })
-          finally st.close()
-        } catch { case _: Throwable => () }
-      }
-      stale.length
-    }
-    // Hypervisor steal tracking (round 16): this box is a VM, and
-    // /proc/stat showed 3–11% CPU STEAL during the round-16 session —
-    // cycles the host gives to a neighbor. Steal inflates every timing
-    // uniformly-ish but hits scheduler-latency-sensitive shapes (many
-    // tiny micro-batch jobs — exactly the stateful-streaming family that
-    // carried the round-15 "regression") several-fold. Recording the
-    // run's steal fraction in the JSON turns "the numbers moved and
-    // nothing changed" from a bisection hunt into a one-field read.
-    def procStat(): Array[Long] =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().next().split("\\s+").drop(1).map(_.toLong)
-        finally src.close()
-      } catch { case _: Throwable => Array.empty[Long] }
-    val statStart = procStat()
-    val spark = GraftSession.build("graft-bench")
-    // Warm the session (codegen, parquet footer cache, shuffle machinery)
-    // so the first measured query isn't charged for JVM startup.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // touch every table once so no measured query is charged for the
-    // first-scan costs (footer reads, OS page cache, scan codegen)
-    for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings")) {
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
-    // ... and the streaming machinery (micro-batch planner, state store
-    // provider) — otherwise the alphabetically-first streaming query
-    // gets charged several seconds of one-time setup.
-    try graft.streaming.Streaming.warm(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Optional comma-separated name filter for focused local iteration
-    // (e.g. SPARK_GRAFT_BENCH_ONLY=q71_minhash_lsh); driver leaves it
-    // unset and benches everything.
+    // comma-separated query names for a focused run; unset benches everything
     val only = SparkEntry.nameFilter("SPARK_GRAFT_BENCH_ONLY")
-    // Per-query output file: defaults to the sf0.1 record; a scale run
-    // (e.g. the sf1 evidence run, round 9) sets SPARK_GRAFT_BENCH_OUT so
-    // it neither clobbers BENCH_FULL.json nor compares its timings
-    // against the wrong scale's noise-fence baseline — the fence always
-    // reads the SAME file this run will write.
+    // a scale run names its own record so it does not replace BENCH_FULL.json
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    // Box anchor (round 12, VERDICT r11 #2): two fixed synthetic jobs —
-    // pure-CPU codegen arithmetic and a small shuffle — timed before any
-    // query, reported as "anchor_cpu"/"anchor_shuffle" in the JSON. The
-    // r10→r11 +14% UNIFORM drift (no per-query outlier) was box/JVM
-    // state, not plans; with the anchor committed per round, a uniform
-    // drift shows up in the anchor too (normalize by the anchor ratio),
-    // while a real plan regression moves its query WITHOUT moving the
-    // anchor. min of 3 runs: the anchor must measure the box's clean
-    // capability, not its own noise.
-    def anchorTime(job: () => Unit): Double =
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); job(); (System.nanoTime() - t0) / 1e9
-      }.min
-    def measureAnchors(): (Double, Double) = (
-      anchorTime(() => spark.range(100L * 1000 * 1000)
-        .selectExpr("sum(id * id % 7)").collect()),
-      anchorTime(() => spark.range(2L * 1000 * 1000)
-        .selectExpr("id % 1000 AS k", "id AS v").groupBy("k").sum("v")
-        .collect()))
-    // Anchor band gate (round 16, VERDICT r15 #1): the clean-epoch band
-    // is cpu ≈ 0.11–0.13 / shuffle ≈ 0.24–0.45 (BENCH_NOTES). A breach
-    // means the box is still digesting something (page-cache churn, a
-    // neighbor JVM, IO-credit trough) — wait out one settling window and
-    // re-measure ONCE; if still out of band, the run proceeds (the
-    // driver needs a file) but carries "anchors_out_of_band":true so the
-    // protocol refuses it as committed evidence.
-    // Scheduling-latency anchor (round 16): the cpu/shuffle anchors
-    // measure the box's THROUGHPUT and stayed in-band through the entire
-    // round-15/16 "regression" — which turned out to be the hypervisor
-    // epoch degrading task-wakeup latency (identical r14 source, re-run
-    // today in quiet windows, measures 2.4–2.8× its committed numbers on
-    // barrier-heavy queries; see BENCH_NOTES round 16). Every stage
-    // boundary pays the slowest task's wakeup tax, so many-stage shapes
-    // (micro-batch streaming, iterative loops) amplify latency that a
-    // saturating job never sees. This anchor measures it directly: 40
-    // sequential 8-task jobs over a cached 8-row frame — pure
-    // schedule/wake/collect round-trips, ~0 compute. Clean epoch ≈
-    // 0.3–0.5 s; the degraded epoch reads 2–5×.
-    val latencyProbe = {
-      val df = spark.range(8).repartition(8).cache()
-      df.count() // materialize outside the timed loop
-      df
-    }
-    val anchorLatency = {
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 40) { latencyProbe.count(); i += 1 }
-      (System.nanoTime() - t0) / 1e9
-    }
-    latencyProbe.unpersist()
-    var (anchorCpu, anchorShuffle) = measureAnchors()
-    def inBand = anchorCpu <= 0.16 && anchorShuffle <= 0.55
-    if (!inBand) {
-      Thread.sleep(60 * 1000)
-      val (c2, s2) = measureAnchors()
-      anchorCpu = c2; anchorShuffle = s2
-    }
-    val anchorsOutOfBand = !inBand
-    // Noise fence (round 8; trigger tightened 3x -> 1.5x in round 12 per
-    // VERDICT r11 #2): the box's IO-credit bursts keep flagging queries
-    // whose clean times are 3-5x lower (q65 9.1s vs 1.8s in round 7) —
-    // and at a 3x trigger, a 2x noise spike on a 1s query sailed through
-    // unretimed and read as a regression. Any query whose first run
-    // exceeds 1.5x its committed entry in `outFile` (and 1s absolute) is
-    // timed a SECOND time; both timings are recorded under "retimed" and
-    // — round-9 policy fix (VERDICT r8 #5) — min(t1, t2) becomes the
-    // reported scalar: both are honest timings of the same plan, so a
-    // noisy SECOND run must not inflate the committed number (q306's
-    // 3.9s -> 8.7s in r8). A real regression is slow on BOTH runs and
-    // still surfaces.
-    val prior: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(outFile)), "UTF-8")
-        """"(q\d+[A-Za-z0-9_]*)":\s*([0-9]+\.?[0-9]*)""".r
-          .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-    val retimed = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
-    // Failed queries must be VISIBLE, not timed (round 12): the old
-    // swallow-and-time turned every streaming query's instant failure at
-    // the ScaleGen rungs (empty staged source dir) into a ~0.1 s
-    // "measurement" that sat in BENCH_SF1/BENCH_SF10 as scale evidence.
-    // A thrown query now lands in "failed" (with its message) and is
-    // excluded from the per-query map and the total.
-    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Run in name order so per-query timings are comparable across rounds.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .flatMap { case (name, fn) =>
-      def timeOnce(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      try {
-        val cacheBefore = PlanCache.keys
-        val t1 = timeOnce()
-        val t = prior.get(name) match {
-          case Some(p) if t1 > 1.5 * p && t1 > 1.0 =>
-            // drop whatever the first timing persisted, so the second
-            // timing measures the same cold work (self-cached queries
-            // like q363 otherwise retime against their own warm cache)
-            PlanCache.drop(PlanCache.keys -- cacheBefore)
-            // a t2 that THROWS (transient executor loss during the cold
-            // rebuild) must not discard the valid completed t1
-            val t2 = try timeOnce() catch { case _: Throwable => t1 }
-            retimed(name) = (t1, t2)
-            math.min(t1, t2)
-          case _ => t1
-        }
-        Some(name -> t)
-      } catch {
-        case e: Throwable =>
-          failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .linesIterator.take(1).mkString.take(160)
-          None
-      }
-    }
-    // Cross-rung sanity invariant (round 13, VERDICT r12 #2; noise band
-    // added round 14 per VERDICT r13 #4): an sf0.1 entry that clearly
-    // exceeds the SAME query's committed sf1 MEASURED entry is an epoch
-    // smear (IO trough + shared-PlanCache rebuild inside the retime
-    // window; q406 sat at 13.4 s sf0.1 vs 1.6 s sf1 for a round this
-    // way) and must be re-measured in an isolated own-JVM run before
-    // being committed. "Clearly" means > 1.5× the upper-rung entry (and
-    // 1 s absolute): many queries here are grid/moment-bounded — cost
-    // O(P·T), sf-INVARIANT by design — so a bare `this > upper` check
-    // chronically flags 1.0–1.5× noise-sign events on every epoch whose
-    // anchors moved (r13 committed 27 such; all were 1.0–1.5× on 1–5 s
-    // grid-bounded queries). 1.5× matches the retime fence's own noise
-    // trigger; a genuine super-linear smear (the q406 class was 8×)
-    // clears it by an order of magnitude. The run can't re-launch a JVM
-    // itself, so it REPORTS violations under "suspect_vs_upper_rung"
-    // (query → {this, upper}) and the protocol (BENCH_NOTES) requires
-    // resolving that list to empty — by isolated re-run — before the
-    // file is committed as evidence. Rung runs compare against the
-    // next rung up via SPARK_GRAFT_BENCH_XRUNG.
-    val xrungFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_XRUNG",
-      if (outFile == "BENCH_FULL.json") "BENCH_SF1.json" else "")
-    val xrung: Map[String, Double] =
-      if (xrungFile.isEmpty) Map.empty
-      else try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(xrungFile)), "UTF-8")
-        // Parse ONLY the upper-rung file's "queries" object (round 14,
-        // ADVICE r13): the bare qNN:num regex also matched the file's
-        // "carried" entries — stale prior-round baselines of queries
-        // that FAILED that run — and (last-match-wins through .toMap)
-        // compared this rung against a number the upper rung never
-        // measured.
-        val measured = """"queries":\s*(\{[^}]*\})""".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        """"(q\d+[A-Za-z0-9_]*)":\s*([0-9]+\.?[0-9]*)""".r
-          .findAllMatchIn(measured)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-    val suspects = results.filter { case (n, t) =>
-      xrung.get(n).exists(up => t > 1.5 * up && t > 1.0) }
-    def fmt(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    def toJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val retimedJson = retimed.map { case (k, (a, b)) =>
-      "\"" + k + "\":{\"t1\":" + fmt(a) + ",\"t2\":" + fmt(b) + "}"
-    }.mkString("{", ",", "}")
-    def jstr(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => " "; case c => c.toString } + "\""
-    val failedJson = failed.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }
-      .mkString("{", ",", "}")
-    // Carry the PRIOR committed timing of each failed query forward: a
-    // full run with a transient failure would otherwise erase that
-    // query's noise-fence baseline (prior.get = None on the next run ⇒
-    // the 1.5x retime fence can't fire on its recovery run). The prior
-    // regex reads any "qNN":num pair in the file, so "carried" entries
-    // keep serving as fence baselines without being counted in the
-    // measured total.
-    val carried = failed.keys.flatMap(n => prior.get(n).map(n -> _)).toSeq
-    val suspectJson = suspects.map { case (n, t) =>
-      "\"" + n + "\":{\"this\":" + fmt(t) + ",\"upper\":" + fmt(xrung(n)) + "}"
-    }.mkString("{", ",", "}")
-    val stealPct = {
-      val statEnd = procStat()
-      if (statStart.length >= 8 && statEnd.length >= 8) {
-        val d = statEnd.zip(statStart).map { case (b, a) => b - a }
-        val tot = d.sum.toDouble
-        if (tot > 0) 100.0 * d(7) / tot else -1.0
-      } else -1.0
-    }
-    val boxJson =
-      s""""swept_local_dirs":$sweptDirs,"anchors_out_of_band":$anchorsOutOfBand,"steal_pct":${fmt(stealPct)},"anchor_latency":${fmt(anchorLatency)}"""
-    val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"n_failed":${failed.size},"anchor_cpu":${fmt(anchorCpu)},"anchor_shuffle":${fmt(anchorShuffle)},$boxJson,"queries":${toJson(results)},"retimed":$retimedJson,"failed":$failedJson,"carried":${toJson(carried)},"suspect_vs_upper_rung":$suspectJson,"sf":"$sfDir"}"""
-    // The driver keeps only a ~2000-char tail of the run's output, so a
-    // 123-query map truncates mid-line and never parses. Final line =
-    // compact summary (total + the slowest headline queries, guaranteed
-    // to fit in the tail); the full per-query map goes to a file and to
-    // an earlier stdout line for human readers.
-    val headline = results.sortBy(-_._2).take(16).sortBy(_._1)
-    val compactJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"n_failed":${failed.size},"anchor_cpu":${fmt(anchorCpu)},"anchor_shuffle":${fmt(anchorShuffle)},$boxJson,"queries":${toJson(headline)},"queries_full":"$outFile","sf":"$sfDir"}"""
-    // Only a FULL run may replace the record file: a SPARK_GRAFT_BENCH_ONLY
-    // run covers a subset, and overwriting would both lose the committed
-    // full-suite record and destroy the noise fence's per-query baseline.
-    if (only.isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-        (fullJson + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+    val spark = GraftSession.build("graft-bench")
+    val (fullJson, compactJson) = run(spark, sfDir, only, outFile)
     // Print after every other writer is done: silence logging, stop Spark
     // (its shutdown WARNs would otherwise land after us), then print.
     spark.sparkContext.setLogLevel("OFF")
     try spark.stop() catch { case _: Throwable => () }
     println(fullJson)
     println(compactJson)
+  }
+
+  /** Warms `spark`, times each query not filtered out by `only` once,
+    * writes the full record to `outFile` when nothing is filtered out, and
+    * returns the (full, compact) JSON lines.
+    */
+  def run(spark: SparkSession, sfDir: String, only: Set[String],
+      outFile: String): (String, String) = {
+    val steal = SparkEntry.stealMeter()
+    // Warm the session (codegen, shuffle machinery), every table's first
+    // scan (footers, page cache) and the streaming machinery (micro-batch
+    // planner, state store), so the first query of each kind is not
+    // charged several seconds of one-time setup.
+    spark.range(1000).selectExpr("sum(id)").collect()
+    for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings")) {
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    }
+    try graft.streaming.Streaming.warm(spark, sfDir)
+    catch { case _: Throwable => () }
+    // A thrown query is reported with its message, not timed: its fast
+    // failure would read as a measurement.
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    // Name order: queries that share PlanCache entries are charged the
+    // same way in every run.
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .flatMap { case (name, fn) =>
+        try {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch {
+          case e: Throwable =>
+            failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+              .linesIterator.take(1).mkString.take(160)
+            None
+        }
+      }
+    def fmt(v: Double): String =
+      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    def toJson(rs: Seq[(String, Double)]): String =
+      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    def jstr(s: String): String =
+      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
+        case c if c < ' ' => " "; case c => c.toString } + "\""
+    val failedJson = failed.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }
+      .mkString("{", ",", "}")
+    // The anchor, sweep, retime, carried and cross-rung keys are measured
+    // by nothing; they stay, empty, because readers rely on the key set.
+    val head =
+      s""""metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec","n":${results.size},"n_failed":${failed.size},"anchor_cpu":null,"anchor_shuffle":null,"swept_local_dirs":0,"anchors_out_of_band":null,"steal_pct":${fmt(steal())},"anchor_latency":null"""
+    val fullJson =
+      s"""{$head,"queries":${toJson(results)},"retimed":{},"failed":$failedJson,"carried":{},"suspect_vs_upper_rung":{},"sf":"$sfDir"}"""
+    // A reader that keeps only a ~2000-char tail of the output cannot parse
+    // the full per-query map, so the last line carries the total and the
+    // 16 slowest queries; the full map goes to `outFile`.
+    val headline = results.sortBy(-_._2).take(16).sortBy(_._1)
+    val compactJson =
+      s"""{$head,"queries":${toJson(headline)},"queries_full":"$outFile","sf":"$sfDir"}"""
+    // A filtered run covers a subset and must not replace the full record.
+    if (only.isEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+        (fullJson + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
+    (fullJson, compactJson)
   }
 }

@@ -63,22 +63,11 @@ object PlanCache {
       s"${System.identityHashCode(s.sparkContext)}|$key",
       _ => build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Snapshot of the current cache keys — used by Bench's retime rule. */
+  /** Snapshot of the current cache keys. perfbench reads it around each
+    * op to count the entries that op built (`PlanCache.builds`) and at
+    * the end of a run (`PlanCache.entries_end`). */
   def keys: Set[String] = {
     import scala.jdk.CollectionConverters._
     entries.keySet.asScala.toSet
-  }
-
-  /** Drop (and unpersist) specific entries. Bench's retime rule calls
-    * this with the keys a query's FIRST timing created, so the second
-    * timing re-measures the same cold work instead of reading the first
-    * run's persisted subtree back out of the cache (round 12: q363's
-    * committed 0.301 s was exactly that artifact — t1 7.6 s built and
-    * persisted the fold-moment table, t2 0.3 s read it back, and
-    * min(t1, t2) buried the real cost for five rounds). Unpersist is
-    * blocking so the second timing cannot overlap the cleanup.
-    */
-  def drop(ks: Set[String]): Unit = ks.foreach { k =>
-    Option(entries.remove(k)).foreach(_.unpersist(blocking = true))
   }
 }

@@ -100,4 +100,25 @@ object SparkEntry {
     sys.env.get(envVar)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
+
+  /** Shared CPU steal meter of Bench and Verify: call it when a run starts;
+    * the function it returns gives the percentage of CPU ticks since then
+    * that the hypervisor gave to other guests, or -1 when `/proc/stat`
+    * cannot be read. On a VM, steal decides whether two timings compare.
+    */
+  private[graft] def stealMeter(): () => Double = {
+    val stat = java.nio.file.Paths.get("/proc/stat")
+    def ticks(): Array[Long] =
+      try java.nio.file.Files.readAllLines(stat).get(0).split("\\s+").drop(1).map(_.toLong)
+      catch { case _: Throwable => Array.empty[Long] }
+    val start = ticks()
+    () => {
+      val end = ticks()
+      if (start.length >= 8 && end.length >= 8) {
+        val d = end.zip(start).map { case (b, a) => b - a }
+        val tot = d.sum.toDouble
+        if (tot > 0) 100.0 * d(7) / tot else -1.0
+      } else -1.0
+    }
+  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   /** Resolved-relation cache (round 17): every `spark.read.parquet`
     * call re-lists the path and re-reads a footer for schema inference
-    * — ~48 ms per call measured (MicroBench `read_parquet_resolve`),
+    * — ~48 ms per call measured,
     * and the 477-query suite makes ~1 000 such calls (~45 s of pure
     * metadata work). A real deployment resolves tables through a
     * catalog whose schema/listing is read once; this cache is exactly

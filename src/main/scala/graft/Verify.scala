@@ -5,17 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Box-health fields in every artifact (VERDICT r16 #8): correctness
-    // is timing-insensitive, but recording steal/latency alongside each
-    // run makes later epoch forensics (the round-15/16 regression hunt)
-    // one grep instead of a session.
-    def procStat(): Array[Long] =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().next().split("\\s+").drop(1).map(_.toLong)
-        finally src.close()
-      } catch { case _: Throwable => Array.empty[Long] }
-    val statStart = procStat()
+    // steal beside each correctness run makes a later timing hunt one read
+    val steal = SparkEntry.stealMeter()
     val wallStart = System.nanoTime()
     val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -34,13 +25,7 @@ object Verify {
         // drop any STALE output from a previous run into this outDir —
         // otherwise the checker would hash the old parquet and report a
         // now-broken query green (exactly what the lint must prevent)
-        val dir = Paths.get(s"$outDir/$name")
-        if (Files.exists(dir)) {
-          val st = Files.walk(dir)
-          try st.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.delete(p))
-          finally st.close()
-        }
+        graft.streaming.Streaming.deleteTree(Paths.get(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -58,17 +43,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val stealPct = {
-      val statEnd = procStat()
-      if (statStart.length >= 8 && statEnd.length >= 8) {
-        val d = statEnd.zip(statStart).map { case (b, a) => b - a }
-        val tot = d.sum.toDouble
-        if (tot > 0) 100.0 * d(7) / tot else -1.0
-      } else -1.0
-    }
     val wallSec = (System.nanoTime() - wallStart) / 1e9
     Files.writeString(Paths.get(s"$outDir/box_health.json"),
-      f"""{"steal_pct":$stealPct%.3f,"wall_sec":$wallSec%.1f}""")
+      f"""{"steal_pct":${steal()}%.3f,"wall_sec":$wallSec%.1f}""")
     spark.stop()
   }
 }

@@ -68,7 +68,7 @@ object Streaming {
     if (shm.isDirectory || shm.mkdirs()) shm.getAbsolutePath else "target/graft-io"
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       val st = java.nio.file.Files.walk(p)
       try st.sorted(java.util.Comparator.reverseOrder())

@@ -94,6 +94,14 @@ class HygieneSpec extends AnyFunSuite {
       s"readStream outside Streaming.fileStream and q117:\n  ${offenders.mkString("\n  ")}")
   }
 
+  test("/proc appears in src/main only inside the steal meter") {
+    // Bench and Verify read steal through SparkEntry.stealMeter; a second
+    // /proc reader (a pasted steal copy, a process scan) does not come back
+    val offenders = strayUses("/proc", Set("graft/SparkEntry.scala" -> "stealMeter"))
+    assert(offenders.isEmpty,
+      s"/proc read outside SparkEntry.stealMeter:\n  ${offenders.mkString("\n  ")}")
+  }
+
   test("no staging copy of a stream source in the streaming code or RetainOps") {
     // streams read their input dir in place; a staged copy of it grew
     // scratch space per input dir and raced between processes

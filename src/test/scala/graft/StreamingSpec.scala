@@ -278,8 +278,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("warm streams region from the input dir through both its warm-up queries") {
-    // Bench and QueryProfile swallow a failing warm-up, so pin that it
-    // really reads rows
+    // Bench swallows a failing warm-up, so pin that it really reads rows
     Streaming.warm(spark, sf)
     val keys = spark.read.parquet(s"$sf/region.parquet").distinct().count()
     assert(keys > 0)
@@ -383,18 +382,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // streaming result to equal the single-file dir's result exactly.
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("dirlayout").toString
-    // multi-part directory layout (ScaleGen's shape, incl. its NTZ ts)
-    Tables.events(spark, sf).repartition(3)
-      .withColumn("ts", col("ts").cast("timestamp_ntz"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val fromDir = SparkEntry.queries("q80_stream_tumbling")(spark, dir)
-      .collect().map(_.toSeq)
-    val fromFile = SparkEntry.queries("q80_stream_tumbling")(spark, sf)
-      .collect().map(_.toSeq)
-    assert(fromDir.nonEmpty, "directory-layout source streamed zero rows")
-    assert(fromDir.toSeq == fromFile.toSeq,
-      "directory-layout streaming result diverged from single-file result")
+    val dir = Files.createTempDirectory("dirlayout")
+    try {
+      // multi-part directory layout (ScaleGen's shape, incl. its NTZ ts)
+      Tables.events(spark, sf).repartition(3)
+        .withColumn("ts", col("ts").cast("timestamp_ntz"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val fromDir = SparkEntry.queries("q80_stream_tumbling")(spark, dir.toString)
+        .collect().map(_.toSeq)
+      val fromFile = SparkEntry.queries("q80_stream_tumbling")(spark, sf)
+        .collect().map(_.toSeq)
+      assert(fromDir.nonEmpty, "directory-layout source streamed zero rows")
+      assert(fromDir.toSeq == fromFile.toSeq,
+        "directory-layout streaming result diverged from single-file result")
+    } finally Streaming.deleteTree(dir)
   }
 
   test("q478 streaming WAV ingest equals an exact batch recomputation through the same codec") {
