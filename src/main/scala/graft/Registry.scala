@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine query: a Spark plan builder plus (when SQL-expressible) the
@@ -29,7 +31,8 @@ object QueryDef {
   * JVM so the oracle SQL strings (built at class-init) and the query
   * functions (run later) agree on the path — the driver's DuckDB reads
   * the files this JVM wrote, after it exits. Override with
-  * -Dgraft.scratch for a fixed location.
+  * -Dgraft.scratch for a fixed location; [[Verify]] sets it to
+  * `<outDir>.scratch`, so its oracle SQL names no pid.
   */
 object Scratch {
   val root: String = sys.props.get("graft.scratch").getOrElse {
@@ -38,36 +41,78 @@ object Scratch {
   }
 }
 
-/** Idempotent per-(session, key) persisted intermediates.
+/** The engine's one cache of session-scoped intermediates: the causal
+  * daily grid, RETAIN's featurized base, resolved relations, footer
+  * probes, written checkpoints. An entry is keyed by one string,
+  * `"<namespace>|<key>"` (`relation|<dir>/<table>`, `retain_base|<dir>`,
+  * `cached|<key>` for [[cached]]), and belongs to the live
+  * SparkContext; the key carries no context prefix.
   *
-  * Queries that cache a small derived table (the causal daily grid, a
-  * filtered purchase subset, an eval scoring pass) previously called
-  * `.cache()` on a FRESH DataFrame each invocation, so repeated
-  * verify/bench runs in one session accumulated duplicate cache entries
-  * that nothing ever unpersisted (round-7 ADVICE). Routing the persist
-  * through this registry makes it idempotent: the first invocation
-  * builds and persists, every later invocation in the same session
-  * reuses the SAME DataFrame (and therefore the same single cache
-  * entry) — bounded memory, and cross-query reuse for free when several
-  * queries share an intermediate. Entries are keyed by session identity
-  * so a stopped session's entries are simply dead references (their
-  * cached blocks die with the context); MEMORY_AND_DISK keeps the
-  * intermediate spillable rather than recompute-on-eviction.
+  * Spark runs one active SparkContext per JVM, and a stream's
+  * micro-batch sessions share it, so the store is one map tagged with
+  * its context. The first call from a new live context replaces the
+  * map; a call from a stopped context builds without caching and never
+  * displaces the live one. When the owning context stops, its entries
+  * die with it: the map is dropped, so neither the stopped session nor
+  * the DataFrames and RDDs its entries held stay reachable from here.
+  *
+  * Each entry is a holder that builds outside the map's lock. A builder
+  * may itself call [[memo]] or [[cached]] for another key, concurrent
+  * callers of one key build it once, and a builder that throws leaves
+  * no entry, so the next call builds again.
   */
 object PlanCache {
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private final class Entry(build: () => Any) { lazy val value: Any = build() }
 
+  private final class Store(val sc: SparkContext) {
+    val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  }
+
+  @volatile private var live: Store = _
+
+  private def storeOf(sc: SparkContext): Store = {
+    val cur = live
+    if (cur != null && (cur.sc eq sc)) cur
+    else if (sc.isStopped) new Store(sc)
+    else synchronized {
+      if (live == null || (live.sc ne sc)) {
+        live = new Store(sc)
+        sc.addSparkListener(new SparkListener {
+          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+            PlanCache.synchronized { if (live != null && (live.sc eq sc)) live = null }
+        })
+      }
+      live
+    }
+  }
+
+  /** The value under `key` for the session's context, built by `build`
+    * on the first call. */
+  private[graft] def memo[T](s: SparkSession, key: String)(build: => T): T = {
+    val entries = storeOf(s.sparkContext).entries
+    val e = entries.computeIfAbsent(key, _ => new Entry(() => build))
+    try e.value.asInstanceOf[T]
+    catch { case t: Throwable => entries.remove(key, e); throw t }
+  }
+
+  /** A derived table persisted once per session: the first call builds
+    * and persists it (MEMORY_AND_DISK, so it spills rather than
+    * recomputes on eviction), every later call returns the SAME
+    * DataFrame, so repeated runs hold one cache entry and queries that
+    * share an intermediate share its build. */
   def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    entries.computeIfAbsent(
-      s"${System.identityHashCode(s.sparkContext)}|$key",
-      _ => build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    memo(s, s"cached|$key")(
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Snapshot of the current cache keys. perfbench reads it around each
-    * op to count the entries that op built (`PlanCache.builds`) and at
-    * the end of a run (`PlanCache.entries_end`). */
+  /** Snapshot of the live context's [[cached]] keys. perfbench reads it
+    * around each op to count the entries that op built
+    * (`PlanCache.builds`) and at the end of a run
+    * (`PlanCache.entries_end`). */
   def keys: Set[String] = {
     import scala.jdk.CollectionConverters._
-    entries.keySet.asScala.toSet
+    val store = live
+    if (store == null) Set.empty
+    else store.entries.keySet.asScala.toSet[String]
+      .collect { case k if k.startsWith("cached|") => k.stripPrefix("cached|") }
   }
 }

@@ -10,24 +10,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tables behind the same names; nothing else in the engine changes.
   */
 object Tables {
-  /** Resolved-relation cache (round 17): every `spark.read.parquet`
+  /** The resolved relation of `$dir/$name.parquet`, one per (session,
+    * dir, table) in [[PlanCache]] (round 17): every `spark.read.parquet`
     * call re-lists the path and re-reads a footer for schema inference
-    * — ~48 ms per call measured,
-    * and the 477-query suite makes ~1 000 such calls (~45 s of pure
-    * metadata work). A real deployment resolves tables through a
-    * catalog whose schema/listing is read once; this cache is exactly
-    * that — it holds the immutable resolved DataFrame (logical plan
-    * only, no data, no results) per (session, dir, table). Keyed by
-    * session identity like [[tsLongCache]] so a stopped session's
-    * entries are dead references, not stale state.
+    * — ~48 ms per call measured, and the 477-query suite makes ~1 000
+    * such calls (~45 s of pure metadata work). A real deployment
+    * resolves tables through a catalog whose schema/listing is read
+    * once; this entry is exactly that — the immutable resolved
+    * DataFrame (logical plan only, no data, no results).
     */
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    relationCache.computeIfAbsent(
-      s"${System.identityHashCode(spark.sparkContext)}|$dir/$name",
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+    PlanCache.memo(spark, s"relation|$dir/$name")(spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -52,20 +45,15 @@ object Tables {
     * The nanos-as-long flag is SESSION-WIDE (no reader-scoped option
     * exists); [[GraftSession]] sets it at session setup and documents the
     * contract. The set here is an idempotent safety net for
-    * driver-supplied sessions that bypassed GraftSession.
+    * driver-supplied sessions that bypassed GraftSession. True iff
+    * `$d/events.parquet` stores `ts` as nanos-as-long (the pre-round-8
+    * encoding); one footer read per (session, dir).
     */
-  private val tsLongCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** True iff `$d/events.parquet` stores `ts` as nanos-as-long (the
-    * pre-round-8 encoding). One footer read per (session, dir). */
   def eventsTsIsLong(s: SparkSession, d: String): Boolean =
-    tsLongCache.computeIfAbsent(
-      s"${System.identityHashCode(s.sparkContext)}|$d", _ => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        load(s, d, "events").schema("ts").dataType ==
-          org.apache.spark.sql.types.LongType
-      })
+    PlanCache.memo(s, s"ts_is_long|$d") {
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      load(s, d, "events").schema("ts").dataType == org.apache.spark.sql.types.LongType
+    }
 
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -91,18 +79,13 @@ object Tables {
     * extra shuffle. Row order is irrelevant at every call site (all
     * consumers aggregate), so results are unchanged.
     */
-  private val scanPartsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
-
   def documentsParallel(s: SparkSession, d: String): DataFrame = {
     val t = documents(s, d)
     // `t.rdd.getNumPartitions` instantiates the physical scan (a
     // driver-side plan→RDD conversion, ~tens of ms) — cache the answer
-    // per (session, dir) since the relation cache above makes `t`
-    // identical for every call in a session (round 18, VERDICT r17 #5)
-    val n: Int = scanPartsCache.computeIfAbsent(
-      s"${System.identityHashCode(s.sparkContext)}|$d",
-      _ => t.rdd.getNumPartitions)
+    // per (session, dir) since the relation entry makes `t` identical
+    // for every call in a session (round 18, VERDICT r17 #5)
+    val n = PlanCache.memo(s, s"scan_parts|$d")(t.rdd.getNumPartitions)
     if (n < 16) t.repartition(s.sparkContext.defaultParallelism)
     else t
   }
@@ -113,15 +96,13 @@ object Tables {
     * but paid a full `count()` scan job for it — ~0.5 s at sf0.1 and a
     * 600M-row pass at sf100. The footer's row count is the same number
     * the scan would return (parquet stores it per row group), so this
-    * is metadata, not result caching; cached per (dir, table) because
-    * the testdata directories are immutable for a run. Falls back to
-    * `count()` if the footer read fails (exotic fs, schema corruption).
+    * is metadata, not result caching; cached per (session, dir, table)
+    * because the testdata directories are immutable for a run. Falls
+    * back to `count()` if the footer read fails (exotic fs, schema
+    * corruption).
     */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   def parquetRowCount(s: SparkSession, d: String, name: String): Long =
-    rowCountCache.computeIfAbsent(s"$d/$name", _ => {
+    PlanCache.memo(s, s"row_count|$d/$name") {
       try {
         val conf = s.sparkContext.hadoopConfiguration
         val root = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
@@ -139,5 +120,5 @@ object Tables {
       } catch { case scala.util.control.NonFatal(_) =>
         load(s, d, name).count()
       }
-    })
+    }
 }

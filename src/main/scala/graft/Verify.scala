@@ -5,6 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // the RETAIN/PQ oracles name files under Scratch.root: root it beside
+    // outDir (not inside it) so every run into one outDir writes the
+    // same oracle_sql.json, before anything reads Scratch
+    sys.props.getOrElseUpdate("graft.scratch",
+      s"${Paths.get(outDir).toAbsolutePath.normalize}.scratch")
     // steal beside each correctness run makes a later timing hunt one read
     val steal = SparkEntry.stealMeter()
     val wallStart = System.nanoTime()

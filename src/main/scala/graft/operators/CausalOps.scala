@@ -576,13 +576,8 @@ object CausalOps {
     * (src, dst, n, r0, by_tau, by_topm). Top-m partner rank runs through
     * the in-house bounded-heap TopKPerGroup operator — ≤m rows shuffle
     * per element, never the P² pair table. */
-  private[operators] def screen(s: SparkSession, d: String): DataFrame = {
-    // resolve the grid's own PlanCache entry BEFORE entering the pc
-    // builder: nested computeIfAbsent on one ConcurrentHashMap is a
-    // recursive-update hazard
-    val g = daily(s, d)
-    screenFromPairs(s, graft.PlanCache.cached(s, s"causal_pc|$d")(pairCorrOf(g)))
-  }
+  private[operators] def screen(s: SparkSession, d: String): DataFrame =
+    screenFromPairs(s, PlanCache.cached(s, s"causal_pc|$d")(pairCorrOf(daily(s, d))))
 
   /** Oracle CTE chain for the screen (composes after `daily`): the
     * day-join moment-sum form — the SMALL-P formulation — which is

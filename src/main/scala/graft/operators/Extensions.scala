@@ -24,11 +24,9 @@ object Extensions {
     * production); the column list covers exactly the join keys and the
     * filter column the CBO estimates need.
     */
-  private val cboReady = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private[graft] def cboTables(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val db = s"graft_cbo_${math.abs(d.hashCode)}"
-    if (cboReady.add(s"${System.identityHashCode(s.sparkContext)}|$db")) {
+    graft.PlanCache.memo(s, s"cbo_tables|$db") {
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       val cols = Seq(
         "customer" -> "c_custkey, c_mktsegment",

@@ -152,6 +152,20 @@ object HybridOps {
       .orderBy("cluster")
   }
 
+  /** The per-label centroid CTE chain (pos → cent → centv: each
+    * label's mean vector as `centv(clabel, cvec)`), shared by the
+    * q262/q367/q474 semantic-dedup oracles and q65's nearest-centroid
+    * oracle. */
+  private[operators] val centroidSql =
+    """pos AS (
+      |  SELECT label, unnest(list_transform(embedding::DOUBLE[],
+      |    (x, i) -> {'x': x, 'i': i}), recursive := true)
+      |  FROM embeddings),
+      |cent AS (
+      |  SELECT label AS clabel, i, avg(x) AS cx FROM pos GROUP BY 1, 2),
+      |centv AS (
+      |  SELECT clabel, list(cx ORDER BY i) AS cvec FROM cent GROUP BY clabel)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Reciprocal-rank fusion (k=60) of two top-100 candidate lists:
@@ -274,14 +288,7 @@ object HybridOps {
       */
     QueryDef(
       "q262_semdedup",
-      """WITH pos AS (
-        |  SELECT label, unnest(list_transform(embedding::DOUBLE[],
-        |    (x, i) -> {'x': x, 'i': i}), recursive := true)
-        |  FROM embeddings),
-        |cent AS (
-        |  SELECT label AS clabel, i, avg(x) AS cx FROM pos GROUP BY 1, 2),
-        |centv AS (
-        |  SELECT clabel, list(cx ORDER BY i) AS cvec FROM cent GROUP BY clabel),
+      s"""WITH $centroidSql,
         |assigned AS (
         |  SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.clabel,
         |    row_number() OVER (PARTITION BY e.vec_id
@@ -359,14 +366,7 @@ object HybridOps {
       */
     QueryDef(
       "q474_semdedup_scaled",
-      s"""WITH pos AS (
-        |  SELECT label, unnest(list_transform(embedding::DOUBLE[],
-        |    (x, i) -> {'x': x, 'i': i}), recursive := true)
-        |  FROM embeddings),
-        |cent AS (
-        |  SELECT label AS clabel, i, avg(x) AS cx FROM pos GROUP BY 1, 2),
-        |centv AS (
-        |  SELECT clabel, list(cx ORDER BY i) AS cvec FROM cent GROUP BY clabel),
+      s"""WITH $centroidSql,
         |assigned AS (
         |  SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.clabel,
         |    list_cosine_similarity(e.embedding::DOUBLE[], c.cvec) AS acos,
@@ -827,14 +827,7 @@ object HybridOps {
       */
     QueryDef(
       "q367_semdedup_recall",
-      """WITH pos AS (
-        |  SELECT label, unnest(list_transform(embedding::DOUBLE[],
-        |    (x, i) -> {'x': x, 'i': i}), recursive := true)
-        |  FROM embeddings),
-        |cent AS (
-        |  SELECT label AS clabel, i, avg(x) AS cx FROM pos GROUP BY 1, 2),
-        |centv AS (
-        |  SELECT clabel, list(cx ORDER BY i) AS cvec FROM cent GROUP BY clabel),
+      s"""WITH $centroidSql,
         |assigned AS (
         |  SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.clabel,
         |    row_number() OVER (PARTITION BY e.vec_id

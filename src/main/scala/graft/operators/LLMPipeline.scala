@@ -427,14 +427,7 @@ object LLMPipeline {
       */
     QueryDef(
       "q65_centroid_knn",
-      """WITH pos AS (
-        |  SELECT label, unnest(list_transform(embedding::DOUBLE[],
-        |    (x, i) -> {'x': x, 'i': i}), recursive := true)
-        |  FROM embeddings),
-        |cent AS (
-        |  SELECT label AS clabel, i, avg(x) AS cx FROM pos GROUP BY 1, 2),
-        |centv AS (
-        |  SELECT clabel, list(cx ORDER BY i) AS cvec FROM cent GROUP BY clabel),
+      s"""WITH ${HybridOps.centroidSql},
         |assigned AS (
         |  SELECT e.vec_id, e.label, c.clabel,
         |    row_number() OVER (PARTITION BY e.vec_id

@@ -90,11 +90,8 @@ object RetainOps {
   private final case class Base(rdd: RDD[(Long, Array[Array[Double]], Array[Double])],
                                 n: Double, nPos: Array[Double])
 
-  private val baseCache = new java.util.concurrent.ConcurrentHashMap[String, Base]
-
-  private def base(s: SparkSession, d: String): Base = {
-    val key = s"${s.sparkContext.hashCode()}|$d"
-    baseCache.computeIfAbsent(key, _ => {
+  private def base(s: SparkSession, d: String): Base =
+    graft.PlanCache.memo(s, s"retain_base|$d") {
       import s.implicits._
       val rdd = assembleSeries(s, d)
         .join(labels(s, d), Seq("user_id"), "left")
@@ -115,8 +112,7 @@ object RetainOps {
       // pass counts the rows, then the positives per task
       val counts = rdd.map(r => 1.0 +: r._3).fold(new Array[Double](1 + numTasks))(addInto)
       Base(rdd, counts(0), counts.drop(1))
-    })
-  }
+    }
 
   /** [[scored]] under the default eval weights, persisted once per
     * (session, sf-dir) via PlanCache — q78 and q254 share the scoring
@@ -502,15 +498,18 @@ object RetainOps {
 
   /** Weight checkpoint shared by the q76/q77/q78 oracles: the flat
     * (idx,value) parquet the generated DuckDB SQL reads back, written
-    * at most once per JVM (all three queries call this; Verify may run
-    * any subset). Path is Scratch-rooted so the driver's DuckDB pass —
-    * which runs after this JVM exits — reads exactly what it wrote.
+    * at most once per session (all three queries call this; Verify may
+    * run any subset). Path is Scratch-rooted so the driver's DuckDB
+    * pass — which runs after this JVM exits — reads exactly what it
+    * wrote.
     */
-  private val ckptWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  def oracleCkptDir(s: SparkSession): String = {
-    val dir = s"${Scratch.root}/graft_retain_w"
-    if (ckptWritten.add(s"${s.sparkContext.hashCode()}|$dir"))
-      graft.functions.RetainCheckpoint.save(s, Retain.defaultWeights, dir)
+  def oracleCkptDir(s: SparkSession): String =
+    checkpointOnce(s, s"${Scratch.root}/graft_retain_w")(
+      graft.functions.RetainCheckpoint.save(s, Retain.defaultWeights, _))
+
+  /** `dir` after `save(dir)` has run once in this session. */
+  private def checkpointOnce(s: SparkSession, dir: String)(save: String => Unit): String = {
+    graft.PlanCache.memo(s, s"retain_ckpt|$dir")(save(dir))
     dir
   }
   private def ckptGlob: String = s"${Scratch.root}/graft_retain_w/*.parquet"
@@ -599,9 +598,8 @@ object RetainOps {
       */
     QueryDef("q203_retain_score_gru",
         RetainOracleSql.q203(s"${Scratch.root}/graft_retain_gru_w/*.parquet")) { (s, d) =>
-      val dir = s"${Scratch.root}/graft_retain_gru_w"
-      if (ckptWritten.add(s"${s.sparkContext.hashCode()}|$dir"))
-        graft.functions.RetainCheckpoint.saveGru(s, Retain.defaultGruWeights, dir)
+      checkpointOnce(s, s"${Scratch.root}/graft_retain_gru_w")(
+        graft.functions.RetainCheckpoint.saveGru(s, Retain.defaultGruWeights, _))
       scored(s, d, Retain.defaultGruWeights)
         .select(col("user_id"),
           round(col("p0"), 6).as("p0"),

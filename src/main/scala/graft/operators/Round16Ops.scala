@@ -44,6 +44,17 @@ object Round16Ops {
   private[operators] def neWStage(carry: Seq[String]): Array[String] = (carry ++ Seq(
     "dt1/dt AS c0", "dt2/dt AS c1", "dt3/dt AS c2")).toArray
 
+  /** The count-GLM cells (el, u = day/29, cnt) — one PlanCache entry per
+    * session, shared by q385's Poisson fit and q424's negative binomial.
+    */
+  private[operators] def countCells(s: SparkSession, d: String): DataFrame =
+    PlanCache.cached(s, s"q385_cd|$d") {
+      Tables.events(s, d).groupBy(col("event_type").as("el"),
+          (datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))
+            .cast("double") / lit(29.0)).as("u"))
+        .agg(count(lit(1)).cast("double").as("cnt"))
+    }
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Cox proportional hazards on the q277 signup→purchase durations
@@ -122,26 +133,7 @@ object Round16Ops {
            |FROM nn""".stripMargin
       }) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, d).select(col("user_id"), col("event_type"),
-        datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).as("di"))
-      val dur = PlanCache.cached(s, s"q384_dur|$d") {
-        val h = ev.agg(max(col("di")).as("hh"))
-        val st = ev.where(col("event_type") === "signup")
-          .groupBy("user_id").agg(min(col("di")).as("t0"))
-        val p1 = ev.where(col("event_type") === "purchase")
-          .join(st, "user_id").where(col("di") >= col("t0"))
-          .groupBy(col("user_id").as("pu")).agg(min(col("di")).as("t1"))
-        val xc = ev.where(col("event_type") === "click")
-          .groupBy(col("user_id").as("xu")).agg(count(lit(1)).as("nc"))
-        st.join(p1, col("pu") === col("user_id"), "left")
-          .join(xc, col("xu") === col("user_id"), "left")
-          .crossJoin(h)
-          .select(col("user_id"),
-            when(col("t1").isNull, col("hh") - col("t0"))
-              .otherwise(col("t1") - col("t0")).as("t"),
-            when(col("t1").isNull, 0).otherwise(1).as("ev"),
-            coalesce(col("nc"), lit(0L)).cast("double").as("x"))
-      }
+      val dur = Round19Ops.coxDur(s, d)
       // suffix risk windows over the bounded (≤ horizon+1 row) time grid
       val wSuf = Window.orderBy("t").rowsBetween(Window.currentRow, Window.unboundedFollowing)
       def dsumW(c: Column): Column =
@@ -235,12 +227,7 @@ object Round16Ops {
            |  round(CAST(2 AS DOUBLE) * hdev, 6) AS deviance
            |FROM p2 JOIN dv ON dv.el = p2.el ORDER BY el""".stripMargin
       }) { (s, d) =>
-      val cd = PlanCache.cached(s, s"q385_cd|$d") {
-        Tables.events(s, d).groupBy(col("event_type").as("el"),
-            (datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))
-              .cast("double") / lit(29.0)).as("u"))
-          .agg(count(lit(1)).cast("double").as("cnt"))
-      }
+      val cd = countCells(s, d)
       val p0 = cd.groupBy("el").agg(
         log(dsum(col("cnt")) / count(lit(1))).as("a")).withColumn("b", lit(0.0))
       def step(prev: DataFrame): DataFrame = {

@@ -29,11 +29,10 @@ object Round19Ops {
   private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
   private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
 
-  /** The q384 Cox subject table (same PlanCache key — built once per
-    * session whichever of q384/q402 runs first; the q364_edges sharing
-    * precedent).
+  /** The q384 Cox subject table (user_id, t, ev, x), one PlanCache
+    * entry per session shared by q384 and q402.
     */
-  private def coxDur(s: SparkSession, d: String): DataFrame =
+  private[operators] def coxDur(s: SparkSession, d: String): DataFrame =
     PlanCache.cached(s, s"q384_dur|$d") {
       val ev = Tables.events(s, d).select(col("user_id"), col("event_type"),
         datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).as("di"))

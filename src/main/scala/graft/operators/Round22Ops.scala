@@ -383,12 +383,7 @@ object Round22Ops {
            |  CASE WHEN p2a.alpha > 0 THEN 1 ELSE 0 END AS overdispersed
            |FROM p3 JOIN p2a ON p2a.el = p3.el ORDER BY el""".stripMargin
       }) { (s, d) =>
-      val cd = PlanCache.cached(s, s"q385_cd|$d") {
-        Tables.events(s, d).groupBy(col("event_type").as("el"),
-            (datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))
-              .cast("double") / lit(29.0)).as("u"))
-          .agg(count(lit(1)).cast("double").as("cnt"))
-      }
+      val cd = Round16Ops.countCells(s, d)
       val p0 = cd.groupBy("el").agg(
         log(dsum(col("cnt")) / count(lit(1))).as("a")).withColumn("b", lit(0.0))
       def step(prev: DataFrame, wOf: Column => Column,

@@ -109,6 +109,13 @@ object Round27Ops {
       .orderBy("src", "dst")
   }
 
+  /** q452's batch edge table over the session's daily grid, materialized
+    * once per (session, sf-dir) and shared with q468's hub collapse; the
+    * streaming q467 path derives from per-batch grids and never reads it.
+    */
+  private[operators] def consensusEdges(s: SparkSession, d: String): DataFrame =
+    graft.PlanCache.cached(s, s"q452_edges|$d")(consensusFromGrid(s, CausalOps.daily(s, d)))
+
   /** The matching oracle text over the shared `daily` CTE. */
   private[graft] val consensusSql: String =
     s"""WITH ${CausalOps.dailySql},
@@ -198,13 +205,8 @@ object Round27Ops {
       * replays exactly this readout inside the streaming harness.
       */
     QueryDef("q452_causal_consensus", consensusSql) { (s, d) =>
-      val g = CausalOps.daily(s, d)
-      CausalOps.guardFullEnum(g, "q452_causal_consensus")
-      // the batch edge table is materialized once per (session, sf-dir)
-      // and shared with q468's hub collapse; the streaming q467 path
-      // derives from per-batch grids and must never hit this cache
-      graft.PlanCache.cached(s, s"q452_edges|$d")(consensusFromGrid(s, g))
-        .orderBy("src", "dst")
+      CausalOps.guardFullEnum(CausalOps.daily(s, d), "q452_causal_consensus")
+      consensusEdges(s, d).orderBy("src", "dst")
     },
 
     /** Taylor's law per element: within each day, the mean and variance

@@ -116,13 +116,10 @@ object Round30Ops {
            |JOIN st ON st.src = outs.el AND st.rn = 1
            |ORDER BY el""".stripMargin
       }) { (s, d) =>
-      val g = CausalOps.daily(s, d)
-      CausalOps.guardFullEnum(g, "q468_causal_hubs")
+      CausalOps.guardFullEnum(CausalOps.daily(s, d), "q468_causal_hubs")
       // shares q452's materialized edge table (one consensus derivation
       // per session + sf-dir instead of two)
-      val edge = graft.PlanCache.cached(s, s"q452_edges|$d") {
-        Round27Ops.consensusFromGrid(s, g)
-      }
+      val edge = Round27Ops.consensusEdges(s, d)
       // lexicographic (votes, |z|, dst) tiebreak — a struct key gives a
       // total order, unlike the additive votes*1000+|z| composite (which
       // both inverts at |z|>1000 and leaves exact ties engine-arbitrary)

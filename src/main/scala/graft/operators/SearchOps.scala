@@ -86,15 +86,12 @@ object SearchOps {
     * RetainOracleSql weight-checkpoint pattern; q152 is where the Lloyd
     * derivation itself is oracle-verified.
     */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], Array[Array[Array[Double]]])]()
-
   private[graft] val pqCellsGlob = s"${graft.Scratch.root}/graft_pq_cells/*.parquet"
   private[graft] val pqRescbGlob = s"${graft.Scratch.root}/graft_pq_rescb/*.parquet"
 
   private[graft] def pqCodebooks(s: SparkSession, d: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    pqCache.computeIfAbsent(s"${System.identityHashCode(s.sparkContext)}|$d", _ => {
+    graft.PlanCache.memo(s, s"pq_codebooks|$d") {
       val rows = Tables.embeddings(s, d)
         .where(col("vec_id") < 64)
         .select(col("vec_id") +: (1 to 64).map(i =>
@@ -134,7 +131,7 @@ object SearchOps {
         .write.mode("overwrite")
         .parquet(s"${graft.Scratch.root}/graft_pq_rescb")
       (cells, rcb)
-    })
+    }
 
   /** ONE SQL text run verbatim by both engines (like q144): the
     * correlated-scalar-subquery idiom. Spark decorrelates the per-row

@@ -75,6 +75,31 @@ class HygieneSpec extends AnyFunSuite {
     }
   }
 
+  test("every literal PlanCache.cached key prefix in src/main has exactly one call site") {
+    // a shared entry has one builder: with two pasted builders under one
+    // key, whichever query runs first decides what the other one reads
+    val call = """PlanCache\.cached\(\s*\w+\s*,\s*s?"([^"$|]+)""".r
+    val sites = codeLines(mainSources).flatMap { case (f, n, l) =>
+      call.findAllMatchIn(l).map(m => m.group(1) -> s"${f.getPath}:$n")
+    }
+    assert(sites.nonEmpty, "no PlanCache.cached call site found")
+    val pasted = sites.groupBy(_._1).collect { case (k, at) if at.size > 1 =>
+      s"$k: ${at.map(_._2).mkString(", ")}" }
+    assert(pasted.isEmpty,
+      s"PlanCache key prefix built at more than one call site:\n  ${pasted.mkString("\n  ")}")
+  }
+
+  test("no cache key in src/main is built from a context's hash code") {
+    // an identity hash is not a unique key; PlanCache entries belong to
+    // the live SparkContext instead
+    val words = Seq("identityHashCode", "sparkContext.hashCode")
+    val offenders = codeLines(mainSources).collect {
+      case (f, n, l) if words.exists(l.contains) => s"${f.getPath}:$n: ${l.trim}"
+    }
+    assert(offenders.isEmpty,
+      s"hash-code cache key in src/main:\n  ${offenders.mkString("\n  ")}")
+  }
+
   test("writeStream appears in src/main only inside the two stream runners and q91") {
     // Streaming.drain and Streaming.refresh run every finite stream;
     // q91's durable parquet file sink is the one exception
