@@ -29,15 +29,18 @@ object QueryDef {
   * files (q205/q207/q223). Pid-suffixed so two concurrent verify/bench
   * runs on one box never clobber each other's data, yet STABLE within a
   * JVM so the oracle SQL strings (built at class-init) and the query
-  * functions (run later) agree on the path — the driver's DuckDB reads
-  * the files this JVM wrote, after it exits. Override with
-  * -Dgraft.scratch for a fixed location; [[Verify]] sets it to
-  * `<outDir>.scratch`, so its oracle SQL names no pid.
+  * functions (run later) agree on the path. A pid root belongs to this
+  * JVM alone and is deleted when it exits. Override with -Dgraft.scratch
+  * for a fixed location that outlives the JVM; [[Verify]] sets it to
+  * `<outDir>.scratch`, so its oracle SQL names no pid and the DuckDB
+  * oracles can read the files after the JVM exits.
   */
 object Scratch {
   val root: String = sys.props.get("graft.scratch").getOrElse {
     val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$tmp/graft_scratch_${ProcessHandle.current().pid()}"
+    val dir = s"$tmp/graft_scratch_${ProcessHandle.current().pid()}"
+    sys.addShutdownHook(graft.streaming.Streaming.deleteTree(java.nio.file.Paths.get(dir)))
+    dir
   }
 }
 

@@ -143,28 +143,39 @@ object CausalOps {
   /** q248's market-adjusted partial correlation from any (el, di, v)
     * grid — shared by the batch query and q257's streaming refresh.
     */
+  /** Per unordered pair (src < dst): the day count n and the ten
+    * decimal moment sums of x, y and the cross-element market mean m
+    * over any (el, di, v) grid — q248 and q265. */
+  private def marketMoments(g0: DataFrame): DataFrame = {
+    val mkt = g0.groupBy(col("di").as("dik"))
+      .agg((dsum(col("v")) / count(lit(1))).as("mv"))
+    val x = g0.select(col("el").as("src"), col("di"), col("v").as("xv"))
+    val y = g0.select(col("el").as("dst"), col("di").as("diy"), col("v").as("yv"))
+    val g = x.join(y, col("src") < col("dst") && col("diy") === col("di"))
+      .join(mkt, col("dik") === col("di"))
+    g.groupBy("src", "dst").agg(count(lit(1)).as("n"),
+      dsum(col("xv")).as("sx"), dsum(col("yv")).as("sy"), dsum(col("mv")).as("sm"),
+      dsum(col("xv") * col("xv")).as("sxx"),
+      dsum(col("yv") * col("yv")).as("syy"),
+      dsum(col("mv") * col("mv")).as("smm"),
+      dsum(col("xv") * col("yv")).as("sxy"),
+      dsum(col("xv") * col("mv")).as("sxm"),
+      dsum(col("yv") * col("mv")).as("sym"))
+  }
+
+  /** The raw correlations rxy, rxm and rym of [[marketMoments]] rows. */
+  private def marketCorrs(m: DataFrame): DataFrame = {
+    def corr2(sab: Column, sa: Column, sb: Column, saa: Column, sbb: Column) =
+      (col("n") * sab - sa * sb) /
+        nullif(sqrt((col("n") * saa - sa * sa) * (col("n") * sbb - sb * sb)), lit(0.0))
+    m.select(col("src"), col("dst"), col("n"),
+      corr2(col("sxy"), col("sx"), col("sy"), col("sxx"), col("syy")).as("rxy"),
+      corr2(col("sxm"), col("sx"), col("sm"), col("sxx"), col("smm")).as("rxm"),
+      corr2(col("sym"), col("sy"), col("sm"), col("syy"), col("smm")).as("rym"))
+  }
+
   private[graft] def partialCorrFromGrid(g0: DataFrame): DataFrame = {
-      val mkt = g0.groupBy(col("di").as("dik"))
-        .agg((dsum(col("v")) / count(lit(1))).as("mv"))
-      val x = g0.select(col("el").as("src"), col("di"), col("v").as("xv"))
-      val y = g0.select(col("el").as("dst"), col("di").as("diy"), col("v").as("yv"))
-      val g = x.join(y, col("src") < col("dst") && col("diy") === col("di"))
-        .join(mkt, col("dik") === col("di"))
-      val m = g.groupBy("src", "dst").agg(count(lit(1)).as("n"),
-        dsum(col("xv")).as("sx"), dsum(col("yv")).as("sy"), dsum(col("mv")).as("sm"),
-        dsum(col("xv") * col("xv")).as("sxx"),
-        dsum(col("yv") * col("yv")).as("syy"),
-        dsum(col("mv") * col("mv")).as("smm"),
-        dsum(col("xv") * col("yv")).as("sxy"),
-        dsum(col("xv") * col("mv")).as("sxm"),
-        dsum(col("yv") * col("mv")).as("sym"))
-      def corr2(sab: Column, sa: Column, sb: Column, saa: Column, sbb: Column) =
-        (col("n") * sab - sa * sb) /
-          nullif(sqrt((col("n") * saa - sa * sa) * (col("n") * sbb - sb * sb)), lit(0.0))
-      val r = m.select(col("src"), col("dst"), col("n"),
-        corr2(col("sxy"), col("sx"), col("sy"), col("sxx"), col("syy")).as("rxy"),
-        corr2(col("sxm"), col("sx"), col("sm"), col("sxx"), col("smm")).as("rxm"),
-        corr2(col("sym"), col("sy"), col("sm"), col("syy"), col("smm")).as("rym"))
+      val r = marketCorrs(marketMoments(g0))
       val partial = (col("rxy") - col("rxm") * col("rym")) /
         nullif(sqrt((lit(1.0) - col("rxm") * col("rxm")) *
           (lit(1.0) - col("rym") * col("rym"))), lit(0.0))
@@ -255,6 +266,16 @@ object CausalOps {
           r6(abs(col("cusum"))).as("cusum_max"),
           r6(col("mean_shift")).as("mean_shift"))
         .orderBy("el")
+  }
+
+  /** Each grid row with its centered 7-row moving-average `trend`
+    * (exact-decimal window sum): q264, q268. */
+  private def trend7(g: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("el")).orderBy(col("di")).rowsBetween(-3, 3)
+    g.select(col("el"), col("di"), col("v"),
+      (sum(col("v").cast("decimal(38,12)")).over(w).cast("double") /
+        count(lit(1)).over(w)).as("trend"))
   }
 
   /** Quartile-binned grid — q246 (full) and q252 (pruned) share the
@@ -586,11 +607,7 @@ object CausalOps {
   private[operators] val screenSql =
     s"""pr AS (
       |  SELECT x.el AS src, y.el AS dst, count(*) AS n,
-      |    CAST(sum(CAST(x.v AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-      |    CAST(sum(CAST(y.v AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-      |    CAST(sum(CAST(x.v * y.v AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-      |    CAST(sum(CAST(x.v * x.v AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-      |    CAST(sum(CAST(y.v * y.v AS DECIMAL(38,12))) AS DOUBLE) AS syy
+      |${pairMomentsSql("x", "y")}
       |  FROM daily x JOIN daily y ON x.el < y.el AND x.di = y.di
       |  GROUP BY 1, 2),
       |pc AS (
@@ -613,6 +630,155 @@ object CausalOps {
       |  JOIN rk kb ON kb.el = c.dst AND kb.partner = c.src
       |  WHERE abs(c.r0) >= $ScreenTau OR ka.rnk <= $ScreenTopM OR kb.rnk <= $ScreenTopM)""".stripMargin
 
+  /** The five decimal moment sums of a day-aligned value pair, as
+    * SELECT-list lines; `x` and `y` are the aliases of the two sides. */
+  private[operators] def pairMomentsSql(x: String, y: String): String =
+    s"""    CAST(sum(CAST($x.v AS DECIMAL(38,12))) AS DOUBLE) AS sx,
+      |    CAST(sum(CAST($y.v AS DECIMAL(38,12))) AS DOUBLE) AS sy,
+      |    CAST(sum(CAST($x.v * $y.v AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
+      |    CAST(sum(CAST($x.v * $x.v AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
+      |    CAST(sum(CAST($y.v * $y.v AS DECIMAL(38,12))) AS DOUBLE) AS syy""".stripMargin
+
+  /** Oracle of [[leadLagFromGrid]]'s lag-0..3 pair moments (`m`), shared
+    * by q229 and q259. */
+  private[operators] val leadLagMomentsSql =
+    s"""m AS (
+      |  SELECT a.el AS src, b.el AS dst, l.lag, count(*) AS n,
+      |${pairMomentsSql("a", "b")}
+      |  FROM daily a
+      |  CROSS JOIN (VALUES (0), (1), (2), (3)) AS l(lag)
+      |  JOIN daily b ON b.el <> a.el AND b.di = a.di + l.lag
+      |  GROUP BY 1, 2, 3)""".stripMargin
+
+  /** Per-element count and decimal value/square sums (`st`): q233, q260. */
+  private[operators] val elMomentsSql =
+    """st AS (
+      |  SELECT el, count(*) AS n,
+      |    CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) AS sv,
+      |    CAST(sum(CAST(v*v AS DECIMAL(38,12))) AS DOUBLE) AS svv
+      |  FROM daily GROUP BY 1)""".stripMargin
+
+  /** Oracle of [[quartileBins]] (`b`): q246, q252. */
+  private[operators] val quartileBinsSql =
+    """b AS (
+      |  SELECT el, di, ntile(4) OVER (PARTITION BY el ORDER BY v, di) AS bin
+      |  FROM daily)""".stripMargin
+
+  /** Oracle of [[miReadout]] over a `cells` CTE, final SELECT included:
+    * q246, q252. */
+  private[operators] val miReadoutSql =
+    """w AS (
+      |  SELECT src, dst, n,
+      |    sum(n) OVER (PARTITION BY src, dst, ba) AS cx,
+      |    sum(n) OVER (PARTITION BY src, dst, bb) AS cy,
+      |    sum(n) OVER (PARTITION BY src, dst) AS nt
+      |  FROM cells),
+      |agg AS (
+      |  SELECT src, dst, CAST(max(nt) AS BIGINT) AS n_days,
+      |    CAST(count(*) AS BIGINT) AS n_cells,
+      |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
+      |      ln(CAST(n*nt AS DOUBLE)/CAST(cx*cy AS DOUBLE))
+      |      AS DECIMAL(38,12))) AS DOUBLE) AS mi,
+      |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
+      |      ln(CAST(nt AS DOUBLE)/CAST(cx AS DOUBLE))
+      |      AS DECIMAL(38,12))) AS DOUBLE) AS hx,
+      |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
+      |      ln(CAST(nt AS DOUBLE)/CAST(cy AS DOUBLE))
+      |      AS DECIMAL(38,12))) AS DOUBLE) AS hy
+      |  FROM w GROUP BY 1, 2)
+      |SELECT src, dst, n_days, n_cells, round(mi, 6) AS mi,
+      |  round(mi / nullif(least(hx, hy), 0), 6) AS nmi
+      |FROM agg ORDER BY src, dst""".stripMargin
+
+  /** Oracle of [[meanBits]] (`am`, `b`): q247, q253. */
+  private[operators] val meanBitsSql =
+    """am AS (
+      |  SELECT el, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS mu
+      |  FROM daily GROUP BY 1),
+      |b AS (
+      |  SELECT d.el, d.di, CASE WHEN d.v > a.mu THEN 1 ELSE 0 END AS bit
+      |  FROM daily d JOIN am a ON d.el = a.el)""".stripMargin
+
+  /** Oracle of [[teReadout]] over a `tri` CTE, final SELECT included:
+    * q247, q253. */
+  private[operators] val teReadoutSql =
+    """w AS (
+      |  SELECT src, dst, n,
+      |    sum(n) OVER (PARTITION BY src, dst, b0) AS ny0,
+      |    sum(n) OVER (PARTITION BY src, dst, b0, bx) AS ny0x,
+      |    sum(n) OVER (PARTITION BY src, dst, b1, b0) AS ny1y0,
+      |    sum(n) OVER (PARTITION BY src, dst) AS nt
+      |  FROM tri)
+      |SELECT src, dst, CAST(max(nt) AS BIGINT) AS n_trans,
+      |  round(CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
+      |    ln(CAST(n*ny0 AS DOUBLE)/CAST(ny0x*ny1y0 AS DOUBLE))
+      |    AS DECIMAL(38,12))) AS DOUBLE), 6) AS te
+      |FROM w GROUP BY 1, 2 ORDER BY src, dst""".stripMargin
+
+  /** Oracle of [[marketMoments]] and [[marketCorrs]] (`mkt`, `g`, `m`,
+    * `r`): q248 and q265; `pairs` is what `r` reads (`m`, or a filter
+    * of it). */
+  private[operators] def marketCorrSql(pairs: String): String =
+    s"""mkt AS (
+      |  SELECT di, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS mv
+      |  FROM daily GROUP BY 1),
+      |g AS (
+      |  SELECT x.el AS src, y.el AS dst, x.v AS xv, y.v AS yv, k.mv
+      |  FROM daily x
+      |  JOIN daily y ON x.el < y.el AND y.di = x.di
+      |  JOIN mkt k ON k.di = x.di),
+      |m AS (
+      |  SELECT src, dst, count(*) AS n,
+      |    CAST(sum(CAST(xv AS DECIMAL(38,12))) AS DOUBLE) AS sx,
+      |    CAST(sum(CAST(yv AS DECIMAL(38,12))) AS DOUBLE) AS sy,
+      |    CAST(sum(CAST(mv AS DECIMAL(38,12))) AS DOUBLE) AS sm,
+      |    CAST(sum(CAST(xv*xv AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
+      |    CAST(sum(CAST(yv*yv AS DECIMAL(38,12))) AS DOUBLE) AS syy,
+      |    CAST(sum(CAST(mv*mv AS DECIMAL(38,12))) AS DOUBLE) AS smm,
+      |    CAST(sum(CAST(xv*yv AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
+      |    CAST(sum(CAST(xv*mv AS DECIMAL(38,12))) AS DOUBLE) AS sxm,
+      |    CAST(sum(CAST(yv*mv AS DECIMAL(38,12))) AS DOUBLE) AS sym
+      |  FROM g GROUP BY 1, 2),
+      |r AS (
+      |  SELECT src, dst, n,
+      |    (n*sxy - sx*sy) / nullif(sqrt((n*sxx - sx*sx)*(n*syy - sy*sy)), 0) AS rxy,
+      |    (n*sxm - sx*sm) / nullif(sqrt((n*sxx - sx*sx)*(n*smm - sm*sm)), 0) AS rxm,
+      |    (n*sym - sy*sm) / nullif(sqrt((n*syy - sy*sy)*(n*smm - sm*sm)), 0) AS rym
+      |  FROM $pairs)""".stripMargin
+
+  /** The two-regressor OLS fit of the Granger moment table `<p>m`
+    * (`<p>c`, `<p>f`): q230, q445 and q452's prefixed chains. */
+  private[operators] def grangerFitCtes(p: String): String =
+    s"""${p}c AS (
+      |  SELECT src, dst, n,
+      |    syy - sy*sy/n AS cyy, s11 - s1*s1/n AS c11, s22 - s2*s2/n AS c22,
+      |    s12 - s1*s2/n AS c12, s1y - s1*sy/n AS c1y, s2y - s2*sy/n AS c2y
+      |  FROM ${p}m),
+      |${p}f AS (
+      |  SELECT src, dst, n, cyy, c1y, c2y,
+      |    cyy - c1y*c1y/nullif(c11, 0) AS sse_r,
+      |    (c1y*c22 - c2y*c12)/nullif(c11*c22 - c12*c12, 0) AS b1,
+      |    (c2y*c11 - c1y*c12)/nullif(c11*c22 - c12*c12, 0) AS b2
+      |  FROM ${p}c)""".stripMargin
+
+  /** [[grangerFitCtes]] with the q230 readout SELECT: q230 and q445. */
+  private[operators] val grangerFitSql =
+    s"""${grangerFitCtes("")}
+      |SELECT src, dst, CAST(n AS BIGINT) AS n_days,
+      |  round(1 - sse_r/nullif(cyy, 0), 6) AS ar1_r2,
+      |  round((sse_r - (cyy - b1*c1y - b2*c2y))/nullif(sse_r, 0), 6) AS granger_gain
+      |FROM f ORDER BY src, dst""".stripMargin
+
+  /** The centered 7-row moving-average trend CTE (`tr`): q264, q268. */
+  private[operators] val trendSql =
+    """tr AS (
+      |  SELECT el, di, v,
+      |    CAST(sum(CAST(v AS DECIMAL(38,12))) OVER w AS DOUBLE)
+      |      / count(*) OVER w AS trend
+      |  FROM daily
+      |  WINDOW w AS (PARTITION BY el ORDER BY di
+      |               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING))""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Pairwise lead-lag cross-correlogram: corr(src day t, dst day
@@ -625,17 +791,7 @@ object CausalOps {
     QueryDef(
       "q229_lead_lag_corr",
       s"""WITH $dailySql,
-        |m AS (
-        |  SELECT a.el AS src, b.el AS dst, l.lag, count(*) AS n,
-        |    CAST(sum(CAST(a.v AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(b.v AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(a.v * b.v AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(a.v * a.v AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(b.v * b.v AS DECIMAL(38,12))) AS DOUBLE) AS syy
-        |  FROM daily a
-        |  CROSS JOIN (VALUES (0), (1), (2), (3)) AS l(lag)
-        |  JOIN daily b ON b.el <> a.el AND b.di = a.di + l.lag
-        |  GROUP BY 1, 2, 3)
+        |$leadLagMomentsSql
         |SELECT src, dst, lag, CAST(n AS BIGINT) AS n_days,
         |  round((n*sxy - sx*sy)
         |    / nullif(sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)), 0), 6) AS xcorr
@@ -676,21 +832,7 @@ object CausalOps {
         |    CAST(sum(CAST(yl1*yt AS DECIMAL(38,12))) AS DOUBLE) AS s1y,
         |    CAST(sum(CAST(xl1*yt AS DECIMAL(38,12))) AS DOUBLE) AS s2y
         |  FROM g GROUP BY 1, 2),
-        |c AS (
-        |  SELECT src, dst, n,
-        |    syy - sy*sy/n AS cyy, s11 - s1*s1/n AS c11, s22 - s2*s2/n AS c22,
-        |    s12 - s1*s2/n AS c12, s1y - s1*sy/n AS c1y, s2y - s2*sy/n AS c2y
-        |  FROM m),
-        |f AS (
-        |  SELECT src, dst, n, cyy, c1y, c2y,
-        |    cyy - c1y*c1y/nullif(c11, 0) AS sse_r,
-        |    (c1y*c22 - c2y*c12)/nullif(c11*c22 - c12*c12, 0) AS b1,
-        |    (c2y*c11 - c1y*c12)/nullif(c11*c22 - c12*c12, 0) AS b2
-        |  FROM c)
-        |SELECT src, dst, CAST(n AS BIGINT) AS n_days,
-        |  round(1 - sse_r/nullif(cyy, 0), 6) AS ar1_r2,
-        |  round((sse_r - (cyy - b1*c1y - b2*c2y))/nullif(sse_r, 0), 6) AS granger_gain
-        |FROM f ORDER BY src, dst""".stripMargin) { (s, d) =>
+        |$grangerFitSql""".stripMargin) { (s, d) =>
       val g0 = daily(s, d)
       guardFullEnum(g0, "q230_granger_lite")
       grangerFromGrid(g0)
@@ -716,11 +858,7 @@ object CausalOps {
     QueryDef(
       "q233_cusum_changepoint",
       s"""WITH $dailySql,
-        |st AS (
-        |  SELECT el, count(*) AS n,
-        |    CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) AS sv,
-        |    CAST(sum(CAST(v*v AS DECIMAL(38,12))) AS DOUBLE) AS svv
-        |  FROM daily GROUP BY 1),
+        |$elMomentsSql,
         |z AS (
         |  SELECT d.el, d.di,
         |    sum((d.v - s.sv/s.n) / sqrt(s.svv/s.n - (s.sv/s.n)*(s.sv/s.n)))
@@ -765,36 +903,13 @@ object CausalOps {
     QueryDef(
       "q246_mutual_information",
       s"""WITH $dailySql,
-        |b AS (
-        |  SELECT el, di, ntile(4) OVER (PARTITION BY el ORDER BY v, di) AS bin
-        |  FROM daily),
+        |$quartileBinsSql,
         |cells AS (
         |  SELECT x.el AS src, y.el AS dst, x.bin AS ba, y.bin AS bb,
         |    count(*) AS n
         |  FROM b x JOIN b y ON x.el < y.el AND x.di = y.di
         |  GROUP BY 1, 2, 3, 4),
-        |w AS (
-        |  SELECT src, dst, n,
-        |    sum(n) OVER (PARTITION BY src, dst, ba) AS cx,
-        |    sum(n) OVER (PARTITION BY src, dst, bb) AS cy,
-        |    sum(n) OVER (PARTITION BY src, dst) AS nt
-        |  FROM cells),
-        |agg AS (
-        |  SELECT src, dst, CAST(max(nt) AS BIGINT) AS n_days,
-        |    CAST(count(*) AS BIGINT) AS n_cells,
-        |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |      ln(CAST(n*nt AS DOUBLE)/CAST(cx*cy AS DOUBLE))
-        |      AS DECIMAL(38,12))) AS DOUBLE) AS mi,
-        |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |      ln(CAST(nt AS DOUBLE)/CAST(cx AS DOUBLE))
-        |      AS DECIMAL(38,12))) AS DOUBLE) AS hx,
-        |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |      ln(CAST(nt AS DOUBLE)/CAST(cy AS DOUBLE))
-        |      AS DECIMAL(38,12))) AS DOUBLE) AS hy
-        |  FROM w GROUP BY 1, 2)
-        |SELECT src, dst, n_days, n_cells, round(mi, 6) AS mi,
-        |  round(mi / nullif(least(hx, hy), 0), 6) AS nmi
-        |FROM agg ORDER BY src, dst""".stripMargin) { (s, d) =>
+        |$miReadoutSql""".stripMargin) { (s, d) =>
       guardFullEnum(daily(s, d), "q246_mutual_information")
       val b = quartileBins(daily(s, d))
       val x = b.select(col("el").as("src"), col("di"), col("bin").as("ba"))
@@ -821,12 +936,7 @@ object CausalOps {
     QueryDef(
       "q247_transfer_entropy",
       s"""WITH $dailySql,
-        |am AS (
-        |  SELECT el, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS mu
-        |  FROM daily GROUP BY 1),
-        |b AS (
-        |  SELECT d.el, d.di, CASE WHEN d.v > a.mu THEN 1 ELSE 0 END AS bit
-        |  FROM daily d JOIN am a ON d.el = a.el),
+        |$meanBitsSql,
         |tri AS (
         |  SELECT x.el AS src, y1.el AS dst,
         |    y1.bit AS b1, y0.bit AS b0, x.bit AS bx, count(*) AS n
@@ -834,18 +944,7 @@ object CausalOps {
         |  JOIN b y0 ON y0.el = y1.el AND y0.di = y1.di - 1
         |  JOIN b x ON x.el <> y1.el AND x.di = y1.di - 1
         |  GROUP BY 1, 2, 3, 4, 5),
-        |w AS (
-        |  SELECT src, dst, n,
-        |    sum(n) OVER (PARTITION BY src, dst, b0) AS ny0,
-        |    sum(n) OVER (PARTITION BY src, dst, b0, bx) AS ny0x,
-        |    sum(n) OVER (PARTITION BY src, dst, b1, b0) AS ny1y0,
-        |    sum(n) OVER (PARTITION BY src, dst) AS nt
-        |  FROM tri)
-        |SELECT src, dst, CAST(max(nt) AS BIGINT) AS n_trans,
-        |  round(CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |    ln(CAST(n*ny0 AS DOUBLE)/CAST(ny0x*ny1y0 AS DOUBLE))
-        |    AS DECIMAL(38,12))) AS DOUBLE), 6) AS te
-        |FROM w GROUP BY 1, 2 ORDER BY src, dst""".stripMargin) { (s, d) =>
+        |$teReadoutSql""".stripMargin) { (s, d) =>
       val g = daily(s, d)
       guardFullEnum(g, "q247_transfer_entropy")
       val b = meanBits(g)
@@ -873,32 +972,7 @@ object CausalOps {
     QueryDef(
       "q248_partial_corr",
       s"""WITH $dailySql,
-        |mkt AS (
-        |  SELECT di, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS mv
-        |  FROM daily GROUP BY 1),
-        |g AS (
-        |  SELECT x.el AS src, y.el AS dst, x.v AS xv, y.v AS yv, k.mv
-        |  FROM daily x
-        |  JOIN daily y ON x.el < y.el AND y.di = x.di
-        |  JOIN mkt k ON k.di = x.di),
-        |m AS (
-        |  SELECT src, dst, count(*) AS n,
-        |    CAST(sum(CAST(xv AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(yv AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(mv AS DECIMAL(38,12))) AS DOUBLE) AS sm,
-        |    CAST(sum(CAST(xv*xv AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(yv*yv AS DECIMAL(38,12))) AS DOUBLE) AS syy,
-        |    CAST(sum(CAST(mv*mv AS DECIMAL(38,12))) AS DOUBLE) AS smm,
-        |    CAST(sum(CAST(xv*yv AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(xv*mv AS DECIMAL(38,12))) AS DOUBLE) AS sxm,
-        |    CAST(sum(CAST(yv*mv AS DECIMAL(38,12))) AS DOUBLE) AS sym
-        |  FROM g GROUP BY 1, 2),
-        |r AS (
-        |  SELECT src, dst, n,
-        |    (n*sxy - sx*sy) / nullif(sqrt((n*sxx - sx*sx)*(n*syy - sy*sy)), 0) AS rxy,
-        |    (n*sxm - sx*sm) / nullif(sqrt((n*sxx - sx*sx)*(n*smm - sm*sm)), 0) AS rxm,
-        |    (n*sym - sy*sm) / nullif(sqrt((n*syy - sy*sy)*(n*smm - sm*sm)), 0) AS rym
-        |  FROM m)
+        |${marketCorrSql("m")}
         |SELECT src, dst, CAST(n AS BIGINT) AS n_days, round(rxy, 6) AS r_raw,
         |  round((rxy - rxm*rym) / nullif(sqrt((1 - rxm*rxm)*(1 - rym*rym)), 0), 6)
         |    AS r_partial,
@@ -948,37 +1022,14 @@ object CausalOps {
       "q252_mi_pruned",
       s"""WITH $dailySql,
         |$screenSql,
-        |b AS (
-        |  SELECT el, di, ntile(4) OVER (PARTITION BY el ORDER BY v, di) AS bin
-        |  FROM daily),
+        |$quartileBinsSql,
         |cells AS (
         |  SELECT sv.src, sv.dst, x.bin AS ba, y.bin AS bb, count(*) AS n
         |  FROM surv sv
         |  JOIN b x ON x.el = sv.src
         |  JOIN b y ON y.el = sv.dst AND y.di = x.di
         |  GROUP BY 1, 2, 3, 4),
-        |w AS (
-        |  SELECT src, dst, n,
-        |    sum(n) OVER (PARTITION BY src, dst, ba) AS cx,
-        |    sum(n) OVER (PARTITION BY src, dst, bb) AS cy,
-        |    sum(n) OVER (PARTITION BY src, dst) AS nt
-        |  FROM cells),
-        |agg AS (
-        |  SELECT src, dst, CAST(max(nt) AS BIGINT) AS n_days,
-        |    CAST(count(*) AS BIGINT) AS n_cells,
-        |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |      ln(CAST(n*nt AS DOUBLE)/CAST(cx*cy AS DOUBLE))
-        |      AS DECIMAL(38,12))) AS DOUBLE) AS mi,
-        |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |      ln(CAST(nt AS DOUBLE)/CAST(cx AS DOUBLE))
-        |      AS DECIMAL(38,12))) AS DOUBLE) AS hx,
-        |    CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |      ln(CAST(nt AS DOUBLE)/CAST(cy AS DOUBLE))
-        |      AS DECIMAL(38,12))) AS DOUBLE) AS hy
-        |  FROM w GROUP BY 1, 2)
-        |SELECT src, dst, n_days, n_cells, round(mi, 6) AS mi,
-        |  round(mi / nullif(least(hx, hy), 0), 6) AS nmi
-        |FROM agg ORDER BY src, dst""".stripMargin) { (s, d) =>
+        |$miReadoutSql""".stripMargin) { (s, d) =>
       val cand = screen(s, d).select(col("src").as("csrc"), col("dst").as("cdst"))
       miReadout(miCellsOf(cand, quartileBins(daily(s, d))))
     },
@@ -996,12 +1047,7 @@ object CausalOps {
         |$screenSql,
         |surv2 AS (
         |  SELECT src, dst FROM surv UNION ALL SELECT dst, src FROM surv),
-        |am AS (
-        |  SELECT el, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS mu
-        |  FROM daily GROUP BY 1),
-        |b AS (
-        |  SELECT d.el, d.di, CASE WHEN d.v > a.mu THEN 1 ELSE 0 END AS bit
-        |  FROM daily d JOIN am a ON d.el = a.el),
+        |$meanBitsSql,
         |tri AS (
         |  SELECT s2.src, s2.dst,
         |    y1.bit AS b1, y0.bit AS b0, x.bit AS bx, count(*) AS n
@@ -1010,18 +1056,7 @@ object CausalOps {
         |  JOIN b y0 ON y0.el = s2.dst AND y0.di = y1.di - 1
         |  JOIN b x ON x.el = s2.src AND x.di = y1.di - 1
         |  GROUP BY 1, 2, 3, 4, 5),
-        |w AS (
-        |  SELECT src, dst, n,
-        |    sum(n) OVER (PARTITION BY src, dst, b0) AS ny0,
-        |    sum(n) OVER (PARTITION BY src, dst, b0, bx) AS ny0x,
-        |    sum(n) OVER (PARTITION BY src, dst, b1, b0) AS ny1y0,
-        |    sum(n) OVER (PARTITION BY src, dst) AS nt
-        |  FROM tri)
-        |SELECT src, dst, CAST(max(nt) AS BIGINT) AS n_trans,
-        |  round(CAST(sum(CAST((CAST(n AS DOUBLE)/nt) *
-        |    ln(CAST(n*ny0 AS DOUBLE)/CAST(ny0x*ny1y0 AS DOUBLE))
-        |    AS DECIMAL(38,12))) AS DOUBLE), 6) AS te
-        |FROM w GROUP BY 1, 2 ORDER BY src, dst""".stripMargin) { (s, d) =>
+        |$teReadoutSql""".stripMargin) { (s, d) =>
       val sv = screen(s, d).select(col("src"), col("dst"))
       val cand2 = sv
         .unionByName(sv.select(col("dst").as("src"), col("src").as("dst")))
@@ -1077,11 +1112,7 @@ object CausalOps {
         |  FROM daily GROUP BY di),
         |prx AS (
         |  SELECT x.el AS src, y.el AS dst, count(*) AS n,
-        |    CAST(sum(CAST(x.v AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y.v AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(x.v * y.v AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(x.v * x.v AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(y.v * y.v AS DECIMAL(38,12))) AS DOUBLE) AS syy
+        |${pairMomentsSql("x", "y")}
         |  FROM dailyx x JOIN dailyx y ON x.el < y.el AND x.di = y.di
         |  GROUP BY 1, 2),
         |pcx AS (
@@ -1105,17 +1136,7 @@ object CausalOps {
         |  SELECT src, dst, n, r0, z AS blocker, abs(p) AS map FROM (
         |    SELECT *, row_number() OVER (PARTITION BY src, dst ORDER BY abs(p), z) AS rr
         |    FROM tri) WHERE rr = 1),
-        |m AS (
-        |  SELECT a.el AS src, b.el AS dst, l.lag, count(*) AS n,
-        |    CAST(sum(CAST(a.v AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(b.v AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(a.v * b.v AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(a.v * a.v AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(b.v * b.v AS DECIMAL(38,12))) AS DOUBLE) AS syy
-        |  FROM daily a
-        |  CROSS JOIN (VALUES (0), (1), (2), (3)) AS l(lag)
-        |  JOIN daily b ON b.el <> a.el AND b.di = a.di + l.lag
-        |  GROUP BY 1, 2, 3),
+        |$leadLagMomentsSql,
         |xc AS (
         |  SELECT src, dst, lag,
         |    round((n*sxy - sx*sy)
@@ -1209,11 +1230,7 @@ object CausalOps {
         val wRows = (for (p <- 0 until 8; di <- 0 until 64)
           yield s"($p, $di, ${planes(p)(di)})").mkString(",\n        |    ")
         s"""WITH $dailySql,
-          |st AS (
-          |  SELECT el, count(*) AS n,
-          |    CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) AS sv,
-          |    CAST(sum(CAST(v*v AS DECIMAL(38,12))) AS DOUBLE) AS svv
-          |  FROM daily GROUP BY 1),
+          |$elMomentsSql,
           |z AS (
           |  SELECT d.el, d.di,
           |    (d.v - s.sv/s.n) / sqrt(s.svv/s.n - (s.sv/s.n)*(s.sv/s.n)) AS z
@@ -1235,11 +1252,7 @@ object CausalOps {
           |    ON a.band = b.band AND a.bval = b.bval AND a.el < b.el),
           |pr AS (
           |  SELECT x.el AS src, y.el AS dst, count(*) AS n,
-          |    CAST(sum(CAST(x.v AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-          |    CAST(sum(CAST(y.v AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-          |    CAST(sum(CAST(x.v * y.v AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-          |    CAST(sum(CAST(x.v * x.v AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-          |    CAST(sum(CAST(y.v * y.v AS DECIMAL(38,12))) AS DOUBLE) AS syy
+          |${pairMomentsSql("x", "y")}
           |  FROM daily x JOIN daily y ON x.el < y.el AND x.di = y.di
           |  JOIN cand c ON c.src = x.el AND c.dst = y.el
           |  GROUP BY 1, 2)
@@ -1304,13 +1317,7 @@ object CausalOps {
     QueryDef(
       "q264_seasonal_decompose",
       s"""WITH $dailySql,
-        |tr AS (
-        |  SELECT el, di, v,
-        |    CAST(sum(CAST(v AS DECIMAL(38,12))) OVER w AS DOUBLE)
-        |      / count(*) OVER w AS trend
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY el ORDER BY di
-        |               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+        |$trendSql,
         |se AS (
         |  SELECT el, di % 7 AS dow, count(*) AS n_days,
         |    CAST(sum(CAST(v - trend AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS seas
@@ -1328,12 +1335,7 @@ object CausalOps {
         |  round(1 - vr.ss_resid / nullif(vr.ss_detr, 0), 6) AS seasonal_strength
         |FROM se s JOIN vr ON vr.el = s.el
         |ORDER BY s.el, dow""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val g = daily(s, d)
-      val w = Window.partitionBy(col("el")).orderBy(col("di")).rowsBetween(-3, 3)
-      val tr = g.select(col("el"), col("di"), col("v"),
-        (sum(col("v").cast("decimal(38,12)")).over(w).cast("double") /
-          count(lit(1)).over(w)).as("trend"))
+      val tr = trend7(daily(s, d))
       val se = tr.groupBy(col("el"), (col("di") % 7).as("dow"))
         .agg(count(lit(1)).as("n_days"),
           (dsum(col("v") - col("trend")) / count(lit(1))).as("seas"))
@@ -1370,32 +1372,7 @@ object CausalOps {
     QueryDef(
       "q265_causal_fdr",
       s"""WITH $dailySql,
-        |mkt AS (
-        |  SELECT di, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS mv
-        |  FROM daily GROUP BY 1),
-        |g AS (
-        |  SELECT x.el AS src, y.el AS dst, x.v AS xv, y.v AS yv, k.mv
-        |  FROM daily x
-        |  JOIN daily y ON x.el < y.el AND y.di = x.di
-        |  JOIN mkt k ON k.di = x.di),
-        |m AS (
-        |  SELECT src, dst, count(*) AS n,
-        |    CAST(sum(CAST(xv AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(yv AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(mv AS DECIMAL(38,12))) AS DOUBLE) AS sm,
-        |    CAST(sum(CAST(xv*xv AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(yv*yv AS DECIMAL(38,12))) AS DOUBLE) AS syy,
-        |    CAST(sum(CAST(mv*mv AS DECIMAL(38,12))) AS DOUBLE) AS smm,
-        |    CAST(sum(CAST(xv*yv AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(xv*mv AS DECIMAL(38,12))) AS DOUBLE) AS sxm,
-        |    CAST(sum(CAST(yv*mv AS DECIMAL(38,12))) AS DOUBLE) AS sym
-        |  FROM g GROUP BY 1, 2),
-        |r AS (
-        |  SELECT src, dst, n,
-        |    (n*sxy - sx*sy) / nullif(sqrt((n*sxx - sx*sx)*(n*syy - sy*sy)), 0) AS rxy,
-        |    (n*sxm - sx*sm) / nullif(sqrt((n*sxx - sx*sx)*(n*smm - sm*sm)), 0) AS rxm,
-        |    (n*sym - sy*sm) / nullif(sqrt((n*syy - sy*sy)*(n*smm - sm*sm)), 0) AS rym
-        |  FROM m WHERE n > 4),
+        |${marketCorrSql("m WHERE n > 4")},
         |pc AS (
         |  SELECT src, dst, n,
         |    (rxy - rxm*rym) / nullif(sqrt((1 - rxm*rxm)*(1 - rym*rym)), 0) AS rp
@@ -1425,27 +1402,7 @@ object CausalOps {
       import org.apache.spark.sql.expressions.Window
       val g0 = daily(s, d)
       guardFullEnum(g0, "q265_causal_fdr")
-      val mkt = g0.groupBy(col("di").as("dik"))
-        .agg((dsum(col("v")) / count(lit(1))).as("mv"))
-      val x = g0.select(col("el").as("src"), col("di"), col("v").as("xv"))
-      val y = g0.select(col("el").as("dst"), col("di").as("diy"), col("v").as("yv"))
-      val grid = x.join(y, col("src") < col("dst") && col("diy") === col("di"))
-        .join(mkt, col("dik") === col("di"))
-      val m = grid.groupBy("src", "dst").agg(count(lit(1)).as("n"),
-        dsum(col("xv")).as("sx"), dsum(col("yv")).as("sy"), dsum(col("mv")).as("sm"),
-        dsum(col("xv") * col("xv")).as("sxx"),
-        dsum(col("yv") * col("yv")).as("syy"),
-        dsum(col("mv") * col("mv")).as("smm"),
-        dsum(col("xv") * col("yv")).as("sxy"),
-        dsum(col("xv") * col("mv")).as("sxm"),
-        dsum(col("yv") * col("mv")).as("sym"))
-      def corr2(sab: Column, sa: Column, sb: Column, saa: Column, sbb: Column) =
-        (col("n") * sab - sa * sb) /
-          nullif(sqrt((col("n") * saa - sa * sa) * (col("n") * sbb - sb * sb)), lit(0.0))
-      val r = m.where(col("n") > 4).select(col("src"), col("dst"), col("n"),
-        corr2(col("sxy"), col("sx"), col("sy"), col("sxx"), col("syy")).as("rxy"),
-        corr2(col("sxm"), col("sx"), col("sm"), col("sxx"), col("smm")).as("rxm"),
-        corr2(col("sym"), col("sy"), col("sm"), col("syy"), col("smm")).as("rym"))
+      val r = marketCorrs(marketMoments(g0).where(col("n") > 4))
       val rp = (col("rxy") - col("rxm") * col("rym")) /
         nullif(sqrt((lit(1) - col("rxm") * col("rxm")) *
           (lit(1) - col("rym") * col("rym"))), lit(0.0))
@@ -1486,11 +1443,7 @@ object CausalOps {
       s"""WITH $dailySql,
         |pr AS (
         |  SELECT a.el, l.lag, count(*) AS n,
-        |    CAST(sum(CAST(a.v AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(b.v AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(a.v * b.v AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(a.v * a.v AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(b.v * b.v AS DECIMAL(38,12))) AS DOUBLE) AS syy
+        |${pairMomentsSql("a", "b")}
         |  FROM daily a
         |  CROSS JOIN (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) l(lag)
         |  JOIN daily b ON b.el = a.el AND b.di = a.di + l.lag
@@ -1532,13 +1485,7 @@ object CausalOps {
     QueryDef(
       "q268_stl_anomaly",
       s"""WITH $dailySql,
-        |tr AS (
-        |  SELECT el, di, v,
-        |    CAST(sum(CAST(v AS DECIMAL(38,12))) OVER w AS DOUBLE)
-        |      / count(*) OVER w AS trend
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY el ORDER BY di
-        |               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+        |$trendSql,
         |se AS (
         |  SELECT el, di % 7 AS dow,
         |    CAST(sum(CAST(v - trend AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS seas
@@ -1566,11 +1513,7 @@ object CausalOps {
         |  di AS worst_di, round(score, 6) AS worst_score
         |FROM w2 WHERE rn = 1 ORDER BY el""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val g = daily(s, d)
-      val w = Window.partitionBy(col("el")).orderBy(col("di")).rowsBetween(-3, 3)
-      val tr = g.select(col("el"), col("di"), col("v"),
-        (sum(col("v").cast("decimal(38,12)")).over(w).cast("double") /
-          count(lit(1)).over(w)).as("trend"))
+      val tr = trend7(daily(s, d))
       val se = tr.groupBy(col("el").as("sel"), (col("di") % 7).as("dow"))
         .agg((dsum(col("v") - col("trend")) / count(lit(1))).as("seas"))
       val r = tr.join(se, col("sel") === col("el") && col("dow") === col("di") % 7)

@@ -171,18 +171,11 @@ object CcmOps {
     val dirs = surv.select(col("src").as("cause"), col("dst").as("effect"))
       .unionByName(surv.select(col("dst").as("cause"), col("src").as("effect")))
     val sm = seriesMaps(daily(s, d))
-    dirs
+    CointOps.commonDays(dirs
       .join(broadcast(sm.select(col("el").as("cel"), col("m").as("mx"))),
         col("cause") === col("cel"))
       .join(broadcast(sm.select(col("el").as("eel"), col("m").as("my"))),
-        col("effect") === col("eel"))
-      .withColumn("ks",
-        sort_array(filter(map_keys(col("mx")),
-          k => map_contains_key(col("my"), k))))
-      .withColumn("xv", expr("transform(ks, k -> element_at(mx, k))"))
-      .withColumn("yv", expr("transform(ks, k -> element_at(my, k))"))
-      .withColumn("n", size(col("xv")))
-      .where(col("n") >= 10)
+        col("effect") === col("eel")))
       .withColumn("nh", expr("cast(ceil(n / 2.0) as int)"))
       .withColumn("xhh", expr(xhSpark("nh")))
       .withColumn("xhf", expr(xhSpark("n")))

@@ -191,11 +191,19 @@ object CointOps {
   private[graft] def pairSeriesOf(s: SparkSession, grid: DataFrame): DataFrame = {
     val surv = screenOf(s, grid).select(col("src"), col("dst"))
     val sm = seriesMaps(grid)
-    surv
+    commonDays(surv
       .join(broadcast(sm.select(col("el").as("xel"), col("m").as("mx"))),
         col("src") === col("xel"))
       .join(broadcast(sm.select(col("el").as("yel"), col("m").as("my"))),
-        col("dst") === col("yel"))
+        col("dst") === col("yel")))
+      .select(col("src"), col("dst"), col("n"), col("xv"), col("yv"))
+  }
+
+  /** The common days of a pair's compact series maps `mx`/`my`, as
+    * day-ordered value arrays xv/yv of length n; pairs sharing fewer
+    * than 10 days are dropped. Shared with q306's CCM pairs. */
+  private[operators] def commonDays(pairs: DataFrame): DataFrame =
+    pairs
       .withColumn("ks",
         sort_array(filter(map_keys(col("mx")),
           k => map_contains_key(col("my"), k))))
@@ -203,8 +211,6 @@ object CointOps {
       .withColumn("yv", expr("transform(ks, k -> element_at(my, k))"))
       .withColumn("n", size(col("xv")))
       .where(col("n") >= 10)
-      .select(col("src"), col("dst"), col("n"), col("xv"), col("yv"))
-  }
 
   /** Oracle CTE chain producing the same (src, dst, n, xv, yv) rows
     * (composes after `daily` + `surv`). */

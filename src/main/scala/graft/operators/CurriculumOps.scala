@@ -11,6 +11,34 @@ import org.apache.spark.sql.functions._
   * novelty scoring (dedup-lite repetition pressure).
   */
 object CurriculumOps {
+  /** The 8 portable MinHash minima over a `w` token column (salted
+    * md5, first 60 bits) as `mh0`..`mh7`: q220 and q225. */
+  private val minhashMinsSql = (0 until 8).map(si =>
+    s"min(('0x' || substr(md5(w || '#$si'), 1, 15))::BIGINT) AS mh$si")
+    .mkString(",\n        |    ")
+  /** The 4 band keys `mh(2b) || '_' || mh(2b+1)` of [[minhashMinsSql]]. */
+  private val minhashKeysSql = (0 until 4).map(b =>
+    s"mh${2 * b} || '_' || mh${2 * b + 1}").mkString(", ")
+
+  /** [[minhashMinsSql]]'s engine form: (doc_id, mh0..mh7) from
+    * (doc_id, w) token rows. */
+  private def minhashSig(tok: org.apache.spark.sql.DataFrame) =
+    tok.groupBy("doc_id")
+      .agg(
+        min(conv(substring(md5(concat(col("w"), lit("#0"))), 1, 15), 16, 10)
+          .cast("long")).as("mh0"),
+        (1 until 8).map(si =>
+          min(conv(substring(md5(concat(col("w"), lit(s"#$si"))), 1, 15), 16, 10)
+            .cast("long")).as(s"mh$si")): _*)
+
+  /** [[minhashKeysSql]]'s engine form: one (band, key) struct per band. */
+  private def minhashBands =
+    (0 until 4).map { b =>
+      struct(lit(b).as("band"),
+        concat(col(s"mh${2 * b}").cast("string"), lit("_"),
+          col(s"mh${2 * b + 1}").cast("string")).as("key"))
+    }
+
   private def words(c: org.apache.spark.sql.Column) =
     graft.functions.Text.wordsCol(c)
 
@@ -388,46 +416,29 @@ object CurriculumOps {
       * aggregate, map-side band fan-out, one (band,key) count.
       */
     QueryDef(
-      "q220_minhash_portable", {
-        val mins = (0 until 8).map(si =>
-          s"min(('0x' || substr(md5(w || '#$si'), 1, 15))::BIGINT) AS mh$si")
-          .mkString(",\n        |    ")
-        val keys = (0 until 4).map(b =>
-          s"mh${2 * b} || '_' || mh${2 * b + 1}").mkString(", ")
-        s"""WITH tok AS (
-           |  SELECT doc_id,
-           |    unnest(list_distinct(list_filter(string_split(text,' '), w -> w != ''))) AS w
-           |  FROM documents),
-           |mh AS (
-           |  SELECT doc_id,
-           |    $mins
-           |  FROM tok GROUP BY doc_id),
-           |bands AS (
-           |  SELECT band, key FROM mh, LATERAL (
-           |    SELECT unnest([0, 1, 2, 3]) AS band,
-           |           unnest([$keys]) AS key)),
-           |b AS (SELECT band, key, count(*) AS n FROM bands GROUP BY band, key)
-           |SELECT band, CAST(count(*) AS BIGINT) AS n_buckets,
-           |  CAST(max(n) AS BIGINT) AS max_bucket,
-           |  CAST(sum(n) AS BIGINT) AS n_docs
-           |FROM b GROUP BY band ORDER BY band""".stripMargin
-      }) { (s, d) =>
+      "q220_minhash_portable",
+      s"""WITH tok AS (
+        |  SELECT doc_id,
+        |    unnest(list_distinct(list_filter(string_split(text,' '), w -> w != ''))) AS w
+        |  FROM documents),
+        |mh AS (
+        |  SELECT doc_id,
+        |    $minhashMinsSql
+        |  FROM tok GROUP BY doc_id),
+        |bands AS (
+        |  SELECT band, key FROM mh, LATERAL (
+        |    SELECT unnest([0, 1, 2, 3]) AS band,
+        |           unnest([$minhashKeysSql]) AS key)),
+        |b AS (SELECT band, key, count(*) AS n FROM bands GROUP BY band, key)
+        |SELECT band, CAST(count(*) AS BIGINT) AS n_buckets,
+        |  CAST(max(n) AS BIGINT) AS max_bucket,
+        |  CAST(sum(n) AS BIGINT) AS n_docs
+        |FROM b GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
           explode(array_distinct(words(col("text")))).as("w"))
-      val mh = tok.groupBy("doc_id")
-        .agg(
-          min(conv(substring(md5(concat(col("w"), lit("#0"))), 1, 15), 16, 10)
-            .cast("long")).as("mh0"),
-          (1 until 8).map(si =>
-            min(conv(substring(md5(concat(col("w"), lit(s"#$si"))), 1, 15), 16, 10)
-              .cast("long")).as(s"mh$si")): _*)
-      val bandStructs = (0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          concat(col(s"mh${2 * b}").cast("string"), lit("_"),
-            col(s"mh${2 * b + 1}").cast("string")).as("key"))
-      }
-      mh.select(explode(array(bandStructs: _*)).as("bk"))
+      val mh = minhashSig(tok)
+      mh.select(explode(array(minhashBands: _*)).as("bk"))
         .select(col("bk.band").as("band"), col("bk.key").as("key"))
         .groupBy("band", "key")
         .agg(count(lit(1)).as("n"))
@@ -463,63 +474,45 @@ object CurriculumOps {
       * planner can trust at any SF.
       */
     QueryDef(
-      "q225_lsh_candidate_pairs", {
-        val mins = (0 until 8).map(si =>
-          s"min(('0x' || substr(md5(w || '#$si'), 1, 15))::BIGINT) AS mh$si")
-          .mkString(",\n        |    ")
-        val keys = (0 until 4).map(b =>
-          s"mh${2 * b} || '_' || mh${2 * b + 1}").mkString(", ")
-        s"""WITH tok AS (
-           |  SELECT doc_id,
-           |    list_distinct(list_filter(string_split(text,' '), w -> w != '')) AS ws
-           |  FROM documents),
-           |wrd AS (SELECT doc_id, unnest(ws) AS w FROM tok),
-           |mh AS (
-           |  SELECT doc_id,
-           |    $mins
-           |  FROM wrd GROUP BY doc_id),
-           |bands0 AS (
-           |  SELECT doc_id, band, key FROM mh, LATERAL (
-           |    SELECT unnest([0, 1, 2, 3]) AS band,
-           |           unnest([$keys]) AS key)),
-           |bands AS (
-           |  SELECT doc_id, band, key FROM bands0
-           |  QUALIFY count(*) OVER (PARTITION BY band, key) <= 64),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-           |scoredp AS (
-           |  SELECT c.a_id, c.b_id,
-           |    len(list_intersect(ta.ws, tb.ws))::DOUBLE
-           |      / (len(ta.ws) + len(tb.ws) - len(list_intersect(ta.ws, tb.ws))) AS j
-           |  FROM cand c
-           |  JOIN tok ta ON ta.doc_id = c.a_id
-           |  JOIN tok tb ON tb.doc_id = c.b_id)
-           |SELECT a_id, b_id, round(j, 6) AS jaccard
-           |FROM scoredp WHERE j >= 0.5 ORDER BY a_id, b_id""".stripMargin
-      }) { (s, d) =>
+      "q225_lsh_candidate_pairs",
+      s"""WITH tok AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_filter(string_split(text,' '), w -> w != '')) AS ws
+        |  FROM documents),
+        |wrd AS (SELECT doc_id, unnest(ws) AS w FROM tok),
+        |mh AS (
+        |  SELECT doc_id,
+        |    $minhashMinsSql
+        |  FROM wrd GROUP BY doc_id),
+        |bands0 AS (
+        |  SELECT doc_id, band, key FROM mh, LATERAL (
+        |    SELECT unnest([0, 1, 2, 3]) AS band,
+        |           unnest([$minhashKeysSql]) AS key)),
+        |bands AS (
+        |  SELECT doc_id, band, key FROM bands0
+        |  QUALIFY count(*) OVER (PARTITION BY band, key) <= 64),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+        |  FROM bands a JOIN bands b
+        |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+        |scoredp AS (
+        |  SELECT c.a_id, c.b_id,
+        |    len(list_intersect(ta.ws, tb.ws))::DOUBLE
+        |      / (len(ta.ws) + len(tb.ws) - len(list_intersect(ta.ws, tb.ws))) AS j
+        |  FROM cand c
+        |  JOIN tok ta ON ta.doc_id = c.a_id
+        |  JOIN tok tb ON tb.doc_id = c.b_id)
+        |SELECT a_id, b_id, round(j, 6) AS jaccard
+        |FROM scoredp WHERE j >= 0.5 ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), array_distinct(words(col("text"))).as("wset"))
       val tokArr = docs.select(col("doc_id"),
         array_sort(transform(col("wset"), w => xxhash64(w))).as("ws"))
-      val mh = docs.select(col("doc_id"), explode(col("wset")).as("w"))
-        .groupBy("doc_id")
-        .agg(
-          min(conv(substring(md5(concat(col("w"), lit("#0"))), 1, 15), 16, 10)
-            .cast("long")).as("mh0"),
-          (1 until 8).map(si =>
-            min(conv(substring(md5(concat(col("w"), lit(s"#$si"))), 1, 15), 16, 10)
-              .cast("long")).as(s"mh$si")): _*)
-      val bandStructs = (0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          concat(col(s"mh${2 * b}").cast("string"), lit("_"),
-            col(s"mh${2 * b + 1}").cast("string")).as("key"))
-      }
+      val mh = minhashSig(docs.select(col("doc_id"), explode(col("wset")).as("w")))
       val bands = mh.select(col("doc_id"),
           array((0 until 8).map(si => col(s"mh$si")): _*).as("mhs"),
-          explode(array(bandStructs: _*)).as("bk"))
+          explode(array(minhashBands: _*)).as("bk"))
         .select(col("doc_id"), col("mhs"),
           col("bk.band").as("band"), col("bk.key").as("key"))
         .withColumn("bn", count(lit(1)).over(

@@ -58,6 +58,57 @@ object DriftOps {
         .orderBy("el")
   }
 
+  /** Oracle of [[binnedCounts]] (`e`, `q`, `b`, `c`): per event type
+    * and reference-decile bin, the reference (nr) and current (nc)
+    * counts. */
+  private val binnedCountsSql: String = {
+    val qsSql = (1 to 9).map(k => s"quantile_cont(v, 0.$k) AS q$k").mkString(", ")
+    // round-9 on BOTH comparands: a last-ulp difference in either
+    // engine's interpolated percentile cannot flip a bin unless the
+    // value already sits within 5e-10 of the boundary (Round9Spec
+    // measures the actual corpus margin: the nearest non-equal value
+    // sits 8.9e-16 from a raw boundary, but EQUAL after round-9)
+    val binSql = (1 to 9).map(k =>
+      s"(CASE WHEN round(v, 9) > round(q$k, 9) THEN 1 ELSE 0 END)").mkString(" + ")
+    s"""e AS (
+       |  SELECT event_type AS et, value AS v,
+       |    ts < TIMESTAMP '2024-01-16' AS is_ref
+       |  FROM events),
+       |q AS (SELECT et AS qet, $qsSql FROM e WHERE is_ref GROUP BY 1),
+       |b AS (
+       |  SELECT et, is_ref, 1 + $binSql AS bin
+       |  FROM e JOIN q ON et = qet),
+       |c AS (
+       |  SELECT et, bin, count_if(is_ref) AS nr, count_if(NOT is_ref) AS nc
+       |  FROM b GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** Oracle of [[psiFromCounts]]'s clamped bin fractions (`t`, `f`):
+    * q281, q345. */
+  private val binFracSql =
+    """t AS (SELECT et AS tet, sum(nr) AS tr, sum(nc) AS tc FROM c GROUP BY 1),
+      |f AS (
+      |  SELECT et, bin,
+      |    greatest(CAST(nr AS DOUBLE) / tr, 1e-6) AS rf,
+      |    greatest(CAST(nc AS DOUBLE) / tc, 1e-6) AS cf
+      |  FROM c JOIN t ON tet = et)""".stripMargin
+
+  /** Oracle of [[w1FromCounts]]'s per-bin reference and current CDFs
+    * over all ten bins (`dense`, the totals CTE `tot`, `cu`): q333,
+    * q345. */
+  private def binCdfSql(tot: String) =
+    s"""dense AS (
+       |  SELECT ty.et, g.bin, coalesce(c.nr, 0) AS nr, coalesce(c.nc, 0) AS nc
+       |  FROM (SELECT DISTINCT et FROM c) ty
+       |  CROSS JOIN (SELECT unnest(range(1, 11)) AS bin) g
+       |  LEFT JOIN c ON c.et = ty.et AND c.bin = g.bin),
+       |$tot AS (SELECT et AS tet, sum(nr) AS tr, sum(nc) AS tc FROM dense GROUP BY 1),
+       |cu AS (
+       |  SELECT et, bin,
+       |    CAST(sum(nr) OVER (PARTITION BY et ORDER BY bin) AS DOUBLE) / tr AS cr,
+       |    CAST(sum(nc) OVER (PARTITION BY et ORDER BY bin) AS DOUBLE) / tc AS cc
+       |  FROM dense JOIN $tot ON tet = et)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Population-stability-index + Jensen-Shannon drift of the value
@@ -73,38 +124,14 @@ object DriftOps {
       * deciles would swap for approx_percentile with the same shape.
       */
     QueryDef(
-      "q281_psi_drift", {
-        val qsSql = (1 to 9).map(k => s"quantile_cont(v, 0.$k) AS q$k").mkString(", ")
-        // round-9 on BOTH comparands: a last-ulp difference in either
-        // engine's interpolated percentile cannot flip a bin unless the
-        // value already sits within 5e-10 of the boundary (Round9Spec
-        // measures the actual corpus margin: the nearest non-equal value
-        // sits 8.9e-16 from a raw boundary, but EQUAL after round-9)
-        val binSql = (1 to 9).map(k =>
-          s"(CASE WHEN round(v, 9) > round(q$k, 9) THEN 1 ELSE 0 END)").mkString(" + ")
-        s"""WITH e AS (
-           |  SELECT event_type AS et, value AS v,
-           |    ts < TIMESTAMP '2024-01-16' AS is_ref
-           |  FROM events),
-           |q AS (SELECT et AS qet, $qsSql FROM e WHERE is_ref GROUP BY 1),
-           |b AS (
-           |  SELECT et, is_ref, 1 + $binSql AS bin
-           |  FROM e JOIN q ON et = qet),
-           |c AS (
-           |  SELECT et, bin, count_if(is_ref) AS nr, count_if(NOT is_ref) AS nc
-           |  FROM b GROUP BY 1, 2),
-           |t AS (SELECT et AS tet, sum(nr) AS tr, sum(nc) AS tc FROM c GROUP BY 1),
-           |f AS (
-           |  SELECT et, bin,
-           |    greatest(CAST(nr AS DOUBLE) / tr, 1e-6) AS rf,
-           |    greatest(CAST(nc AS DOUBLE) / tc, 1e-6) AS cf
-           |  FROM c JOIN t ON tet = et)
-           |SELECT et AS event_type, CAST(count(*) AS BIGINT) AS n_bins,
-           |  round(CAST(sum(CAST((cf - rf) * ln(cf / rf) AS DECIMAL(38,12))) AS DOUBLE), 6) AS psi,
-           |  round(CAST(sum(CAST(0.5 * (rf * ln(2.0 * rf / (rf + cf)))
-           |    + 0.5 * (cf * ln(2.0 * cf / (rf + cf))) AS DECIMAL(38,12))) AS DOUBLE), 6) AS jsd
-           |FROM f GROUP BY 1 ORDER BY 1""".stripMargin
-      }) { (s, d) =>
+      "q281_psi_drift",
+      s"""WITH $binnedCountsSql,
+        |$binFracSql
+        |SELECT et AS event_type, CAST(count(*) AS BIGINT) AS n_bins,
+        |  round(CAST(sum(CAST((cf - rf) * ln(cf / rf) AS DECIMAL(38,12))) AS DOUBLE), 6) AS psi,
+        |  round(CAST(sum(CAST(0.5 * (rf * ln(2.0 * rf / (rf + cf)))
+        |    + 0.5 * (cf * ln(2.0 * cf / (rf + cf))) AS DECIMAL(38,12))) AS DOUBLE), 6) AS jsd
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       psiFromCounts(binnedCounts(s, d))
     },
 
@@ -120,37 +147,13 @@ object DriftOps {
       * (ordinal transport on the reference's decile scale).
       */
     QueryDef(
-      "q333_wasserstein", {
-        val qsSql = (1 to 9).map(k => s"quantile_cont(v, 0.$k) AS q$k").mkString(", ")
-        val binSql = (1 to 9).map(k =>
-          s"(CASE WHEN round(v, 9) > round(q$k, 9) THEN 1 ELSE 0 END)").mkString(" + ")
-        s"""WITH e AS (
-           |  SELECT event_type AS et, value AS v,
-           |    ts < TIMESTAMP '2024-01-16' AS is_ref
-           |  FROM events),
-           |q AS (SELECT et AS qet, $qsSql FROM e WHERE is_ref GROUP BY 1),
-           |b AS (
-           |  SELECT et, is_ref, 1 + $binSql AS bin
-           |  FROM e JOIN q ON et = qet),
-           |c AS (
-           |  SELECT et, bin, count_if(is_ref) AS nr, count_if(NOT is_ref) AS nc
-           |  FROM b GROUP BY 1, 2),
-           |dense AS (
-           |  SELECT ty.et, g.bin, coalesce(c.nr, 0) AS nr, coalesce(c.nc, 0) AS nc
-           |  FROM (SELECT DISTINCT et FROM c) ty
-           |  CROSS JOIN (SELECT unnest(range(1, 11)) AS bin) g
-           |  LEFT JOIN c ON c.et = ty.et AND c.bin = g.bin),
-           |t AS (SELECT et AS tet, sum(nr) AS tr, sum(nc) AS tc FROM dense GROUP BY 1),
-           |cu AS (
-           |  SELECT et, bin,
-           |    CAST(sum(nr) OVER (PARTITION BY et ORDER BY bin) AS DOUBLE) / tr AS cr,
-           |    CAST(sum(nc) OVER (PARTITION BY et ORDER BY bin) AS DOUBLE) / tc AS cc
-           |  FROM dense JOIN t ON tet = et)
-           |SELECT et AS event_type, CAST(count(*) AS BIGINT) AS n_bins,
-           |  round(CAST(sum(CAST(abs(cr - cc) AS DECIMAL(38,12))) AS DOUBLE), 6) AS w1_bins,
-           |  round(CAST(sum(CAST(cc - cr AS DECIMAL(38,12))) AS DOUBLE), 6) AS signed_shift
-           |FROM cu GROUP BY 1 ORDER BY 1""".stripMargin
-      }) { (s, d) =>
+      "q333_wasserstein",
+      s"""WITH $binnedCountsSql,
+        |${binCdfSql("t")}
+        |SELECT et AS event_type, CAST(count(*) AS BIGINT) AS n_bins,
+        |  round(CAST(sum(CAST(abs(cr - cc) AS DECIMAL(38,12))) AS DOUBLE), 6) AS w1_bins,
+        |  round(CAST(sum(CAST(cc - cr AS DECIMAL(38,12))) AS DOUBLE), 6) AS signed_shift
+        |FROM cu GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       w1FromCounts(s, binnedCounts(s, d))
     },
 
@@ -163,52 +166,23 @@ object DriftOps {
       * the whole decision costs nothing beyond q281's two aggregates.
       */
     QueryDef(
-      "q345_retrain_trigger", {
-        val qsSql = (1 to 9).map(k => s"quantile_cont(v, 0.$k) AS q$k").mkString(", ")
-        val binSql = (1 to 9).map(k =>
-          s"(CASE WHEN round(v, 9) > round(q$k, 9) THEN 1 ELSE 0 END)").mkString(" + ")
-        s"""WITH e AS (
-           |  SELECT event_type AS et, value AS v,
-           |    ts < TIMESTAMP '2024-01-16' AS is_ref
-           |  FROM events),
-           |q AS (SELECT et AS qet, $qsSql FROM e WHERE is_ref GROUP BY 1),
-           |b AS (
-           |  SELECT et, is_ref, 1 + $binSql AS bin
-           |  FROM e JOIN q ON et = qet),
-           |c AS (
-           |  SELECT et, bin, count_if(is_ref) AS nr, count_if(NOT is_ref) AS nc
-           |  FROM b GROUP BY 1, 2),
-           |t AS (SELECT et AS tet, sum(nr) AS tr, sum(nc) AS tc FROM c GROUP BY 1),
-           |f AS (
-           |  SELECT et, bin,
-           |    greatest(CAST(nr AS DOUBLE) / tr, 1e-6) AS rf,
-           |    greatest(CAST(nc AS DOUBLE) / tc, 1e-6) AS cf
-           |  FROM c JOIN t ON tet = et),
-           |psi AS (
-           |  SELECT et,
-           |    round(CAST(sum(CAST((cf - rf) * ln(cf / rf) AS DECIMAL(38,12))) AS DOUBLE), 6) AS psi
-           |  FROM f GROUP BY 1),
-           |dense AS (
-           |  SELECT ty.et, g.bin, coalesce(c.nr, 0) AS nr, coalesce(c.nc, 0) AS nc
-           |  FROM (SELECT DISTINCT et FROM c) ty
-           |  CROSS JOIN (SELECT unnest(range(1, 11)) AS bin) g
-           |  LEFT JOIN c ON c.et = ty.et AND c.bin = g.bin),
-           |t2 AS (SELECT et AS tet, sum(nr) AS tr, sum(nc) AS tc FROM dense GROUP BY 1),
-           |cu AS (
-           |  SELECT et, bin,
-           |    CAST(sum(nr) OVER (PARTITION BY et ORDER BY bin) AS DOUBLE) / tr AS cr,
-           |    CAST(sum(nc) OVER (PARTITION BY et ORDER BY bin) AS DOUBLE) / tc AS cc
-           |  FROM dense JOIN t2 ON tet = et),
-           |w1 AS (
-           |  SELECT et,
-           |    round(CAST(sum(CAST(abs(cr - cc) AS DECIMAL(38,12))) AS DOUBLE), 6) AS w1_bins,
-           |    round(CAST(sum(CAST(cc - cr AS DECIMAL(38,12))) AS DOUBLE), 6) AS signed_shift
-           |  FROM cu GROUP BY 1)
-           |SELECT psi.et AS event_type, psi.psi, w1.w1_bins, w1.signed_shift,
-           |  CAST(psi.psi > 0.2 OR w1.w1_bins > 0.5 OR abs(w1.signed_shift) > 0.3 AS INT)
-           |    AS retrain
-           |FROM psi JOIN w1 ON w1.et = psi.et ORDER BY event_type""".stripMargin
-      }) { (s, d) =>
+      "q345_retrain_trigger",
+      s"""WITH $binnedCountsSql,
+        |$binFracSql,
+        |psi AS (
+        |  SELECT et,
+        |    round(CAST(sum(CAST((cf - rf) * ln(cf / rf) AS DECIMAL(38,12))) AS DOUBLE), 6) AS psi
+        |  FROM f GROUP BY 1),
+        |${binCdfSql("t2")},
+        |w1 AS (
+        |  SELECT et,
+        |    round(CAST(sum(CAST(abs(cr - cc) AS DECIMAL(38,12))) AS DOUBLE), 6) AS w1_bins,
+        |    round(CAST(sum(CAST(cc - cr AS DECIMAL(38,12))) AS DOUBLE), 6) AS signed_shift
+        |  FROM cu GROUP BY 1)
+        |SELECT psi.et AS event_type, psi.psi, w1.w1_bins, w1.signed_shift,
+        |  CAST(psi.psi > 0.2 OR w1.w1_bins > 0.5 OR abs(w1.signed_shift) > 0.3 AS INT)
+        |    AS retrain
+        |FROM psi JOIN w1 ON w1.et = psi.et ORDER BY event_type""".stripMargin) { (s, d) =>
       val c = binnedCounts(s, d)
       val psi = psiFromCounts(c).select(col("event_type").as("pet"), col("psi"))
       val w1 = w1FromCounts(s, c)

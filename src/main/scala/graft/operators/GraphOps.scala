@@ -48,6 +48,16 @@ object GraphOps {
         .where(col("nco") >= 2)
     }
 
+  /** Oracle of [[coorderEdges]]: `op` and the pairs of parts ordered
+    * together in ≥ 2 orders, as the CTE declared by `cte` (e.g.
+    * "ed AS"). */
+  private[operators] def coorderEdgesSql(cte: String): String =
+    s"""op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+       |$cte (
+       |  SELECT a.p AS u, b.p AS v
+       |  FROM op a JOIN op b ON b.o = a.o AND b.p > a.p
+       |  GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
+
   /** The pair set without its support counts — the edge-set view. */
   private[operators] def coorderEdges(s: SparkSession, d: String): DataFrame =
     coorderPairs(s, d).select(col("u"), col("v"))
@@ -75,11 +85,7 @@ object GraphOps {
       */
     QueryDef(
       "q285_adamic_adar",
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |ed AS (
-        |  SELECT a.p AS u, b.p AS v
-        |  FROM op a JOIN op b ON b.o = a.o AND b.p > a.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH ${coorderEdgesSql("ed AS")},
         |sym AS (SELECT u, v FROM ed UNION ALL SELECT v, u FROM ed),
         |dg AS (SELECT u AS w, count(*) AS deg FROM sym GROUP BY 1),
         |p2 AS (
@@ -243,11 +249,7 @@ object GraphOps {
       */
     QueryDef(
       "q349_assortativity",
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |ed AS (
-        |  SELECT a.p AS u, b.p AS v
-        |  FROM op a JOIN op b ON b.o = a.o AND b.p > a.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH ${coorderEdgesSql("ed AS")},
         |sym AS (SELECT u, v FROM ed UNION ALL SELECT v, u FROM ed),
         |dg AS (SELECT u AS w, count(*) AS deg FROM sym GROUP BY 1),
         |pe AS (

@@ -48,6 +48,16 @@ object HybridOps {
     * found, quadratically more work per chunk). */
   private[graft] val SemSplitCap = 32
 
+  /** [[centroidSql]]'s engine form: each label's mean vector as
+    * (clabel, cvec) from embeddings carrying an `emb` double array. */
+  private[operators] def labelCentroids(e: DataFrame): DataFrame =
+    e.select(col("label").as("clabel"),
+        posexplode(col("emb")).as(Seq("i", "x")))
+      .groupBy("clabel", "i").agg(avg(col("x")).as("cx"))
+      .groupBy("clabel")
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
+        st => st.getField("cx")).as("cvec"))
+
   /** q262's cluster assignment, shared with the q367 recall audit and
     * q474's split: label-centroid means + an argmax-cosine assignment,
     * PlanCache'd per (session, dir) — see the q262 docstring for the
@@ -63,13 +73,7 @@ object HybridOps {
     import s.implicits._
     val e = Tables.embeddings(s, d)
       .withColumn("emb", col("embedding").cast("array<double>"))
-    val cent = e
-      .select(col("label").as("clabel"),
-        posexplode(col("emb")).as(Seq("i", "x")))
-      .groupBy("clabel", "i").agg(avg(col("x")).as("cx"))
-      .groupBy("clabel")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
-        st => st.getField("cx")).as("cvec"))
+    val cent = labelCentroids(e)
     PlanCache.cached(s, s"semdedup_assign|$d") {
       val cArr = cent.select(col("clabel"), col("cvec"))
         .as[(Int, Array[Double])].collect().sortBy(_._1)
@@ -152,6 +156,58 @@ object HybridOps {
       .orderBy("cluster")
   }
 
+  /** The ANN evaluations' geometry: the shared Lsh planes, q64's query
+    * vector, and the 9 probed buckets (the query's own and its 8
+    * one-bit flips). */
+  private val annPlanes = Lsh.hyperplanes(8)
+  private val annQuery: Array[Double] = Array.tabulate(64)(i => ((i * 37) % 19 - 9) / 10.0)
+  private val annProbes: Seq[Int] = {
+    val qb = Lsh.bucketOf(annQuery, annPlanes).toInt
+    qb +: annPlanes.indices.map(pi => qb ^ (1 << pi))
+  }
+
+  /** Exact top-10 (`ex`, rank `re`) and 9-bucket multiprobe top-10
+    * (`sys`, rank `pos`) of the embeddings by round-6 cosine against
+    * q64's query vector over the shared Lsh planes: the two lists the
+    * q280 and q410 evaluations grade. */
+  private[operators] val annListsSql: String = {
+    val corpusBucket = Lsh.bucketSql(annPlanes, i => s"embedding[${i + 1}]::DOUBLE")
+    val probes = annProbes.mkString(", ")
+    val qvecSql = annQuery.mkString("[", ", ", "]::DOUBLE[]")
+    s"""ex AS (
+       |  SELECT vec_id,
+       |    row_number() OVER (ORDER BY round(list_cosine_similarity(
+       |      embedding::DOUBLE[], $qvecSql), 6) DESC, vec_id) AS re
+       |  FROM embeddings
+       |  ORDER BY round(list_cosine_similarity(embedding::DOUBLE[], $qvecSql), 6)
+       |    DESC, vec_id LIMIT 10),
+       |sys AS (
+       |  SELECT vec_id,
+       |    row_number() OVER (ORDER BY round(list_cosine_similarity(
+       |      embedding::DOUBLE[], $qvecSql), 6) DESC, vec_id) AS pos
+       |  FROM embeddings WHERE ($corpusBucket) IN ($probes)
+       |  ORDER BY round(list_cosine_similarity(embedding::DOUBLE[], $qvecSql), 6)
+       |    DESC, vec_id LIMIT 10)""".stripMargin
+  }
+
+  /** [[annListsSql]]'s engine form → (ex(evid, re), sys(vec_id, pos)). */
+  private[operators] def annLists(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    import graft.functions.Kernels
+    val emb = col("embedding").cast("array<double>")
+    val cosR = r6(Kernels.cosine(emb, array(annQuery.map(lit): _*)))
+    val e = Tables.embeddings(s, d)
+    val ex = e.select(col("vec_id"), cosR.as("cs"))
+      .orderBy(col("cs").desc, col("vec_id")).limit(10)
+      .withColumn("re", row_number().over(Window.orderBy(col("cs").desc, col("vec_id"))))
+      .select(col("vec_id").as("evid"), col("re"))
+    val sys = e.where(Lsh.bucketColumn(emb, annPlanes).isin(annProbes: _*))
+      .select(col("vec_id"), cosR.as("cs"))
+      .orderBy(col("cs").desc, col("vec_id")).limit(10)
+      .withColumn("pos", row_number().over(Window.orderBy(col("cs").desc, col("vec_id"))))
+      .select(col("vec_id"), col("pos"))
+    (ex, sys)
+  }
+
   /** The per-label centroid CTE chain (pos → cent → centv: each
     * label's mean vector as `centv(clabel, cvec)`), shared by the
     * q262/q367/q474 semantic-dedup oracles and q65's nearest-centroid
@@ -165,6 +221,18 @@ object HybridOps {
       |  SELECT label AS clabel, i, avg(x) AS cx FROM pos GROUP BY 1, 2),
       |centv AS (
       |  SELECT clabel, list(cx ORDER BY i) AS cvec FROM cent GROUP BY clabel)""".stripMargin
+
+  /** Each vector ranked against every [[centroidSql]] centroid by
+    * cosine (`assigned`; rn = 1 is its cluster, ties to the smaller
+    * clabel); `cols` are the embedding columns selected beside vec_id.
+    * q262, q367 and q65. */
+  private[operators] def assignedSql(cols: String): String =
+    s"""assigned AS (
+      |  SELECT e.vec_id, $cols, c.clabel,
+      |    row_number() OVER (PARTITION BY e.vec_id
+      |      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cvec) DESC,
+      |               c.clabel) AS rn
+      |  FROM embeddings e CROSS JOIN centv c)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -186,21 +254,8 @@ object HybridOps {
       */
     QueryDef(
       "q261_hybrid_rrf",
-      s"""WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, CAST(len(ws) AS DOUBLE) AS dl,
-        |    CAST(len(list_filter(ws, x -> x = 'spark')) AS DOUBLE) AS tf1,
-        |    CAST(len(list_filter(ws, x -> x = 'join')) AS DOUBLE) AS tf2,
-        |    CAST(len(list_filter(ws, x -> x = 'fast')) AS DOUBLE) AS tf3
-        |  FROM tok),
-        |st AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl,
-        |    CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-        |    CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2,
-        |    CAST(sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df3
-        |  FROM tf),
+      s"""WITH ${SearchOps.queryTfSql},
+        |${SearchOps.bm25StatsSql},
         |lex AS (
         |  SELECT doc_id, round(
         |      ln(1 + (st.n - st.df1 + 0.5) / (st.df1 + 0.5)) *
@@ -228,26 +283,13 @@ object HybridOps {
         |SELECT doc_id, round(rrf, 6) AS rrf,
         |  CAST(lex_rank AS INT) AS lex_rank, CAST(sem_rank AS INT) AS sem_rank
         |FROM f ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      import graft.functions.{Kernels, Text}
+      import graft.functions.Kernels
       // lexical list: q178's BM25 constants, round-6 rank cut
-      def cnt(w: String) = size(filter(col("ws"), x => x === w)).cast("double")
-      val tf = Tables.documents(s, d)
-        .select(col("doc_id"), Text.wordsCol(col("text")).as("ws"))
-        .select(col("doc_id"), size(col("ws")).cast("double").as("dl"),
-          cnt("spark").as("tf1"), cnt("join").as("tf2"), cnt("fast").as("tf3"))
-      val st = tf.agg(
-        count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"),
-        sum(when(col("tf1") > 0, 1).otherwise(0)).cast("double").as("df1"),
-        sum(when(col("tf2") > 0, 1).otherwise(0)).cast("double").as("df2"),
-        sum(when(col("tf3") > 0, 1).otherwise(0)).cast("double").as("df3"))
-      def term(tfc: String, dfc: String) =
-        log(lit(1) + (col("n") - col(dfc) + 0.5) / (col(dfc) + 0.5)) *
-          (col(tfc) * 2.2) /
-          (col(tfc) + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
+      val tf = SearchOps.queryTf(s, d)
+      val st = SearchOps.bm25Stats(tf)
       val lex = tf.crossJoin(broadcast(st))
         .where(col("tf1") + col("tf2") + col("tf3") > 0)
-        .select(col("doc_id"),
-          r6(term("tf1", "df1") + term("tf2", "df2") + term("tf3", "df3")).as("sc"))
+        .select(col("doc_id"), r6(SearchOps.bm25Score).as("sc"))
       val lexr = lex.orderBy(col("sc").desc, col("doc_id")).limit(100)
         .withColumn("rl",
           row_number().over(Window.orderBy(col("sc").desc, col("doc_id"))))
@@ -289,12 +331,7 @@ object HybridOps {
     QueryDef(
       "q262_semdedup",
       s"""WITH $centroidSql,
-        |assigned AS (
-        |  SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.clabel,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cvec) DESC,
-        |               c.clabel) AS rn
-        |  FROM embeddings e CROSS JOIN centv c),
+        |${assignedSql("e.embedding::DOUBLE[] AS emb")},
         |a AS (SELECT vec_id, emb, clabel FROM assigned
         |  WHERE rn = 1),
         |pairs AS (
@@ -631,59 +668,23 @@ object HybridOps {
       * discipline); the readout is one row.
       */
     QueryDef(
-      "q280_ndcg_eval", {
-        val planes = Lsh.hyperplanes(8)
-        val qv: Array[Double] = Array.tabulate(64)(i => ((i * 37) % 19 - 9) / 10.0)
-        val corpusBucket = Lsh.bucketSql(planes, i => s"embedding[${i + 1}]::DOUBLE")
-        val qb = Lsh.bucketOf(qv, planes).toInt
-        val probes = (qb +: planes.indices.map(pi => qb ^ (1 << pi))).mkString(", ")
-        val qvecSql = qv.mkString("[", ", ", "]::DOUBLE[]")
-        s"""WITH ex AS (
-           |  SELECT vec_id,
-           |    row_number() OVER (ORDER BY round(list_cosine_similarity(
-           |      embedding::DOUBLE[], $qvecSql), 6) DESC, vec_id) AS re
-           |  FROM embeddings
-           |  ORDER BY round(list_cosine_similarity(embedding::DOUBLE[], $qvecSql), 6)
-           |    DESC, vec_id LIMIT 10),
-           |sys AS (
-           |  SELECT vec_id,
-           |    row_number() OVER (ORDER BY round(list_cosine_similarity(
-           |      embedding::DOUBLE[], $qvecSql), 6) DESC, vec_id) AS pos
-           |  FROM embeddings WHERE ($corpusBucket) IN ($probes)
-           |  ORDER BY round(list_cosine_similarity(embedding::DOUBLE[], $qvecSql), 6)
-           |    DESC, vec_id LIMIT 10),
-           |dg AS (
-           |  SELECT count(*) AS n_sys,
-           |    CAST(sum(CASE WHEN ex.re IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-           |    CAST(sum(CAST(CASE WHEN ex.re IS NOT NULL THEN (11 - ex.re) ELSE 0 END
-           |      / (ln(sys.pos + 1.0) / ln(2.0)) AS DECIMAL(38,12))) AS DOUBLE) AS dcg
-           |  FROM sys LEFT JOIN ex ON ex.vec_id = sys.vec_id),
-           |ig AS (
-           |  SELECT CAST(sum(CAST((11 - re) / (ln(re + 1.0) / ln(2.0))
-           |    AS DECIMAL(38,12))) AS DOUBLE) AS idcg
-           |  FROM ex)
-           |SELECT CAST(n_sys AS BIGINT) AS n_sys, hits,
-           |  round(dcg, 6) AS dcg, round(idcg, 6) AS idcg,
-           |  round(dcg / idcg, 6) AS ndcg
-           |FROM dg CROSS JOIN ig""".stripMargin
-      }) { (s, d) =>
-      import graft.functions.Kernels
-      val planes = Lsh.hyperplanes(8)
-      val qv: Array[Double] = Array.tabulate(64)(i => ((i * 37) % 19 - 9) / 10.0)
-      val qb = Lsh.bucketOf(qv, planes).toInt
-      val probes = qb +: planes.indices.map(pi => qb ^ (1 << pi))
-      val emb = col("embedding").cast("array<double>")
-      val cosR = r6(Kernels.cosine(emb, array(qv.map(lit): _*)))
-      val e = Tables.embeddings(s, d)
-      val ex = e.select(col("vec_id"), cosR.as("cs"))
-        .orderBy(col("cs").desc, col("vec_id")).limit(10)
-        .withColumn("re", row_number().over(Window.orderBy(col("cs").desc, col("vec_id"))))
-        .select(col("vec_id").as("evid"), col("re"))
-      val sys = e.where(Lsh.bucketColumn(emb, planes).isin(probes: _*))
-        .select(col("vec_id"), cosR.as("cs"))
-        .orderBy(col("cs").desc, col("vec_id")).limit(10)
-        .withColumn("pos", row_number().over(Window.orderBy(col("cs").desc, col("vec_id"))))
-        .select(col("vec_id"), col("pos"))
+      "q280_ndcg_eval",
+      s"""WITH $annListsSql,
+        |dg AS (
+        |  SELECT count(*) AS n_sys,
+        |    CAST(sum(CASE WHEN ex.re IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
+        |    CAST(sum(CAST(CASE WHEN ex.re IS NOT NULL THEN (11 - ex.re) ELSE 0 END
+        |      / (ln(sys.pos + 1.0) / ln(2.0)) AS DECIMAL(38,12))) AS DOUBLE) AS dcg
+        |  FROM sys LEFT JOIN ex ON ex.vec_id = sys.vec_id),
+        |ig AS (
+        |  SELECT CAST(sum(CAST((11 - re) / (ln(re + 1.0) / ln(2.0))
+        |    AS DECIMAL(38,12))) AS DOUBLE) AS idcg
+        |  FROM ex)
+        |SELECT CAST(n_sys AS BIGINT) AS n_sys, hits,
+        |  round(dcg, 6) AS dcg, round(idcg, 6) AS idcg,
+        |  round(dcg / idcg, 6) AS ndcg
+        |FROM dg CROSS JOIN ig""".stripMargin) { (s, d) =>
+      val (ex, sys) = annLists(s, d)
       def dsumD(c: Column) = sum(c.cast("decimal(38,12)")).cast("double")
       val dg = sys.join(ex, col("evid") === col("vec_id"), "left")
         .agg(count(lit(1)).as("n_sys"),
@@ -828,12 +829,7 @@ object HybridOps {
     QueryDef(
       "q367_semdedup_recall",
       s"""WITH $centroidSql,
-        |assigned AS (
-        |  SELECT e.vec_id, e.embedding::DOUBLE[] AS emb, c.clabel,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cvec) DESC,
-        |               c.clabel) AS rn
-        |  FROM embeddings e CROSS JOIN centv c),
+        |${assignedSql("e.embedding::DOUBLE[] AS emb")},
         |a AS (SELECT vec_id, emb, clabel FROM assigned
         |  WHERE rn = 1 AND vec_id < 4096),
         |tp AS (

@@ -49,6 +49,108 @@ object InferenceOps {
         .agg(count(lit(1)).as("hcnt"))
     }
 
+  /** Per user: the q163 ':ab1' hash arm (A/B) and whether any purchase
+    * exceeded 250 (`conv`): q303 and q305. */
+  private val abConvSql =
+    """conv AS (
+      |  SELECT user_id,
+      |    CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':ab1'), 1, 15))::BIGINT % 2 = 0
+      |         THEN 'A' ELSE 'B' END AS variant,
+      |    max(CASE WHEN event_type = 'purchase' AND value > 250 THEN 1 ELSE 0 END) AS y
+      |  FROM events GROUP BY 1)""".stripMargin
+
+  /** Day-indexed events (`di`) and the horizon day (`h`): the oracle
+    * head of the signup → first-purchase duration family. */
+  private[operators] val eventDaysSql =
+    """di AS (
+      |  SELECT user_id, event_type,
+      |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS di
+      |  FROM events),
+      |h AS (SELECT max(di) AS hh FROM di)""".stripMargin
+
+  /** First purchase day on or after signup per user (`p1`), after
+    * [[eventDaysSql]] and an `s0` (user_id, t0) CTE. */
+  private[operators] val firstPurchaseSql =
+    """p1 AS (
+      |  SELECT d.user_id, min(d.di) AS t1
+      |  FROM di d JOIN s0 ON s0.user_id = d.user_id
+      |  WHERE d.event_type = 'purchase' AND d.di >= s0.t0 GROUP BY 1)""".stripMargin
+
+  /** Oracle of [[signupPurchase]] (`di`, `h`, `s0`, `p1`): q277, q278. */
+  private val signupPurchaseSql =
+    s"""$eventDaysSql,
+      |s0 AS (
+      |  SELECT user_id, min(di) AS t0 FROM di
+      |  WHERE event_type = 'signup' GROUP BY 1),
+      |$firstPurchaseSql""".stripMargin
+
+  /** Oracle of [[kmCurve]] over a `dur` (t, ev) CTE (`nt`, `byt`, `rk`,
+    * `km`): q277, q403. */
+  private[operators] val kmSql =
+    """nt AS (SELECT count(*) AS n FROM dur),
+      |byt AS (SELECT t, count(*) AS c, sum(ev) AS d FROM dur GROUP BY 1),
+      |rk AS (
+      |  SELECT t, d,
+      |    nt.n - coalesce(sum(c) OVER (ORDER BY t
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
+      |  FROM byt CROSS JOIN nt),
+      |km AS (
+      |  SELECT t, d, n_risk,
+      |    exp(sum(ln(CASE WHEN d >= n_risk THEN 1
+      |      ELSE 1 - CAST(d AS DOUBLE) / n_risk END)) OVER (ORDER BY t
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS surv,
+      |    max(CASE WHEN d >= n_risk THEN 1 ELSE 0 END) OVER (ORDER BY t
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead
+      |  FROM rk WHERE d > 0)""".stripMargin
+
+  /** Each signup's (user_id, t0) left-joined to its first purchase day
+    * t1 (null if none) and the horizon day hh: q277, q278. */
+  private def signupPurchase(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.events(s, d).select(col("user_id"), col("event_type"),
+      datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).as("di"))
+    val h = ev.agg(max(col("di")).as("hh"))
+    val s0 = ev.where(col("event_type") === "signup")
+      .groupBy(col("user_id")).agg(min(col("di")).as("t0"))
+    val p1 = ev.where(col("event_type") === "purchase")
+      .join(s0.select(col("user_id").as("su"), col("t0")),
+        col("su") === col("user_id") && col("di") >= col("t0"))
+      .groupBy(col("user_id").as("pu")).agg(min(col("di")).as("t1"))
+    s0.join(p1, col("pu") === col("user_id"), "left")
+      .crossJoin(broadcast(h))
+  }
+
+  /** Duration to first purchase, censored at the horizon. */
+  private val durT = when(col("t1").isNull, col("hh") - col("t0"))
+    .otherwise(col("t1") - col("t0")).as("t")
+  /** 1 when the purchase happened, 0 when censored. */
+  private val durEv = when(col("t1").isNull, lit(0)).otherwise(lit(1)).as("ev")
+
+  /** Kaplan-Meier curve (t, d, n_risk, surv, dead) per event time from
+    * any (t, ev) duration table: q277, q403. */
+  private[operators] def kmCurve(dur: DataFrame): DataFrame = {
+    val nt = dur.agg(count(lit(1)).as("n"))
+    val byt = dur.groupBy(col("t"))
+      .agg(count(lit(1)).as("c"), sum(col("ev")).as("d"))
+    val wPrev = Window.orderBy(col("t"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val rk = byt.crossJoin(broadcast(nt))
+      .select(col("t"), col("d"),
+        (col("n") - coalesce(sum(col("c")).over(wPrev), lit(0L))).as("n_risk"))
+    val wCum = Window.orderBy(col("t"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // a curve-terminating event (d == n_risk) would be ln(0): Spark's
+    // log yields NULL there while DuckDB raises — so the terminal term
+    // contributes ln(1) and a cumulative `dead` flag pins survival to
+    // exactly 0.0 from that event on, identically in both engines
+    rk.where(col("d") > 0)
+      .select(col("t"), col("d"), col("n_risk"),
+        exp(sum(log(when(col("d") >= col("n_risk"), lit(1.0))
+          .otherwise(lit(1) - col("d").cast("double") / col("n_risk"))))
+          .over(wCum)).as("surv"),
+        max(when(col("d") >= col("n_risk"), lit(1)).otherwise(lit(0)))
+          .over(wCum).as("dead"))
+  }
+
   private[operators] def guardElements(s: SparkSession, d: String, qname: String): Unit = {
     val p = hist(s, d).agg(countDistinct(col("hel"))).head.getLong(0)
     if (p > MaxInferenceElements)
@@ -405,78 +507,18 @@ object InferenceOps {
       */
     QueryDef(
       "q277_survival_km",
-      """WITH di AS (
-        |  SELECT user_id, event_type,
-        |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS di
-        |  FROM events),
-        |h AS (SELECT max(di) AS hh FROM di),
-        |s0 AS (
-        |  SELECT user_id, min(di) AS t0 FROM di
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |p1 AS (
-        |  SELECT d.user_id, min(d.di) AS t1
-        |  FROM di d JOIN s0 ON s0.user_id = d.user_id
-        |  WHERE d.event_type = 'purchase' AND d.di >= s0.t0 GROUP BY 1),
+      s"""WITH $signupPurchaseSql,
         |dur AS (
         |  SELECT s0.user_id,
         |    CASE WHEN p1.t1 IS NULL THEN h.hh - s0.t0 ELSE p1.t1 - s0.t0 END AS t,
         |    CASE WHEN p1.t1 IS NULL THEN 0 ELSE 1 END AS ev
         |  FROM s0 LEFT JOIN p1 ON p1.user_id = s0.user_id CROSS JOIN h),
-        |nt AS (SELECT count(*) AS n FROM dur),
-        |byt AS (SELECT t, count(*) AS c, sum(ev) AS d FROM dur GROUP BY 1),
-        |rk AS (
-        |  SELECT t, d,
-        |    nt.n - coalesce(sum(c) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-        |  FROM byt CROSS JOIN nt),
-        |km AS (
-        |  SELECT t, d, n_risk,
-        |    exp(sum(ln(CASE WHEN d >= n_risk THEN 1
-        |      ELSE 1 - CAST(d AS DOUBLE) / n_risk END)) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS surv,
-        |    max(CASE WHEN d >= n_risk THEN 1 ELSE 0 END) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead
-        |  FROM rk WHERE d > 0)
+        |$kmSql
         |SELECT t AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
         |  CAST(d AS BIGINT) AS n_events,
         |  round(CASE WHEN dead = 1 THEN 0.0 ELSE surv END, 6) AS survival
         |FROM km ORDER BY duration_days""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d).select(col("user_id"), col("event_type"),
-        datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).as("di"))
-      val h = ev.agg(max(col("di")).as("hh"))
-      val s0 = ev.where(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("di")).as("t0"))
-      val p1 = ev.where(col("event_type") === "purchase")
-        .join(s0.select(col("user_id").as("su"), col("t0")),
-          col("su") === col("user_id") && col("di") >= col("t0"))
-        .groupBy(col("user_id").as("pu")).agg(min(col("di")).as("t1"))
-      val dur = s0.join(p1, col("pu") === col("user_id"), "left")
-        .crossJoin(broadcast(h))
-        .select(
-          when(col("t1").isNull, col("hh") - col("t0"))
-            .otherwise(col("t1") - col("t0")).as("t"),
-          when(col("t1").isNull, lit(0)).otherwise(lit(1)).as("ev"))
-      val nt = dur.agg(count(lit(1)).as("n"))
-      val byt = dur.groupBy(col("t"))
-        .agg(count(lit(1)).as("c"), sum(col("ev")).as("d"))
-      val wPrev = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val rk = byt.crossJoin(broadcast(nt))
-        .select(col("t"), col("d"),
-          (col("n") - coalesce(sum(col("c")).over(wPrev), lit(0L))).as("n_risk"))
-      val wCum = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // a curve-terminating event (d == n_risk) would be ln(0): Spark's
-      // log yields NULL there while DuckDB raises — so the terminal term
-      // contributes ln(1) and a cumulative `dead` flag pins survival to
-      // exactly 0.0 from that event on, identically in both engines
-      rk.where(col("d") > 0)
-        .select(col("t"), col("d"), col("n_risk"),
-          exp(sum(log(when(col("d") >= col("n_risk"), lit(1.0))
-            .otherwise(lit(1) - col("d").cast("double") / col("n_risk"))))
-            .over(wCum)).as("surv"),
-          max(when(col("d") >= col("n_risk"), lit(1)).otherwise(lit(0)))
-            .over(wCum).as("dead"))
+      kmCurve(signupPurchase(s, d).select(durT, durEv))
         .select(col("t").as("duration_days"),
           col("n_risk").cast("long").as("n_risk"),
           col("d").cast("long").as("n_events"),
@@ -497,18 +539,7 @@ object InferenceOps {
       */
     QueryDef(
       "q278_logrank_test",
-      """WITH di AS (
-        |  SELECT user_id, event_type,
-        |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS di
-        |  FROM events),
-        |h AS (SELECT max(di) AS hh FROM di),
-        |s0 AS (
-        |  SELECT user_id, min(di) AS t0 FROM di
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |p1 AS (
-        |  SELECT d.user_id, min(d.di) AS t1
-        |  FROM di d JOIN s0 ON s0.user_id = d.user_id
-        |  WHERE d.event_type = 'purchase' AND d.di >= s0.t0 GROUP BY 1),
+      s"""WITH $signupPurchaseSql,
         |dur AS (
         |  SELECT s0.user_id,
         |    ('0x' || substr(md5(CAST(s0.user_id AS VARCHAR)), 1, 15))::BIGINT % 2 AS arm,
@@ -550,23 +581,10 @@ object InferenceOps {
         |  round((o1 - e1) * (o1 - e1) / nullif(v, 0), 6) AS logrank_chi2
         |FROM o""".stripMargin) { (s, d) =>
       import s.implicits._
-      val ev = Tables.events(s, d).select(col("user_id"), col("event_type"),
-        datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).as("di"))
-      val h = ev.agg(max(col("di")).as("hh"))
-      val s0 = ev.where(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("di")).as("t0"))
-      val p1 = ev.where(col("event_type") === "purchase")
-        .join(s0.select(col("user_id").as("su"), col("t0")),
-          col("su") === col("user_id") && col("di") >= col("t0"))
-        .groupBy(col("user_id").as("pu")).agg(min(col("di")).as("t1"))
-      val dur = s0.join(p1, col("pu") === col("user_id"), "left")
-        .crossJoin(broadcast(h))
-        .select(
-          (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
-            .cast("long") % 2).as("arm"),
-          when(col("t1").isNull, col("hh") - col("t0"))
-            .otherwise(col("t1") - col("t0")).as("t"),
-          when(col("t1").isNull, lit(0)).otherwise(lit(1)).as("ev"))
+      val dur = signupPurchase(s, d).select(
+        (conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
+          .cast("long") % 2).as("arm"),
+        durT, durEv)
       val na = dur.agg(
         sum(when(col("arm") === 1, 1).otherwise(0)).as("n1t"),
         sum(when(col("arm") === 0, 1).otherwise(0)).as("n0t"))
@@ -945,12 +963,7 @@ object InferenceOps {
     QueryDef(
       "q303_bootstrap_ci", {
         val hs = "1152921504606846977.0"
-        s"""WITH conv AS (
-           |  SELECT user_id,
-           |    CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':ab1'), 1, 15))::BIGINT % 2 = 0
-           |         THEN 'A' ELSE 'B' END AS variant,
-           |    max(CASE WHEN event_type = 'purchase' AND value > 250 THEN 1 ELSE 0 END) AS y
-           |  FROM events GROUP BY 1),
+        s"""WITH $abConvSql,
            |reps AS (SELECT unnest(range(1, 201)) AS b),
            |wts AS (
            |  SELECT c.variant, r.b, c.y,
@@ -1093,12 +1106,7 @@ object InferenceOps {
       */
     QueryDef(
       "q305_power_mde",
-      """WITH conv AS (
-        |  SELECT user_id,
-        |    CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':ab1'), 1, 15))::BIGINT % 2 = 0
-        |         THEN 'A' ELSE 'B' END AS variant,
-        |    max(CASE WHEN event_type = 'purchase' AND value > 250 THEN 1 ELSE 0 END) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH $abConvSql,
         |w AS (
         |  SELECT CAST(count_if(variant = 'A') AS BIGINT) AS na,
         |    CAST(count_if(variant = 'B') AS BIGINT) AS nb,

@@ -428,25 +428,14 @@ object LLMPipeline {
     QueryDef(
       "q65_centroid_knn",
       s"""WITH ${HybridOps.centroidSql},
-        |assigned AS (
-        |  SELECT e.vec_id, e.label, c.clabel,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], c.cvec) DESC,
-        |               c.clabel) AS rn
-        |  FROM embeddings e CROSS JOIN centv c)
+        |${HybridOps.assignedSql("e.label")}
         |SELECT label, clabel AS pred_label, count(*) AS n
         |FROM assigned WHERE rn = 1
         |GROUP BY label, clabel ORDER BY label, pred_label""".stripMargin) { (s, d) =>
       import s.implicits._
       val e = Tables.embeddings(s, d)
         .withColumn("emb", col("embedding").cast("array<double>"))
-      val cent = e
-        .select(col("label").as("clabel"),
-          posexplode(col("emb")).as(Seq("i", "x")))
-        .groupBy("clabel", "i").agg(avg(col("x")).as("cx"))
-        .groupBy("clabel")
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
-          s => s.getField("cx")).as("cvec"))
+      val cent = HybridOps.labelCentroids(e)
       // Assignment runs as a typed mapPartitions over the driver-held
       // centroid matrix (round 14 — the q477/semAssign typed-kernel
       // lesson applied to the last remaining Column-fold argmax: the

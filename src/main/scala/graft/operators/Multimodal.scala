@@ -19,6 +19,20 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  /** Every pixel (x, y) of the synthetic image asset of each 7th
+    * document (`assets`, `g`, `px`): width 8 + doc_id % 9 and height
+    * 8 + (doc_id · hMul) % 9. q473 (hMul 3) and q475 (hMul 5). */
+  private def pixelGridSql(hMul: Int): String =
+    s"""assets AS (
+       |  SELECT doc_id,
+       |    CAST(8 + doc_id % 9 AS INT) AS width,
+       |    CAST(8 + (doc_id * $hMul) % 9 AS INT) AS height
+       |  FROM documents WHERE doc_id % 7 = 0),
+       |g AS (SELECT unnest(range(0, 17)) AS i),
+       |px AS (
+       |  SELECT a.doc_id, a.width, a.height, gx.i AS x, gy.i AS y
+       |  FROM assets a JOIN g gx ON gx.i < a.width JOIN g gy ON gy.i < a.height)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Binary column + typed metadata + frame sampling: pack text bytes
@@ -218,15 +232,7 @@ object Multimodal {
       */
     QueryDef(
       "q473_image_decode",
-      """WITH assets AS (
-        |  SELECT doc_id,
-        |    CAST(8 + doc_id % 9 AS INT) AS width,
-        |    CAST(8 + (doc_id * 3) % 9 AS INT) AS height
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |g AS (SELECT unnest(range(0, 17)) AS i),
-        |px AS (
-        |  SELECT a.doc_id, a.width, a.height, gx.i AS x, gy.i AS y
-        |  FROM assets a JOIN g gx ON gx.i < a.width JOIN g gy ON gy.i < a.height)
+      s"""WITH ${pixelGridSql(3)}
         |SELECT doc_id, width, height, 24 AS bpp,
         |  CAST(54 + height * ((width * 3 + 3) // 4 * 4) AS BIGINT) AS n_bytes,
         |  round(sum((31 * doc_id + 7 * x + 13 * y) % 256) / (width * height), 6) AS mean_b,
@@ -275,15 +281,7 @@ object Multimodal {
       */
     QueryDef(
       "q475_png_decode",
-      """WITH assets AS (
-        |  SELECT doc_id,
-        |    CAST(8 + doc_id % 9 AS INT) AS width,
-        |    CAST(8 + (doc_id * 5) % 9 AS INT) AS height
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |g AS (SELECT unnest(range(0, 17)) AS i),
-        |px AS (
-        |  SELECT a.doc_id, a.width, a.height, gx.i AS x, gy.i AS y
-        |  FROM assets a JOIN g gx ON gx.i < a.width JOIN g gy ON gy.i < a.height)
+      s"""WITH ${pixelGridSql(5)}
         |SELECT doc_id, width, height, 8 AS bit_depth, 2 AS color_type,
         |  4 AS n_chunks,
         |  CAST(height * (1 + width * 3) AS BIGINT) AS n_raw_bytes,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-quality operators from the modern LLM-data-curation playbook
@@ -39,6 +40,54 @@ import org.apache.spark.sql.functions._
 object QualityOps {
 
   private val duckWords = "list_filter(string_split(text, ' '), x -> x != '')"
+
+  /** Each document token's md5-mod-512 hash bucket (`tok`, `bk`): the
+    * DSIR feature space of q318 and q354. */
+  private val dsirBucketsSql =
+    s"""tok AS (
+      |  SELECT doc_id, lang, unnest($duckWords) AS w FROM documents),
+      |bk AS (
+      |  SELECT doc_id, lang,
+      |    ('0x' || substr(md5(w), 1, 15))::BIGINT % 512 AS b
+      |  FROM tok)""".stripMargin
+
+  /** [[dsirBucketsSql]]'s engine form: (doc_id, lang, b) per token. */
+  private def dsirBuckets(s: SparkSession, d: String): DataFrame =
+    // documentsParallel (round 17): the md5-per-token bucket pass runs
+    // twice (distribution build + scoring join) and was split-starved
+    // to ONE task (~1.4 s for q354) at the sf rungs — see Tables scaladoc
+    Tables.documentsParallel(s, d)
+      .select(col("doc_id"), col("lang"),
+        explode(graft.functions.Text.wordsCol(col("text"))).as("w"))
+      .select(col("doc_id"), col("lang"),
+        (conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long") % 512).as("b"))
+
+  /** Per-bucket DSIR log-ratio λ(b) = ln p_en(b) − ln p_raw(b), add-one
+    * smoothed, from [[dsirBuckets]] rows: (lb, lam). */
+  private def dsirLambda(bk: DataFrame): DataFrame = {
+    // BOTH distributions and both totals from ONE corpus pass: a
+    // single 512-group aggregate carries (raw count, target count)
+    // per bucket; the totals fold from those 512 rows, not the
+    // corpus. (The naive tc/rc/nt-as-separate-aggregates shape scans
+    // the token stream three times — at 100 TB that is three corpus
+    // reads for numbers one pass already contains.)
+    val rc = bk.groupBy(col("b").as("rb"))
+      .agg(count(lit(1)).as("cr"),
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"))
+    // totals as a global window OVER THE 512-ROW AGGREGATE (not the
+    // corpus): a one-partition window is exactly right at this size,
+    // and it keeps the whole distribution build one scan lineage —
+    // a separate rc.agg() would re-derive the subtree and re-read
+    // the corpus a third time
+    val wAll = org.apache.spark.sql.expressions.Window
+      .partitionBy(lit(1)).rowsBetween(Long.MinValue, Long.MaxValue)
+    rc
+      .withColumn("n_t", sum(col("ct")).over(wAll).cast("double"))
+      .withColumn("n_r", sum(col("cr")).over(wAll).cast("double"))
+      .select(col("rb").as("lb"),
+        (log((col("ct") + 1) / (col("n_t") + 512)) -
+          log((col("cr") + 1) / (col("n_r") + 512))).as("lam"))
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -107,12 +156,7 @@ object QualityOps {
       * back into one token-grain pass. */
     QueryDef(
       "q318_dsir_weights",
-      s"""WITH tok AS (
-        |  SELECT doc_id, lang, unnest($duckWords) AS w FROM documents),
-        |bk AS (
-        |  SELECT doc_id, lang,
-        |    ('0x' || substr(md5(w), 1, 15))::BIGINT % 512 AS b
-        |  FROM tok),
+      s"""WITH $dsirBucketsSql,
         |tc AS (SELECT b AS tb, count(*) AS ct FROM bk WHERE lang = 'en' GROUP BY 1),
         |rc AS (SELECT b AS rb, count(*) AS cr FROM bk GROUP BY 1),
         |nt AS (SELECT CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS DOUBLE) AS n_t,
@@ -128,36 +172,8 @@ object QualityOps {
         |  GROUP BY 1, 2)
         |SELECT doc_id, lang, CAST(n AS BIGINT) AS n_tokens, round(dsir, 6) AS dsir_logratio
         |FROM sc ORDER BY round(dsir, 6) DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      // documentsParallel (round 17): the md5-per-token bucket pass runs
-      // twice (distribution build + scoring join) and was split-starved
-      // to ONE task at the sf rungs — see Tables scaladoc
-      val bk = Tables.documentsParallel(s, d)
-        .select(col("doc_id"), col("lang"),
-          explode(graft.functions.Text.wordsCol(col("text"))).as("w"))
-        .select(col("doc_id"), col("lang"),
-          (conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long") % 512).as("b"))
-      // BOTH distributions and both totals from ONE corpus pass: a
-      // single 512-group aggregate carries (raw count, target count)
-      // per bucket; the totals fold from those 512 rows, not the
-      // corpus. (The naive tc/rc/nt-as-separate-aggregates shape scans
-      // the token stream three times — at 100 TB that is three corpus
-      // reads for numbers one pass already contains.)
-      val rc = bk.groupBy(col("b").as("rb"))
-        .agg(count(lit(1)).as("cr"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"))
-      // totals as a global window OVER THE 512-ROW AGGREGATE (not the
-      // corpus): a one-partition window is exactly right at this size,
-      // and it keeps the whole distribution build one scan lineage —
-      // a separate rc.agg() would re-derive the subtree and re-read
-      // the corpus a third time
-      val wAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(lit(1)).rowsBetween(Long.MinValue, Long.MaxValue)
-      val lam = rc
-        .withColumn("n_t", sum(col("ct")).over(wAll).cast("double"))
-        .withColumn("n_r", sum(col("cr")).over(wAll).cast("double"))
-        .select(col("rb").as("lb"),
-          (log((col("ct") + 1) / (col("n_t") + 512)) -
-            log((col("cr") + 1) / (col("n_r") + 512))).as("lam"))
+      val bk = dsirBuckets(s, d)
+      val lam = dsirLambda(bk)
       bk.join(broadcast(lam), col("lb") === col("b"))
         .groupBy(col("doc_id"), col("lang"))
         .agg(count(lit(1)).as("n"),
@@ -327,12 +343,7 @@ object QualityOps {
       */
     QueryDef(
       "q354_dsir_lift",
-      s"""WITH tok AS (
-        |  SELECT doc_id, lang, unnest($duckWords) AS w FROM documents),
-        |bk AS (
-        |  SELECT doc_id, lang,
-        |    ('0x' || substr(md5(w), 1, 15))::BIGINT % 512 AS b
-        |  FROM tok),
+      s"""WITH $dsirBucketsSql,
         |rc AS (
         |  SELECT b AS rb, count(*) AS cr,
         |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS ct
@@ -369,25 +380,8 @@ object QualityOps {
         |  round(CAST(cum_en AS DOUBLE) / ne, 6) AS cum_recall,
         |  round((CAST(cum_en AS DOUBLE) / ne) / (CAST(cum_docs AS DOUBLE) / nd), 6) AS lift
         |FROM cum ORDER BY decile""".stripMargin) { (s, d) =>
-      // documentsParallel (round 17): the md5-per-token bucket pass runs
-      // twice (rc distribution + sc scoring) and was split-starved to
-      // ONE ~1.4 s task at the sf rungs — see Tables scaladoc
-      val bk = Tables.documentsParallel(s, d)
-        .select(col("doc_id"), col("lang"),
-          explode(graft.functions.Text.wordsCol(col("text"))).as("w"))
-        .select(col("doc_id"), col("lang"),
-          (conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long") % 512).as("b"))
-      val rc = bk.groupBy(col("b").as("rb"))
-        .agg(count(lit(1)).as("cr"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"))
-      val wAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(lit(1)).rowsBetween(Long.MinValue, Long.MaxValue)
-      val lam = rc
-        .withColumn("n_t", sum(col("ct")).over(wAll).cast("double"))
-        .withColumn("n_r", sum(col("cr")).over(wAll).cast("double"))
-        .select(col("rb").as("lb"),
-          (log((col("ct") + 1) / (col("n_t") + 512)) -
-            log((col("cr") + 1) / (col("n_r") + 512))).as("lam"))
+      val bk = dsirBuckets(s, d)
+      val lam = dsirLambda(bk)
       val sc = graft.PlanCache.cached(s, s"q354_scores|$d") {
         bk.join(broadcast(lam), col("lb") === col("b"))
           .groupBy(col("doc_id"), col("lang"))

@@ -30,6 +30,17 @@ object Relational {
     col("l_quantity") / 10.0 - col("l_discount") * 20.0 + col("l_tax") * 5.0 - lit(1.5)
   private def yCol: Column = (col("l_returnflag") === "R").cast("double")
 
+  /** The q20/q21 scored set with each row's mid-rank mr of its score z
+    * (`scored`, `ranked`): q21 and q365. */
+  private[operators] val scoredRankSql =
+    """scored AS (
+      |  SELECT l_quantity/10.0 - l_discount*20.0 + l_tax*5.0 - 1.5 AS z,
+      |    CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
+      |  FROM lineitem),
+      |ranked AS (
+      |  SELECT y, rank() OVER (ORDER BY z) + (count(*) OVER (PARTITION BY z) - 1)/2.0 AS mr
+      |  FROM scored)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- group 4: the flagship pricing-summary aggregate (SURVEY.md §7.2) ----
@@ -444,13 +455,7 @@ object Relational {
       */
     QueryDef(
       "q21_auc_rank",
-      """WITH scored AS (
-        |  SELECT l_quantity/10.0 - l_discount*20.0 + l_tax*5.0 - 1.5 AS z,
-        |    CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
-        |  FROM lineitem),
-        |ranked AS (
-        |  SELECT y, rank() OVER (ORDER BY z) + (count(*) OVER (PARTITION BY z) - 1)/2.0 AS mr
-        |  FROM scored)
+      s"""WITH $scoredRankSql
         |SELECT
         |  round((sum(CASE WHEN y = 1.0 THEN mr END) - sum(y)*(sum(y)+1)/2) / (sum(y)*sum(1.0-y)), 6) AS auc,
         |  CAST(sum(y) AS BIGINT) AS n_pos,
@@ -585,9 +590,13 @@ object Relational {
       * `np.random.choice(n, 128, replace=False)` (`model.py:191`),
       * drawn as a portable-hash ORDER STATISTIC (round 13, the q127/q166
       * idiom that made the stratified sample oracle-checkable): rank
-      * every row by md5 of its unique key and keep the 128 smallest —
-      * uniform without replacement under the hash's uniformity, fully
-      * deterministic, and bit-identical in any engine that has md5.
+      * every row by md5 of its (l_orderkey, l_linenumber) key and keep
+      * the 128 smallest — uniform without replacement under the hash's
+      * uniformity, fully deterministic, and bit-identical in any engine
+      * that has md5. The key is not unique in the test data (up to 6
+      * rows share one pair), so l_quantity breaks md5 ties: rows that
+      * still tie are identical, and either engine's pick among them
+      * yields the same rows.
       * The plan is TakeOrderedAndProject (per-partition 128-row heaps,
       * only k rows reach the driver merge) — the 100 TB shape; the old
       * `orderBy(rand(seed))` form had the same plan but engine-private
@@ -600,16 +609,16 @@ object Relational {
         |  SELECT l_orderkey, l_linenumber, l_quantity
         |  FROM lineitem
         |  ORDER BY md5(CAST(l_orderkey AS VARCHAR) || '#' ||
-        |    CAST(l_linenumber AS VARCHAR))
+        |    CAST(l_linenumber AS VARCHAR)), l_quantity
         |  LIMIT 128)
         |SELECT l_orderkey, l_linenumber, l_quantity FROM s
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, d) =>
+        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin) { (s, d) =>
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity")
         .orderBy(md5(concat(col("l_orderkey").cast("string"), lit("#"),
-          col("l_linenumber").cast("string"))))
+          col("l_linenumber").cast("string"))), col("l_quantity"))
         .limit(128)
-        .orderBy("l_orderkey", "l_linenumber")
+        .orderBy("l_orderkey", "l_linenumber", "l_quantity")
     },
 
     /** Sketch aggregates — HLL distinct + KLL-style approx_percentile

@@ -226,22 +226,14 @@ object RetainOracleSql {
        |  round(list_max(al), 6) AS top_alpha
        |FROM alphaorig ORDER BY user_id""".stripMargin
 
-  /** q78: per-task accuracy@0.5 / mean CE / exact mid-rank AUC over the
-    * UNROUNDED probabilities joined to the post-split labels — the same
-    * metric formulas as the q20/q21 oracles.
-    */
-  def q78(ckptGlob: String): String = {
+  /** The recomputed LSTM-path probabilities p0..p2 joined to the
+    * post-split labels y0..y2, with per-task mid-ranks mr0..mr2
+    * (`probsu`, `labels`, `scoredy`, `ranked`): q78 and q254. */
+  private def scoredRankedSql(ckptGlob: String): String = {
     val labelCols = Seq("purchase" -> "y0", "error" -> "y1", "signup" -> "y2")
       .map { case (t, y) =>
         s"max(CASE WHEN event_type='$t' AND value > 140.0 THEN 1.0 ELSE 0.0 END) AS $y"
       }.mkString(",\n    ")
-    def taskSel(k: Int): String =
-      s"""SELECT $k AS task,
-         |  round(100.0*avg(CASE WHEN (p$k >= 0.5) = (y$k = 1.0) THEN 1.0 ELSE 0.0 END), 4) AS acc_pct,
-         |  round(avg(-(y$k*ln(p$k) + (1.0-y$k)*ln(1.0-p$k))), 6) AS ce,
-         |  round((sum(CASE WHEN y$k = 1.0 THEN mr$k END) - sum(y$k)*(sum(y$k)+1)/2.0)
-         |    / (sum(y$k)*sum(1.0-y$k)), 6) AS auc
-         |FROM ranked""".stripMargin
     s"""${pipeline(ckptGlob, lstmLay, lstmStepCte)},
        |probsu AS (
        |  SELECT user_id, ${(0 until K).map(k => s"${prob(k, lstmLay)} AS p$k").mkString(", ")} FROM ctxt),
@@ -258,7 +250,22 @@ object RetainOracleSql {
        |    ${(0 until K).map(k =>
            s"rank() OVER (ORDER BY p$k) + (count(*) OVER (PARTITION BY p$k) - 1)/2.0 AS mr$k")
            .mkString(",\n    ")}
-       |  FROM scoredy)
+       |  FROM scoredy)""".stripMargin
+  }
+
+  /** q78: per-task accuracy@0.5 / mean CE / exact mid-rank AUC over the
+    * UNROUNDED probabilities joined to the post-split labels — the same
+    * metric formulas as the q20/q21 oracles.
+    */
+  def q78(ckptGlob: String): String = {
+    def taskSel(k: Int): String =
+      s"""SELECT $k AS task,
+         |  round(100.0*avg(CASE WHEN (p$k >= 0.5) = (y$k = 1.0) THEN 1.0 ELSE 0.0 END), 4) AS acc_pct,
+         |  round(avg(-(y$k*ln(p$k) + (1.0-y$k)*ln(1.0-p$k))), 6) AS ce,
+         |  round((sum(CASE WHEN y$k = 1.0 THEN mr$k END) - sum(y$k)*(sum(y$k)+1)/2.0)
+         |    / (sum(y$k)*sum(1.0-y$k)), 6) AS auc
+         |FROM ranked""".stripMargin
+    s"""${scoredRankedSql(ckptGlob)}
        |${(0 until K).map(taskSel).mkString("\nUNION ALL\n")}
        |ORDER BY task""".stripMargin
   }
@@ -272,10 +279,6 @@ object RetainOracleSql {
     * margin of the UNROUNDED probabilities.
     */
   def q254(ckptGlob: String, bins: Int): String = {
-    val labelCols = Seq("purchase" -> "y0", "error" -> "y1", "signup" -> "y2")
-      .map { case (t, y) =>
-        s"max(CASE WHEN event_type='$t' AND value > 140.0 THEN 1.0 ELSE 0.0 END) AS $y"
-      }.mkString(",\n    ")
     def taskCtes(k: Int): String =
       s"""bins$k AS (
          |  SELECT least(CAST(floor(p$k * $bins) AS INT), ${bins - 1}) AS bin,
@@ -296,23 +299,7 @@ object RetainOracleSql {
       s"""SELECT $k AS task, round(e.ae, 6) AS auc_exact, round(a.ab, 6) AS auc_b$bins,
          |  round(abs(a.ab - e.ae), 6) AS approx_err
          |FROM auce$k e CROSS JOIN aucb$k a""".stripMargin
-    s"""${pipeline(ckptGlob, lstmLay, lstmStepCte)},
-       |probsu AS (
-       |  SELECT user_id, ${(0 until K).map(k => s"${prob(k, lstmLay)} AS p$k").mkString(", ")} FROM ctxt),
-       |labels AS (
-       |  SELECT user_id,
-       |    $labelCols
-       |  FROM events WHERE ts >= TIMESTAMP '2024-01-12 00:00:00' GROUP BY user_id),
-       |scoredy AS (
-       |  SELECT p.user_id, ${(0 until K).map(k => s"p.p$k").mkString(", ")},
-       |    ${(0 until K).map(k => s"coalesce(l.y$k, 0.0) AS y$k").mkString(", ")}
-       |  FROM probsu p LEFT JOIN labels l USING (user_id)),
-       |ranked AS (
-       |  SELECT *,
-       |    ${(0 until K).map(k =>
-           s"rank() OVER (ORDER BY p$k) + (count(*) OVER (PARTITION BY p$k) - 1)/2.0 AS mr$k")
-           .mkString(",\n    ")}
-       |  FROM scoredy),
+    s"""${scoredRankedSql(ckptGlob)},
        |${(0 until K).map(taskCtes).mkString(",\n")}
        |${(0 until K).map(taskSel).mkString("\nUNION ALL\n")}
        |ORDER BY task""".stripMargin

@@ -553,11 +553,7 @@ object Round12Ops {
       */
     QueryDef(
       "q364_triangles",
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |e AS (
-        |  SELECT a.p AS u, b.p AS v
-        |  FROM op a JOIN op b ON b.o = a.o AND b.p > a.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH ${GraphOps.coorderEdgesSql("e AS")},
         |deg AS (
         |  SELECT w, count(*) AS dg FROM (
         |    SELECT u AS w FROM e UNION ALL SELECT v AS w FROM e) GROUP BY 1),
@@ -632,13 +628,7 @@ object Round12Ops {
       */
     QueryDef(
       "q365_auc_ci",
-      s"""WITH scored AS (
-         |  SELECT l_quantity/10.0 - l_discount*20.0 + l_tax*5.0 - 1.5 AS z,
-         |    CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
-         |  FROM lineitem),
-         |ranked AS (
-         |  SELECT y, rank() OVER (ORDER BY z) + (count(*) OVER (PARTITION BY z) - 1)/2.0 AS mr
-         |  FROM scored),
+      s"""WITH ${Relational.scoredRankSql},
          |agg AS (
          |  SELECT sum(CASE WHEN y = 1.0 THEN mr END) AS spr,
          |    sum(y) AS np, sum(1.0-y) AS nn

@@ -324,7 +324,7 @@ object Round13Ops {
       */
     QueryDef(
       "q371_matrix_profile",
-      s"""WITH $dailySqlR13,
+      s"""WITH ${CausalOps.dailySql},
         |pos AS (
         |  SELECT el, row_number() OVER (PARTITION BY el ORDER BY di) AS t, v,
         |    count(*) OVER (PARTITION BY el) AS n
@@ -439,7 +439,4 @@ object Round13Ops {
         .orderBy("el")
     }
   )
-
-  /** q371's oracle shares the causal family's daily-grid CTE. */
-  private def dailySqlR13: String = CausalOps.dailySql
 }

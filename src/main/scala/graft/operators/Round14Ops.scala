@@ -371,11 +371,7 @@ object Round14Ops {
              |  (SELECT CAST(count(*) AS BIGINT) FROM e$r) AS n_edges"""
             .stripMargin
         }.mkString("\nUNION ALL\n")
-        s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-           |e0 AS MATERIALIZED (
-           |  SELECT a.p AS u, b.p AS v
-           |  FROM op a JOIN op b ON b.o = a.o AND b.p > a.p
-           |  GROUP BY 1, 2 HAVING count(*) >= 2),
+        s"""WITH ${GraphOps.coorderEdgesSql("e0 AS MATERIALIZED")},
            |$rounds
            |SELECT * FROM (
            |$stats

@@ -658,11 +658,7 @@ object Round15Ops {
              |    (SELECT count(*) AS c FROM l$r GROUP BY lbl)) AS top_community"""
             .stripMargin
         }.mkString("\nUNION ALL\n")
-        s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-           |e0 AS MATERIALIZED (
-           |  SELECT a.p AS u, b.p AS v
-           |  FROM op a JOIN op b ON b.o = a.o AND b.p > a.p
-           |  GROUP BY 1, 2 HAVING count(*) >= 2),
+        s"""WITH ${GraphOps.coorderEdgesSql("e0 AS MATERIALIZED")},
            |und AS MATERIALIZED (
            |  SELECT u AS src, v AS dst FROM e0
            |  UNION ALL SELECT v AS src, u AS dst FROM e0),

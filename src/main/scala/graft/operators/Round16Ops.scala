@@ -44,6 +44,49 @@ object Round16Ops {
   private[operators] def neWStage(carry: Seq[String]): Array[String] = (carry ++ Seq(
     "dt1/dt AS c0", "dt2/dt AS c1", "dt3/dt AS c2")).toArray
 
+  /** One arm's outcome-OLS moments a12..b3 over `fx` (x1, x2, y, t),
+    * as SELECT-list lines; a11 (the arm's count) is the caller's:
+    * q389 and q391. */
+  private[operators] def armMomentsSql(arm: String): String =
+    s"""    ${dsumSql(s"CASE WHEN t = $arm THEN x1 END")} AS a12,
+       |    ${dsumSql(s"CASE WHEN t = $arm THEN x2 END")} AS a13,
+       |    ${dsumSql(s"CASE WHEN t = $arm THEN x1*x1 END")} AS a22,
+       |    ${dsumSql(s"CASE WHEN t = $arm THEN x1*x2 END")} AS a23,
+       |    ${dsumSql(s"CASE WHEN t = $arm THEN x2*x2 END")} AS a33,
+       |    ${dsumSql(s"CASE WHEN t = $arm THEN y END")} AS b1,
+       |    ${dsumSql(s"CASE WHEN t = $arm THEN y*x1 END")} AS b2,
+       |    ${dsumSql(s"CASE WHEN t = $arm THEN y*x2 END")} AS b3""".stripMargin
+
+  /** The logistic propensity start over `fx` (`pb`, `p0`: c0 = the
+    * logit of the treated share, c1 = c2 = 0): q389 and q395. */
+  private[operators] val logitStartSql =
+    s"""pb AS (SELECT ${dsumSql("t")} / count(*) AS pbar FROM fx),
+       |p0 AS (SELECT ln(pbar/(CAST(1 AS DOUBLE) - pbar)) AS c0,
+       |  CAST(0 AS DOUBLE) AS c1, CAST(0 AS DOUBLE) AS c2 FROM pb)""".stripMargin
+
+  /** The FROM clause of a logistic IRLS step: per `fx` row the weight
+    * v = p(1−p) and working response vz at the coefficients held in
+    * CTE `prev`: q389 and q395. */
+  private[operators] def logitWorkSql(prev: String): String =
+    s"""  FROM (
+       |    SELECT x1, x2, p*(CAST(1 AS DOUBLE) - p) AS v,
+       |      p*(CAST(1 AS DOUBLE) - p)*eta + (t - p) AS vz
+       |    FROM (
+       |      SELECT fx.t, fx.x1, fx.x2, q.c0 + q.c1*fx.x1 + q.c2*fx.x2 AS eta,
+       |        CAST(1 AS DOUBLE)/(CAST(1 AS DOUBLE)
+       |          + exp(-(q.c0 + q.c1*fx.x1 + q.c2*fx.x2))) AS p
+       |      FROM fx CROSS JOIN $prev q) z1) z2)""".stripMargin
+
+  /** The closed-form weighted least-squares solve (a, b) per element
+    * from the moments of CTE `m<tag>`, as CTE `p<tag>`: the IRLS steps
+    * of q385 and q424. */
+  private[operators] def wlsSolveSql(tag: String): String =
+    s"""p$tag AS (
+       |  SELECT el,
+       |    (swz - ((sw*swuz - swu*swz)/(sw*swuu - swu*swu))*swu)/sw AS a,
+       |    (sw*swuz - swu*swz)/(sw*swuu - swu*swu) AS b
+       |  FROM m$tag)""".stripMargin
+
   /** The count-GLM cells (el, u = day/29, cnt) — one PlanCache entry per
     * session, shared by q385's Poisson fit and q424's negative binomial.
     */
@@ -54,6 +97,19 @@ object Round16Ops {
             .cast("double") / lit(29.0)).as("u"))
         .agg(count(lit(1)).cast("double").as("cnt"))
     }
+
+  /** Oracle of [[countCells]] (`cd`) and the null-model start `p0`
+    * (a = ln mean count, b = 0) of the count GLMs q385 and q424. */
+  private[operators] val countCellsSql =
+    s"""cd AS MATERIALIZED (
+       |  SELECT event_type AS el,
+       |    CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS DOUBLE)
+       |      / CAST(29 AS DOUBLE) AS u,
+       |    CAST(count(*) AS DOUBLE) AS cnt
+       |  FROM events GROUP BY 1, 2),
+       |p0 AS (
+       |  SELECT el, ln(${dsumSql("cnt")} / count(*)) AS a, CAST(0 AS DOUBLE) AS b
+       |  FROM cd GROUP BY el)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -74,91 +130,21 @@ object Round16Ops {
       * fold. Subject table built once (PlanCache), three passes total.
       */
     QueryDef(
-      "q384_cox_ph", {
-        // one Newton pass at the β held in CTE `bIN` → 1-row (u, i) CTE
-        def pass(tag: String, bIn: String) =
-          s"""g$tag AS (
-             |  SELECT t, ${dsumSql("ev")} AS d, ${dsumSql("ev*x")} AS sxd,
-             |    ${dsumSql(s"exp(($bIn.b)*x)")} AS e0,
-             |    ${dsumSql(s"x*exp(($bIn.b)*x)")} AS e1,
-             |    ${dsumSql(s"x*x*exp(($bIn.b)*x)")} AS e2
-             |  FROM dur CROSS JOIN $bIn GROUP BY 1),
-             |r$tag AS (
-             |  SELECT t, d, sxd,
-             |    CAST(sum(CAST(e0 AS DECIMAL(38,12))) OVER (ORDER BY t
-             |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s0,
-             |    CAST(sum(CAST(e1 AS DECIMAL(38,12))) OVER (ORDER BY t
-             |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s1,
-             |    CAST(sum(CAST(e2 AS DECIMAL(38,12))) OVER (ORDER BY t
-             |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s2
-             |  FROM g$tag),
-             |ui$tag AS (
-             |  SELECT ${dsumSql("sxd - d*(s1/s0)")} AS u,
-             |    ${dsumSql("d*((s2/s0) - (s1/s0)*(s1/s0))")} AS i
-             |  FROM r$tag WHERE d > 0)""".stripMargin
-        s"""WITH di AS (
-           |  SELECT user_id, event_type,
-           |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS di
-           |  FROM events),
-           |h AS (SELECT max(di) AS hh FROM di),
-           |s0 AS (SELECT user_id, min(di) AS t0 FROM di
-           |  WHERE event_type = 'signup' GROUP BY 1),
-           |p1 AS (
-           |  SELECT d.user_id, min(d.di) AS t1
-           |  FROM di d JOIN s0 ON s0.user_id = d.user_id
-           |  WHERE d.event_type = 'purchase' AND d.di >= s0.t0 GROUP BY 1),
-           |xc AS (SELECT user_id, count(*) AS nc FROM di
-           |  WHERE event_type = 'click' GROUP BY 1),
-           |dur AS MATERIALIZED (
-           |  SELECT s0.user_id,
-           |    CASE WHEN p1.t1 IS NULL THEN h.hh - s0.t0 ELSE p1.t1 - s0.t0 END AS t,
-           |    CASE WHEN p1.t1 IS NULL THEN 0 ELSE 1 END AS ev,
-           |    CAST(coalesce(xc.nc, 0) AS DOUBLE) AS x
-           |  FROM s0 LEFT JOIN p1 ON p1.user_id = s0.user_id
-           |  LEFT JOIN xc ON xc.user_id = s0.user_id CROSS JOIN h),
-           |b0 AS (SELECT CAST(0 AS DOUBLE) AS b),
-           |${pass("0", "b0")},
-           |b1 AS (SELECT b + (SELECT u/i FROM ui0) AS b FROM b0),
-           |${pass("1", "b1")},
-           |b2 AS (SELECT b + (SELECT u/i FROM ui1) AS b FROM b1),
-           |${pass("2", "b2")},
-           |nn AS (SELECT count(*) AS n, sum(ev) AS nev FROM dur)
-           |SELECT CAST(n AS BIGINT) AS n, CAST(nev AS BIGINT) AS n_events,
-           |  round((SELECT b FROM b1), 6) AS beta1,
-           |  round((SELECT b FROM b2), 6) AS beta,
-           |  round(exp((SELECT b FROM b2)), 6) AS hazard_ratio,
-           |  round(CAST(1 AS DOUBLE)/sqrt((SELECT i FROM ui2)), 6) AS se,
-           |  round((SELECT b FROM b2) * sqrt((SELECT i FROM ui2)), 6) AS wald_z,
-           |  round((SELECT u FROM ui2), 6) + CAST(0 AS DOUBLE) AS score_final
-           |FROM nn""".stripMargin
-      }) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
+      "q384_cox_ph",
+      s"""WITH ${Round19Ops.coxSqlThroughB2},
+        |${Round19Ops.coxPassSql("2", "b2")},
+        |nn AS (SELECT count(*) AS n, sum(ev) AS nev FROM dur)
+        |SELECT CAST(n AS BIGINT) AS n, CAST(nev AS BIGINT) AS n_events,
+        |  round((SELECT b FROM b1), 6) AS beta1,
+        |  round((SELECT b FROM b2), 6) AS beta,
+        |  round(exp((SELECT b FROM b2)), 6) AS hazard_ratio,
+        |  round(CAST(1 AS DOUBLE)/sqrt((SELECT i FROM ui2)), 6) AS se,
+        |  round((SELECT b FROM b2) * sqrt((SELECT i FROM ui2)), 6) AS wald_z,
+        |  round((SELECT u FROM ui2), 6) + CAST(0 AS DOUBLE) AS score_final
+        |FROM nn""".stripMargin) { (s, d) =>
       val dur = Round19Ops.coxDur(s, d)
-      // suffix risk windows over the bounded (≤ horizon+1 row) time grid
-      val wSuf = Window.orderBy("t").rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      def dsumW(c: Column): Column =
-        sum(c.cast("decimal(38,12)")).over(wSuf).cast("double")
-      def pass(bDf: DataFrame): DataFrame = {
-        val g = dur.crossJoin(broadcast(bDf)).groupBy("t").agg(
-          dsum(col("ev")).as("d"), dsum(col("ev") * col("x")).as("sxd"),
-          dsum(exp(col("b") * col("x"))).as("e0"),
-          dsum(col("x") * exp(col("b") * col("x"))).as("e1"),
-          dsum(col("x") * col("x") * exp(col("b") * col("x"))).as("e2"))
-        val rk = g.select(col("t"), col("d"), col("sxd"),
-          dsumW(col("e0")).as("s0"), dsumW(col("e1")).as("s1"), dsumW(col("e2")).as("s2"))
-        rk.where(col("d") > 0).agg(
-          dsum(col("sxd") - col("d") * (col("s1") / col("s0"))).as("u"),
-          dsum(col("d") * ((col("s2") / col("s0")) -
-            (col("s1") / col("s0")) * (col("s1") / col("s0")))).as("i"))
-      }
-      val b0 = s.range(1).select(lit(0.0).as("b"))
-      val ui0 = pass(b0)
-      val b1 = b0.crossJoin(broadcast(ui0)).select((col("b") + col("u") / col("i")).as("b"))
-        .localCheckpoint(true)
-      val ui1 = pass(b1)
-      val b2 = b1.crossJoin(broadcast(ui1)).select((col("b") + col("u") / col("i")).as("b"))
-        .localCheckpoint(true)
-      val ui2 = pass(b2)
+      val (b1, b2) = Round19Ops.coxFit(s, dur)
+      val ui2 = Round19Ops.coxPass(dur, b2)
       val nn = dur.agg(count(lit(1)).as("n"), sum(col("ev")).as("nev"))
       nn.crossJoin(broadcast(b1.select(col("b").as("bb1"))))
         .crossJoin(broadcast(b2.select(col("b").as("bb2"))))
@@ -200,20 +186,8 @@ object Round16Ops {
              |      exp(p.a + p.b*cd.u) AS mu
              |    FROM cd JOIN $prev p ON p.el = cd.el) c
              |  GROUP BY 1),
-             |p$tag AS (
-             |  SELECT el,
-             |    (swz - ((sw*swuz - swu*swz)/(sw*swuu - swu*swu))*swu)/sw AS a,
-             |    (sw*swuz - swu*swz)/(sw*swuu - swu*swu) AS b
-             |  FROM m$tag)""".stripMargin
-        s"""WITH cd AS MATERIALIZED (
-           |  SELECT event_type AS el,
-           |    CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS DOUBLE)
-           |      / CAST(29 AS DOUBLE) AS u,
-           |    CAST(count(*) AS DOUBLE) AS cnt
-           |  FROM events GROUP BY 1, 2),
-           |p0 AS (
-           |  SELECT el, ln(${dsumSql("cnt")} / count(*)) AS a, CAST(0 AS DOUBLE) AS b
-           |  FROM cd GROUP BY el),
+             |${wlsSolveSql(tag)}""".stripMargin
+        s"""WITH $countCellsSql,
            |${step("1", "p0")},
            |${step("2", "p1")},
            |dv AS (
@@ -507,27 +481,13 @@ object Round16Ops {
              |    ${dsumSql("v*x1*x2")} AS a23, ${dsumSql("v*x2*x2")} AS a33,
              |    ${dsumSql("vz")} AS b1, ${dsumSql("vz*x1")} AS b2,
              |    ${dsumSql("vz*x2")} AS b3
-             |  FROM (
-             |    SELECT x1, x2, p*(CAST(1 AS DOUBLE) - p) AS v,
-             |      p*(CAST(1 AS DOUBLE) - p)*eta + (t - p) AS vz
-             |    FROM (
-             |      SELECT fx.t, fx.x1, fx.x2, q.c0 + q.c1*fx.x1 + q.c2*fx.x2 AS eta,
-             |        CAST(1 AS DOUBLE)/(CAST(1 AS DOUBLE)
-             |          + exp(-(q.c0 + q.c1*fx.x1 + q.c2*fx.x2))) AS p
-             |      FROM fx CROSS JOIN $prev q) z1) z2),
+             |${logitWorkSql(prev)},
              |d$tag AS (SELECT $dt FROM m$tag),
              |p$tag AS (SELECT $wS FROM d$tag)""".stripMargin
         def outcome(tag: String, arm: String) =
           s"""mo$tag AS (
              |  SELECT CAST(count(*) FILTER (WHERE t = $arm) AS DOUBLE) AS a11,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x1 END")} AS a12,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x2 END")} AS a13,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x1*x1 END")} AS a22,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x1*x2 END")} AS a23,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x2*x2 END")} AS a33,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN y END")} AS b1,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN y*x1 END")} AS b2,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN y*x2 END")} AS b3
+             |${armMomentsSql(arm)}
              |  FROM fx),
              |do$tag AS (SELECT $dt FROM mo$tag),
              |po$tag AS (SELECT $wS FROM do$tag)""".stripMargin
@@ -537,9 +497,7 @@ object Round16Ops {
            |    l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) AS y,
            |    l_quantity AS x1, l_tax AS x2
            |  FROM lineitem),
-           |pb AS (SELECT ${dsumSql("t")} / count(*) AS pbar FROM fx),
-           |p0 AS (SELECT ln(pbar/(CAST(1 AS DOUBLE) - pbar)) AS c0,
-           |  CAST(0 AS DOUBLE) AS c1, CAST(0 AS DOUBLE) AS c2 FROM pb),
+           |$logitStartSql,
            |${irls("1", "p0")},
            |${irls("2", "p1")},
            |${outcome("1", "1")},

@@ -151,14 +151,7 @@ object Round17Ops {
         def armMoments(arm: String) =
           s"""SELECT g,
              |    CAST(count(*) FILTER (WHERE t = $arm) AS DOUBLE) AS a11,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x1 END")} AS a12,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x2 END")} AS a13,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x1*x1 END")} AS a22,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x1*x2 END")} AS a23,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN x2*x2 END")} AS a33,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN y END")} AS b1,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN y*x1 END")} AS b2,
-             |    ${dsumSql(s"CASE WHEN t = $arm THEN y*x2 END")} AS b3
+             |${Round16Ops.armMomentsSql(arm)}
              |  FROM fx GROUP BY 1""".stripMargin
         s"""WITH fx AS MATERIALIZED (
            |  SELECT l_returnflag AS g,
@@ -474,14 +467,7 @@ object Round17Ops {
                   s"sum(CAST(floor($e) AS BIGINT)) AS ${n}_i, " +
                     s"sum(CAST(floor(($e - floor($e)) * 1000000000.0) AS BIGINT)) AS ${n}_f" }
                   .mkString(",\n    ")}
-             |  FROM (
-             |    SELECT x1, x2, p*(CAST(1 AS DOUBLE) - p) AS v,
-             |      p*(CAST(1 AS DOUBLE) - p)*eta + (t - p) AS vz
-             |    FROM (
-             |      SELECT fx.t, fx.x1, fx.x2, q.c0 + q.c1*fx.x1 + q.c2*fx.x2 AS eta,
-             |        CAST(1 AS DOUBLE)/(CAST(1 AS DOUBLE)
-             |          + exp(-(q.c0 + q.c1*fx.x1 + q.c2*fx.x2))) AS p
-             |      FROM fx CROSS JOIN $prev q) z1) z2),
+             |${Round16Ops.logitWorkSql(prev)},
              |r$tag AS (SELECT ${irlsMoms.map(m => irlsRecon(m._1)).mkString(", ")}
              |  FROM m$tag),
              |d$tag AS (SELECT $dt FROM r$tag),
@@ -493,9 +479,7 @@ object Round17Ops {
            |    l_quantity AS x1, l_tax AS x2,
            |    l_orderkey AS k1, l_linenumber AS k2
            |  FROM lineitem),
-           |pb AS (SELECT ${dsumSql("t")} / count(*) AS pbar FROM fx),
-           |p0 AS (SELECT ln(pbar/(CAST(1 AS DOUBLE) - pbar)) AS c0,
-           |  CAST(0 AS DOUBLE) AS c1, CAST(0 AS DOUBLE) AS c2 FROM pb),
+           |${Round16Ops.logitStartSql},
            |${irls("1", "p0")},
            |${irls("2", "p1")},
            |sc AS (

@@ -54,10 +54,12 @@ object Round19Ops {
           coalesce(col("nc"), lit(0L)).cast("double").as("x"))
     }
 
-  /** One Cox Newton pass at the 1-row β table → 1-row (u, i). Mirrors
-    * q384's pass exactly (same decimal folds, same suffix windows).
+  /** One Cox Newton pass at the 1-row β table → 1-row (u, i): the
+    * decimal folds into the unique-time grid, the suffix risk windows
+    * and the score/information sums. Shared by q384 and q402.
     */
-  private def coxPass(dur: DataFrame, bDf: DataFrame): DataFrame = {
+  private[operators] def coxPass(dur: DataFrame, bDf: DataFrame): DataFrame = {
+    // suffix risk windows over the bounded (≤ horizon+1 row) time grid
     val wSuf = Window.orderBy("t").rowsBetween(Window.currentRow, Window.unboundedFollowing)
     def dsumW(c: Column): Column = sum(c.cast("decimal(38,12)")).over(wSuf).cast("double")
     val g = dur.crossJoin(broadcast(bDf)).groupBy("t").agg(
@@ -73,41 +75,56 @@ object Round19Ops {
         (col("s1") / col("s0")) * (col("s1") / col("s0")))).as("i"))
   }
 
-  /** The q384 oracle CTE chain through the step-2 β (b2) — shared text
-    * between the q384 and q402 oracles so both engines run the same fit.
+  /** The two Newton steps from β = 0 → the 1-row β tables (b1, b2).
+    * Shared by q384 and q402.
     */
-  private def coxSqlThroughB2: String = {
-    def pass(tag: String, bIn: String) =
-      s"""g$tag AS (
-         |  SELECT t, ${dsumSql("ev")} AS d, ${dsumSql("ev*x")} AS sxd,
-         |    ${dsumSql(s"exp(($bIn.b)*x)")} AS e0,
-         |    ${dsumSql(s"x*exp(($bIn.b)*x)")} AS e1,
-         |    ${dsumSql(s"x*x*exp(($bIn.b)*x)")} AS e2
-         |  FROM dur CROSS JOIN $bIn GROUP BY 1),
-         |r$tag AS (
-         |  SELECT t, d, sxd,
-         |    CAST(sum(CAST(e0 AS DECIMAL(38,12))) OVER (ORDER BY t
-         |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s0,
-         |    CAST(sum(CAST(e1 AS DECIMAL(38,12))) OVER (ORDER BY t
-         |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s1,
-         |    CAST(sum(CAST(e2 AS DECIMAL(38,12))) OVER (ORDER BY t
-         |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s2
-         |  FROM g$tag),
-         |ui$tag AS (
-         |  SELECT ${dsumSql("sxd - d*(s1/s0)")} AS u,
-         |    ${dsumSql("d*((s2/s0) - (s1/s0)*(s1/s0))")} AS i
-         |  FROM r$tag WHERE d > 0)""".stripMargin
-    s"""di AS (
-       |  SELECT user_id, event_type,
-       |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS di
-       |  FROM events),
-       |h AS (SELECT max(di) AS hh FROM di),
+  private[operators] def coxFit(s: SparkSession, dur: DataFrame): (DataFrame, DataFrame) = {
+    val b0 = s.range(1).select(lit(0.0).as("b"))
+    val ui0 = coxPass(dur, b0)
+    val b1 = b0.crossJoin(broadcast(ui0))
+      .select((col("b") + col("u") / col("i")).as("b")).localCheckpoint(true)
+    val ui1 = coxPass(dur, b1)
+    val b2 = b1.crossJoin(broadcast(ui1))
+      .select((col("b") + col("u") / col("i")).as("b")).localCheckpoint(true)
+    (b1, b2)
+  }
+
+  /** Oracle of [[coxPass]] at the β held in CTE `bIn` → 1-row (u, i) CTE
+    * `ui<tag>`. */
+  private[operators] def coxPassSql(tag: String, bIn: String) =
+    s"""g$tag AS (
+       |  SELECT t, ${dsumSql("ev")} AS d, ${dsumSql("ev*x")} AS sxd,
+       |    ${dsumSql(s"exp(($bIn.b)*x)")} AS e0,
+       |    ${dsumSql(s"x*exp(($bIn.b)*x)")} AS e1,
+       |    ${dsumSql(s"x*x*exp(($bIn.b)*x)")} AS e2
+       |  FROM dur CROSS JOIN $bIn GROUP BY 1),
+       |r$tag AS (
+       |  SELECT t, d, sxd,
+       |    CAST(sum(CAST(e0 AS DECIMAL(38,12))) OVER (ORDER BY t
+       |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s0,
+       |    CAST(sum(CAST(e1 AS DECIMAL(38,12))) OVER (ORDER BY t
+       |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s1,
+       |    CAST(sum(CAST(e2 AS DECIMAL(38,12))) OVER (ORDER BY t
+       |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS DOUBLE) AS s2
+       |  FROM g$tag),
+       |ui$tag AS (
+       |  SELECT ${dsumSql("sxd - d*(s1/s0)")} AS u,
+       |    ${dsumSql("d*((s2/s0) - (s1/s0)*(s1/s0))")} AS i
+       |  FROM r$tag WHERE d > 0)""".stripMargin
+
+  /** Signup day t0 and first purchase day t1 per user (`di`, `h`, `s0`,
+    * `p1`): the Cox fit and q403. */
+  private val signupSql =
+    s"""${InferenceOps.eventDaysSql},
        |s0 AS (SELECT user_id, min(di) AS t0 FROM di
        |  WHERE event_type = 'signup' GROUP BY 1),
-       |p1 AS (
-       |  SELECT d.user_id, min(d.di) AS t1
-       |  FROM di d JOIN s0 ON s0.user_id = d.user_id
-       |  WHERE d.event_type = 'purchase' AND d.di >= s0.t0 GROUP BY 1),
+       |${InferenceOps.firstPurchaseSql}""".stripMargin
+
+  /** Oracle of [[coxDur]] and [[coxFit]]: the CTE chain through the
+    * step-2 β (b2), shared by the q384 and q402 oracles.
+    */
+  private[operators] val coxSqlThroughB2: String =
+    s"""$signupSql,
        |xc AS (SELECT user_id, count(*) AS nc FROM di
        |  WHERE event_type = 'click' GROUP BY 1),
        |dur AS MATERIALIZED (
@@ -118,11 +135,10 @@ object Round19Ops {
        |  FROM s0 LEFT JOIN p1 ON p1.user_id = s0.user_id
        |  LEFT JOIN xc ON xc.user_id = s0.user_id CROSS JOIN h),
        |b0 AS (SELECT CAST(0 AS DOUBLE) AS b),
-       |${pass("0", "b0")},
+       |${coxPassSql("0", "b0")},
        |b1 AS (SELECT b + (SELECT u/i FROM ui0) AS b FROM b0),
-       |${pass("1", "b1")},
+       |${coxPassSql("1", "b1")},
        |b2 AS (SELECT b + (SELECT u/i FROM ui1) AS b FROM b1)""".stripMargin
-  }
 
   /** Shared two-sample pair grid over the cumulative histogram: one row
     * per (src < dst element pair, distinct pooled value) with
@@ -193,13 +209,7 @@ object Round19Ops {
          |  round((SELECT b FROM b2), 6) AS beta
          |FROM hz ORDER BY duration_days""".stripMargin) { (s, d) =>
       val dur = coxDur(s, d)
-      val b0 = s.range(1).select(lit(0.0).as("b"))
-      val ui0 = coxPass(dur, b0)
-      val b1 = b0.crossJoin(broadcast(ui0))
-        .select((col("b") + col("u") / col("i")).as("b")).localCheckpoint(true)
-      val ui1 = coxPass(dur, b1)
-      val b2 = b1.crossJoin(broadcast(ui1))
-        .select((col("b") + col("u") / col("i")).as("b")).localCheckpoint(true)
+      val (_, b2) = coxFit(s, dur)
       val gf = dur.crossJoin(broadcast(b2)).groupBy("t").agg(
         dsum(col("ev")).as("d"), dsum(exp(col("b") * col("x"))).as("e0"))
       val wSuf = Window.orderBy("t").rowsBetween(Window.currentRow, Window.unboundedFollowing)
@@ -233,36 +243,12 @@ object Round19Ops {
       */
     QueryDef(
       "q403_rmst",
-      s"""WITH di AS (
-         |  SELECT user_id, event_type,
-         |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS di
-         |  FROM events),
-         |h AS (SELECT max(di) AS hh FROM di),
-         |s0 AS (SELECT user_id, min(di) AS t0 FROM di
-         |  WHERE event_type = 'signup' GROUP BY 1),
-         |p1 AS (
-         |  SELECT d.user_id, min(d.di) AS t1
-         |  FROM di d JOIN s0 ON s0.user_id = d.user_id
-         |  WHERE d.event_type = 'purchase' AND d.di >= s0.t0 GROUP BY 1),
+      s"""WITH $signupSql,
          |dur AS (
          |  SELECT CASE WHEN p1.t1 IS NULL THEN h.hh - s0.t0 ELSE p1.t1 - s0.t0 END AS t,
          |    CASE WHEN p1.t1 IS NULL THEN 0 ELSE 1 END AS ev
          |  FROM s0 LEFT JOIN p1 ON p1.user_id = s0.user_id CROSS JOIN h),
-         |nt AS (SELECT count(*) AS n FROM dur),
-         |byt AS (SELECT t, count(*) AS c, sum(ev) AS d FROM dur GROUP BY 1),
-         |rk AS (
-         |  SELECT t, d,
-         |    nt.n - coalesce(sum(c) OVER (ORDER BY t
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-         |  FROM byt CROSS JOIN nt),
-         |km AS (
-         |  SELECT t, d, n_risk,
-         |    exp(sum(ln(CASE WHEN d >= n_risk THEN 1
-         |      ELSE 1 - CAST(d AS DOUBLE) / n_risk END)) OVER (ORDER BY t
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS surv,
-         |    max(CASE WHEN d >= n_risk THEN 1 ELSE 0 END) OVER (ORDER BY t
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead
-         |  FROM rk WHERE d > 0),
+         |${InferenceOps.kmSql},
          |ks AS (
          |  SELECT t, CASE WHEN dead = 1 THEN CAST(0 AS DOUBLE) ELSE surv END AS sv,
          |    lag(CASE WHEN dead = 1 THEN CAST(0 AS DOUBLE) ELSE surv END,
@@ -281,21 +267,7 @@ object Round19Ops {
          |  round(body + slast * greatest(tau - CAST(tlast AS DOUBLE), CAST(0 AS DOUBLE)), 6) AS rmst,
          |  CAST(nev AS BIGINT) AS n_event_times
          |FROM area ORDER BY tau""".stripMargin) { (s, d) =>
-      val dur = coxDur(s, d).select(col("t"), col("ev"))
-      val nt = dur.agg(count(lit(1)).as("n"))
-      val byt = dur.groupBy("t").agg(count(lit(1)).as("c"), sum(col("ev")).as("d"))
-      val wPrev = Window.orderBy(col("t")).rowsBetween(Window.unboundedPreceding, -1)
-      val wCum = Window.orderBy(col("t")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val rk = byt.crossJoin(broadcast(nt))
-        .select(col("t"), col("d"),
-          (col("n") - coalesce(sum(col("c")).over(wPrev), lit(0L))).as("n_risk"))
-      val km = rk.where(col("d") > 0)
-        .select(col("t"), col("d"), col("n_risk"),
-          exp(sum(log(when(col("d") >= col("n_risk"), lit(1.0))
-            .otherwise(lit(1) - col("d").cast("double") / col("n_risk"))))
-            .over(wCum)).as("surv"),
-          max(when(col("d") >= col("n_risk"), lit(1)).otherwise(lit(0)))
-            .over(wCum).as("dead"))
+      val km = InferenceOps.kmCurve(coxDur(s, d).select(col("t"), col("ev")))
       val sv = when(col("dead") === 1, lit(0.0)).otherwise(col("surv"))
       val wLag = Window.orderBy(col("t"))
       val ks = km.select(col("t"), sv.as("sv"),

@@ -185,60 +185,24 @@ object Round20Ops {
       * final sum is an order-free decimal fold.
       */
     QueryDef(
-      "q410_err_eval", {
-        val planes = Lsh.hyperplanes(8)
-        val qv: Array[Double] = Array.tabulate(64)(i => ((i * 37) % 19 - 9) / 10.0)
-        val corpusBucket = Lsh.bucketSql(planes, i => s"embedding[${i + 1}]::DOUBLE")
-        val qb = Lsh.bucketOf(qv, planes).toInt
-        val probes = (qb +: planes.indices.map(pi => qb ^ (1 << pi))).mkString(", ")
-        val qvecSql = qv.mkString("[", ", ", "]::DOUBLE[]")
-        s"""WITH ex AS (
-           |  SELECT vec_id,
-           |    row_number() OVER (ORDER BY round(list_cosine_similarity(
-           |      embedding::DOUBLE[], $qvecSql), 6) DESC, vec_id) AS re
-           |  FROM embeddings
-           |  ORDER BY round(list_cosine_similarity(embedding::DOUBLE[], $qvecSql), 6)
-           |    DESC, vec_id LIMIT 10),
-           |sys AS (
-           |  SELECT vec_id,
-           |    row_number() OVER (ORDER BY round(list_cosine_similarity(
-           |      embedding::DOUBLE[], $qvecSql), 6) DESC, vec_id) AS pos
-           |  FROM embeddings WHERE ($corpusBucket) IN ($probes)
-           |  ORDER BY round(list_cosine_similarity(embedding::DOUBLE[], $qvecSql), 6)
-           |    DESC, vec_id LIMIT 10),
-           |gr AS (
-           |  SELECT sys.pos,
-           |    CASE WHEN ex.re IS NOT NULL
-           |      THEN (power(2.0, 11 - ex.re) - 1.0) / 1024.0 ELSE 0.0 END AS rr
-           |  FROM sys LEFT JOIN ex ON ex.vec_id = sys.vec_id),
-           |cp AS (
-           |  SELECT pos, rr,
-           |    exp(coalesce(sum(ln(1.0 - rr)) OVER (ORDER BY pos
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0)) AS surv
-           |  FROM gr)
-           |SELECT CAST(count(*) AS BIGINT) AS n_sys,
-           |  round(CAST(sum(CAST(rr * surv / pos AS DECIMAL(38,12))) AS DOUBLE), 6)
-           |    AS err10,
-           |  round(max(rr), 6) AS max_gain
-           |FROM cp""".stripMargin
-      }) { (s, d) =>
-      import graft.functions.Kernels
-      val planes = Lsh.hyperplanes(8)
-      val qv: Array[Double] = Array.tabulate(64)(i => ((i * 37) % 19 - 9) / 10.0)
-      val qb = Lsh.bucketOf(qv, planes).toInt
-      val probes = qb +: planes.indices.map(pi => qb ^ (1 << pi))
-      val emb = col("embedding").cast("array<double>")
-      val cosR = r6(Kernels.cosine(emb, array(qv.map(lit): _*)))
-      val e = Tables.embeddings(s, d)
-      val ex = e.select(col("vec_id"), cosR.as("cs"))
-        .orderBy(col("cs").desc, col("vec_id")).limit(10)
-        .withColumn("re", row_number().over(Window.orderBy(col("cs").desc, col("vec_id"))))
-        .select(col("vec_id").as("evid"), col("re"))
-      val sys = e.where(Lsh.bucketColumn(emb, planes).isin(probes: _*))
-        .select(col("vec_id"), cosR.as("cs"))
-        .orderBy(col("cs").desc, col("vec_id")).limit(10)
-        .withColumn("pos", row_number().over(Window.orderBy(col("cs").desc, col("vec_id"))))
-        .select(col("vec_id"), col("pos"))
+      "q410_err_eval",
+      s"""WITH ${HybridOps.annListsSql},
+        |gr AS (
+        |  SELECT sys.pos,
+        |    CASE WHEN ex.re IS NOT NULL
+        |      THEN (power(2.0, 11 - ex.re) - 1.0) / 1024.0 ELSE 0.0 END AS rr
+        |  FROM sys LEFT JOIN ex ON ex.vec_id = sys.vec_id),
+        |cp AS (
+        |  SELECT pos, rr,
+        |    exp(coalesce(sum(ln(1.0 - rr)) OVER (ORDER BY pos
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0)) AS surv
+        |  FROM gr)
+        |SELECT CAST(count(*) AS BIGINT) AS n_sys,
+        |  round(CAST(sum(CAST(rr * surv / pos AS DECIMAL(38,12))) AS DOUBLE), 6)
+        |    AS err10,
+        |  round(max(rr), 6) AS max_gain
+        |FROM cp""".stripMargin) { (s, d) =>
+      val (ex, sys) = HybridOps.annLists(s, d)
       val gr = sys.join(ex, col("evid") === col("vec_id"), "left")
         .select(col("pos"),
           when(col("re").isNotNull,
@@ -328,15 +292,7 @@ object Round20Ops {
       */
     QueryDef(
       "q412_query_likelihood",
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, CAST(len(ws) AS DOUBLE) AS dl,
-        |    CAST(len(list_filter(ws, x -> x = 'spark')) AS DOUBLE) AS tf1,
-        |    CAST(len(list_filter(ws, x -> x = 'join')) AS DOUBLE) AS tf2,
-        |    CAST(len(list_filter(ws, x -> x = 'fast')) AS DOUBLE) AS tf3
-        |  FROM tok),
+      s"""WITH ${SearchOps.queryTfSql},
         |st AS (
         |  SELECT sum(dl) AS tot, sum(tf1) AS c1, sum(tf2) AS c2, sum(tf3) AS c3
         |  FROM tf)
@@ -347,12 +303,7 @@ object Round20Ops {
         |FROM tf, st
         |WHERE tf1 + tf2 + tf3 > 0
         |ORDER BY ql_score DESC, doc_id LIMIT 10""".stripMargin) { (s, d) =>
-      import graft.functions.Text
-      def cnt(w: String) = size(filter(col("ws"), x => x === w)).cast("double")
-      val tf = Tables.documents(s, d)
-        .select(col("doc_id"), Text.wordsCol(col("text")).as("ws"))
-        .select(col("doc_id"), size(col("ws")).cast("double").as("dl"),
-          cnt("spark").as("tf1"), cnt("join").as("tf2"), cnt("fast").as("tf3"))
+      val tf = SearchOps.queryTf(s, d)
       val st = tf.agg(sum(col("dl")).as("tot"), sum(col("tf1")).as("c1"),
         sum(col("tf2")).as("c2"), sum(col("tf3")).as("c3"))
       def term(tfc: String, cc: String) =

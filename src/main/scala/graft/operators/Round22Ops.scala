@@ -352,20 +352,8 @@ object Round22Ops {
              |      exp(p.a + p.b*cd.u) AS mu${if (w.contains("alpha")) ", p.alpha" else ""}
              |    FROM cd JOIN $prev p ON p.el = cd.el) c
              |  GROUP BY 1),
-             |p$tag AS (
-             |  SELECT el,
-             |    (swz - ((sw*swuz - swu*swz)/(sw*swuu - swu*swu))*swu)/sw AS a,
-             |    (sw*swuz - swu*swz)/(sw*swuu - swu*swu) AS b
-             |  FROM m$tag)""".stripMargin
-        s"""WITH cd AS MATERIALIZED (
-           |  SELECT event_type AS el,
-           |    CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS DOUBLE)
-           |      / CAST(29 AS DOUBLE) AS u,
-           |    CAST(count(*) AS DOUBLE) AS cnt
-           |  FROM events GROUP BY 1, 2),
-           |p0 AS (
-           |  SELECT el, ln(${dsumSql("cnt")} / count(*)) AS a, CAST(0 AS DOUBLE) AS b
-           |  FROM cd GROUP BY el),
+             |${Round16Ops.wlsSolveSql(tag)}""".stripMargin
+        s"""WITH ${Round16Ops.countCellsSql},
            |${step("1", "p0", "mu")},
            |${step("2", "p1", "mu")},
            |al AS (
@@ -386,8 +374,7 @@ object Round22Ops {
       val cd = Round16Ops.countCells(s, d)
       val p0 = cd.groupBy("el").agg(
         log(dsum(col("cnt")) / count(lit(1))).as("a")).withColumn("b", lit(0.0))
-      def step(prev: DataFrame, wOf: Column => Column,
-          carry: Seq[String] = Nil): DataFrame = {
+      def step(prev: DataFrame, wOf: Column => Column): DataFrame = {
         val eta = col("a") + col("b") * col("u")
         val mu = exp(eta)
         val w = wOf(mu)
@@ -408,20 +395,8 @@ object Round22Ops {
       val p2a = p2.join(al.select(col("el").as("ael"),
           greatest(col("alpha"), lit(0.0)).as("alpha")), col("ael") === col("el"))
         .select(col("el"), col("a"), col("b"), col("alpha"))
-      val p3 = {
-        // NB2 step carrying alpha through the broadcast parameter row
-        val eta = col("a") + col("b") * col("u")
-        val mu = exp(eta)
-        val w = mu / (lit(1.0) + col("alpha") * mu)
-        val vz = w * eta + (col("cnt") - mu) * (w / mu)
-        val m = cd.join(broadcast(p2a), "el").groupBy("el").agg(
-          dsum(w).as("sw"), dsum(w * col("u")).as("swu"),
-          dsum(w * col("u") * col("u")).as("swuu"),
-          dsum(vz).as("swz"), dsum(vz * col("u")).as("swuz"))
-        val b = (col("sw") * col("swuz") - col("swu") * col("swz")) /
-          (col("sw") * col("swuu") - col("swu") * col("swu"))
-        m.select(col("el"), ((col("swz") - b * col("swu")) / col("sw")).as("a"), b.as("b"))
-      }
+      // NB2 step carrying alpha through the broadcast parameter row
+      val p3 = step(p2a, mu => mu / (lit(1.0) + col("alpha") * mu))
       p3.join(p2a.select(col("el").as("pel"), col("alpha")), col("pel") === col("el"))
         .select(col("el"), r6(col("alpha")).as("alpha"), r6(col("a")).as("a_nb"),
           r6(col("b")).as("b_nb"), r6(exp(col("b"))).as("trend_ratio"),

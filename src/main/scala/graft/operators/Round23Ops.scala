@@ -50,6 +50,33 @@ object Round23Ops {
   private[graft] val HawkesLags = 36    // kernel truncation (e^-3.6)
   private[graft] val HawkesHours = 720.0
 
+  /** Every unordered element pair's same-day values (eli < elj, di, x,
+    * y) from any (el, di, v) grid: q428's distance correlation and
+    * q444's HSIC. */
+  private[operators] def sameDayPairs(g: DataFrame): DataFrame = {
+    val a = g.select(col("el").as("eli"), col("di"), col("v").as("x"))
+    val b = g.select(col("el").as("elj"), col("di").as("dj"), col("v").as("y"))
+    a.join(b, col("dj") === col("di") && col("eli") < col("elj"))
+      .select(col("eli"), col("elj"), col("di"), col("x"), col("y"))
+  }
+
+  /** Event counts per (element, hour since 2024-01-01) (`hg`): q426,
+    * q447, q454. */
+  private[operators] val hourGridSql =
+    """hg AS (
+      |  SELECT event_type AS el,
+      |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) * 24
+      |      + date_part('hour', ts) AS h,
+      |    CAST(count(*) AS DOUBLE) AS n
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** [[hourGridSql]]'s engine form: (el, h, n). */
+  private[operators] def hourGrid(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).groupBy(col("event_type").as("el"),
+        (datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")) * 24
+          + hour(col("ts"))).as("h"))
+      .agg(count(lit(1)).cast("double").as("n"))
+
   /** Welch-averaged magnitude-squared coherence from the (el, di, v)
     * daily grid — shared by batch q427 and the streaming refresh q433
     * (the causalRefresh contract: final stream refresh == batch oracle
@@ -128,12 +155,7 @@ object Round23Ops {
       */
     QueryDef(
       "q426_hawkes_cross",
-      s"""WITH hg AS (
-         |  SELECT event_type AS el,
-         |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) * 24
-         |      + date_part('hour', ts) AS h,
-         |    CAST(count(*) AS DOUBLE) AS n
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH $hourGridSql,
          |tot AS (
          |  SELECT el, ${dsumSql("n")} AS nn, ${dsumSql("n")} / $HawkesHours AS mu
          |  FROM hg GROUP BY 1),
@@ -156,10 +178,7 @@ object Round23Ops {
          |  round(r.sr, 6) AS resp_mass, CAST(t.nn AS BIGINT) AS n_src
          |FROM resp r JOIN tot t ON t.el = r.src
          |ORDER BY dst, src""".stripMargin) { (s, d) =>
-      val hg = Tables.events(s, d).groupBy(col("event_type").as("el"),
-          (datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")) * 24
-            + hour(col("ts"))).as("h"))
-        .agg(count(lit(1)).cast("double").as("n"))
+      val hg = hourGrid(s, d)
       val tot = hg.groupBy("el").agg(dsum(col("n")).as("nn"),
         (dsum(col("n")) / lit(HawkesHours)).as("mu"))
       val lagT = s.range(1)
@@ -230,11 +249,7 @@ object Round23Ops {
          |      * (${dsumSql("bc * bc")} / count(*)))), 6) AS dcor,
          |  round(sqrt(greatest(${dsumSql("ac * bc")} / count(*), 0.0)), 6) AS dcov
          |FROM cen GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      val g = CausalOps.daily(s, d)
-      val a = g.select(col("el").as("eli"), col("di"), col("v").as("x"))
-      val b = g.select(col("el").as("elj"), col("di").as("dj"), col("v").as("y"))
-      val m = a.join(b, col("dj") === col("di") && col("eli") < col("elj"))
-        .select(col("eli"), col("elj"), col("di"), col("x"), col("y"))
+      val m = sameDayPairs(CausalOps.daily(s, d))
       val k = m.select(col("eli"), col("elj"), col("di").as("dk"),
         col("x").as("xk"), col("y").as("yk"))
       val l = m.select(col("eli").as("e2i"), col("elj").as("e2j"),

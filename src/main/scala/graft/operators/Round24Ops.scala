@@ -102,6 +102,15 @@ object Round24Ops {
        |    THEN 1 ELSE 0 END AS variance_break
        |FROM rk WHERE rk = 1 ORDER BY el""".stripMargin
 
+  /** Each grid day's rank rk in its element's (v, di) order and the
+    * element's day count n (`rn`): q435 and q471. */
+  private[operators] val valueRankSql =
+    """rn AS (
+      |  SELECT el, di, v,
+      |    row_number() OVER (PARTITION BY el ORDER BY v, di) AS rk,
+      |    count(*) OVER (PARTITION BY el) AS n
+      |  FROM daily)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Inclán–Tiao variance changepoint per element — see
@@ -122,11 +131,7 @@ object Round24Ops {
     QueryDef(
       "q435_runs_test",
       s"""WITH ${CausalOps.dailySql},
-         |rn AS (
-         |  SELECT el, di, v,
-         |    row_number() OVER (PARTITION BY el ORDER BY v, di) AS rk,
-         |    count(*) OVER (PARTITION BY el) AS n
-         |  FROM daily),
+         |$valueRankSql,
          |md AS (
          |  SELECT el, v AS med FROM rn WHERE rk = CAST(floor((n + 1) / 2.0) AS BIGINT)),
          |sg AS (

@@ -403,11 +403,7 @@ object Round25Ops {
          |    / sqrt((${dsumSql("kc * kc")} / count(*))
          |      * (${dsumSql("lc * lc")} / count(*))), 6) AS cka
          |FROM cen GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      val g = CausalOps.daily(s, d)
-      val a = g.select(col("el").as("eli"), col("di"), col("v").as("x"))
-      val b = g.select(col("el").as("elj"), col("di").as("dj"), col("v").as("y"))
-      val m = a.join(b, col("dj") === col("di") && col("eli") < col("elj"))
-        .select(col("eli"), col("elj"), col("di"), col("x"), col("y"))
+      val m = Round23Ops.sameDayPairs(CausalOps.daily(s, d))
       val sd = m.groupBy("eli", "elj").agg(
         sqrt((dsum(col("x") * col("x")) -
           dsum(col("x")) * dsum(col("x")) / count(lit(1))) /
@@ -471,33 +467,8 @@ object Round25Ops {
         |rnk AS (
         |  SELECT el, di, cume_dist() OVER (PARTITION BY el ORDER BY v) AS v
         |  FROM daily),
-        |g AS (
-        |  SELECT x.el AS src, y.el AS dst, y.v AS yt, yl.v AS yl1, x.v AS xl1
-        |  FROM rnk y
-        |  JOIN rnk yl ON yl.el = y.el AND yl.di = y.di - 1
-        |  JOIN rnk x ON x.el <> y.el AND x.di = y.di - 1),
-        |m AS (
-        |  SELECT src, dst, count(*) AS n,
-        |    ${dsumSql("yt")} AS sy, ${dsumSql("yl1")} AS s1, ${dsumSql("xl1")} AS s2,
-        |    ${dsumSql("yt*yt")} AS syy, ${dsumSql("yl1*yl1")} AS s11,
-        |    ${dsumSql("xl1*xl1")} AS s22, ${dsumSql("yl1*xl1")} AS s12,
-        |    ${dsumSql("yl1*yt")} AS s1y, ${dsumSql("xl1*yt")} AS s2y
-        |  FROM g GROUP BY 1, 2),
-        |c AS (
-        |  SELECT src, dst, n,
-        |    syy - sy*sy/n AS cyy, s11 - s1*s1/n AS c11, s22 - s2*s2/n AS c22,
-        |    s12 - s1*s2/n AS c12, s1y - s1*sy/n AS c1y, s2y - s2*sy/n AS c2y
-        |  FROM m),
-        |f AS (
-        |  SELECT src, dst, n, cyy, c1y, c2y,
-        |    cyy - c1y*c1y/nullif(c11, 0) AS sse_r,
-        |    (c1y*c22 - c2y*c12)/nullif(c11*c22 - c12*c12, 0) AS b1,
-        |    (c2y*c11 - c1y*c12)/nullif(c11*c22 - c12*c12, 0) AS b2
-        |  FROM c)
-        |SELECT src, dst, CAST(n AS BIGINT) AS n_days,
-        |  round(1 - sse_r/nullif(cyy, 0), 6) AS ar1_r2,
-        |  round((sse_r - (cyy - b1*c1y - b2*c2y))/nullif(sse_r, 0), 6) AS granger_gain
-        |FROM f ORDER BY src, dst""".stripMargin) { (s, d) =>
+        |${Round27Ops.grangerMomentsSql("rnk", "")},
+        |${CausalOps.grangerFitSql}""".stripMargin) { (s, d) =>
       val g0 = CausalOps.daily(s, d)
       CausalOps.guardFullEnum(g0, "q445_rank_granger")
       val rnk = g0.select(col("el"), col("di"),

@@ -76,6 +76,27 @@ object Round26Ops {
           abs(col("r")) >= abs(col("r_obs")))) / count(lit(1))).as("p"))
   }
 
+  /** Oracle of [[circularNull]]'s shift correlations (`ig`, `sh`, `rs`,
+    * `ob`): q446, q452 and q470; `extraCols` adds rs columns. */
+  private[operators] def circularShiftSql(extraCols: String): String =
+    s"""ig AS (
+       |  SELECT el, v,
+       |    row_number() OVER (PARTITION BY el ORDER BY di) - 1 AS t,
+       |    count(*) OVER (PARTITION BY el) AS n
+       |  FROM daily),
+       |sh AS (SELECT unnest(generate_series(0, 29)) AS s),
+       |rs AS (
+       |  SELECT x.el AS src, y.el AS dst, sh.s,$extraCols
+       |    (count(*) * ${dsumSql("x.v * y.v")} - ${dsumSql("x.v")} * ${dsumSql("y.v")})
+       |      / sqrt((count(*) * ${dsumSql("x.v * x.v")} - ${dsumSql("x.v")} * ${dsumSql("x.v")})
+       |        * (count(*) * ${dsumSql("y.v * y.v")} - ${dsumSql("y.v")} * ${dsumSql("y.v")}))
+       |      AS r
+       |  FROM ig y
+       |  JOIN sh ON sh.s < y.n
+       |  JOIN ig x ON x.el <> y.el AND x.t = (y.t - 1 + sh.s + y.n) % y.n
+       |  GROUP BY 1, 2, 3),
+       |ob AS (SELECT src, dst, r AS r_obs FROM rs WHERE s = 0)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Circular-shift surrogate p-value for the lag-1 lead-lag: for
@@ -88,23 +109,7 @@ object Round26Ops {
     QueryDef(
       "q446_circular_shift_null",
       s"""WITH ${CausalOps.dailySql},
-         |ig AS (
-         |  SELECT el, v,
-         |    row_number() OVER (PARTITION BY el ORDER BY di) - 1 AS t,
-         |    count(*) OVER (PARTITION BY el) AS n
-         |  FROM daily),
-         |sh AS (SELECT unnest(generate_series(0, 29)) AS s),
-         |rs AS (
-         |  SELECT x.el AS src, y.el AS dst, sh.s, count(*) AS np,
-         |    (count(*) * ${dsumSql("x.v * y.v")} - ${dsumSql("x.v")} * ${dsumSql("y.v")})
-         |      / sqrt((count(*) * ${dsumSql("x.v * x.v")} - ${dsumSql("x.v")} * ${dsumSql("x.v")})
-         |        * (count(*) * ${dsumSql("y.v * y.v")} - ${dsumSql("y.v")} * ${dsumSql("y.v")}))
-         |      AS r
-         |  FROM ig y
-         |  JOIN sh ON sh.s < y.n
-         |  JOIN ig x ON x.el <> y.el AND x.t = (y.t - 1 + sh.s + y.n) % y.n
-         |  GROUP BY 1, 2, 3),
-         |ob AS (SELECT src, dst, r AS r_obs FROM rs WHERE s = 0)
+         |${circularShiftSql(" count(*) AS np,")}
          |SELECT rs.src, rs.dst, round(ob.r_obs, 6) AS r_lag1,
          |  CAST(count_if(rs.s > 0 AND abs(rs.r) >= abs(ob.r_obs)) AS BIGINT)
          |    AS n_exceed,
@@ -128,12 +133,7 @@ object Round26Ops {
       */
     QueryDef(
       "q447_burst_sync",
-      s"""WITH hg AS (
-         |  SELECT event_type AS el,
-         |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) * 24
-         |      + date_part('hour', ts) AS h,
-         |    CAST(count(*) AS DOUBLE) AS n
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH ${Round23Ops.hourGridSql},
          |st AS (
          |  SELECT el, ${dsumSql("n")} / count(*) AS mu,
          |    sqrt((${dsumSql("n * n")} - ${dsumSql("n")} * ${dsumSql("n")}
@@ -166,10 +166,7 @@ object Round26Ops {
          |JOIN nb na ON na.el = pr.eli
          |JOIN nb nj ON nj.el = pr.elj
          |ORDER BY eli, elj""".stripMargin) { (s, d) =>
-      val hg = Tables.events(s, d).groupBy(col("event_type").as("el"),
-          (datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")) * 24
-            + hour(col("ts"))).as("h"))
-        .agg(count(lit(1)).cast("double").as("n"))
+      val hg = Round23Ops.hourGrid(s, d)
       val st = hg.groupBy("el").agg(
         (dsum(col("n")) / count(lit(1))).as("mu"),
         sqrt((dsum(col("n") * col("n")) -

@@ -44,10 +44,10 @@ object Round27Ops {
   private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
   private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
 
-  /** The q230/q445 Granger CTE chain over a named (el, di, v) table,
-    * prefixed to avoid collisions; ends in `<p>o(src, dst, gain)`.
-    */
-  private[graft] def grangerCtes(tbl: String, p: String): String =
+  /** The lag-1 Granger regression moments over a named (el, di, v)
+    * table (`<p>g`, `<p>m`), prefixed to avoid collisions: q445 and
+    * [[grangerCtes]]. */
+  private[operators] def grangerMomentsSql(tbl: String, p: String): String =
     s"""${p}g AS (
        |  SELECT x.el AS src, y.el AS dst, y.v AS yt, yl.v AS yl1, x.v AS xl1
        |  FROM $tbl y
@@ -59,18 +59,14 @@ object Round27Ops {
        |    ${dsumSql("yt*yt")} AS syy, ${dsumSql("yl1*yl1")} AS s11,
        |    ${dsumSql("xl1*xl1")} AS s22, ${dsumSql("yl1*xl1")} AS s12,
        |    ${dsumSql("yl1*yt")} AS s1y, ${dsumSql("xl1*yt")} AS s2y
-       |  FROM ${p}g GROUP BY 1, 2),
-       |${p}c AS (
-       |  SELECT src, dst, n,
-       |    syy - sy*sy/n AS cyy, s11 - s1*s1/n AS c11, s22 - s2*s2/n AS c22,
-       |    s12 - s1*s2/n AS c12, s1y - s1*sy/n AS c1y, s2y - s2*sy/n AS c2y
-       |  FROM ${p}m),
-       |${p}f AS (
-       |  SELECT src, dst, n, cyy, c1y, c2y,
-       |    cyy - c1y*c1y/nullif(c11, 0) AS sse_r,
-       |    (c1y*c22 - c2y*c12)/nullif(c11*c22 - c12*c12, 0) AS b1,
-       |    (c2y*c11 - c1y*c12)/nullif(c11*c22 - c12*c12, 0) AS b2
-       |  FROM ${p}c),
+       |  FROM ${p}g GROUP BY 1, 2)""".stripMargin
+
+  /** The q230/q445 Granger CTE chain over a named (el, di, v) table,
+    * prefixed to avoid collisions; ends in `<p>o(src, dst, gain)`.
+    */
+  private[graft] def grangerCtes(tbl: String, p: String): String =
+    s"""${grangerMomentsSql(tbl, p)},
+       |${CausalOps.grangerFitCtes(p)},
        |${p}o AS (
        |  SELECT src, dst,
        |    round((sse_r - (cyy - b1*c1y - b2*c2y))/nullif(sse_r, 0), 6) AS gain
@@ -159,23 +155,7 @@ object Round27Ops {
          |        * (m1.n * m1.syy - m1.sy * m1.sy)))
          |      / sqrt(bart.bsum / m1.n), 6) AS z
          |  FROM m1 JOIN bart ON bart.src = m1.src AND bart.dst = m1.dst),
-         |ig AS (
-         |  SELECT el, v,
-         |    row_number() OVER (PARTITION BY el ORDER BY di) - 1 AS t,
-         |    count(*) OVER (PARTITION BY el) AS n
-         |  FROM daily),
-         |sh AS (SELECT unnest(generate_series(0, 29)) AS s),
-         |rs AS (
-         |  SELECT x.el AS src, y.el AS dst, sh.s,
-         |    (count(*) * ${dsumSql("x.v * y.v")} - ${dsumSql("x.v")} * ${dsumSql("y.v")})
-         |      / sqrt((count(*) * ${dsumSql("x.v * x.v")} - ${dsumSql("x.v")} * ${dsumSql("x.v")})
-         |        * (count(*) * ${dsumSql("y.v * y.v")} - ${dsumSql("y.v")} * ${dsumSql("y.v")}))
-         |      AS r
-         |  FROM ig y
-         |  JOIN sh ON sh.s < y.n
-         |  JOIN ig x ON x.el <> y.el AND x.t = (y.t - 1 + sh.s + y.n) % y.n
-         |  GROUP BY 1, 2, 3),
-         |ob AS (SELECT src, dst, r AS r_obs FROM rs WHERE s = 0),
+         |${Round26Ops.circularShiftSql("")},
          |sp AS (
          |  SELECT rs.src, rs.dst,
          |    round((1.0 + count_if(rs.s > 0 AND abs(rs.r) >= abs(ob.r_obs)))
@@ -281,12 +261,7 @@ object Round27Ops {
       */
     QueryDef(
       "q454_allan_variance",
-      s"""WITH hg AS (
-         |  SELECT event_type AS el,
-         |    datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) * 24
-         |      + date_part('hour', ts) AS h,
-         |    CAST(count(*) AS DOUBLE) AS n
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH ${Round23Ops.hourGridSql},
          |els AS (SELECT DISTINCT el FROM hg),
          |hrs AS (SELECT unnest(generate_series(0, 719)) AS h),
          |dn AS (
@@ -311,10 +286,7 @@ object Round27Ops {
          |FROM df JOIN rate ON rate.el = df.el
          |WHERE df.a2 IS NOT NULL
          |GROUP BY 1, 2 ORDER BY el, tau""".stripMargin) { (s, d) =>
-      val hg = Tables.events(s, d).groupBy(col("event_type").as("el"),
-          (datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")) * 24
-            + hour(col("ts"))).as("h"))
-        .agg(count(lit(1)).cast("double").as("n"))
+      val hg = Round23Ops.hourGrid(s, d)
       val els = hg.select(col("el")).distinct()
       val hrs = s.range(1).select(explode(sequence(lit(0), lit(719))).as("hh"))
       val dense = broadcast(els).crossJoin(broadcast(hrs))

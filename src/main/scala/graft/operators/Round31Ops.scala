@@ -43,23 +43,7 @@ object Round31Ops {
     QueryDef(
       "q470_edge_fdr",
       s"""WITH ${CausalOps.dailySql},
-         |ig AS (
-         |  SELECT el, v,
-         |    row_number() OVER (PARTITION BY el ORDER BY di) - 1 AS t,
-         |    count(*) OVER (PARTITION BY el) AS n
-         |  FROM daily),
-         |sh AS (SELECT unnest(generate_series(0, 29)) AS s),
-         |rs AS (
-         |  SELECT x.el AS src, y.el AS dst, sh.s,
-         |    (count(*) * ${dsumSql("x.v * y.v")} - ${dsumSql("x.v")} * ${dsumSql("y.v")})
-         |      / sqrt((count(*) * ${dsumSql("x.v * x.v")} - ${dsumSql("x.v")} * ${dsumSql("x.v")})
-         |        * (count(*) * ${dsumSql("y.v * y.v")} - ${dsumSql("y.v")} * ${dsumSql("y.v")}))
-         |      AS r
-         |  FROM ig y
-         |  JOIN sh ON sh.s < y.n
-         |  JOIN ig x ON x.el <> y.el AND x.t = (y.t - 1 + sh.s + y.n) % y.n
-         |  GROUP BY 1, 2, 3),
-         |ob AS (SELECT src, dst, r AS r_obs FROM rs WHERE s = 0),
+         |${Round26Ops.circularShiftSql("")},
          |sp AS (
          |  SELECT rs.src, rs.dst, max(ob.r_obs) AS r_obs,
          |    round((1.0 + count_if(rs.s > 0 AND abs(rs.r) >= abs(ob.r_obs)))
@@ -108,11 +92,7 @@ object Round31Ops {
     QueryDef(
       "q471_var_es",
       s"""WITH ${CausalOps.dailySql},
-         |rn AS (
-         |  SELECT el, di, v,
-         |    row_number() OVER (PARTITION BY el ORDER BY v, di) AS rk,
-         |    count(*) OVER (PARTITION BY el) AS n
-         |  FROM daily),
+         |${Round24Ops.valueRankSql},
          |cut AS (
          |  SELECT el,
          |    max(CASE WHEN rk = CAST(ceil(n * 0.10) AS BIGINT) THEN v END) AS var10,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,6 +18,56 @@ import org.apache.spark.sql.functions._
 object SearchOps {
   private def words(c: org.apache.spark.sql.Column) =
     graft.functions.Text.wordsCol(c)
+
+  /** Per-document length and counts of the fixed 3-term query "spark
+    * join fast" (`tok`, `tf`): q178, q261, q412. */
+  private[operators] val queryTfSql =
+    """tok AS (
+      |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
+      |  FROM documents),
+      |tf AS (
+      |  SELECT doc_id, CAST(len(ws) AS DOUBLE) AS dl,
+      |    CAST(len(list_filter(ws, x -> x = 'spark')) AS DOUBLE) AS tf1,
+      |    CAST(len(list_filter(ws, x -> x = 'join')) AS DOUBLE) AS tf2,
+      |    CAST(len(list_filter(ws, x -> x = 'fast')) AS DOUBLE) AS tf3
+      |  FROM tok)""".stripMargin
+
+  /** BM25 corpus statistics over `tf` (`st`): q178, q261. */
+  private[operators] val bm25StatsSql =
+    """st AS (
+      |  SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl,
+      |    CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
+      |    CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2,
+      |    CAST(sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df3
+      |  FROM tf)""".stripMargin
+
+  /** [[queryTfSql]]'s engine form: (doc_id, dl, tf1, tf2, tf3). */
+  private[operators] def queryTf(s: SparkSession, d: String): DataFrame = {
+    def cnt(w: String) =
+      size(filter(col("ws"), x => x === w)).cast("double")
+    Tables.documents(s, d)
+      .select(col("doc_id"), words(col("text")).as("ws"))
+      .select(col("doc_id"), size(col("ws")).cast("double").as("dl"),
+        cnt("spark").as("tf1"), cnt("join").as("tf2"), cnt("fast").as("tf3"))
+  }
+
+  /** [[bm25StatsSql]]'s engine form over [[queryTf]] rows. */
+  private[operators] def bm25Stats(tf: DataFrame): DataFrame =
+    tf.agg(
+      count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"),
+      sum(when(col("tf1") > 0, 1).otherwise(0)).cast("double").as("df1"),
+      sum(when(col("tf2") > 0, 1).otherwise(0)).cast("double").as("df2"),
+      sum(when(col("tf3") > 0, 1).otherwise(0)).cast("double").as("df3"))
+
+  /** The BM25 score (k1 = 1.2, b = 0.75) of a [[queryTf]] row against
+    * the [[bm25Stats]] row, terms summed in fixed order. */
+  private[operators] def bm25Score: Column = {
+    def term(tfc: String, dfc: String) =
+      log(lit(1) + (col("n") - col(dfc) + 0.5) / (col(dfc) + 0.5)) *
+        (col(tfc) * 2.2) /
+        (col(tfc) + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
+    term("tf1", "df1") + term("tf2", "df2") + term("tf3", "df3")
+  }
 
   /** q228's deterministic query vector (distinct lineage from the LSH
     * family's qvec so the two ANN paths probe different geometry). */
@@ -169,21 +219,8 @@ object SearchOps {
       */
     QueryDef(
       "q178_bm25_rank",
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, CAST(len(ws) AS DOUBLE) AS dl,
-        |    CAST(len(list_filter(ws, x -> x = 'spark')) AS DOUBLE) AS tf1,
-        |    CAST(len(list_filter(ws, x -> x = 'join')) AS DOUBLE) AS tf2,
-        |    CAST(len(list_filter(ws, x -> x = 'fast')) AS DOUBLE) AS tf3
-        |  FROM tok),
-        |st AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl,
-        |    CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-        |    CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2,
-        |    CAST(sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df3
-        |  FROM tf)
+      s"""WITH $queryTfSql,
+        |$bm25StatsSql
         |SELECT doc_id, round(
         |    ln(1 + (st.n - st.df1 + 0.5) / (st.df1 + 0.5)) *
         |      (tf1 * 2.2) / (tf1 + 1.2 * (0.25 + 0.75 * dl / st.avgdl)) +
@@ -194,26 +231,11 @@ object SearchOps {
         |FROM tf, st
         |WHERE tf1 + tf2 + tf3 > 0
         |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin) { (s, d) =>
-      def cnt(w: String) =
-        size(filter(col("ws"), x => x === w)).cast("double")
-      val tf = Tables.documents(s, d)
-        .select(col("doc_id"), words(col("text")).as("ws"))
-        .select(col("doc_id"), size(col("ws")).cast("double").as("dl"),
-          cnt("spark").as("tf1"), cnt("join").as("tf2"), cnt("fast").as("tf3"))
-      val st = tf.agg(
-        count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"),
-        sum(when(col("tf1") > 0, 1).otherwise(0)).cast("double").as("df1"),
-        sum(when(col("tf2") > 0, 1).otherwise(0)).cast("double").as("df2"),
-        sum(when(col("tf3") > 0, 1).otherwise(0)).cast("double").as("df3"))
-      def term(tfc: String, dfc: String) =
-        log(lit(1) + (col("n") - col(dfc) + 0.5) / (col(dfc) + 0.5)) *
-          (col(tfc) * 2.2) /
-          (col(tfc) + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
+      val tf = queryTf(s, d)
+      val st = bm25Stats(tf)
       tf.crossJoin(broadcast(st))
         .where(col("tf1") + col("tf2") + col("tf3") > 0)
-        .select(col("doc_id"),
-          round(term("tf1", "df1") + term("tf2", "df2") + term("tf3", "df3"), 6)
-            .as("bm25"))
+        .select(col("doc_id"), round(bm25Score, 6).as("bm25"))
         .orderBy(col("bm25").desc, col("doc_id")).limit(10)
     },
 

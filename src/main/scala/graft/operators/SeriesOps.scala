@@ -18,6 +18,63 @@ object SeriesOps {
   private def r6(c: Column) = round(c, 6)
   import CausalOps.{daily, dailySql, dsum}
 
+  /** Global-mean deviations, their lag-0..3 autocovariance sums and
+    * the lag-1..3 autocorrelations r1..r3 (`m`, `dv`, `c0`, `ck`, `r`):
+    * q283, q348; `extraCols` adds `r` columns. */
+  private def acfSql(extraCols: String): String =
+    s"""m AS (
+      |  SELECT el, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS vb
+      |  FROM daily GROUP BY 1),
+      |dv AS (
+      |  SELECT d.el, d.di, d.v - m.vb AS dev
+      |  FROM daily d JOIN m ON m.el = d.el),
+      |c0 AS (
+      |  SELECT el, count(*) AS n_days,
+      |    CAST(sum(CAST(dev * dev AS DECIMAL(38,12))) AS DOUBLE) AS c0
+      |  FROM dv GROUP BY 1),
+      |ck AS (
+      |  SELECT a.el, l.k,
+      |    CAST(sum(CAST(a.dev * b.dev AS DECIMAL(38,12))) AS DOUBLE) AS ck
+      |  FROM dv a
+      |  CROSS JOIN (VALUES (1), (2), (3)) l(k)
+      |  JOIN dv b ON b.el = a.el AND b.di = a.di + l.k
+      |  GROUP BY 1, 2),
+      |r AS (
+      |  SELECT c0.el, max(c0.n_days) AS n_days,$extraCols
+      |    max(CASE WHEN k = 1 THEN ck / c0 END) AS r1,
+      |    max(CASE WHEN k = 2 THEN ck / c0 END) AS r2,
+      |    max(CASE WHEN k = 3 THEN ck / c0 END) AS r3
+      |  FROM ck JOIN c0 ON ck.el = c0.el GROUP BY 1)""".stripMargin
+
+  /** [[acfSql]]'s deviations and autocovariance sums in engine form,
+    * over any (el, di, v) grid → (c0(cel, n_days, c0), ck(el, k, ck)). */
+  private def acov(g: DataFrame): (DataFrame, DataFrame) = {
+    val m = g.groupBy(col("el").as("mel"))
+      .agg((dsum(col("v")) / count(lit(1))).as("vb"))
+    val dv = g.join(broadcast(m), col("mel") === col("el"))
+      .select(col("el"), col("di"), (col("v") - col("vb")).as("dev"))
+    val c0 = dv.groupBy(col("el").as("cel"))
+      .agg(count(lit(1)).as("n_days"), dsum(col("dev") * col("dev")).as("c0"))
+    val s = g.sparkSession
+    import s.implicits._
+    val lags = Seq(1, 2, 3).toDF("k")
+    val b = dv.select(col("el").as("elb"), col("di").as("dib"), col("dev").as("devb"))
+    val ck = dv.crossJoin(broadcast(lags))
+      .join(b, col("elb") === col("el") && col("dib") === col("di") + col("k"))
+      .groupBy("el", "k")
+      .agg(dsum(col("dev") * col("devb")).as("ck"))
+    (c0, ck)
+  }
+
+  /** Each grid row's (el, v) with its 1-based day position p and the
+    * element's day count n: q308, q312. */
+  private def positions(g: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    g.select(col("el"), col("v"),
+      row_number().over(Window.partitionBy(col("el")).orderBy(col("di"))).as("p"),
+      count(lit(1)).over(Window.partitionBy(col("el"))).as("n"))
+  }
+
   /** The banded-DTW dynamic program as a LINEAR fold over the row-major
     * cell index k = i·ly + j, carrying only the last ly+1 DP values —
     * O(ly) state instead of the O(lx·ly) matrix, which is what lets the
@@ -175,29 +232,7 @@ object SeriesOps {
     QueryDef(
       "q283_pacf",
       s"""WITH $dailySql,
-        |m AS (
-        |  SELECT el, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS vb
-        |  FROM daily GROUP BY 1),
-        |dv AS (
-        |  SELECT d.el, d.di, d.v - m.vb AS dev
-        |  FROM daily d JOIN m ON m.el = d.el),
-        |c0 AS (
-        |  SELECT el, count(*) AS n_days,
-        |    CAST(sum(CAST(dev * dev AS DECIMAL(38,12))) AS DOUBLE) AS c0
-        |  FROM dv GROUP BY 1),
-        |ck AS (
-        |  SELECT a.el, l.k,
-        |    CAST(sum(CAST(a.dev * b.dev AS DECIMAL(38,12))) AS DOUBLE) AS ck
-        |  FROM dv a
-        |  CROSS JOIN (VALUES (1), (2), (3)) l(k)
-        |  JOIN dv b ON b.el = a.el AND b.di = a.di + l.k
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT c0.el, max(c0.n_days) AS n_days,
-        |    max(CASE WHEN k = 1 THEN ck / c0 END) AS r1,
-        |    max(CASE WHEN k = 2 THEN ck / c0 END) AS r2,
-        |    max(CASE WHEN k = 3 THEN ck / c0 END) AS r3
-        |  FROM ck JOIN c0 ON ck.el = c0.el GROUP BY 1),
+        |${acfSql("")},
         |dl AS (
         |  SELECT el, n_days, r1, r2, r3,
         |    (r2 - r1 * r1) / (1 - r1 * r1) AS phi22
@@ -213,20 +248,7 @@ object SeriesOps {
         |    / (1 - phi21 * r1 - phi22 * r2), 6) AS pacf3,
         |  round(r2, 6) AS acf2, round(r3, 6) AS acf3
         |FROM dl2 ORDER BY el""".stripMargin) { (s, d) =>
-      val g = daily(s, d)
-      val m = g.groupBy(col("el").as("mel"))
-        .agg((dsum(col("v")) / count(lit(1))).as("vb"))
-      val dv = g.join(broadcast(m), col("mel") === col("el"))
-        .select(col("el"), col("di"), (col("v") - col("vb")).as("dev"))
-      val c0 = dv.groupBy(col("el").as("cel"))
-        .agg(count(lit(1)).as("n_days"), dsum(col("dev") * col("dev")).as("c0"))
-      import s.implicits._
-      val lags = Seq(1, 2, 3).toDF("k")
-      val b = dv.select(col("el").as("elb"), col("di").as("dib"), col("dev").as("devb"))
-      val ck = dv.crossJoin(broadcast(lags))
-        .join(b, col("elb") === col("el") && col("dib") === col("di") + col("k"))
-        .groupBy("el", "k")
-        .agg(dsum(col("dev") * col("devb")).as("ck"))
+      val (c0, ck) = acov(daily(s, d))
       val r = ck.join(broadcast(c0), col("cel") === col("el"))
         .groupBy("el")
         .agg(max(col("n_days")).as("n_days"),
@@ -258,29 +280,7 @@ object SeriesOps {
     QueryDef(
       "q348_ar_order_bic",
       s"""WITH $dailySql,
-        |m AS (
-        |  SELECT el, CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS vb
-        |  FROM daily GROUP BY 1),
-        |dv AS (
-        |  SELECT d.el, d.di, d.v - m.vb AS dev
-        |  FROM daily d JOIN m ON m.el = d.el),
-        |c0 AS (
-        |  SELECT el, count(*) AS n_days,
-        |    CAST(sum(CAST(dev * dev AS DECIMAL(38,12))) AS DOUBLE) AS c0
-        |  FROM dv GROUP BY 1),
-        |ck AS (
-        |  SELECT a.el, l.k,
-        |    CAST(sum(CAST(a.dev * b.dev AS DECIMAL(38,12))) AS DOUBLE) AS ck
-        |  FROM dv a
-        |  CROSS JOIN (VALUES (1), (2), (3)) l(k)
-        |  JOIN dv b ON b.el = a.el AND b.di = a.di + l.k
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT c0.el, max(c0.n_days) AS n_days, max(c0.c0) AS c0,
-        |    max(CASE WHEN k = 1 THEN ck / c0 END) AS r1,
-        |    max(CASE WHEN k = 2 THEN ck / c0 END) AS r2,
-        |    max(CASE WHEN k = 3 THEN ck / c0 END) AS r3
-        |  FROM ck JOIN c0 ON ck.el = c0.el GROUP BY 1),
+        |${acfSql(" max(c0.c0) AS c0,")},
         |dl AS (
         |  SELECT *, (r2 - r1 * r1) / (1 - r1 * r1) AS phi22
         |  FROM r),
@@ -307,20 +307,7 @@ object SeriesOps {
         |  CAST(CASE WHEN bic1 <= bic2 AND bic1 <= bic3 THEN 1
         |            WHEN bic2 <= bic3 THEN 2 ELSE 3 END AS INT) AS best_p
         |FROM bic ORDER BY el""".stripMargin) { (s, d) =>
-      val g = daily(s, d)
-      val m = g.groupBy(col("el").as("mel"))
-        .agg((dsum(col("v")) / count(lit(1))).as("vb"))
-      val dv = g.join(broadcast(m), col("mel") === col("el"))
-        .select(col("el"), col("di"), (col("v") - col("vb")).as("dev"))
-      val c0 = dv.groupBy(col("el").as("cel"))
-        .agg(count(lit(1)).as("n_days"), dsum(col("dev") * col("dev")).as("c0"))
-      import s.implicits._
-      val lags = Seq(1, 2, 3).toDF("k")
-      val b = dv.select(col("el").as("elb"), col("di").as("dib"), col("dev").as("devb"))
-      val ck = dv.crossJoin(broadcast(lags))
-        .join(b, col("elb") === col("el") && col("dib") === col("di") + col("k"))
-        .groupBy("el", "k")
-        .agg(dsum(col("dev") * col("devb")).as("ck"))
+      val (c0, ck) = acov(daily(s, d))
       val r = ck.join(broadcast(c0), col("cel") === col("el"))
         .groupBy("el")
         .agg(max(col("n_days")).as("n_days"), max(col("c0")).as("c0"),
@@ -651,10 +638,7 @@ object SeriesOps {
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       import s.implicits._
-      val g = daily(s, d)
-      val pos = g.select(col("el"), col("v"),
-        row_number().over(Window.partitionBy(col("el")).orderBy(col("di"))).as("p"),
-        count(lit(1)).over(Window.partitionBy(col("el"))).as("n"))
+      val pos = positions(daily(s, d))
       val blk = pos.crossJoin(broadcast(Seq(4, 8, 16).toDF("w")))
         .withColumn("b", expr("CAST((p - 1) DIV w AS INT)"))
         .withColumn("bn",
@@ -742,11 +726,7 @@ object SeriesOps {
         |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       import s.implicits._
-      val g = daily(s, d)
-      val pos = g.select(col("el"), col("v"),
-          row_number().over(Window.partitionBy(col("el")).orderBy(col("di"))).as("p"),
-          count(lit(1)).over(Window.partitionBy(col("el"))).as("n"))
-        .where(col("n") >= 16)
+      val pos = positions(daily(s, d)).where(col("n") >= 16)
       val mu = pos.groupBy(col("el").as("mel"))
         .agg((dsum(col("v")) / count(lit(1))).as("m"))
       val tr = pos.join(broadcast(mu), col("mel") === col("el"))

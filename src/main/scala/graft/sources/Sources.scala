@@ -23,6 +23,16 @@ object Sources {
   private def scratch(d: String, tag: String): String =
     s"${graft.streaming.Streaming.ioBase}/${d.replaceAll("[^A-Za-z0-9.]", "_")}/$tag"
 
+  /** The graft-series connector's day rollup, stated over the same
+    * deterministic value function: the oracle of q116 and q117. */
+  private val seriesSql =
+    """SELECT day, count(*) AS n, round(sum(v), 2) AS total, round(avg(v), 6) AS mean_v
+      |FROM (
+      |  SELECT u.user_id, d.day,
+      |    CAST(((u.user_id*31 + d.day*7) % 100) AS DOUBLE)/10.0 AS v
+      |  FROM generate_series(0, 99) u(user_id), generate_series(0, 29) d(day)) t
+      |GROUP BY day ORDER BY day""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     /** CSV sink + scan with explicit schema (no inference pass — at
@@ -161,12 +171,7 @@ object Sources {
       */
     QueryDef(
       "q116_custom_source",
-      """SELECT day, count(*) AS n, round(sum(v), 2) AS total, round(avg(v), 6) AS mean_v
-        |FROM (
-        |  SELECT u.user_id, d.day,
-        |    CAST(((u.user_id*31 + d.day*7) % 100) AS DOUBLE)/10.0 AS v
-        |  FROM generate_series(0, 99) u(user_id), generate_series(0, 29) d(day)) t
-        |GROUP BY day ORDER BY day""".stripMargin) { (s, _) =>
+      seriesSql) { (s, _) =>
       s.read.format("graft-series")
         .option("users", "100").option("days", "30").option("partitions", "8")
         .load()
@@ -184,12 +189,7 @@ object Sources {
       */
     QueryDef(
       "q117_stream_custom_source",
-      """SELECT day, count(*) AS n, round(sum(v), 2) AS total, round(avg(v), 6) AS mean_v
-        |FROM (
-        |  SELECT u.user_id, d.day,
-        |    CAST(((u.user_id*31 + d.day*7) % 100) AS DOUBLE)/10.0 AS v
-        |  FROM generate_series(0, 99) u(user_id), generate_series(0, 29) d(day)) t
-        |GROUP BY day ORDER BY day""".stripMargin) { (s, _) =>
+      seriesSql) { (s, _) =>
       val agg = s.readStream.format("graft-series")
         .option("users", "100").option("days", "30").option("partitions", "8")
         .load()

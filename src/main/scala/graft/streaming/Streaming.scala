@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.QueryDef
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
@@ -421,6 +421,64 @@ object Streaming {
       |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
       |  FROM flagged)""".stripMargin
 
+  /** Per-session start and size (`agg`) over [[sessSql]]: q83, q197. */
+  private val sessAggSql =
+    s"""$sessSql,
+      |agg AS (
+      |  SELECT user_id, min(ts) AS start_ts, max(epoch_us(ts)) AS end_us,
+      |    count(*) AS n_events
+      |  FROM sess GROUP BY user_id, sid)""".stripMargin
+
+  /** Start and size of every `sess` session, the final SELECT of q82
+    * and q215. */
+  private val sessStartsSql =
+    """SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+      |  count(*) AS n_events
+      |FROM sess GROUP BY user_id, sid
+      |ORDER BY user_id, session_start""".stripMargin
+
+  /** [[sessStartsSql]]'s engine form over the batch events, sessions
+    * cut by the session_window column `sw`. */
+  private def sessionStarts(s: SparkSession, d: String, sw: Column): DataFrame =
+    graft.Tables.events(s, d)
+      .groupBy(col("user_id"), sw.as("sw"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        col("n_events"))
+      .orderBy("user_id", "session_start")
+
+  /** The per-event session gap of q215/q216 (`g`): a purchase holds its
+    * session open 1 h, every other event 15 min. */
+  private val dynGapSql =
+    """g AS (
+      |  SELECT user_id, ts, event_id,
+      |    CASE WHEN event_type = 'purchase' THEN 3600000000 ELSE 900000000 END AS gap_us
+      |  FROM events)""".stripMargin
+
+  /** [[dynGapSql]]'s gap as a session_window duration. */
+  private def dynGap: Column =
+    when(col("event_type") === "purchase", lit("1 hour")).otherwise(lit("15 minutes"))
+
+  /** q123/q171's click → purchase interval join on the event stream:
+    * a purchase matches a click of its user within [c_ts, c_ts + 10 min),
+    * both sides watermarked 1 h behind. */
+  private def clickPurchaseJoin(s: SparkSession, d: String, joinType: String): DataFrame = {
+    val clicks = eventStream(s, d)
+      .where(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    val purchases = eventStream(s, d)
+      .where(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("p_ts") >= col("c_ts") &&
+        col("p_ts") < col("c_ts") + expr("INTERVAL 10 MINUTES"),
+      joinType)
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     /** Arbitrary stateful processing through the transformWithState API
@@ -460,11 +518,7 @@ object Streaming {
       */
     QueryDef(
       "q197_stream_timer_sessions",
-      s"""WITH $sessSql,
-        |agg AS (
-        |  SELECT user_id, min(ts) AS start_ts, max(epoch_us(ts)) AS end_us,
-        |    count(*) AS n_events
-        |  FROM sess GROUP BY user_id, sid)
+      s"""WITH $sessAggSql
         |SELECT user_id, strftime(start_ts, '%Y-%m-%d %H:%M:%S') AS session_start, n_events
         |FROM agg
         |WHERE (end_us + 1800000000) // 1000
@@ -618,17 +672,8 @@ object Streaming {
     QueryDef(
       "q82_session_window",
       s"""WITH $sessSql
-        |SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  count(*) AS n_events
-        |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
-      graft.Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
+        |$sessStartsSql""".stripMargin) { (s, d) =>
+      sessionStarts(s, d, session_window(col("ts"), "30 minutes"))
     },
 
     /** DYNAMIC-gap session windows: the gap is an expression of the
@@ -642,10 +687,7 @@ object Streaming {
       */
     QueryDef(
       "q215_dynamic_session_gap",
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN event_type = 'purchase' THEN 3600000000 ELSE 900000000 END AS gap_us
-        |  FROM events),
+      s"""WITH $dynGapSql,
         |flagged AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN max(epoch_us(ts) + gap_us) OVER (PARTITION BY user_id
@@ -661,19 +703,8 @@ object Streaming {
         |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |      ROWS UNBOUNDED PRECEDING) AS sid
         |  FROM flagged)
-        |SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  count(*) AS n_events
-        |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
-      graft.Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"),
-          when(col("event_type") === "purchase", lit("1 hour"))
-            .otherwise(lit("15 minutes"))).as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
+        |$sessStartsSql""".stripMargin) { (s, d) =>
+      sessionStarts(s, d, session_window(col("ts"), dynGap))
     },
 
     /** Durable streaming sink: stream → dropDuplicates → parquet file
@@ -772,18 +803,7 @@ object Streaming {
         | AND epoch_us(p.ts) >= epoch_us(c.ts)
         | AND epoch_us(p.ts) - epoch_us(c.ts) < 600000000
         |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin) { (s, d) =>
-      val clicks = eventStream(s, d)
-        .where(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventStream(s, d)
-        .where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") < col("c_ts") + expr("INTERVAL 10 MINUTES"))
+      val joined = clickPurchaseJoin(s, d, "inner")
       // append the raw matches, then aggregate the sink table in batch
       // (a second stateful agg above the join would gate on watermark)
       drain(s, joined, "graft_ss_join", "append")
@@ -831,19 +851,7 @@ object Streaming {
         |  CAST(coalesce(u.n_unmatched, 0) AS BIGINT) AS n_unmatched
         |FROM m FULL OUTER JOIN u ON m.user_id = u.user_id
         |ORDER BY user_id""".stripMargin) { (s, d) =>
-      val clicks = eventStream(s, d)
-        .where(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventStream(s, d)
-        .where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") < col("c_ts") + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
+      val joined = clickPurchaseJoin(s, d, "left_outer")
       drain(s, joined, "graft_ss_left_join", "append")
         .groupBy("user_id")
         .agg(count(col("p_user")).as("n_pairs"),
@@ -908,11 +916,7 @@ object Streaming {
       */
     QueryDef(
       "q83_stream_sessionize",
-      s"""WITH $sessSql,
-        |agg AS (
-        |  SELECT user_id, min(ts) AS start_ts, max(epoch_us(ts)) AS end_us,
-        |    count(*) AS n_events
-        |  FROM sess GROUP BY user_id, sid)
+      s"""WITH $sessAggSql
         |SELECT user_id, strftime(start_ts, '%Y-%m-%d %H:%M:%S') AS session_start, n_events
         |FROM agg
         |WHERE end_us + 1800000000 <= (SELECT max(epoch_us(ts)) - 10000000 FROM events)
@@ -938,10 +942,7 @@ object Streaming {
       */
     QueryDef(
       "q216_stream_dynamic_sessions",
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN event_type = 'purchase' THEN 3600000000 ELSE 900000000 END AS gap_us
-        |  FROM events),
+      s"""WITH $dynGapSql,
         |flagged AS (
         |  SELECT user_id, ts, event_id, gap_us,
         |    CASE WHEN max(epoch_us(ts) + gap_us) OVER w1 IS NULL
@@ -965,9 +966,7 @@ object Streaming {
         |ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
       val agg = eventStream(s, d)
         .withWatermark("ts", "10 seconds")
-        .groupBy(col("user_id"), session_window(col("ts"),
-          when(col("event_type") === "purchase", lit("1 hour"))
-            .otherwise(lit("15 minutes"))).as("sw"))
+        .groupBy(col("user_id"), session_window(col("ts"), dynGap).as("sw"))
         .agg(count(lit(1)).as("n_events"))
       drain(s, agg, "graft_stream_dyn_sessions", "append")
         .select(col("user_id"),

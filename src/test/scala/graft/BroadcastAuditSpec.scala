@@ -90,8 +90,8 @@ class BroadcastAuditSpec extends AnyFunSuite {
     //   capped → model); hs lit bandwidths; q379 1-row λ/norm/trace,
     //   64-row dim-grain mean + iterate vectors (schema-fixed → domain);
     //   nel 1row; rg the 1024-entry literal JL sign grid (lit)
-    "Round16Ops.scala" -> Set("ag", "b1", "b2", "bDf", "fz", "gm", "n1",
-      "nt", "p2", "p2r", "po0", "po1", "prev", "ui0", "ui1", "ui2"),
+    "Round16Ops.scala" -> Set("ag", "b1", "b2", "fz", "gm", "n1",
+      "nt", "p2", "p2r", "po0", "po1", "prev", "ui2"),
     // ^ all 1-row fitted-parameter / scalar tables (Cox β and U/I rows,
     //   IRLS parameter rows, outcome-model coefficient rows, rank-sum
     //   and moment totals, GT corpus scalars) except gm — the 5-row
@@ -105,12 +105,12 @@ class BroadcastAuditSpec extends AnyFunSuite {
     // ^ 1-row tables throughout: the arm-B summary row, the global
     //   sensitive distribution, winsorization/threshold order-statistic
     //   anchors, the global max-day scalar
-    "Round19Ops.scala" -> Set("b2", "bDf", "nt", "taus", "ui0", "ui1"),
-    // ^ 1-row Cox beta / score rows, the KM total row, and the 2-row
+    "Round19Ops.scala" -> Set("b2", "bDf", "taus", "ui0", "ui1"),
+    // ^ 1-row Cox beta / score rows (coxPass, coxFit) and the 2-row
     //   literal tau table
     "Round20Ops.scala" -> Set("kk", "pe", "st", "tot"),
     // ^ 3-row literal k grid; 1-row P_e / corpus-stats / panel totals
-    "Round22Ops.scala" -> Set("p2", "p2a", "pg", "prev", "ym"),
+    "Round22Ops.scala" -> Set("p2", "pg", "prev", "ym"),
     // ^ element-grain GLM parameter rows (O(P)), the 3-row period/fpp
     //   grids, and the O(P) per-element mean/variance row
     "Round23Ops.scala" -> Set("segs", "sm", "per", "tot", "lagT", "st", "den",

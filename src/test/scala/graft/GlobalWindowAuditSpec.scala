@@ -55,11 +55,15 @@ class GlobalWindowAuditSpec extends AnyFunSuite {
     "CorpusOps.scala" -> (0, 1),     // source-grain mixture shares
     "CurriculumOps.scala" -> (1, 0), // srcIdx domain / 16-file manifest
     "GraphOps.scala" -> (1, 0),      // rank over the top-20 cut
-    "HybridOps.scala" -> (4, 0),     // ranks over top-100 cut lists
-    "InferenceOps.scala" -> (4, 1),  // survival t-grid, bootstrap reps,
+    "HybridOps.scala" -> (4, 0),     // ranks over q261's top-100 cut
+                                     // lists and the q280/q410 top-10
+                                     // ANN lists (annLists)
+    "InferenceOps.scala" -> (4, 1),  // survival t-grid (kmCurve, q277
+                                     // and q403), bootstrap reps,
                                      // day index, contingency cells
     "Multimodal.scala" -> (1, 0),    // rank over the top-200 heap cut
-    "QualityOps.scala" -> (1, 2),    // decile cum; 512-bucket totals ×2
+    "QualityOps.scala" -> (1, 1),    // decile cum; 512-bucket totals
+                                     // (dsirLambda, q318 and q354)
     "Relational.scala" -> (1, 0),    // q21 exact AUC (documented; q87)
     "RetainOps.scala" -> (2, 0),     // q78/q254 exact AUC (documented)
     "RobustOps.scala" -> (1, 1),     // day window; event-type shares
@@ -67,16 +71,13 @@ class GlobalWindowAuditSpec extends AnyFunSuite {
     "Round15Ops.scala" -> (1, 0),    // q378 placebo rank over the
                                      // element-grain RMSPE table
                                      // (guardFullEnum-capped)
-    "Round16Ops.scala" -> (1, 0),    // q384 risk-set suffix sums over
-                                     // the horizon-bounded unique-time
-                                     // grid (≤ 31 rows)
-    "Round19Ops.scala" -> (6, 0),    // q402/q403 Cox risk suffix +
-                                     // hazard prefix + KM lag windows,
+    "Round19Ops.scala" -> (4, 0),    // q384/q402 Cox risk suffix
+                                     // (coxPass) + q402 risk suffix and
+                                     // hazard prefix + q403 lag window,
                                      // all over the horizon-bounded
                                      // unique-time grid (≤ 31 rows)
-    "Round20Ops.scala" -> (3, 0),    // q410: two position ranks + the
-                                     // cascade survival window, all
-                                     // over 10-row top-k cuts
+    "Round20Ops.scala" -> (1, 0),    // q410 cascade survival window
+                                     // over the 10-row top-k cut
     "Round21Ops.scala" -> (1, 0),    // lnFact cumulative over the
                                      // cohort-bounded integer grid
                                      // (≤ ~4k rows at any SF slice)

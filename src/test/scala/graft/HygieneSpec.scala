@@ -141,4 +141,30 @@ class HygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"stream staging code is back:\n  ${offenders.mkString("\n  ")}")
   }
+
+  test("no run of 5 consecutive |-margin oracle lines appears twice in src/main") {
+    // a CTE two queries share is one named fragment in the module that
+    // owns it (CausalOps.dailySql, CausalOps.miReadoutSql, ...), never a
+    // pasted second copy that a fix to the first one misses
+    val n = 5
+    val first = scala.collection.mutable.Map.empty[Seq[String], String]
+    val pasted = mainSources.sortBy(_.getPath).flatMap { f =>
+      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n").map(_.trim).toSeq
+      var last = -2
+      (0 to lines.length - n).flatMap { i =>
+        val w = lines.slice(i, i + n)
+        if (!w.forall(_.startsWith("|"))) None
+        else first.get(w) match {
+          case None => first(w) = s"${f.getPath}:${i + 1}"; None
+          case Some(at) =>
+            val fresh = i != last + 1 // report a pasted block once
+            last = i
+            if (fresh) Some(s"${f.getPath}:${i + 1} repeats $at") else None
+        }
+      }
+    }
+    assert(pasted.isEmpty,
+      s"oracle SQL pasted twice; share it as a named fragment:\n  ${pasted.mkString("\n  ")}")
+  }
 }

@@ -11,7 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * bounds), q77 (attention is a distribution), q78 (eval metrics match
   * the q20/q21 oracle formulas recomputed independently), q127
   * (stratified sample — oracle-checked since round 12, kept here for the
-  * binomial per-stratum distribution bounds the oracle can't express).
+  * binomial per-stratum distribution bounds the oracle can't express),
+  * and q37 (the exact-k md5 sample equals an independent pick under its
+  * l_quantity tie-break, on data where its md5 key ties).
   */
 class RowsOnlySpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -141,5 +143,24 @@ class RowsOnlySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(math.abs(got - f * n) <= 4 * sd + 1,
         s"$et: sampled $got of $n at f=$f (±${4 * sd + 1})")
     }
+  }
+
+  test("q37 exact-k sample is the 128 smallest (md5 key, l_quantity) rows") {
+    // (l_orderkey, l_linenumber) repeats in the test data (up to 5 rows
+    // per pair here), so md5 of it ties; l_quantity breaks the ties, and
+    // rows that still tie are identical. The pick is recomputed here from
+    // the raw rows, independently of the engine's sort.
+    import scala.math.Ordering.Double.TotalOrdering
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    def hex(s: String) = md5.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    val rows = Tables.lineitem(spark, sf)
+      .select("l_orderkey", "l_linenumber", "l_quantity").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+    val keys = rows.map { case (o, l, _) => (o, l) }
+    assert(keys.distinct.length < keys.length, "the md5 key no longer ties")
+    val expected = rows.sortBy { case (o, l, q) => (hex(s"$o#$l"), q) }.take(128).sorted
+    val got = SparkEntry.queries("q37_sample_exactk")(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+    assert(got.toSeq === expected.toSeq, "q37 picked other rows")
   }
 }
