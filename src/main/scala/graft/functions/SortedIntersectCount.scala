@@ -74,6 +74,21 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
+  /** Jaccard similarity |a ∩ b| / |a ∪ b| of two ascending,
+    * duplicate-free arrays: the expression's linear merge on the JVM
+    * arrays of a typed pair loop (q62, q225), allocating nothing.
+    */
+  def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    var i = 0; var j = 0; var c = 0
+    while (i < a.length && j < b.length) {
+      val av = a(i); val bv = b(j)
+      if (av == bv) { c += 1; i += 1; j += 1 }
+      else if (av < bv) i += 1
+      else j += 1
+    }
+    c.toDouble / (a.length + b.length - c)
+  }
+
   /** Register `sorted_intersect_count` in the session function registry
     * (idempotent); also shipped via [[graft.GraftExtensions]].
     */

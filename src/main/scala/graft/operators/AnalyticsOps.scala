@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (k-means centroids, 20-node rank vector) — never O(rows).
   */
 object AnalyticsOps {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** k-means configuration shared by the Spark plan and the generated
     * oracle SQL: first `Dims` embedding components, `K` clusters seeded

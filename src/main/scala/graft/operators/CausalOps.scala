@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * (identical IEEE expressions both sides) follow.
   */
 object CausalOps {
-  private def r6(c: Column) = round(c, 6)
+  /** A result column rounded to the 6 decimals every oracle compares. */
+  private[operators] def r6(c: Column): Column = round(c, 6)
 
   // dailySql / daily / dsum are shared with the round-9 sibling modules
   // (SeriesOps, DriftOps) so every series-shaped query family runs on the
@@ -31,6 +32,9 @@ object CausalOps {
 
   /** Exact-decimal sum of a deterministic double term, back to double. */
   private[operators] def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
+
+  /** [[dsum]] as oracle SQL over the expression `x`. */
+  private[operators] def dsumSql(x: String): String = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
 
   private[operators] val dailySql =
     """daily AS (

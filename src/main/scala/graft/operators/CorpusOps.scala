@@ -26,8 +26,7 @@ import org.apache.spark.sql.functions._
   * ops are that stage generalized to corpus curation at 100 TB.
   */
 object CorpusOps {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
+  import CausalOps.{dsum, r6}
 
   private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
 

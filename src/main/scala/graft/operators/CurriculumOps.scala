@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Scratch, Tables}
+import graft.functions.SortedIntersectCount
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -530,8 +531,9 @@ object CurriculumOps {
       // pairs), so each doc row carries its surviving-band set and the
       // check is `keys equal at b' ∧ b' surviving` — provably the same
       // pair set as the DISTINCT over the capped bands table. The
-      // verify is the same sorted_intersect_count two-pointer merge,
-      // inlined; jaccard doubles are identical small-integer ratios.
+      // verify is sorted_intersect_count's two-pointer merge
+      // (`SortedIntersectCount.jaccard`); jaccard doubles are identical
+      // small-integer ratios.
       val mask = bands.groupBy("doc_id")
         .agg(collect_set(col("band")).as("sv"))
       val enriched = bands
@@ -578,14 +580,7 @@ object CurriculumOps {
                 bb += 1
               }
               if (!dup) {
-                var x = 0; var y = 0; var inter = 0
-                while (x < aw.length && y < bw.length) {
-                  val c = java.lang.Long.compare(aw(x), bw(y))
-                  if (c == 0) { inter += 1; x += 1; y += 1 }
-                  else if (c < 0) x += 1
-                  else y += 1
-                }
-                val j = inter.toDouble / (aw.length + bw.length - inter)
+                val j = SortedIntersectCount.jaccard(aw, bw)
                 if (j >= 0.5) out += ((aId, bId, j))
               }
               jj += 1

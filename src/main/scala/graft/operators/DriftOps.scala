@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * 100 TB.
   */
 object DriftOps {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
+  import CausalOps.{dsum, r6}
 
   /** The q20/q21 scored-set convention: a deterministic closed-form
     * score over lineitem so probability-quality metrics are exactly

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * bucketing with q64's exact kernel.
   */
 object Extensions {
-  private def r6(c: org.apache.spark.sql.Column) = round(c, 6)
+  import CausalOps.r6
   private def r2x(c: org.apache.spark.sql.Column) = round(c, 2)
 
   /** q255's analyzed catalog tables: external tables over the raw

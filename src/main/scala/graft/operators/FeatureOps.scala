@@ -53,7 +53,7 @@ object FeatureOps {
 
   private def r2(c: Column) = round(c, 2)
   private def r4(c: Column) = round(c, 4)
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * one pass, not 15 chained self-joins.
   */
 object GraphOps {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
+  import CausalOps.{dsum, r6}
 
   /** Support-floored co-order part pairs — the ONE basket materialization
     * the whole co-purchase family shares (round 17, guide §2.4 "remove

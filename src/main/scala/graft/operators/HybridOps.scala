@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    cluster — O(N²/K) instead of O(N²) pair work.
   */
 object HybridOps {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** q261's fixed query vector — distinct lineage from q64's `qvec` and
     * q228's `pqQueryVec` so the three retrieval paths probe different

@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
   * engines; decimal sums for the rank accumulations.
   */
 object InferenceOps {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
+  import CausalOps.{dsum, r6}
 
   /** Loud ceiling for the O(V·P²) pair grids (q273/q274). */
   private[graft] val MaxInferenceElements = 64L

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.SortedIntersectCount
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object LLMPipeline {
   private def r2(c: Column) = round(c, 2)
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** Non-empty word tokens — the shared contract in
     * [[graft.functions.Text.wordsCol]].
@@ -167,17 +168,7 @@ object LLMPipeline {
             }
             // size-ratio prefilter: J ≥ 0.5 ⇒ |a| ≤ 2|b| and |b| ≤ 2|a|
             if (!dup && aw.length <= 2 * bw.length && bw.length <= 2 * aw.length) {
-              // allocation-free two-pointer intersection over the sorted
-              // hash arrays — the sorted_intersect_count expression's
-              // algorithm, inlined
-              var x = 0; var y = 0; var inter = 0
-              while (x < aw.length && y < bw.length) {
-                val c = java.lang.Long.compare(aw(x), bw(y))
-                if (c == 0) { inter += 1; x += 1; y += 1 }
-                else if (c < 0) x += 1
-                else y += 1
-              }
-              val j = inter.toDouble / (aw.length + bw.length - inter)
+              val j = SortedIntersectCount.jaccard(aw, bw)
               if (j >= 0.5) out += ((src, acnt * bcnt, j))
             }
             jj += 1
@@ -330,7 +321,7 @@ object LLMPipeline {
       // and 71% of all pairs genuinely clear J ≥ 0.5, so candidate
       // generation cannot beat Θ(matching pairs); the sub-quadratic
       // APPROXIMATE path is the banding family (q71/q220/q225/q135).
-      graft.functions.SortedIntersectCount.register(s)
+      SortedIntersectCount.register(s)
       val cls = q62Classes(s, d)
       // Size-ratio prefilter + salted shuffle join (q93's pattern) live
       // in [[q62CrossNaive]]: the equi-key (source) has only ~20 values,
@@ -672,7 +663,7 @@ object LLMPipeline {
         }
         xxhash64(rows: _*).as(s"sig$b")
       }
-      graft.functions.SortedIntersectCount.register(s)
+      SortedIntersectCount.register(s)
       val docs = Tables.documents(s, d)
         .withColumn("h", sha2(col("text"), 256))
         .withColumn("rn", row_number().over(repW))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
   * tables and stay in whole-stage codegen.
   */
 object PipelineMore {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** Whitespace words, empty tokens dropped (same contract as
     * LLMPipeline's tokenizer — reference tokenization is whitespace

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object Relational {
   private def r2(c: Column) = round(c, 2)
   private def r4(c: Column) = round(c, 4)
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** Deterministic per-row logit + label used by the metric queries.
     * Mirrors the reference's score/label contract (`model.py:153-158`):

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object RelationalExt {
   private def r2(c: Column) = round(c, 2)
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object RelationalMore {
   private def r2(c: Column) = round(c, 2)
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
   private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
 
   val defs: Seq[QueryDef] = Seq(

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Scratch, Tables}
 import graft.functions.Retain
 import graft.functions.Retain.{RetainWeights, F, H, T, numTasks}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,9 +17,12 @@ import scala.reflect.ClassTag
   * (`model.py:157-159`), and the asymmetric multi-task B matrix
   * (`model.py:86-101,174-184`).
   *
-  * Execution shape (SURVEY.md §4.3): series assembly is two shuffles on
-  * `user_id` (pivot + collect); scoring is a narrow typed `map` under a
-  * broadcast weight struct (no shuffle, scales linearly with rows);
+  * Execution shape (SURVEY.md §4.3): featurizing is one scan of
+  * `events` and one exchange on `user_id` that sums the [T][F] cells and
+  * the labels together and decodes straight into arrays, in the row
+  * layout the training passes depend on ([[base]]); scoring is a narrow
+  * typed `map` under a broadcast weight struct (no shuffle, scales
+  * linearly with rows);
   * full-batch training runs one `treeAggregate` pass per Adam step
   * ([[trainAmtl]] over cached context vectors, [[trainFull]] through
   * RetainGrad.rowGrad) and hands the gradient to the shared driver-side
@@ -40,76 +44,103 @@ object RetainOps {
   private val gridStart = "2024-01-01"
   private val labelSplit = "2024-01-12 00:00:00" // steps: days 0..10; labels: after
 
-  /** Dense per-user [T][F] series from the first 11 days of events:
-    * day-bucket → pivot to the 5 event-type features (missing ⇒ 0) →
-    * ordered collect. The engine-side `data_loader` (`run.py:47`).
-    */
-  def assembleSeries(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-    val feat = e
-      .where(col("ts") < lit(labelSplit).cast("timestamp"))
-      .withColumn("day", datediff(col("ts").cast("date"), lit(gridStart).cast("date")))
-      .where(col("day").between(0, T - 1))
-      .groupBy("user_id", "day")
-      .pivot("event_type", eventTypes)
-      .agg(sum(col("value")))
-    val stepArr = array(eventTypes.map(t => coalesce(col(t), lit(0.0)) / 100.0): _*)
-    feat.select(col("user_id"), col("day"), stepArr.as("fv"))
-      .groupBy("user_id")
-      .agg(sort_array(collect_list(struct(col("day"), col("fv")))).as("steps"))
-  }
-
-  /** Per-user binary labels for the 3 tasks from the post-split window
-    * (no leakage into the feature grid): high-value purchase / error /
-    * signup, thresholds picked for rough class balance.
-    */
-  def labels(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .where(col("ts") >= lit(labelSplit).cast("timestamp"))
-    def lab(t: String) =
-      max(when(col("event_type") === t && col("value") > 140.0, 1.0).otherwise(0.0))
-    e.groupBy("user_id")
-      .agg(lab("purchase").as("y0"), lab("error").as("y1"), lab("signup").as("y2"))
-  }
-
   /** Featurized training base: (user_id, dense [T][F] grid, labels[3])
     * as a persisted OBJECT RDD, built once per (context, source dir) and
     * shared by every RETAIN query — scoring, attention, eval, and both
-    * training regimes. The two assembly shuffles (pivot + ordered
-    * collect) and the row→tensor decode are paid once per session, the
-    * way a production feature store amortizes its materialization; at
-    * 100 TB this is the cached feature table every trainer reads.
-    * Footprint is users × T×F doubles (MBs at any SF that fits a label
-    * pass), so it stays pinned for the session.
+    * training regimes. The engine-side `data_loader` (`run.py:44-55`):
+    * [[base]] builds it in one exchange and pays the decode once per
+    * session, the way a production feature store amortizes its
+    * materialization. Footprint is users × T×F doubles (MBs at any SF
+    * that fits a label pass), so it stays pinned for the session.
     */
   def featurized(s: SparkSession, d: String): RDD[(Long, Array[Array[Double]], Array[Double])] =
     base(s, d).rdd
 
   /** [[featurized]]'s RDD with the row count `n` and per-task positive
     * counts `nPos` that its materializing pass counted. */
-  private final case class Base(rdd: RDD[(Long, Array[Array[Double]], Array[Double])],
-                                n: Double, nPos: Array[Double])
+  private[graft] final case class Base(rdd: RDD[(Long, Array[Array[Double]], Array[Double])],
+                                       n: Double, nPos: Array[Double])
 
-  private def base(s: SparkSession, d: String): Base =
+  /** Events per partition of the featurized base ([[base]]). */
+  private val EventsPerPartition = 1L << 16
+
+  /** One user's featurize state: the T×F cell sums, whether any event
+    * fell in the feature window, and the OR of the label bits. */
+  private final class Cells extends Serializable {
+    val sum = new Array[Double](T * F)
+    var present = false
+    var bits = 0
+    /** Adds one projected event `(cell, value, label bits)`. */
+    def add(e: (Int, Double, Int)): Cells = {
+      if (e._1 >= -1) present = true
+      if (e._1 >= 0) sum(e._1) += e._2
+      bits |= e._3
+      this
+    }
+    def merge(o: Cells): Cells = {
+      var i = 0
+      while (i < sum.length) { sum(i) += o.sum(i); i += 1 }
+      present ||= o.present
+      bits |= o.bits
+      this
+    }
+  }
+
+  /** [[featurized]]'s base in one scan of `events` and one exchange on
+    * `user_id`. Each event is projected to its grid cell `day·F + type`
+    * (days 0..T-1; -1 when it only marks the user present: an unlisted
+    * type or a null value; -2 outside the window) and its label bits
+    * (a high-value purchase / error / signup after the split, so no
+    * label leaks into the grid). A map-side combine sums each cell in
+    * scan order and the reducer adds the partial sums in shuffle
+    * order, as `sum(value)` does per
+    * (user, day, type) group, so every cell is the same double. The
+    * reducer keeps the users with a window event, divides each cell by
+    * 100 and fills in the labels (0 without a post-split event).
+    *
+    * Row layout: rows ascend by `user_id` within each partition, and
+    * there is one partition per full [[EventsPerPartition]] events of
+    * the footer row count, between 1 and the default parallelism (1 on
+    * every testdata rung, 4 for 300 000 events on 4 cores). The layout
+    * is part of the output: [[trainFull]]'s and [[trainAmtl]]'s
+    * treeAggregates sum rows in partition order and [[drawMinibatches]]
+    * seeds each partition by its index. The count comes from the input,
+    * not from AQE, which would shrink it and BPTT's parallelism with it.
+    *
+    * Materialized eagerly, so consumers never race the build; the same
+    * pass counts the rows and the positives per task.
+    */
+  private[graft] def base(s: SparkSession, d: String): Base =
     graft.PlanCache.memo(s, s"retain_base|$d") {
-      import s.implicits._
-      val rdd = assembleSeries(s, d)
-        .join(labels(s, d), Seq("user_id"), "left")
-        .na.fill(0.0, Seq("y0", "y1", "y2"))
-        .select(col("user_id"), col("steps"), col("y0"), col("y1"), col("y2"))
-        .as[(Long, Seq[(Int, Seq[Double])], Double, Double, Double)]
-        .map { case (uid, steps, y0, y1, y2) =>
-          val x = Array.fill(T, F)(0.0)
-          steps.foreach { case (day, fv) =>
-            if (day >= 0 && day < T) { var i = 0; while (i < F) { x(day)(i) = fv(i); i += 1 } }
-          }
-          (uid, x.map(_.toSeq).toSeq, Seq(y0, y1, y2))
-        }
-        .coalesce(8) // tiny rows: cut per-iteration task-scheduling overhead
-        .rdd.map { case (uid, xs, ys) => (uid, xs.map(_.toArray).toArray, ys.toArray) }
+      val ts = col("ts")
+      val split = lit(labelSplit).cast("timestamp")
+      val day = datediff(ts.cast("date"), lit(gridStart).cast("date"))
+      val typeIx = eventTypes.indices.foldLeft(lit(-1)) { (acc, i) =>
+        when(col("event_type") === eventTypes(i), i).otherwise(acc)
+      }
+      val cell = when(ts < split && day.between(0, T - 1),
+          when(typeIx >= 0 && col("value").isNotNull, day * F + typeIx).otherwise(-1))
+        .otherwise(-2)
+      val labelBits = Seq("purchase", "error", "signup").zipWithIndex.map { case (t, k) =>
+        when(ts >= split && col("event_type") === t && col("value") > 140.0, 1 << k).otherwise(0)
+      }.reduce(_ + _)
+      val events = Tables.events(s, d)
+        .select(col("user_id"), cell.as("cell"), col("value"), labelBits.as("bits"))
+        .where(col("cell") > -2 || col("bits") =!= 0)
+        .queryExecution.toRdd
+        .map(r => (r.getLong(0), (r.getInt(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2), r.getInt(3))))
+      val parts = math.max(1, math.min(s.sparkContext.defaultParallelism.toLong,
+        Tables.parquetRowCount(s, d, "events") / EventsPerPartition).toInt)
+      val rdd = events
+        .combineByKey[Cells]((e: (Int, Double, Int)) => new Cells().add(e),
+          (c: Cells, e: (Int, Double, Int)) => c.add(e), (a: Cells, b: Cells) => a.merge(b),
+          new HashPartitioner(parts))
+        .mapPartitions(users => users.filter(_._2.present).toArray.sortBy(_._1).iterator.map {
+          case (uid, c) =>
+            (uid, Array.tabulate(T, F)((t, f) => c.sum(t * F + f) / 100.0),
+              Array.tabulate(numTasks)(k => ((c.bits >> k) & 1).toDouble))
+        }, preservesPartitioning = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      // materialize eagerly so consumers never race the build; the same
-      // pass counts the rows, then the positives per task
       val counts = rdd.map(r => 1.0 +: r._3).fold(new Array[Double](1 + numTasks))(addInto)
       Base(rdd, counts(0), counts.drop(1))
     }

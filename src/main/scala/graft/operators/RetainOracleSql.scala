@@ -115,8 +115,8 @@ object RetainOracleSql {
        |      FROM s${t - 1})))""".stripMargin
   }
 
-  /** Shared pipeline: weights, the [T][F] grid (q76's assembly
-    * semantics at `RetainOps.assembleSeries`), embeds, the unrolled
+  /** Shared pipeline: weights, the [T][F] grid (the cells
+    * `RetainOps.base` sums for q76), embeds, the unrolled
     * recurrence, attention softmax and β-gates. Ends with CTEs
     * `alpha(user_id, es, w, hBs, aRev)` / `betas(.., aRev, bRev)` and
     * `ctxt(user_id, w, ctx)`.

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * statistical-QA layer of a training-data pipeline.
   */
 object RobustOps {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** Portable 60-bit hash → uniform in (0,1): (h+1) / (2^60+1). The
     * divisor literal rounds to the same double in both engines, so the

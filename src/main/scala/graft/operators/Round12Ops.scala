@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * "random" choice a pure function of the data.
   */
 object Round12Ops {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** md5-derived uniform in (0,1): 13 hex chars → 52 bits / 2^52 — the
     * q340 idiom (both engines parse the same hex, divide by the same

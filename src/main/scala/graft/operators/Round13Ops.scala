@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * All three hash-verified against DuckDB on the same parquet tables.
   */
 object Round13Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
+  import CausalOps.{dsum, r6}
 
   /** q132/q138/q368 portable split hash (md5 → 15 hex chars → mod 10). */
   private def pHash(k: Column): Column =

@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   * All hash-verified against DuckDB on the same parquet tables.
   */
 object Round15Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** 3×3 determinant expression string over named matrix-entry columns —
     * shared verbatim between Spark `selectExpr` and the DuckDB oracle

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{PlanCache, QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-16 batch: the survival / GLM / classical-testing / smoothing /
@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
   * All hash-verified against DuckDB on the same parquet tables.
   */
 object Round16Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** Shared 3×3 normal-equation Cramer stages over generically named
     * matrix entries (a11..a33 symmetric, b1..b3) → coefficients c0..c2.

@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
   * All hash-verified against DuckDB on the same parquet tables.
   */
 object Round19Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** The q384 Cox subject table (user_id, t, ev, x), one PlanCache
     * entry per session shared by q384 and q402.

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,8 +43,7 @@ import org.apache.spark.sql.functions._
   * cross-row accumulations.
   */
 object Round20Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
+  import CausalOps.{dsum, r6}
   private val duckWords = "list_filter(string_split(text, ' '), x -> x != '')"
 
   val defs: Seq[QueryDef] = Seq(

@@ -43,9 +43,7 @@ import org.apache.spark.sql.functions._
   * q419 is one user-grain aggregate + a broadcast 1-row prior.
   */
 object Round21Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** Loud ceiling for the exact-enumeration path: past ~1e6 cohort
     * members the lnFact grid (and q418's term sum) stops being the

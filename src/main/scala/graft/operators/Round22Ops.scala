@@ -36,9 +36,7 @@ import org.apache.spark.sql.functions._
   * windows on the PlanCache'd grid; q424 grid-grain column math.
   */
 object Round22Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** Page–Hinkley from the (el, di, v) daily grid — shared by batch
     * q423 and the streaming refresh q425 so the final stream refresh

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{PlanCache, QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,9 +41,7 @@ import org.apache.spark.sql.functions._
   * three times with O(P)-row broadcast parameter tables.
   */
 object Round23Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   private[graft] val HawkesBeta = 0.1   // kernel decay per hour
   private[graft] val HawkesAlpha0 = 0.2 // initial branching ratio

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{PlanCache, QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,9 +34,7 @@ import org.apache.spark.sql.functions._
   * already classifies); all folds exact decimal.
   */
 object Round24Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** Inclán–Tiao from the (el, di, v) daily grid — shared by batch
     * q434 and the streaming refresh q439 (the causalRefresh contract).

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{PlanCache, QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,9 +35,7 @@ import org.apache.spark.sql.functions._
   * volume); pair joins are day-matched, never all-pairs-of-rows.
   */
 object Round25Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** Unrounded lead-lag r and Bartlett SE at lags 0–3 from the daily
     * grid — shared by q441's readout and q452's consensus scoreboard

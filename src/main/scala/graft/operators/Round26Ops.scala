@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{PlanCache, QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,9 +38,7 @@ import org.apache.spark.sql.functions._
   * heap TopKPerGroup via WindowTopKRewrite like q66/q90.
   */
 object Round26Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** Unrounded circular-shift surrogate columns — shared by q446's
     * readout and q452's consensus scoreboard. Columns:

@@ -34,9 +34,7 @@ import org.apache.spark.sql.functions._
   * daily grid.
   */
 object Round29Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
   private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
   private val duckWords = "list_filter(string_split(text, ' '), x -> x != '')"
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   * O(P²) edge tables.
   */
 object Round30Ops {
-  private def r6(c: Column) = round(c, 6)
-  private def dsum(c: Column): Column = sum(c.cast("decimal(38,12)")).cast("double")
-  private def dsumSql(x: String) = s"CAST(sum(CAST($x AS DECIMAL(38,12))) AS DOUBLE)"
+  import CausalOps.{dsum, dsumSql, r6}
 
   /** q469's lead-time profile from any (el, di, v) grid — shared by
     * the batch query and the streaming refresh q472 (the causalRefresh

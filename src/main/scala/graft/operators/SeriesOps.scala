@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-9 time-series structure operators on the shared causal
@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * the element key.
   */
 object SeriesOps {
-  private def r6(c: Column) = round(c, 6)
-  import CausalOps.{daily, dailySql, dsum}
+  import CausalOps.{daily, dailySql, dsum, r6}
 
   /** Global-mean deviations, their lag-0..3 autocovariance sums and
     * the lag-1..3 autocorrelations r1..r3 (`m`, `dv`, `c0`, `ck`, `r`):

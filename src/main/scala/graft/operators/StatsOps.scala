@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * counting on the q142/q151 host graph.
   */
 object StatsOps {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.{dsum, r6}
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -332,7 +332,6 @@ object StatsOps {
         rank().over(Window.orderBy(col(c))) +
           (count(lit(1)).over(Window.partitionBy(col(c))) - 1) / lit(2.0)
       val r = u.select(avgRank("x").as("ax"), avgRank("y").as("ay"))
-      def dsum(c: Column) = sum(c.cast("decimal(38,12)")).cast("double")
       val m = r.agg(count(lit(1)).as("n"),
         dsum(col("ax")).as("sx"), dsum(col("ay")).as("sy"),
         dsum(col("ax") * col("ay")).as("sxy"),

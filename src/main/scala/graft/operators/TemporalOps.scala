@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * integrity audit.
   */
 object TemporalOps {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * across engines.
   */
 object Tensor {
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   /** 64→4 projection matrix V (reference R7 `e_t = x_t · V`,
     * `model.py:119`): exact decimal literals from an index formula.

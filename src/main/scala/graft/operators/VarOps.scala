@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
   * propagate to a NULL F — identically on both engines.
   */
 object VarOps {
-  private def r6(c: Column) = round(c, 6)
-  import CausalOps.{daily, dailySql, dsum, screenSql}
+  import CausalOps.{daily, dailySql, dsum, r6, screenSql}
 
   /** Sweep stage k: eliminate variable k from the trailing block.
     * Returns (carried, updated) expression lists; names a_ij keep the

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
   private def r2(c: Column) = round(c, 2)
-  private def r6(c: Column) = round(c, 6)
+  import CausalOps.r6
 
   private val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
 

@@ -142,6 +142,18 @@ class HygieneSpec extends AnyFunSuite {
       s"stream staging code is back:\n  ${offenders.mkString("\n  ")}")
   }
 
+  test("r6, dsum and dsumSql are each defined once in src/main") {
+    // the oracle-facing rounding and exact-decimal sum live in CausalOps;
+    // a module imports them, so both engines round and sum one way
+    for (name <- Seq("r6", "dsum", "dsumSql")) {
+      val defn = s"\\bdef $name\\b".r
+      val sites = codeLines(mainSources).collect {
+        case (f, n, l) if defn.findFirstIn(l).isDefined => s"${f.getPath}:$n"
+      }
+      assert(sites.size == 1, s"$name is defined ${sites.size} times:\n  ${sites.mkString("\n  ")}")
+    }
+  }
+
   test("no run of 5 consecutive |-margin oracle lines appears twice in src/main") {
     // a CTE two queries share is one named fragment in the module that
     // owns it (CausalOps.dailySql, CausalOps.miReadoutSql, ...), never a
