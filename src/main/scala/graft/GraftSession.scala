@@ -29,15 +29,11 @@ object GraftSession {
     * the banded-minhash candidate path and q262 to the chunked SemDeDup
     * split — same output contract, pairs ⊆ the naive enumeration, and
     * the registry stays failure-free at every scale rung. Strict mode
-    * (`SPARK_GRAFT_STRICT_GUARDS=1`) restores the loud refusal for
-    * deployments that would rather fail than accept sub-unit recall.
-    * The `graft.strictGuards` system property takes precedence over the
-    * env var (round 14, ADVICE r13): props are the per-JVM override a
-    * test can set and unset deterministically, while the env var is the
-    * deployment-wide default a single process cannot change. */
+    * (the `graft.strictGuards` system property, `-Dgraft.strictGuards=true`)
+    * restores the loud refusal for deployments that would rather fail
+    * than accept sub-unit recall; a test sets and clears it per JVM. */
   def strictGuards: Boolean =
-    (sys.props.get("graft.strictGuards") orElse
-      sys.env.get("SPARK_GRAFT_STRICT_GUARDS")).exists(v => v == "1" || v == "true")
+    sys.props.get("graft.strictGuards").exists(v => v == "1" || v == "true")
 
   /** Surface an above-ceiling routing decision (round 14, ADVICE r13):
     * when q62/q262 take their approximate scale path, the output is the

@@ -30,7 +30,7 @@ object Verify {
         // drop any STALE output from a previous run into this outDir —
         // otherwise the checker would hash the old parquet and report a
         // now-broken query green (exactly what the lint must prevent)
-        graft.streaming.Streaming.deleteTree(Paths.get(s"$outDir/$name"))
+        Scratch.deleteTree(Paths.get(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

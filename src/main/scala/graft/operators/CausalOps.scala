@@ -25,6 +25,10 @@ object CausalOps {
   /** A result column rounded to the 6 decimals every oracle compares. */
   private[operators] def r6(c: Column): Column = round(c, 6)
 
+  /** A money-like result column rounded to 2 decimals, as its oracle
+    * rounds it. */
+  private[graft] def r2(c: Column): Column = round(c, 2)
+
   // dailySql / daily / dsum are shared with the round-9 sibling modules
   // (SeriesOps, DriftOps) so every series-shaped query family runs on the
   // SAME PlanCache'd (element, day) grid — one fact-table scan per

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Text.wordsCol
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,8 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusOps {
   import CausalOps.{dsum, r6}
-
-  private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
 
   /** Portable 60-bit md5 hash of a long key — identical in DuckDB as
     * `('0x' || substr(md5(k::VARCHAR),1,15))::BIGINT` (q132's contract).
@@ -361,7 +360,7 @@ object CorpusOps {
       import org.apache.spark.sql.expressions.Window
       val stops = Seq("a", "the", "of", "and", "to", "in", "is", "on", "for")
       val tok = Tables.documents(s, d)
-        .select(col("doc_id"), posexplode(graft.functions.Text.wordsCol(col("text")))
+        .select(col("doc_id"), posexplode(wordsCol(col("text")))
           .as(Seq("p", "w")))
         .select(col("doc_id"), col("w"), (col("p") + 1).as("i"),
           when(col("w").isin(stops: _*), 1).otherwise(0).as("stop"))
@@ -418,7 +417,7 @@ object CorpusOps {
         |FROM sc ORDER BY round(xent, 6) DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
-          explode(graft.functions.Text.wordsCol(col("text"))).as("w"))
+          explode(wordsCol(col("text"))).as("w"))
       val vc = tok.groupBy(col("w").as("vw")).agg(count(lit(1)).as("c"))
       val tot = tok.agg(count(lit(1)).cast("double").as("n_tok"),
         countDistinct(col("w")).cast("double").as("v"))

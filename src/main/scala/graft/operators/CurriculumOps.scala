@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Scratch, Tables}
 import graft.functions.SortedIntersectCount
+import graft.functions.Text.wordsCol
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,9 +40,6 @@ object CurriculumOps {
         concat(col(s"mh${2 * b}").cast("string"), lit("_"),
           col(s"mh${2 * b + 1}").cast("string")).as("key"))
     }
-
-  private def words(c: org.apache.spark.sql.Column) =
-    graft.functions.Text.wordsCol(c)
 
   /** Carter-Wegman 2-universal mix family for the q353 planner's
     * 16-signature table (round 15, VERDICT r14 #4): ONE md5 per token
@@ -91,7 +89,7 @@ object CurriculumOps {
         |  CAST(max(tok)*count(*) - sum(tok) AS BIGINT) AS pad_waste
         |FROM bb GROUP BY bucket, batch ORDER BY bucket, batch""".stripMargin) { (s, d) =>
       val toks = Tables.documents(s, d)
-        .select(col("doc_id"), size(words(col("text"))).as("tok"))
+        .select(col("doc_id"), size(wordsCol(col("text"))).as("tok"))
         .withColumn("bucket", floor(col("tok") / 64).cast("long"))
         .withColumn("shard", (col("doc_id") / 100).cast("long"))
       val wLocal = Window.partitionBy(col("bucket"), col("shard"))
@@ -221,7 +219,7 @@ object CurriculumOps {
         |    / count(*), 6) AS avg_novelty
         |FROM nov GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val grams = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), words(col("text")).as("ws"))
+        .select(col("doc_id"), col("source"), wordsCol(col("text")).as("ws"))
         .where(size(col("ws")) >= 5)
         .select(col("doc_id"), col("source"),
           explode(array_distinct(transform(
@@ -267,7 +265,7 @@ object CurriculumOps {
       }) { (s, d) =>
       val ts = (1 to 9).map(i => i / 10.0)
       val q = Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"), words(col("text")).as("ws"))
+        .select(col("doc_id"), col("n_chars"), wordsCol(col("text")).as("ws"))
         .where(size(col("ws")) > 0)
         .select(col("doc_id"), col("n_chars"),
           (size(filter(col("ws"), w => length(w) > 3)) /
@@ -437,7 +435,7 @@ object CurriculumOps {
         |FROM b GROUP BY band ORDER BY band""".stripMargin) { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
-          explode(array_distinct(words(col("text")))).as("w"))
+          explode(array_distinct(wordsCol(col("text")))).as("w"))
       val mh = minhashSig(tok)
       mh.select(explode(array(minhashBands: _*)).as("bk"))
         .select(col("bk.band").as("band"), col("bk.key").as("key"))
@@ -507,7 +505,7 @@ object CurriculumOps {
         |FROM scoredp WHERE j >= 0.5 ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d)
-        .select(col("doc_id"), array_distinct(words(col("text"))).as("wset"))
+        .select(col("doc_id"), array_distinct(wordsCol(col("text"))).as("wset"))
       val tokArr = docs.select(col("doc_id"),
         array_sort(transform(col("wset"), w => xxhash64(w))).as("ws"))
       val mh = minhashSig(docs.select(col("doc_id"), explode(col("wset")).as("w")))
@@ -626,7 +624,7 @@ object CurriculumOps {
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
       docs.join(dedup, "doc_id")
         .where(col("n_chars") >= 200)
-        .select(col("source"), words(col("text")).as("ws"))
+        .select(col("source"), wordsCol(col("text")).as("ws"))
         .where(size(col("ws")) > 0)
         .select(col("source"), size(col("ws")).as("tok"),
           ceil(size(col("ws")) / 50.0).as("n_chunks"))
@@ -704,7 +702,7 @@ object CurriculumOps {
         conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
           i.cast("string"))), 1, 15), 16, 10).cast("long")
       Tables.documents(s, d)
-        .select(col("doc_id"), words(col("text")).as("ws"))
+        .select(col("doc_id"), wordsCol(col("text")).as("ws"))
         .where(size(col("ws")) >= 3)
         .withColumn("nspan", floor(size(col("ws")) / 3).cast("long"))
         .withColumn("mi", filter(sequence(lit(0L), col("nspan") - 1),
@@ -812,7 +810,7 @@ object CurriculumOps {
       // passes were split-starved to one task at the sf rungs — see
       // Tables scaladoc
       val tok = Tables.documentsParallel(s, d)
-        .select(col("doc_id"), graft.functions.Text.wordsCol(col("text")).as("ws"))
+        .select(col("doc_id"), wordsCol(col("text")).as("ws"))
       // ±2-window pairs via SHIFTED ZIPS (round 10, sf10 fence): the old
       // nested transform/filter/sequence form evaluated its lambda
       // INTERPRETED once per token (78 s at sf10); slice-zips are
@@ -900,7 +898,7 @@ object CurriculumOps {
         |FROM th WHERE pick = 1 ORDER BY tau""".stripMargin) { (s, d) =>
       import s.implicits._
       val vc = Tables.documents(s, d)
-        .select(explode(words(col("text"))).as("w"))
+        .select(explode(wordsCol(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
       // VOCAB-GRAIN rank + running mass via the q139 two-phase form
       // (round 10): pid-local row_number and running sum in one cached
@@ -1009,7 +1007,7 @@ object CurriculumOps {
       }) { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
-          explode(array_distinct(words(col("text")))).as("w"))
+          explode(array_distinct(wordsCol(col("text")))).as("w"))
       val base = conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long")
       // shiftright, not `/`: Column./ is DOUBLE division and a 60-bit
       // value exceeds a double's 53-bit mantissa

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Text.wordsCol
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * distinct-count windows, and array quantifier HOFs.
   */
 object DialectOps {
-  private def words(c: org.apache.spark.sql.Column) =
-    graft.functions.Text.wordsCol(c)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -119,7 +118,7 @@ object DialectOps {
         |  CAST(len(list_distinct(ws)) AS INT) AS n_distinct
         |FROM tok ORDER BY doc_id""".stripMargin) { (s, d) =>
       Tables.documents(s, d).where(col("doc_id") < 30)
-        .select(col("doc_id"), words(col("text")).as("ws"))
+        .select(col("doc_id"), wordsCol(col("text")).as("ws"))
         .select(col("doc_id"),
           exists(col("ws"), x => x === "spark").cast("int").as("has_spark"),
           arrays_overlap(col("ws"), array(lit("spark"), lit("fast")))

@@ -14,20 +14,19 @@ import org.apache.spark.sql.types._
   * bucketing with q64's exact kernel.
   */
 object Extensions {
-  import CausalOps.r6
-  private def r2x(c: org.apache.spark.sql.Column) = round(c, 2)
+  import CausalOps.{r2, r6}
 
   /** q255's analyzed catalog tables: external tables over the raw
     * parquet + `ANALYZE TABLE` row and column statistics, registered
-    * once per (session, sf-dir). Returns the per-dir database name.
-    * ANALYZE scans each table once (table-scan cost, paid at ingest in
-    * production); the column list covers exactly the join keys and the
-    * filter column the CBO estimates need.
+    * once per (session, sf-dir) in a database under the scratch root.
+    * Returns the per-dir database name. ANALYZE scans each table once
+    * (table-scan cost, paid at ingest in production); the column list
+    * covers exactly the join keys and the filter column the CBO
+    * estimates need.
     */
-  private[graft] def cboTables(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val db = s"graft_cbo_${math.abs(d.hashCode)}"
-    graft.PlanCache.memo(s, s"cbo_tables|$db") {
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+  private[graft] def cboTables(s: org.apache.spark.sql.SparkSession, d: String): String =
+    graft.PlanCache.memo(s, s"cbo_tables|$d") {
+      val db = graft.Scratch.database(s, "graft_cbo", d)
       val cols = Seq(
         "customer" -> "c_custkey, c_mktsegment",
         "orders" -> "o_orderkey, o_custkey, o_orderpriority",
@@ -38,9 +37,8 @@ object Extensions {
         s.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS")
         s.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR COLUMNS $cs")
       }
+      db
     }
-    db
-  }
 
   /** Same deterministic logit/label as q20/q21 (Relational.scala).
     * CASTs keep both engines (and SigmoidCE's type check) in DoubleType
@@ -182,10 +180,11 @@ object Extensions {
       * either side, the join reads co-located buckets directly. The
       * oracle states the same join over the raw tables.
       *
-      * The bucketed layout is staged ONCE per source dir (external
-      * tables under target/graft-io) and re-registered from DDL on
-      * later runs — exactly how production amortizes a bucketed
-      * table: pay the layout shuffle at ingest, never per query.
+      * The bucketed layout is staged ONCE per (session, source dir):
+      * external tables under [[graft.Scratch.dir]] in a database of
+      * their own, which later runs in the session read as they are —
+      * exactly how production amortizes a bucketed table: pay the
+      * layout shuffle at ingest, never per query.
       */
     QueryDef(
       "q92_bucketed_join",
@@ -194,36 +193,14 @@ object Extensions {
         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         |WHERE o.o_orderstatus = 'F'
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
-      import java.nio.file.{Files, Paths}
-      val wh = s"graft_b_${math.abs(d.hashCode)}"
-      val root = Paths.get(
-        s"${graft.streaming.Streaming.ioBase}/${d.replaceAll("[^A-Za-z0-9.]", "_")}/bucketed")
-        .toAbsolutePath
-      val marker = root.resolve("_STAGED")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $wh")
-      if (!Files.exists(marker)) {
-        Files.createDirectories(root)
+      val wh = graft.Scratch.database(s, "graft_b", d)
+      graft.PlanCache.staged(s, graft.Scratch.dir(d, "bucketed")) { root =>
         Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice")
           .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", root.resolve("lineitem_b").toString)
-          .saveAsTable(s"$wh.lineitem_b")
+          .option("path", s"$root/lineitem_b").saveAsTable(s"$wh.lineitem_b")
         Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_orderpriority")
           .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", root.resolve("orders_b").toString)
-          .saveAsTable(s"$wh.orders_b")
-        Files.createFile(marker)
-      } else {
-        // fresh in-memory catalog, existing files: re-register the same
-        // bucket spec over the staged location (metadata-only)
-        s.sql(s"""CREATE TABLE IF NOT EXISTS $wh.lineitem_b
-          | (l_orderkey BIGINT, l_extendedprice DOUBLE) USING PARQUET
-          | CLUSTERED BY (l_orderkey) SORTED BY (l_orderkey) INTO 8 BUCKETS
-          | LOCATION '${root.resolve("lineitem_b")}'""".stripMargin)
-        s.sql(s"""CREATE TABLE IF NOT EXISTS $wh.orders_b
-          | (o_orderkey BIGINT, o_orderstatus STRING, o_orderpriority STRING)
-          | USING PARQUET
-          | CLUSTERED BY (o_orderkey) SORTED BY (o_orderkey) INTO 8 BUCKETS
-          | LOCATION '${root.resolve("orders_b")}'""".stripMargin)
+          .option("path", s"$root/orders_b").saveAsTable(s"$wh.orders_b")
       }
       // hint("merge"): force SMJ so the bucketed no-Exchange path is the
       // one exercised (at tiny SF AQE would otherwise broadcast and hide
@@ -232,7 +209,7 @@ object Extensions {
         .join(s.table(s"$wh.orders_b"), col("l_orderkey") === col("o_orderkey"))
         .where(col("o_orderstatus") === "F")
         .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_lines"), r2x(sum(col("l_extendedprice"))).as("total"))
+        .agg(count(lit(1)).as("n_lines"), r2(sum(col("l_extendedprice"))).as("total"))
         .orderBy("o_orderpriority")
     },
 
@@ -304,7 +281,7 @@ object Extensions {
         .join(dimSalted, factSalted("event_type") === dimSalted("et")
           && factSalted("salt") === dimSalted("salt"))
         .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), r2x(sum(col("value") * col("wt"))).as("weighted"))
+        .agg(count(lit(1)).as("n"), r2(sum(col("value") * col("wt"))).as("weighted"))
         .orderBy("event_type")
     },
 

@@ -51,9 +51,8 @@ object FeatureOps {
       |  CAST(count_if(coalesce(v, -1.0) < 0) AS BIGINT) AS n_coalesced
       |FROM t""".stripMargin
 
-  private def r2(c: Column) = round(c, 2)
   private def r4(c: Column) = round(c, 4)
-  import CausalOps.r6
+  import CausalOps.{r2, r6}
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    cluster — O(N²/K) instead of O(N²) pair work.
   */
 object HybridOps {
-  import CausalOps.r6
+  import CausalOps.{dsum, r6}
 
   /** q261's fixed query vector — distinct lineage from q64's `qvec` and
     * q228's `pqQueryVec` so the three retrieval paths probe different
@@ -360,7 +360,7 @@ object HybridOps {
       // the query now falls through to q474's chunk split — same output
       // contract minus the n_chunks column, chunked pairs ⊆ whole-
       // cluster pairs by construction (HybridSpec) — instead of the old
-      // loud refusal. `SPARK_GRAFT_STRICT_GUARDS=1` restores the throw
+      // loud refusal. `-Dgraft.strictGuards=true` restores the throw
       // for deployments that would rather fail than lose cross-chunk
       // recall.
       val maxC = a.groupBy("clabel").count().agg(max(col("count"))).head.getLong(0)
@@ -374,7 +374,7 @@ object HybridOps {
         graft.GraftSession.routedWarn(
           s"q262_semdedup: largest cluster $maxC > MaxSemCluster=$MaxSemCluster — " +
             "taking the chunk-split APPROXIMATE path (pairs ⊆ exact, recall < 1 " +
-            "across chunk boundaries); set SPARK_GRAFT_STRICT_GUARDS=1 to fail " +
+            "across chunk boundaries); set -Dgraft.strictGuards=true to fail " +
             "loudly instead")
         semDupReadout(semChunkSplit(a), chunked = true, emitChunks = false)
       } else semDupReadout(a, chunked = false, emitChunks = false)
@@ -639,13 +639,12 @@ object HybridOps {
       val wt = tf.join(df, col("dw") === col("w")).crossJoin(broadcast(nn))
         .select(col("doc_id"), col("w"),
           (col("tf") * log(col("n") / col("df"))).as("wgt"))
-      def dsumD(c: Column) = sum(c.cast("decimal(38,12)")).cast("double")
-      val nrm = wt.groupBy(col("doc_id")).agg(sqrt(dsumD(col("wgt") * col("wgt"))).as("nv"))
+      val nrm = wt.groupBy(col("doc_id")).agg(sqrt(dsum(col("wgt") * col("wgt"))).as("nv"))
       val x = wt.select(col("w"), col("doc_id").as("doc_a"), col("wgt").as("wa"))
       val y = wt.select(col("w").as("wy"), col("doc_id").as("doc_b"), col("wgt").as("wb"))
       val pr = x.join(y, col("wy") === col("w") && col("doc_a") < col("doc_b"))
         .groupBy(col("doc_a"), col("doc_b"))
-        .agg(dsumD(col("wa") * col("wb")).as("dot"), count(lit(1)).as("shared"))
+        .agg(dsum(col("wa") * col("wb")).as("dot"), count(lit(1)).as("shared"))
       pr.join(nrm.select(col("doc_id").as("da"), col("nv").as("na")), col("da") === col("doc_a"))
         .join(nrm.select(col("doc_id").as("db"), col("nv").as("nb")), col("db") === col("doc_b"))
         .select(col("doc_a"), col("doc_b"),
@@ -685,13 +684,12 @@ object HybridOps {
         |  round(dcg / idcg, 6) AS ndcg
         |FROM dg CROSS JOIN ig""".stripMargin) { (s, d) =>
       val (ex, sys) = annLists(s, d)
-      def dsumD(c: Column) = sum(c.cast("decimal(38,12)")).cast("double")
       val dg = sys.join(ex, col("evid") === col("vec_id"), "left")
         .agg(count(lit(1)).as("n_sys"),
           sum(when(col("re").isNotNull, 1).otherwise(0)).cast("long").as("hits"),
-          dsumD(when(col("re").isNotNull, lit(11) - col("re")).otherwise(lit(0)) /
+          dsum(when(col("re").isNotNull, lit(11) - col("re")).otherwise(lit(0)) /
             (log(col("pos") + 1.0) / log(lit(2.0)))).as("dcg"))
-      val ig = ex.agg(dsumD((lit(11) - col("re")) /
+      val ig = ex.agg(dsum((lit(11) - col("re")) /
         (log(col("re") + 1.0) / log(lit(2.0)))).as("idcg"))
       dg.crossJoin(broadcast(ig))
         .select(col("n_sys").cast("long").as("n_sys"), col("hits"),
@@ -783,7 +781,6 @@ object HybridOps {
       val sys = top10(scored
         .join(broadcast(probes), col("pqid") === col("qid") && col("probe") === col("bkt"))
         .select(col("qid"), col("vec_id"), col("cs")))
-      def dsumD(c: Column) = sum(c.cast("decimal(38,12)")).cast("double")
       val j = sys.join(ex, col("eqid") === col("qid") && col("evid") === col("vec_id"), "left")
         .select(col("qid"), col("pos"),
           when(col("epos").isNotNull, 1).otherwise(0).as("hit"))
@@ -792,9 +789,9 @@ object HybridOps {
       val pq = c.groupBy("qid").agg(
         sum(col("hit")).cast("long").as("hits"),
         coalesce(max(when(col("hit") === 1, lit(1.0) / col("pos"))), lit(0.0)).as("rr"),
-        (dsumD(col("hit") * col("ch") / col("pos").cast("double")) / 10).as("ap10"))
-      val g = pq.agg((dsumD(col("rr")) / count(lit(1))).as("mrr"),
-        (dsumD(col("ap10")) / count(lit(1))).as("map10"))
+        (dsum(col("hit") * col("ch") / col("pos").cast("double")) / 10).as("ap10"))
+      val g = pq.agg((dsum(col("rr")) / count(lit(1))).as("mrr"),
+        (dsum(col("ap10")) / count(lit(1))).as("map10"))
       pq.crossJoin(broadcast(g))
         .select(col("qid"), col("hits"), r6(col("rr")).as("rr"),
           r6(col("ap10")).as("ap10"), r6(col("mrr")).as("mrr"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.SortedIntersectCount
+import graft.functions.Text.wordsCol
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,13 +27,7 @@ import org.apache.spark.sql.functions._
   * sketches bit-for-bit.
   */
 object LLMPipeline {
-  private def r2(c: Column) = round(c, 2)
-  import CausalOps.r6
-
-  /** Non-empty word tokens — the shared contract in
-    * [[graft.functions.Text.wordsCol]].
-    */
-  private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
+  import CausalOps.{r2, r6}
 
   /** Hard ceiling for q62's exact class-pair enumeration — the
     * guardFullEnum pattern (CausalOps) applied to the dedup family: the
@@ -335,7 +330,7 @@ object LLMPipeline {
       // band buckets generate the candidates, the SAME exact verify
       // confirms them (pairs ⊆ naive by construction, DedupSpec), and
       // within-class identical pairs stay closed-form exact either way.
-      // `SPARK_GRAFT_STRICT_GUARDS=1` restores the refusal.
+      // `-Dgraft.strictGuards=true` restores the refusal.
       val maxClasses = guardExactJaccard(cls)
       val cross =
         if (maxClasses > MaxExactJaccardClasses) {
@@ -343,7 +338,7 @@ object LLMPipeline {
             s"q62_near_dup_jaccard: $maxClasses classes in one source > " +
               s"MaxExactJaccardClasses=$MaxExactJaccardClasses — taking the " +
               "banded-minhash APPROXIMATE candidate path (pairs ⊆ naive, " +
-              "recall < 1 on low-J pairs); set SPARK_GRAFT_STRICT_GUARDS=1 " +
+              "recall < 1 on low-J pairs); set -Dgraft.strictGuards=true " +
               "to fail loudly instead")
           q62CrossBanded(cls)
         } else q62CrossNaive(s, cls)

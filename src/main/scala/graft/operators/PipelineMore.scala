@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.Column
+import graft.functions.Text.wordsCol
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -12,12 +12,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object PipelineMore {
   import CausalOps.r6
-
-  /** Whitespace words, empty tokens dropped (same contract as
-    * LLMPipeline's tokenizer — reference tokenization is whitespace
-    * split, SURVEY.md §2.B G10).
-    */
-  private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
 
   val defs: Seq[QueryDef] = Seq(
 

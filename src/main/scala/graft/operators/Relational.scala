@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   * filters/projections pushed down.
   */
 object Relational {
-  private def r2(c: Column) = round(c, 2)
   private def r4(c: Column) = round(c, 4)
-  import CausalOps.r6
+  import CausalOps.{r2, r6}
 
   /** Deterministic per-row logit + label used by the metric queries.
     * Mirrors the reference's score/label contract (`model.py:153-158`):

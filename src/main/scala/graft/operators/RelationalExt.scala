@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,8 +15,7 @@ import org.apache.spark.sql.functions._
   * shuffle once on the entity key like every group-5 window.
   */
 object RelationalExt {
-  private def r2(c: Column) = round(c, 2)
-  import CausalOps.r6
+  import CausalOps.{r2, r6}
 
   val defs: Seq[QueryDef] = Seq(
 

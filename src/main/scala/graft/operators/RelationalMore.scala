@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.Text.wordsCol
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,9 +13,7 @@ import org.apache.spark.sql.functions._
   * all stay inside whole-stage codegen (no UDFs).
   */
 object RelationalMore {
-  private def r2(c: Column) = round(c, 2)
-  import CausalOps.r6
-  private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
+  import CausalOps.{r2, r6}
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -535,14 +535,9 @@ object RetainOps {
     * wrote.
     */
   def oracleCkptDir(s: SparkSession): String =
-    checkpointOnce(s, s"${Scratch.root}/graft_retain_w")(
+    graft.PlanCache.staged(s, s"${Scratch.root}/graft_retain_w")(
       graft.functions.RetainCheckpoint.save(s, Retain.defaultWeights, _))
 
-  /** `dir` after `save(dir)` has run once in this session. */
-  private def checkpointOnce(s: SparkSession, dir: String)(save: String => Unit): String = {
-    graft.PlanCache.memo(s, s"retain_ckpt|$dir")(save(dir))
-    dir
-  }
   private def ckptGlob: String = s"${Scratch.root}/graft_retain_w/*.parquet"
 
   val defs: Seq[QueryDef] = Seq(
@@ -629,7 +624,7 @@ object RetainOps {
       */
     QueryDef("q203_retain_score_gru",
         RetainOracleSql.q203(s"${Scratch.root}/graft_retain_gru_w/*.parquet")) { (s, d) =>
-      checkpointOnce(s, s"${Scratch.root}/graft_retain_gru_w")(
+      graft.PlanCache.staged(s, s"${Scratch.root}/graft_retain_gru_w")(
         graft.functions.RetainCheckpoint.saveGru(s, Retain.defaultGruWeights, _))
       scored(s, d, Retain.defaultGruWeights)
         .select(col("user_id"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{PlanCache, QueryDef, Tables}
+import graft.functions.Text.wordsCol
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,7 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object Round29Ops {
   import CausalOps.{dsum, dsumSql, r6}
-  private def wordsCol(text: Column): Column = graft.functions.Text.wordsCol(text)
   private val duckWords = "list_filter(string_split(text, ' '), x -> x != '')"
 
   val defs: Seq[QueryDef] = Seq(

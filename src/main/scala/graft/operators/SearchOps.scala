@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Text.wordsCol
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
   *  - q182: next-action sequence training-example construction
   */
 object SearchOps {
-  private def words(c: org.apache.spark.sql.Column) =
-    graft.functions.Text.wordsCol(c)
 
   /** Per-document length and counts of the fixed 3-term query "spark
     * join fast" (`tok`, `tf`): q178, q261, q412. */
@@ -46,7 +45,7 @@ object SearchOps {
     def cnt(w: String) =
       size(filter(col("ws"), x => x === w)).cast("double")
     Tables.documents(s, d)
-      .select(col("doc_id"), words(col("text")).as("ws"))
+      .select(col("doc_id"), wordsCol(col("text")).as("ws"))
       .select(col("doc_id"), size(col("ws")).cast("double").as("dl"),
         cnt("spark").as("tf1"), cnt("join").as("tf2"), cnt("fast").as("tf3"))
   }
@@ -309,7 +308,7 @@ object SearchOps {
         |  round(CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS keep_ratio
         |FROM flagged GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val tok = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), words(col("text")).as("ws"))
+        .select(col("doc_id"), col("source"), wordsCol(col("text")).as("ws"))
         .where(size(col("ws")) > 0)
       val chunks = tok.select(col("doc_id"), col("source"),
         posexplode(transform(

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.functions.Text.wordsCol
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-5 text-index artifacts: the inverted index (token → sorted
@@ -11,7 +12,6 @@ import org.apache.spark.sql.functions._
   * phrase-table construction.
   */
 object TextIndexOps {
-  private def words(c: Column): Column = graft.functions.Text.wordsCol(c)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -39,7 +39,7 @@ object TextIndexOps {
         |WHERE d.df BETWEEN 380 AND 430
         |GROUP BY f.w ORDER BY f.w""".stripMargin) { (s, d) =>
       val pos = Tables.documents(s, d)
-        .select(col("doc_id"), posexplode(words(col("text"))).as(Seq("p0", "w")))
+        .select(col("doc_id"), posexplode(wordsCol(col("text"))).as(Seq("p0", "w")))
         .select(col("doc_id"), col("w"), (col("p0") + 1).cast("long").as("pos"))
       val firstPos = pos.groupBy("w", "doc_id").agg(min(col("pos")).as("fp"))
       firstPos.groupBy(col("w").as("token"))
@@ -75,7 +75,7 @@ object TextIndexOps {
         |WHERE b.n >= 30
         |ORDER BY pmi DESC, w1, w2 LIMIT 15""".stripMargin) { (s, d) =>
       val tok = Tables.documents(s, d)
-        .select(col("doc_id"), words(col("text")).as("ws"))
+        .select(col("doc_id"), wordsCol(col("text")).as("ws"))
       val uni = tok.select(explode(col("ws")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("n"))
       val nt = uni.agg(sum(col("n")).cast("double").as("nt"))
@@ -141,7 +141,7 @@ object TextIndexOps {
            |  UNION ALL SELECT * FROM s3) ORDER BY iter""".stripMargin
       }) { (s, d) =>
       var docs = Tables.documents(s, d)
-        .select(col("doc_id"), words(col("text")).as("ws")).cache()
+        .select(col("doc_id"), wordsCol(col("text")).as("ws")).cache()
       val out = scala.collection.mutable.ArrayBuffer.empty[
         (Int, String, String, Long, Long, Long)]
       for (it <- 1 to 3) {
@@ -199,7 +199,7 @@ object TextIndexOps {
       val theta = 0.03
       val k = 64 // > 1/θ ⇒ the MG superset guarantee holds
       val toks = Tables.documents(s, d)
-        .select(explode(words(col("text"))).as("w")).as[String]
+        .select(explode(wordsCol(col("text"))).as("w")).as[String]
       val cands = toks
         .mapPartitions(it => graft.functions.MisraGries.candidates(it, k))
         .toDF("w").distinct()

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,7 +18,7 @@ import org.apache.spark.sql.functions._
   * already used downstream.
   */
 object TimeSeries {
-  private def r2(c: Column) = round(c, 2)
+  import CausalOps.r2
 
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,8 +14,7 @@ import org.apache.spark.sql.functions._
   * so results are deterministic across engines.
   */
 object Windows {
-  private def r2(c: Column) = round(c, 2)
-  import CausalOps.r6
+  import CausalOps.{r2, r6}
 
   private val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
 

@@ -1,7 +1,7 @@
 package graft.sources
 
-import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.{PlanCache, QueryDef, Scratch, Tables}
+import graft.operators.CausalOps.r2
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,18 +10,14 @@ import org.apache.spark.sql.types._
   * engine-side form of the reference's text time-series scan R1
   * (`run.py:47`) and B-matrix text sink R30 (`model.py:296-310`).
   *
-  * Round-trip queries write under `target/graft-io/<sf-hash>` and read
-  * back, so the scan path (schema application, type coercion,
-  * projection pushdown into the format reader) is genuinely exercised;
-  * the oracle states the same result straight off the parquet tables
-  * (the round trip is semantically the identity).
+  * Round-trip queries write under [[graft.Scratch.dir]] (this JVM's
+  * scratch, one dir per input dir and tag) and read back, so the scan
+  * path (schema application, type coercion, projection pushdown into
+  * the format reader) is genuinely exercised; the oracle states the
+  * same result straight off the parquet tables (the round trip is
+  * semantically the identity).
   */
 object Sources {
-  private def r2(c: Column) = round(c, 2)
-
-  /** Stable scratch dir per (sf, tag) so concurrent sf runs don't clash. */
-  private def scratch(d: String, tag: String): String =
-    s"${graft.streaming.Streaming.ioBase}/${d.replaceAll("[^A-Za-z0-9.]", "_")}/$tag"
 
   /** The graft-series connector's day rollup, stated over the same
     * deterministic value function: the oracle of q116 and q117. */
@@ -45,7 +41,7 @@ object Sources {
         |  round(sum(l_quantity),2) AS qty
         |FROM lineitem WHERE l_orderkey % 5 = 0
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-      val path = scratch(d, "lineitem_csv")
+      val path = Scratch.dir(d, "lineitem_csv")
       Tables.lineitem(s, d)
         .where(col("l_orderkey") % 5 === 0)
         .select(col("l_orderkey"), col("l_returnflag"),
@@ -96,7 +92,7 @@ object Sources {
       """SELECT lang, count(*) AS n_docs,
         |  CAST(sum(length(text)) AS BIGINT) AS total_chars
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
-      val path = scratch(d, "docs_txt")
+      val path = Scratch.dir(d, "docs_txt")
       Tables.documents(s, d)
         .select(concat_ws("\t",
           col("doc_id").cast("string"), col("lang"), col("text")).as("value"))
@@ -120,7 +116,7 @@ object Sources {
       """SELECT o_orderpriority, count(*) AS n, round(sum(o_totalprice),2) AS total
         |FROM orders WHERE o_orderstatus = 'O'
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
-      val path = scratch(d, "orders_part")
+      val path = Scratch.dir(d, "orders_part")
       Tables.orders(s, d)
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
       s.read.parquet(path)
@@ -145,13 +141,9 @@ object Sources {
       """SELECT event_type, count(*) AS n, round(sum(value),2) AS total
         |FROM events WHERE substr(event_type, 1, 1) = 'c'
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      val path = scratch(d, "events_part")
-      // stage the partitioned fact once per sf (idempotent: _SUCCESS
-      // marker only exists after a completed write)
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        Tables.events(s, d)
-          .write.mode("overwrite").partitionBy("event_type").parquet(path)
-      }
+      // the partitioned fact is staged once per (session, input dir)
+      val path = PlanCache.staged(s, Scratch.dir(d, "events_part"))(
+        Tables.events(s, d).write.mode("overwrite").partitionBy("event_type").parquet(_))
       val fact = s.read.parquet(path)
       val dim = Tables.events(s, d).select("event_type").distinct()
         .withColumn("cat", substring(col("event_type"), 1, 1))
@@ -212,7 +204,7 @@ object Sources {
         |FROM lineitem WHERE l_shipdate >= DATE '1995-06-01'
         |GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, d) =>
-      val path = scratch(d, "lineitem_orc")
+      val path = Scratch.dir(d, "lineitem_orc")
       Tables.lineitem(s, d)
         .where(col("l_shipdate") >= lit(java.sql.Date.valueOf("1995-06-01")))
         .select("l_returnflag", "l_linestatus", "l_extendedprice")
@@ -251,8 +243,8 @@ object Sources {
     /** binaryFile source (group 1, the multimodal ingestion path):
       * opaque blobs scanned as (path, length, content) rows — how
       * image/audio corpora enter the pipeline before q84/q85's typed
-      * metadata and stub decoding. Fixtures are staged deterministically
-      * (idempotent), so the oracle is the literal manifest: name, byte
+      * metadata and stub decoding. Each run writes the same fixture
+      * bytes, so the oracle is the literal manifest: name, byte
       * length, and sha256 — Spark's `sha2(content, 256)` must reproduce
       * the staged bytes' digest exactly. At 100 TB this scan is the same
       * operator over an object-store listing; `pathGlobFilter` and
@@ -268,14 +260,11 @@ object Sources {
         |  ('file2.bin', CAST(690 AS BIGINT),
         |   'f98019a951ae83118d91ab8d320f04870305f05433ed55895256df745d900243')
         |) t(name, length, sha256) ORDER BY name""".stripMargin) { (s, d) =>
-      val dir = java.nio.file.Paths.get(scratch(d, "binary_fixture"))
+      val dir = java.nio.file.Paths.get(Scratch.dir(d, "binary_fixture"))
       java.nio.file.Files.createDirectories(dir)
-      for (i <- 0 to 2) {
-        val dst = dir.resolve(s"file$i.bin")
-        if (!java.nio.file.Files.exists(dst))
-          java.nio.file.Files.write(dst,
-            (s"graft binary fixture $i\n" * ((i + 1) * 10)).getBytes("UTF-8"))
-      }
+      for (i <- 0 to 2)
+        java.nio.file.Files.write(dir.resolve(s"file$i.bin"),
+          (s"graft binary fixture $i\n" * ((i + 1) * 10)).getBytes("UTF-8"))
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin")
         .load(dir.toString)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("name"),
@@ -299,12 +288,12 @@ object Sources {
       s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(min(event_id) AS BIGINT) AS min_id, CAST(max(event_id) AS BIGINT) AS max_id,
         |  round(CAST(sum(CAST(value AS DECIMAL(18,3))) AS DOUBLE), 3) AS total
-        |FROM read_json('${graft.Scratch.root}/graft_jsonl/*.json',
+        |FROM read_json('${Scratch.root}/graft_jsonl/*.json',
         |  format='newline_delimited',
         |  columns={'event_id':'BIGINT','user_id':'BIGINT',
         |           'event_type':'VARCHAR','value':'DOUBLE'})
         |GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
-      val base = s"${graft.Scratch.root}/graft_jsonl"
+      val base = s"${Scratch.root}/graft_jsonl"
       Tables.events(s, d)
         .select("event_id", "user_id", "event_type", "value")
         .repartition(4)

@@ -24,8 +24,10 @@ import org.apache.spark.sql.types._
   *    on each micro-batch and returns the last one (the per-micro-batch
   *    refreshed views: q249/q256/q357, the drift streams).
   * q91's durable parquet file sink is the one stream that runs its own
-  * sink. Both runners start the query under [[withStreamConf]] and pick
-  * the state-store provider from the plan: a plan with a
+  * sink; its data and checkpoint lie under [[graft.Scratch.dir]], in
+  * this JVM's own scratch, so no other process can delete or read them
+  * mid-run. Both runners start the query under [[withStreamConf]] and
+  * pick the state-store provider from the plan: a plan with a
   * `transformWithState` node runs on RocksDB (the operator requires
   * it), every other plan on Spark's default provider. At 100 TB the file
   * source becomes Kafka/object-store listing; nothing in the plan
@@ -58,23 +60,6 @@ object Streaming {
   private[graft] def tsAsMicros(s: SparkSession, d: String): org.apache.spark.sql.Column =
     if (graft.Tables.eventsTsIsLong(s, d)) expr("ts DIV 1000")
     else unix_micros(col("ts").cast("timestamp"))
-
-  /** Scratch root for stream checkpoints and sinks, bucketed tables and
-    * round-trip scratch: tmpfs when available (the box's block device is
-    * burst-throttled — see GraftSession.build), else the sbt target dir.
-    */
-  private[graft] lazy val ioBase: String = {
-    val shm = new java.io.File("/dev/shm/graft-io")
-    if (shm.isDirectory || shm.mkdirs()) shm.getAbsolutePath else "target/graft-io"
-  }
-
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally st.close()
-    }
 
   /** The one file-stream source reader: streams `$d/$table` straight
     * from the input dir, with no copy. A ScaleGen table is a directory
@@ -717,9 +702,9 @@ object Streaming {
       "q91_stream_file_sink",
       """SELECT event_type, count(*) AS n, CAST(sum(user_id) AS BIGINT) AS uid_sum
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      val base = s"$ioBase/${d.replaceAll("[^A-Za-z0-9.]", "_")}/stream_sink"
+      val base = graft.Scratch.dir(d, "stream_sink")
       // clean slate: the checkpoint binds to one logical plan instance
-      deleteTree(java.nio.file.Paths.get(base))
+      graft.Scratch.deleteTree(java.nio.file.Paths.get(base))
       val distinct = eventStream(s, d)
         .dropDuplicates("event_id")
         .select("event_id", "event_type", "user_id")

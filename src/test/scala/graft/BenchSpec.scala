@@ -42,6 +42,6 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(j.get("n").asInt == 2 && j.get("n_failed").asInt == 0, j)
       }
       assert(!java.nio.file.Files.exists(out), "a filtered run wrote the record file")
-    } finally graft.streaming.Streaming.deleteTree(out.getParent)
+    } finally Scratch.deleteTree(out.getParent)
   }
 }

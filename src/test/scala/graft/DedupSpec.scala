@@ -152,7 +152,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q62 exact-Jaccard guard: counts always; throws past the ceiling only in strict mode") {
     // round 13 (VERDICT r12 #1): the default behavior past the class
     // ceiling is ROUTING to the banded candidate path, so the guard
-    // only throws under SPARK_GRAFT_STRICT_GUARDS/graft.strictGuards;
+    // only throws under the graft.strictGuards property;
     // in both modes it returns the max per-source class count the
     // routing decision keys on.
     val limit = graft.operators.LLMPipeline.MaxExactJaccardClasses
@@ -162,15 +162,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.operators.LLMPipeline.guardExactJaccard(cls(1000)) == 1000L)
     // above it, default mode: still returns (the caller routes)
     assert(graft.operators.LLMPipeline.guardExactJaccard(cls(limit + 1)) == limit + 1)
-    // above it, strict mode: loud failure naming the banding alternative.
-    // The props override only reaches strictGuards when the env var is
-    // absent on the OTHER precedence order; since round 14 props take
-    // precedence (testability), but an env var set to "1" would still
-    // make the BELOW-ceiling default-mode assertions above meaningless —
-    // so require a clean environment rather than silently testing the
-    // wrong mode (ADVICE r13).
-    assume(!sys.env.contains("SPARK_GRAFT_STRICT_GUARDS"),
-      "SPARK_GRAFT_STRICT_GUARDS is set in the environment; strict-mode test skipped")
+    // above it, strict mode: loud failure naming the banding alternative
     sys.props("graft.strictGuards") = "1"
     try {
       val e = intercept[IllegalStateException] {

@@ -113,8 +113,6 @@ class HybridSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.map(_.getAs[Long]("n_dup_pairs")).sum > 0,
       "fixture produced no within-chunk pairs — test is vacuous")
     // strict mode: the loud guard is still there behind the escape hatch
-    assume(!sys.env.contains("SPARK_GRAFT_STRICT_GUARDS"),
-      "SPARK_GRAFT_STRICT_GUARDS is set in the environment; strict-mode leg skipped")
     sys.props("graft.strictGuards") = "1"
     try {
       val e = intercept[IllegalStateException] {

@@ -142,16 +142,54 @@ class HygieneSpec extends AnyFunSuite {
       s"stream staging code is back:\n  ${offenders.mkString("\n  ")}")
   }
 
+  /** The code lines of src/main that define `def name`. */
+  private def definitions(name: String): Seq[String] = {
+    val defn = s"\\bdef $name\\b".r
+    codeLines(mainSources).collect {
+      case (f, n, l) if defn.findFirstIn(l).isDefined => s"${f.getPath}:$n"
+    }
+  }
+
   test("r6, dsum and dsumSql are each defined once in src/main") {
     // the oracle-facing rounding and exact-decimal sum live in CausalOps;
     // a module imports them, so both engines round and sum one way
     for (name <- Seq("r6", "dsum", "dsumSql")) {
-      val defn = s"\\bdef $name\\b".r
-      val sites = codeLines(mainSources).collect {
-        case (f, n, l) if defn.findFirstIn(l).isDefined => s"${f.getPath}:$n"
-      }
+      val sites = definitions(name)
       assert(sites.size == 1, s"$name is defined ${sites.size} times:\n  ${sites.mkString("\n  ")}")
     }
+  }
+
+  test("r2 and wordsCol are each defined once in src/main, with no local copy under another name") {
+    // r2 lives beside r6 in CausalOps and wordsCol in functions.Text; a
+    // module imports them instead of wrapping them under its own name
+    for (name <- Seq("r2", "wordsCol")) {
+      val sites = definitions(name)
+      assert(sites.size == 1, s"$name is defined ${sites.size} times:\n  ${sites.mkString("\n  ")}")
+    }
+    for (alias <- Seq("r2x", "dsumD", "words")) {
+      val sites = definitions(alias)
+      assert(sites.isEmpty, s"$alias copies a shared helper:\n  ${sites.mkString("\n  ")}")
+    }
+  }
+
+  test("src/main writes scratch under one root, and stages a file once per session without a marker") {
+    // Scratch.root belongs to one JVM and is deleted when it exits; a
+    // second root shared by every JVM on the box, or a marker file that
+    // says "staged" to a later process, races and goes stale
+    val words = Seq("ioBase", "/dev/shm/graft-io", "target/graft-io", "_STAGED", "_SUCCESS")
+    val offenders = mainSources.flatMap { f =>
+      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      words.filter(txt.contains).map(w => s"${f.getPath} (contains '$w')")
+    }
+    assert(offenders.isEmpty, s"a second scratch root or a marker:\n  ${offenders.mkString("\n  ")}")
+    // Spark's own spark.local.dir is the one tmpfs dir the engine names
+    val shm = strayUses("/dev/shm", Set("graft/GraftSession.scala" -> "build"))
+    assert(shm.isEmpty, s"/dev/shm outside GraftSession.build:\n  ${shm.mkString("\n  ")}")
+    // an input dir maps to its scratch key in Scratch.dir alone
+    val key = codeLines(mainSources).collect {
+      case (f, n, l) if l.contains("\"[^A-Za-z0-9.]\"") => s"${f.getPath}:$n"
+    }
+    assert(key.size == 1, s"the dir-key rule is defined ${key.size} times:\n  ${key.mkString("\n  ")}")
   }
 
   test("no run of 5 consecutive |-margin oracle lines appears twice in src/main") {

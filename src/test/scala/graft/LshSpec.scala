@@ -282,8 +282,6 @@ class LshSpec extends AnyFunSuite with BeforeAndAfterAll {
       val r = q98(dir).collect()
       assert(r.length == 1 && r.head.getAs[Long]("n_pairs") == 10L,
         s"warn-mode kernel output wrong: ${r.toSeq}")
-      assume(!sys.env.contains("SPARK_GRAFT_STRICT_GUARDS"),
-        "SPARK_GRAFT_STRICT_GUARDS set in environment; strict leg skipped")
       sys.props("graft.strictGuards") = "1"
       try {
         val e = intercept[Exception] { q98(dir).collect() }
@@ -321,8 +319,6 @@ class LshSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.length == 1 && r.head.getAs[Long]("n_candidate_pairs") == 15L
           && r.head.getAs[Double]("min_dist") == 0.0,
         s"warn-mode parity output wrong: ${r.toSeq}")
-      assume(!sys.env.contains("SPARK_GRAFT_STRICT_GUARDS"),
-        "SPARK_GRAFT_STRICT_GUARDS set in environment; strict leg skipped")
       sys.props("graft.strictGuards") = "1"
       try {
         val e = intercept[Exception] { q71(s, dir).collect() }

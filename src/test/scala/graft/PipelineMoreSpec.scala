@@ -81,13 +81,8 @@ class PipelineMoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the production incremental-sink contract: re-running one
     // partition's batch must not wipe sibling partitions (static mode
     // would truncate the whole table)
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
-    val base = "target/graft-io/dpo_test"
-    val p = Paths.get(base)
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
+    val dir = java.nio.file.Files.createTempDirectory("dpo_test")
+    val base = dir.resolve("t").toString
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
@@ -105,9 +100,12 @@ class PipelineMoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         "sibling partitions must survive a dynamic overwrite")
       assert(after.where(col("event_type") === "click").count() === clicksHalf.count(),
         "the rewritten partition must contain exactly the new batch")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      Scratch.deleteTree(dir)
     }
   }
 

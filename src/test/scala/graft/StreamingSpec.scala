@@ -45,41 +45,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checkpointed file sink resumes exactly-once across a restart") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.util.Comparator
     import org.apache.spark.sql.functions._
-    val base = "target/graft-io/recovery_test"
-    val p = Paths.get(base)
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-    Files.createDirectories(Paths.get(s"$base/in"))
-    // two deterministic halves of events, staged one per stream run
-    val ev = Tables.events(spark, sf).select("event_id", "event_type", "user_id")
-    ev.where(col("event_id") % 2 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$base/stage0")
-    ev.where(col("event_id") % 2 === 1).coalesce(1)
-      .write.mode("overwrite").parquet(s"$base/stage1")
-    val schema = spark.read.parquet(s"$base/stage0").schema
-    def copyIn(stage: String): Unit =
-      Files.list(Paths.get(s"$base/$stage")).forEach { f =>
-        if (f.getFileName.toString.endsWith(".parquet"))
-          Files.copy(f, Paths.get(s"$base/in/$stage.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
+    val dir = Files.createTempDirectory("recovery_test")
+    val base = dir.toString
+    try {
+      Files.createDirectories(Paths.get(s"$base/in"))
+      // two deterministic halves of events, staged one per stream run
+      val ev = Tables.events(spark, sf).select("event_id", "event_type", "user_id")
+      ev.where(col("event_id") % 2 === 0).coalesce(1)
+        .write.mode("overwrite").parquet(s"$base/stage0")
+      ev.where(col("event_id") % 2 === 1).coalesce(1)
+        .write.mode("overwrite").parquet(s"$base/stage1")
+      val schema = spark.read.parquet(s"$base/stage0").schema
+      def copyIn(stage: String): Unit =
+        Files.list(Paths.get(s"$base/$stage")).forEach { f =>
+          if (f.getFileName.toString.endsWith(".parquet"))
+            Files.copy(f, Paths.get(s"$base/in/$stage.parquet"),
+              StandardCopyOption.REPLACE_EXISTING)
+        }
+      def runOnce(): Unit = {
+        val q = spark.readStream.schema(schema).parquet(s"$base/in")
+          .writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/chk")
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
       }
-    def runOnce(): Unit = {
-      val q = spark.readStream.schema(schema).parquet(s"$base/in")
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/chk")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    copyIn("stage0"); runOnce()             // first run: half the rows
-    copyIn("stage1"); runOnce()             // restart from the SAME checkpoint
-    val out = spark.read.parquet(s"$base/out")
-    // exactly-once: every event exactly one time, no stage0 replays
-    assert(out.count() === ev.count())
-    assert(out.select("event_id").distinct().count() === ev.count())
+      copyIn("stage0"); runOnce()             // first run: half the rows
+      copyIn("stage1"); runOnce()             // restart from the SAME checkpoint
+      val out = spark.read.parquet(s"$base/out")
+      // exactly-once: every event exactly one time, no stage0 replays
+      assert(out.count() === ev.count())
+      assert(out.select("event_id").distinct().count() === ev.count())
+    } finally Scratch.deleteTree(dir)
   }
 
   test("rate source streams rows through an aggregation (non-file source)") {
@@ -143,29 +141,27 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("foreachBatch sink writes exactly the stream contents") {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
+    import java.nio.file.Files
     import org.apache.spark.sql.functions._
-    val base = "target/graft-io/foreach_batch_test"
-    val p = Paths.get(base)
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-    val q = graft.streaming.Streaming.withStreamConf(spark) {
-      graft.streaming.Streaming.eventStream(spark, sf)
-        .select("event_id", "event_type", "value")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          batch.write.mode("append").parquet(s"$base/out")
-        }
-        .option("checkpointLocation", s"$base/chk")
-        .outputMode("append").start()
-    }
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.read.parquet(s"$base/out")
-    assert(got.count() === Tables.events(spark, sf).count())
-    assert(got.agg(sum(col("event_id"))).collect()(0).getLong(0) ===
-      Tables.events(spark, sf).agg(sum(col("event_id"))).collect()(0).getLong(0))
+    val dir = Files.createTempDirectory("foreach_batch_test")
+    val base = dir.toString
+    try {
+      val q = graft.streaming.Streaming.withStreamConf(spark) {
+        graft.streaming.Streaming.eventStream(spark, sf)
+          .select("event_id", "event_type", "value")
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+            batch.write.mode("append").parquet(s"$base/out")
+          }
+          .option("checkpointLocation", s"$base/chk")
+          .outputMode("append").start()
+      }
+      try q.processAllAvailable() finally q.stop()
+      val got = spark.read.parquet(s"$base/out")
+      assert(got.count() === Tables.events(spark, sf).count())
+      assert(got.agg(sum(col("event_id"))).collect()(0).getLong(0) ===
+        Tables.events(spark, sf).agg(sum(col("event_id"))).collect()(0).getLong(0))
+    } finally Scratch.deleteTree(dir)
   }
 
   test("observe() metrics surface row counts and sums without a second pass") {
@@ -267,13 +263,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         val streamed = Streaming.drain(spark, Streaming.eventStream(spark, d).groupBy().count(),
           "graft_layout_count", "complete").first().getLong(0)
         assert(streamed == nEvents, s"$layout: streamed $streamed rows, events has $nEvents")
-        val copy = Paths.get(Streaming.ioBase, d.replaceAll("[^A-Za-z0-9.]", "_"), "events_stream")
-        assert(!Files.exists(copy), s"$layout: the stream wrote a copy of its input at $copy")
-      } finally {
-        val st = Files.walk(dir)
-        try st.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
-        finally st.close()
-      }
+        val root = Paths.get(Scratch.root)
+        val copies = if (!Files.exists(root)) Nil else {
+          val st = Files.walk(root)
+          try st.filter(_.getFileName.toString == "events_stream").toArray.toSeq
+          finally st.close()
+        }
+        assert(copies.isEmpty, s"$layout: the stream wrote a copy of its input at $copies")
+      } finally Scratch.deleteTree(dir)
     }
   }
 
@@ -395,7 +392,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fromDir.nonEmpty, "directory-layout source streamed zero rows")
       assert(fromDir.toSeq == fromFile.toSeq,
         "directory-layout streaming result diverged from single-file result")
-    } finally Streaming.deleteTree(dir)
+    } finally Scratch.deleteTree(dir)
   }
 
   test("q478 streaming WAV ingest equals an exact batch recomputation through the same codec") {
